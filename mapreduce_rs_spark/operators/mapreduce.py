@@ -14,21 +14,27 @@ Here a job is ``map_reduce(df, mapper, reducer)``:
   executed with ``mapInPandas`` (Arrow-batched, 10-100x faster than
   row-at-a-time Python UDFs; the sanctioned slow path for genuinely
   imperative logic).
-* ``reducer``: (key, pandas.Series[value]) -> scalar — executed with
-  ``applyInPandas`` over ``groupBy(key)``.
+* ``reducer``: (key, list[value]) -> str — executed as the reference's
+  reduce task (``src/mr/worker.rs:199-222``): route pairs by key,
+  sort each reduce partition by key, then one ``mapInPandas`` pass per
+  partition walks the runs of equal keys and calls ``reducer`` once per
+  run.
 
-Scale note: ``applyInPandas`` materializes one key group per call, like
-the reference's per-key ``Vec<&str>`` (``src/mr/worker.rs:199-222``) — fine
-for bounded groups, wrong for skewed billion-row keys. For algebraic
-aggregations pass ``combiner=`` built-in expressions instead and the whole
-job stays JVM-side with map-side partial aggregation; the UDF path exists
-for the non-algebraic remainder.
+Scale note: the reduce task holds one key group plus one Arrow batch; a
+group that straddles batches is carried over, never re-collected, so a
+partition of any size streams. One group is still one Python list, like
+the reference's per-key ``Vec<&str>`` — fine for bounded groups, wrong
+for skewed billion-row keys. For algebraic aggregations pass
+``combiner=`` built-in expressions instead and the whole job stays
+JVM-side with map-side partial aggregation; the UDF path exists for the
+non-algebraic remainder.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 
@@ -82,11 +88,37 @@ def map_reduce(
     if combiner is not None:
         return pairs.groupBy("key").agg(combiner.alias("value"))
 
-    def run_reduce(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["key"].iloc[0]
-        return pd.DataFrame({"key": [key], "value": [reducer(key, list(pdf["value"]))]})
+    def run_reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # The partition is sorted by key, so each key's values are one
+        # contiguous run. The open run (key, values) is carried across
+        # Arrow batches and flushed when the next key starts or the input
+        # ends. Null keys arrive as None and None == None, so they form
+        # one group, as under groupBy.
+        key, values = None, []
+        for batch in batches:
+            if batch.empty:
+                continue
+            keys = batch["key"].to_numpy(dtype=object)
+            vals = batch["value"].tolist()
+            starts = (np.flatnonzero(keys[1:] != keys[:-1]) + 1).tolist()
+            done = []
+            for lo, hi in zip([0, *starts], [*starts, len(keys)]):
+                if values and keys[lo] != key:
+                    done.append((key, reducer(key, values)))
+                    values = []
+                key = keys[lo]
+                values.extend(vals[lo:hi])
+            if done:
+                yield pd.DataFrame(done, columns=["key", "value"])
+        if values:
+            yield pd.DataFrame([(key, reducer(key, values))], columns=["key", "value"])
 
-    return pairs.groupBy("key").applyInPandas(run_reduce, schema="key string, value string")
+    if num_partitions is None:
+        # the reduce task's hash(key) routing, coalescable by AQE
+        pairs = pairs.repartition("key")
+    return pairs.sortWithinPartitions("key").mapInPandas(
+        run_reduce, schema="key string, value string"
+    )
 
 
 def wc_map(record: str) -> list[tuple[str, str]]:
@@ -138,6 +170,4 @@ def word_count_mapreduce(df: DataFrame, input_col: str = "text") -> DataFrame:
     produce results identical to the declarative flagship (and to the
     DuckDB oracle), minus the reference's dropped-last-group bug."""
     out = map_reduce(df, wc_map, wc_reduce, input_col=input_col)
-    return out.select(
-        out.key.alias("word"), out.value.cast("long").alias("cnt")
-    ).orderBy("word")
+    return out.select(out.key.alias("word"), out.value.cast("long").alias("cnt"))

@@ -3001,12 +3001,6 @@ NND_K = 16         # out-degree of the k-NN graph
 NND_ROUNDS = 3     # fixed descent rounds; the oracle replays the same count
 NND_SEED_CAP = 12  # per-bucket representatives seeding each node's list
 
-# r13 A/B switch (r12 verdict #5): materialize the per-round fwd+rev
-# union before the center self-join. True = one extra checkpoint job
-# per round but the reverse-cap window computes once; False = one job
-# fewer per round, window subtree cloned into both join sides.
-_NND_MATERIALIZE_B = False
-
 
 def _nnd_corpus(
     df: DataFrame,
@@ -3197,11 +3191,11 @@ def nn_descent_knn_graph(
             .where(F.col("rn") <= k)
             .select("center", "member")
         )
-        # b feeds both sides of the center join (r13 A/B switch,
-        # r12 verdict #5 — see OPTIMIZATION_r13.md)
+        # b is not materialized (A/B in tools/r13/nnd_b_ab.json), so its
+        # subtree is cloned into both sides of the center join. Safe only
+        # because edges has unique (src, dst) pairs: (cos_sim desc, member)
+        # is then a total order per center and both clones agree.
         b = fwd.unionByName(rev)
-        if _NND_MATERIALIZE_B:
-            b = materialize(b, persist_dir, f"nnd_b_{r}")
         cand = (
             b.select("center", F.col("member").alias("src"))
             .join(b.select("center", F.col("member").alias("dst")), "center")

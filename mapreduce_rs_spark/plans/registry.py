@@ -2149,7 +2149,7 @@ QUERIES: dict[str, QuerySpec] = {
     "wordcount_mapreduce_udf": QuerySpec(
         _docs(word_count_mapreduce),
         WORDCOUNT_SQL,
-        "the op-4/op-10 UDF surface (mapInPandas + applyInPandas), oracled against relational SQL",
+        "the op-4/op-10 UDF surface (mapInPandas map, key-sorted streamed mapInPandas reduce), oracled against relational SQL",
     ),
     # ---- text analysis ----
     "doc_stats": QuerySpec(
@@ -7665,6 +7665,7 @@ QUERIES["rollup_incremental_refresh"] = QuerySpec(
 # ---------------------------------------------------------------------------
 _PRESENT_SORT: dict[str, tuple[str, ...]] = {
     "wordcount_salted": ("word",),
+    "wordcount_mapreduce_udf": ("word",),
     "dedup_exact": ("keep_doc_id",),
     "duplicate_spans": ("doc_id",),
     "minhash_signatures": ("doc_id",),

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,16 +18,39 @@ def lines_df(spark):
     )
 
 
-def test_reducer_path(lines_df):
+def _concat_mapper(rec):
+    # one None-keyed pair per record: null keys must form one group
+    return [(w, w.upper()) for w in rec.split()] + [(None, "-")]
+
+
+def _concat_reducer(key, values):
     # Per-key value concatenation — a genuinely non-algebraic reducer.
-    def mapper(rec):
-        return [(w, w.upper()) for w in rec.split()]
+    return "".join(values)
 
-    def reducer(key, values):
-        return "|".join(sorted(values))
 
-    out = {r["key"]: r["value"] for r in map_reduce(lines_df, mapper, reducer).collect()}
-    assert out == {"a": "A|A|A", "b": "B|B", "c": "C"}
+def test_reducer_path(spark, lines_df):
+    words = Counter(w for (line,) in lines_df.collect() for w in line.split())
+    words[None] = lines_df.count()
+    golden = {k: ("-" if k is None else k.upper()) * n for k, n in words.items()}
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    cases = [
+        ("default", saved, None),
+        # one reduce partition read in 2-row Arrow batches: the None and
+        # "a" groups (3 values each) straddle batch boundaries
+        ("group_spans_batches", "2", 1),
+        # far more reduce partitions than keys: most arrive empty
+        ("empty_partitions", saved, 50),
+    ]
+    try:
+        for case, max_batch, num_partitions in cases:
+            spark.conf.set(conf, max_batch)
+            df = map_reduce(lines_df, _concat_mapper, _concat_reducer, num_partitions=num_partitions)
+            rows = [(r["key"], r["value"]) for r in df.collect()]
+            assert len(rows) == len(golden), case
+            assert dict(rows) == golden, case
+    finally:
+        spark.conf.set(conf, saved)
 
 
 def test_combiner_path_is_jvm_side(lines_df):
@@ -38,6 +64,21 @@ def test_combiner_path_is_jvm_side(lines_df):
     # not a Python UDF stage.
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan
+
+
+def test_reducer_path_is_one_sorted_shuffle(lines_df):
+    # The reduce is the reference's sorted reduce task: no per-key pandas
+    # group stage, and exactly one shuffle on key whether or not the
+    # caller pins the reduce partition count.
+    shuffles = r"Exchange hashpartitioning\(key#\d+, (\d+)\), (\w+)"
+    pinned = map_reduce(lines_df, _concat_mapper, _concat_reducer, num_partitions=4)
+    plan = pinned._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan
+    assert re.findall(shuffles, plan) == [("4", "REPARTITION_BY_NUM")]
+    free = map_reduce(lines_df, _concat_mapper, _concat_reducer)
+    plan = free._jdf.queryExecution().executedPlan().toString()
+    # REPARTITION_BY_COL leaves the partition count to AQE's coalescing
+    assert [origin for _, origin in re.findall(shuffles, plan)] == ["REPARTITION_BY_COL"]
 
 
 def test_explicit_partitioning(lines_df):

@@ -12,6 +12,27 @@ Tested locally with a file source + ``availableNow`` trigger (processes
 all existing input then stops), which exercises the real streaming
 engine — state store, watermark bookkeeping, checkpoint — without an
 unbounded run.
+
+Epoch-state contract. The continuous-ingest loops (IVF maintenance,
+graph admission, decontamination, semdedup admission, refit serving)
+keep state that must OUTLIVE the stream, so they land it as tables via
+foreachBatch rather than in the state store. One discipline covers all
+of them and is stated once, on the private helpers below:
+
+* drain-and-stop (``_drain``): every query runs checkpointed with the
+  ``availableNow`` trigger, so a restart resumes from the committed
+  source offsets;
+* per-epoch overwrite (``_write_epoch``): a batch lands under
+  ``state_dir/epoch=<id>`` in overwrite mode, so a same-epoch replay
+  rewrites byte-identical rows instead of double-counting them;
+* ``src_file`` provenance (``_file_stream(provenance=True)``,
+  ``_with_src_file``): each row carries the input file it came from,
+  selected on the source scan; a direct caller whose frame is not
+  file-backed gets an epoch-qualified sentinel instead;
+* latest-epoch-wins read (``_latest_epoch``): readers keep, per key
+  (``src_file``, or ``q_id`` for the admitted-edge table), only the
+  newest epoch's rows, so a re-delivered file reads as one logical
+  contribution.
 """
 
 from __future__ import annotations
@@ -21,6 +42,7 @@ import os
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from mapreduce_rs_spark.operators.relational import money, stable_sum
 from pyspark.sql.types import (
     ArrayType,
@@ -45,6 +67,97 @@ _MISSING_STORE_CONDITIONS = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 def _is_missing_store(e: AnalysisException) -> bool:
     cond = e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
     return cond in _MISSING_STORE_CONDITIONS
+
+
+def _file_stream(
+    spark: SparkSession,
+    schema: StructType,
+    input_dir: str,
+    max_files_per_trigger: int | None = None,
+    provenance: bool = False,
+) -> DataFrame:
+    """Parquet file-source stream over ``input_dir``.
+    ``max_files_per_trigger`` forces multiple micro-batches (the tests
+    use it to exercise real cross-batch state). ``provenance`` adds
+    ``_metadata.file_path`` as ``src_file`` HERE, on the source scan:
+    it is the only place ``_metadata`` resolves — inside foreachBatch
+    the micro-batch is a plain RDD-backed frame without it."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    stream = reader.parquet(input_dir)
+    if provenance:
+        stream = stream.withColumn("src_file", F.col("_metadata.file_path"))
+    return stream
+
+
+def _drain(writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """Run a configured ``DataStreamWriter`` drain-and-stop: checkpointed,
+    ``availableNow`` trigger (process all existing input, then stop).
+    The file source + checkpoint gives exactly-once: the checkpoint
+    records which input files each batch consumed, so a restart resumes
+    without duplicating — the guarantee the reference's WAL aimed at
+    (``src/mr/coordinator.rs:134-199``) but never finished."""
+    (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _with_src_file(batch_df: DataFrame, epoch_id: int) -> DataFrame:
+    """Ensure a micro-batch carries the ``src_file`` provenance key.
+    The streaming loops already selected it on the source scan
+    (``_file_stream(provenance=True)``); a direct batch-read caller (the
+    replay test path) gets it from its own file scan. A direct caller
+    whose frame is NOT file-backed (createDataFrame) has no resolvable
+    ``_metadata``: it gets an EPOCH-QUALIFIED sentinel instead of an
+    AnalysisException (r10 ADVICE #2) — unique per epoch, so
+    ``_latest_epoch`` never collapses two distinct direct-batch epochs,
+    while same-epoch replay overwrite still holds."""
+    if "src_file" in batch_df.columns:
+        return batch_df
+    try:
+        return batch_df.withColumn("src_file", F.col("_metadata.file_path"))
+    except AnalysisException:
+        return batch_df.withColumn(
+            "src_file", F.lit(f"<direct-batch-epoch-{epoch_id}>")
+        )
+
+
+def _write_epoch(df: DataFrame, state_dir: str, epoch_id: int) -> None:
+    """Land one micro-batch's state under ``state_dir/epoch=<epoch_id>``.
+
+    OVERWRITE per epoch directory is what makes a loop
+    restart-idempotent: Structured Streaming replays a micro-batch
+    under the SAME epoch id when the sink wrote but the offset commit
+    didn't land, and a replay then overwrites its own rows with
+    byte-identical ones instead of double-counting them. Append plus a
+    left_anti-on-key dedup would instead lose rows on a partial append,
+    need an error-swallowing first-batch probe, and scan the full
+    history per batch."""
+    df.write.mode("overwrite").parquet(os.path.join(state_dir, f"epoch={epoch_id}"))
+
+
+def _latest_epoch(state: DataFrame, key: str = "src_file") -> DataFrame:
+    """Latest-epoch-wins read over per-epoch state: keep, per ``key``,
+    only the rows of the newest epoch that holds it (the CDC
+    latest_state discipline). Same-epoch replays already overwrite in
+    place; this additionally makes an upstream RE-DELIVERY (the same
+    file path, or for the edge table the same ``q_id``, in a later
+    epoch) read as ONE logical contribution, never a double-count
+    (ADVICE r09). The file source assigns whole files to micro-batches,
+    so a file's rows are always complete within one epoch. Re-delivery
+    of the same rows under a NEW path is indistinguishable from new
+    data — that case is governed by the exactly-once-input contract:
+    the input directory is append-only and a path's content is
+    immutable once written."""
+    return (
+        state.withColumn("max_epoch", F.max("epoch").over(Window.partitionBy(key)))
+        .where(F.col("epoch") == F.col("max_epoch"))
+        .drop("max_epoch")
+    )
 
 
 EVENT_SCHEMA = StructType(
@@ -177,15 +290,12 @@ def run_foreach_batch_upsert(
         # Materialize before overwriting the directory we just read.
         merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(target_dir)
 
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(input_dir)
-    (
+    stream = _file_stream(spark, EVENT_SCHEMA, input_dir)
+    _drain(
         streaming_tumbling_counts(stream)
         .writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .foreachBatch(upsert),
+        checkpoint_dir,
     )
 
 
@@ -193,23 +303,15 @@ def run_windowed_stream(
     spark: SparkSession, input_dir: str, output_dir: str, checkpoint_dir: str
 ) -> None:
     """Run the windowed aggregation as a real stream over a file source,
-    ``availableNow`` trigger (drain-and-stop), parquet sink.
-
-    File source + checkpoint gives exactly-once: the checkpoint records
-    which input files each batch consumed, so a restart resumes without
-    duplicating — the guarantee the reference's WAL aimed at
-    (``src/mr/coordinator.rs:134-199``) but never finished.
-    """
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(input_dir)
-    agg = streaming_tumbling_counts(stream)
-    (
-        agg.writeStream.outputMode("append")
+    drain-and-stop (``_drain``: exactly-once via the checkpoint),
+    parquet sink."""
+    stream = _file_stream(spark, EVENT_SCHEMA, input_dir)
+    _drain(
+        streaming_tumbling_counts(stream)
+        .writeStream.outputMode("append")
         .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .option("path", output_dir),
+        checkpoint_dir,
     )
 
 
@@ -250,16 +352,13 @@ def run_session_stream(
     """Drain-and-stop session stream over a file source (availableNow),
     append mode: only watermark-finalized sessions are emitted, each
     exactly once via the checkpoint."""
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(input_dir)
-    (
+    stream = _file_stream(spark, EVENT_SCHEMA, input_dir)
+    _drain(
         streaming_sessions(stream)
         .writeStream.outputMode("append")
         .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .option("path", output_dir),
+        checkpoint_dir,
     )
 
 
@@ -303,16 +402,13 @@ def run_ohlc_stream(
     """Drain-and-stop OHLC stream over a file source (availableNow),
     append mode: only watermark-closed windows are emitted, each
     exactly once via the checkpoint."""
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(input_dir)
-    (
+    stream = _file_stream(spark, EVENT_SCHEMA, input_dir)
+    _drain(
         streaming_ohlc(stream)
         .writeStream.outputMode("append")
         .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .option("path", output_dir),
+        checkpoint_dir,
     )
 
 
@@ -361,19 +457,13 @@ def run_hll_stream(
     """Drain-and-stop HLL register stream over a file source
     (availableNow), complete mode into an in-memory table — the harness
     for the stream-equals-batch register test."""
-    reader = spark.readStream.schema(EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    (
+    stream = _file_stream(spark, EVENT_SCHEMA, input_dir, max_files_per_trigger)
+    _drain(
         streaming_hll(stream)
         .writeStream.outputMode("complete")
         .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .queryName(query_name),
+        checkpoint_dir,
     )
 
 
@@ -389,19 +479,13 @@ def run_trend_stream(
     ``query_name`` — the harness the stream-equals-batch test drives.
     ``max_files_per_trigger`` forces multiple micro-batches so the test
     exercises real cross-batch state maintenance."""
-    reader = spark.readStream.schema(EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    (
+    stream = _file_stream(spark, EVENT_SCHEMA, input_dir, max_files_per_trigger)
+    _drain(
         streaming_user_trend(stream)
         .writeStream.outputMode("complete")
         .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .queryName(query_name),
+        checkpoint_dir,
     )
 
 
@@ -442,19 +526,13 @@ def run_cms_stream(
     """Drain-and-stop CMS counter stream over a documents file source
     (availableNow), complete mode into an in-memory table — the harness
     for the stream-equals-batch counter test."""
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    (
+    stream = _file_stream(spark, DOC_SCHEMA, input_dir, max_files_per_trigger)
+    _drain(
         streaming_cms(stream)
         .writeStream.outputMode("complete")
         .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .queryName(query_name),
+        checkpoint_dir,
     )
 
 
@@ -563,15 +641,8 @@ def run_streaming_neardup_ingest(
             "append"
         ).parquet(bands_dir)
 
-    stream = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
-    (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(admit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    stream = _file_stream(spark, DOC_SCHEMA, input_dir)
+    _drain(stream.writeStream.outputMode("append").foreachBatch(admit), checkpoint_dir)
 
 
 # Embeddings arrive as vector micro-batches in the ingest loop; label
@@ -588,53 +659,20 @@ def ivf_state_update(batch_df: DataFrame, state_dir: str, epoch_id: int) -> None
     """One micro-batch of the streaming IVF maintenance loop: compute
     the batch's per-source-file (src_file, centroid_id, pos, s, nb, nn)
     partials — the IDENTICAL ``ivf_maintenance_partials`` the batch
-    operator runs, with the file-path provenance key threaded through —
-    and land them under ``state_dir/epoch=<epoch_id>``.
-
-    OVERWRITE per epoch directory is what makes the loop
-    restart-idempotent: Structured Streaming replays a micro-batch
-    under the SAME epoch id when the sink wrote but the offset commit
-    didn't land, and a replay then overwrites its own partials with
-    byte-identical rows instead of double-counting them (exposed
-    module-level so the replay path is directly testable).
-
-    The ``src_file`` provenance column is the CROSS-epoch dedup key
-    (ADVICE r09, the ``read_admitted_edges`` analog): if upstream
-    re-delivers the SAME file path in a later epoch (a forced
-    reprocess, an overwritten input picked up again), the reader keeps
-    only the newest epoch's partials per file instead of blind-summing
-    both. The file source assigns whole files to micro-batches, so a
-    file's partials are always complete within one epoch. Re-delivery
-    of the same VECTORS under a NEW path is indistinguishable from new
-    data at this aggregate grain — that case is governed by the
-    exactly-once-input contract: the input directory is append-only
-    and a path's content is immutable once written (the standard file
-    -source contract this loop inherits).
-
-    ``src_file`` must be selected on the SOURCE scan (where the
-    ``_metadata`` column resolves — inside foreachBatch the micro-batch
-    is a plain RDD-backed frame without it); the streaming loop does,
-    and a direct batch-read caller (the replay test path) gets it added
-    here from its own file scan. A direct caller whose frame is NOT
-    file-backed (createDataFrame) has no resolvable ``_metadata``: it
-    gets an EPOCH-QUALIFIED sentinel instead of an AnalysisException
-    (r10 ADVICE #2) — unique per epoch, so the reader's latest-wins
-    never collapses two distinct direct-batch epochs, while same-epoch
-    replay overwrite still holds."""
+    operator runs, with the ``src_file`` provenance key
+    (``_with_src_file``) threaded through — and land them with
+    ``_write_epoch`` (exposed module-level so the replay path is
+    directly testable). The report reads them through
+    ``_latest_epoch`` per ``src_file``."""
     from mapreduce_rs_spark.operators.similarity import ivf_maintenance_partials
 
-    if "src_file" not in batch_df.columns:
-        try:
-            batch_df = batch_df.withColumn(
-                "src_file", F.col("_metadata.file_path")
-            )
-        except AnalysisException:
-            batch_df = batch_df.withColumn(
-                "src_file", F.lit(f"<direct-batch-epoch-{epoch_id}>")
-            )
-    ivf_maintenance_partials(batch_df, extra_keys=("src_file",)).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(state_dir, f"epoch={epoch_id}"))
+    _write_epoch(
+        ivf_maintenance_partials(
+            _with_src_file(batch_df, epoch_id), extra_keys=("src_file",)
+        ),
+        state_dir,
+        epoch_id,
+    )
 
 
 def streaming_ivf_state_report(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -665,14 +703,8 @@ def streaming_ivf_state_report(spark: SparkSession, state_dir: str) -> DataFrame
             ),
         ),
     )
-    w = Window.partitionBy("src_file")
     merged = (
-        state
-        # latest-epoch-wins per source file (the read_admitted_edges
-        # discipline): a file re-delivered in a later epoch reads as
-        # ONE logical contribution, never a double-count (ADVICE r09)
-        .withColumn("max_epoch", F.max("epoch").over(w))
-        .where(F.col("epoch") == F.col("max_epoch"))
+        _latest_epoch(state)
         .groupBy("centroid_id", "pos")
         .agg(
             F.sum("s").alias("s"),
@@ -698,25 +730,14 @@ def run_streaming_ivf_maintenance(
     stream (the nightly refit decision, an ad-hoc drift audit and the
     streaming loop all read the same partials), which is a table
     concern, not a state-store concern."""
-    reader = spark.readStream.schema(EMB_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    # provenance selected ON the source scan — _metadata only resolves
-    # there, not on the RDD-backed frame foreachBatch hands over
-    stream = reader.parquet(input_dir).withColumn(
-        "src_file", F.col("_metadata.file_path")
+    stream = _file_stream(
+        spark, EMB_SCHEMA, input_dir, max_files_per_trigger, provenance=True
     )
-    (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda batch_df, epoch_id: ivf_state_update(
-                batch_df, state_dir, epoch_id
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain(
+        stream.writeStream.outputMode("append").foreachBatch(
+            lambda batch_df, epoch_id: ivf_state_update(batch_df, state_dir, epoch_id)
+        ),
+        checkpoint_dir,
     )
 
 
@@ -761,21 +782,14 @@ def graph_ingest_update(
     """One micro-batch of the continuous graph-admission loop: enrich
     the batch (norm + probe bucket), beam-search it through the
     persisted standing artifacts via the SAME ``graph_admit_batch``
-    core the batch operator runs, and land the found edges under
-    ``edges_dir/epoch=<epoch_id>``.
-
-    OVERWRITE per epoch directory is the replay story (the
-    ``ivf_state_update`` discipline, which closed three review
-    findings at once): Structured Streaming replays a micro-batch
-    under the SAME epoch id when the sink wrote but the offset commit
-    didn't land, and admission reads ONLY standing state, so the
-    replay re-derives byte-identical edges and overwrites its own
-    directory — no partial-append row loss, no error-swallowing
-    first-batch probe, and no per-batch scan of the full edge history
-    (per-batch work stays O(|batch| · beam · k · hops))."""
-    admitted_edges_from_store(batch_df, store_dir, tag="sgi").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(edges_dir, f"epoch={epoch_id}"))
+    core the batch operator runs, and land the found edges with
+    ``_write_epoch``. Admission reads ONLY standing state, so a
+    same-epoch replay re-derives byte-identical edges; per-batch work
+    stays O(|batch| · beam · k · hops), with no scan of the edge
+    history."""
+    _write_epoch(
+        admitted_edges_from_store(batch_df, store_dir, tag="sgi"), edges_dir, epoch_id
+    )
 
 
 def admitted_edges_from_store(
@@ -815,20 +829,14 @@ def admitted_edges_from_store(
 
 def read_admitted_edges(spark: SparkSession, edges_dir: str) -> DataFrame:
     """The edge table's READER contract: per-epoch directories merged
-    with latest-epoch-wins per q_id (the CDC latest_state discipline).
-    Same-epoch replays already overwrite in place; this additionally
-    makes an upstream RE-DELIVERY of a vec_id in a later file (two
-    epochs both holding its edges — admission is deterministic, so the
-    rows are byte-identical unless the standing store was rebuilt
-    between them, in which case newest is the correct answer) read as
-    ONE logical row set per q_id. O(edges) at read, zero per-batch
-    history scans in the hot loop."""
-    w = Window.partitionBy("q_id")
-    return (
-        spark.read.parquet(edges_dir)
-        .withColumn("max_epoch", F.max("epoch").over(w))
-        .where(F.col("epoch") == F.col("max_epoch"))
-        .select("q_id", "cand", "cs")
+    by ``_latest_epoch`` keyed on q_id. An upstream RE-DELIVERY of a
+    vec_id in a later file (two epochs both holding its edges —
+    admission is deterministic, so the rows are byte-identical unless
+    the standing store was rebuilt between them, in which case newest
+    is the correct answer) reads as ONE logical row set per q_id.
+    O(edges) at read, zero per-batch history scans in the hot loop."""
+    return _latest_epoch(spark.read.parquet(edges_dir), "q_id").select(
+        "q_id", "cand", "cs"
     )
 
 
@@ -844,29 +852,22 @@ def run_streaming_graph_ingest(
     micro-batches beam-search the PERSISTED standing artifacts (built
     once by ``build_graph_store``, refreshed on the rebuild cadence the
     batch ledger decides) and land their forward edges under per-epoch
-    directories (``edges_dir/epoch=<id>``, OVERWRITE — the replay
-    contract lives on ``graph_ingest_update``; consumers read through
-    ``read_admitted_edges``, which merges epochs latest-wins per q_id).
+    directories via ``graph_ingest_update`` (``_write_epoch``);
+    consumers read through ``read_admitted_edges``
+    (``_latest_epoch`` per q_id).
     Admissions are independent across vectors — they read only
     standing state — so any micro-batching yields the batch operator's
     edges byte-for-byte (pinned by the parity test), and per-batch
     work is O(|batch| · beam · k · hops): the continuous form inherits
     the batch form's batch-proportional cost by construction."""
-    reader = spark.readStream.schema(EMB_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(
+    stream = _file_stream(spark, EMB_SCHEMA, input_dir, max_files_per_trigger)
+    _drain(
+        stream.writeStream.outputMode("append").foreachBatch(
             lambda batch_df, epoch_id: graph_ingest_update(
                 batch_df, store_dir, edges_dir, epoch_id
             )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ),
+        checkpoint_dir,
     )
 
 
@@ -993,51 +994,30 @@ def decon_state_update(
 ) -> None:
     """One micro-batch of the streaming decontamination gate: flag the
     batch's train vectors against the persisted eval artifact and land
-    (vec_id, n_eval_hits, max_cos, src_file) under
-    ``state_dir/epoch=<epoch_id>`` — the ``ivf_state_update``
-    discipline verbatim: OVERWRITE per epoch (same-epoch replay lands
-    byte-identical rows), ``src_file`` provenance as the cross-epoch
-    re-delivery key, epoch-qualified sentinel when the caller's frame
-    is not file-backed. The file source assigns whole files to
-    micro-batches, so a vector's flag row is complete within one epoch
-    (per-vector scores read only the batch row + the fixed artifact)."""
-    if "src_file" not in batch_df.columns:
-        try:
-            batch_df = batch_df.withColumn(
-                "src_file", F.col("_metadata.file_path")
-            )
-        except AnalysisException:
-            batch_df = batch_df.withColumn(
-                "src_file", F.lit(f"<direct-batch-epoch-{epoch_id}>")
-            )
-    batch_df = _one_row_per_vec(batch_df)
+    (vec_id, n_eval_hits, max_cos, src_file) with ``_write_epoch``,
+    provenance from ``_with_src_file``. Per-vector scores read only the
+    batch row + the fixed artifact, so a vector's flag row is complete
+    within one epoch."""
+    batch_df = _one_row_per_vec(_with_src_file(batch_df, epoch_id))
     flagged = decon_gate_batch(
         batch_df.select("vec_id", "embedding"), store_dir
-    ).join(
-        batch_df.select("vec_id", "src_file"), "vec_id"
-    )
-    flagged.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"epoch={epoch_id}")
-    )
+    ).join(batch_df.select("vec_id", "src_file"), "vec_id")
+    _write_epoch(flagged, state_dir, epoch_id)
 
 
 def streaming_decon_report(spark: SparkSession, state_dir: str) -> DataFrame:
     """The decontamination triage report over the accumulated streaming
-    state: merge per-epoch flag rows latest-epoch-wins per src_file
-    (re-delivered files read as ONE logical contribution) and emit the
-    SAME top-k contract as ``semantic_decontaminate_fixed`` —
+    state: merge per-epoch flag rows with ``_latest_epoch`` per
+    src_file and emit the SAME top-k contract as
+    ``semantic_decontaminate_fixed`` —
     (vec_id, n_eval_hits, max_cos) ordered (max_cos DESC, vec_id),
     DECON_TOP_K rows. Per-vector rows are batching-independent, so the
     drained report equals the batch operator bit-for-bit (pinned by the
     parity test). State grows with FLAGGED vectors, not the corpus."""
     from mapreduce_rs_spark.operators.similarity import DECON_TOP_K
 
-    w = Window.partitionBy("src_file")
-    merged = (
-        spark.read.parquet(state_dir)
-        .withColumn("max_epoch", F.max("epoch").over(w))
-        .where(F.col("epoch") == F.col("max_epoch"))
-        .select("vec_id", "n_eval_hits", "max_cos")
+    merged = _latest_epoch(spark.read.parquet(state_dir)).select(
+        "vec_id", "n_eval_hits", "max_cos"
     )
     return merged.orderBy(F.col("max_cos").desc(), "vec_id").limit(DECON_TOP_K)
 
@@ -1057,23 +1037,16 @@ def run_streaming_decon_gate(
     ``streaming_decon_report`` reads the merged state. Per-vector
     scores read only the vector + the fixed artifact, so any
     micro-batching yields the batch operator's report byte-for-byte."""
-    reader = spark.readStream.schema(EMB_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir).withColumn(
-        "src_file", F.col("_metadata.file_path")
+    stream = _file_stream(
+        spark, EMB_SCHEMA, input_dir, max_files_per_trigger, provenance=True
     )
-    (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(
+    _drain(
+        stream.writeStream.outputMode("append").foreachBatch(
             lambda batch_df, epoch_id: decon_state_update(
                 batch_df, store_dir, state_dir, epoch_id
             )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ),
+        checkpoint_dir,
     )
 
 
@@ -1163,44 +1136,29 @@ def semdedup_ingest_update(
 ) -> None:
     """One micro-batch of the continuous semantic-dedup admission loop:
     gate the batch through ``semdedup_admit_batch`` and land
-    (vec_id, cid, is_dropped, src_file) under
-    ``state_dir/epoch=<epoch_id>`` — the ``ivf_state_update``
-    discipline: per-epoch OVERWRITE (same-epoch replays land
-    byte-identical rows, decisions read only persisted state),
-    ``src_file`` provenance for cross-epoch re-delivery, epoch-qualified
-    sentinel for non-file-backed frames."""
-    if "src_file" not in batch_df.columns:
-        try:
-            batch_df = batch_df.withColumn(
-                "src_file", F.col("_metadata.file_path")
-            )
-        except AnalysisException:
-            batch_df = batch_df.withColumn(
-                "src_file", F.lit(f"<direct-batch-epoch-{epoch_id}>")
-            )
-    batch_df = _one_row_per_vec(batch_df)
-    semdedup_admit_batch(
-        batch_df.select("vec_id", "embedding"), store_dir
-    ).join(batch_df.select("vec_id", "src_file"), "vec_id").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(state_dir, f"epoch={epoch_id}"))
+    (vec_id, cid, is_dropped, src_file) with ``_write_epoch``,
+    provenance from ``_with_src_file``. Decisions read only persisted
+    state, so a same-epoch replay lands byte-identical rows."""
+    batch_df = _one_row_per_vec(_with_src_file(batch_df, epoch_id))
+    _write_epoch(
+        semdedup_admit_batch(batch_df.select("vec_id", "embedding"), store_dir).join(
+            batch_df.select("vec_id", "src_file"), "vec_id"
+        ),
+        state_dir,
+        epoch_id,
+    )
 
 
 def streaming_semdedup_ingest_report(
     spark: SparkSession, state_dir: str
 ) -> DataFrame:
     """Per-cluster admission audit over the accumulated ingest state:
-    merge per-epoch decision rows latest-epoch-wins per src_file and
-    roll up (centroid_id, n_ingested, n_dropped, n_admitted,
+    merge per-epoch decision rows with ``_latest_epoch`` per src_file
+    and roll up (centroid_id, n_ingested, n_dropped, n_admitted,
     drop_ratio) — the ``semdedup`` audit shape at the ingest grain.
     Decision rows are batching-independent, so the drained report
     equals the one-shot gate's audit bit-for-bit (the parity test)."""
-    w = Window.partitionBy("src_file")
-    merged = (
-        spark.read.parquet(state_dir)
-        .withColumn("max_epoch", F.max("epoch").over(w))
-        .where(F.col("epoch") == F.col("max_epoch"))
-    )
+    merged = _latest_epoch(spark.read.parquet(state_dir))
     return (
         merged.groupBy(F.col("cid").cast("int").alias("centroid_id"))
         .agg(
@@ -1234,23 +1192,16 @@ def run_streaming_semdedup_ingest(
     land per-epoch admission decisions; the report reads the merged
     state. Decisions read only the vector + persisted state, so any
     micro-batching yields the one-shot gate's audit byte-for-byte."""
-    reader = spark.readStream.schema(EMB_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir).withColumn(
-        "src_file", F.col("_metadata.file_path")
+    stream = _file_stream(
+        spark, EMB_SCHEMA, input_dir, max_files_per_trigger, provenance=True
     )
-    (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(
+    _drain(
+        stream.writeStream.outputMode("append").foreachBatch(
             lambda batch_df, epoch_id: semdedup_ingest_update(
                 batch_df, store_dir, state_dir, epoch_id
             )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ),
+        checkpoint_dir,
     )
 
 
@@ -1328,39 +1279,29 @@ def refit_state_update(
 ) -> None:
     """One micro-batch of the continuous refit-serving loop: assign the
     batch under the persisted model and land
-    (vec_id, embedding, centroid_id, src_file) under
-    ``state_dir/epoch=<epoch_id>`` — the ``ivf_state_update``
-    discipline: per-epoch OVERWRITE (same-epoch replays land
-    byte-identical rows, assignments read only persisted state),
-    ``src_file`` provenance for cross-epoch re-delivery,
-    epoch-qualified sentinel for non-file-backed frames, one
-    deterministic row per vec_id per batch (r11 ADVICE #2). The state
+    (vec_id, embedding, centroid_id, src_file) with ``_write_epoch``,
+    provenance from ``_with_src_file``, one deterministic row per
+    vec_id per batch (r11 ADVICE #2). Assignments read only persisted
+    state, so a same-epoch replay lands byte-identical rows. The state
     row carries the embedding because it IS the serving table — the
     re-rank reads raw vectors, so the assignment store is the
     (vector, list) inverted index a production IVF server maintains."""
-    if "src_file" not in batch_df.columns:
-        try:
-            batch_df = batch_df.withColumn(
-                "src_file", F.col("_metadata.file_path")
-            )
-        except AnalysisException:
-            batch_df = batch_df.withColumn(
-                "src_file", F.lit(f"<direct-batch-epoch-{epoch_id}>")
-            )
-    batch_df = _one_row_per_vec(batch_df)
-    refit_assign_batch(batch_df, store_dir).join(
-        batch_df.select("vec_id", "embedding", "src_file"), "vec_id"
-    ).select("vec_id", "embedding", "centroid_id", "src_file").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(state_dir, f"epoch={epoch_id}"))
+    batch_df = _one_row_per_vec(_with_src_file(batch_df, epoch_id))
+    _write_epoch(
+        refit_assign_batch(batch_df, store_dir)
+        .join(batch_df.select("vec_id", "embedding", "src_file"), "vec_id")
+        .select("vec_id", "embedding", "centroid_id", "src_file"),
+        state_dir,
+        epoch_id,
+    )
 
 
 def streaming_refit_serve_report(
     spark: SparkSession, state_dir: str, store_dir: str, k: int = 10
 ) -> DataFrame:
     """The serve report over the accumulated assignment state: merge
-    per-epoch rows latest-epoch-wins per src_file (re-delivered files
-    read as ONE logical contribution) and answer the KMV-capped query
+    per-epoch rows with ``_latest_epoch`` per src_file and answer the
+    KMV-capped query
     set through ``_refit_serve_topk`` — nprobe=1 probe against the
     stored model, exact cosine re-rank, per-query top-k:
     ``knn_ivf_refit``'s (q_id, vec_id, cos_sim, rnk) contract. Each
@@ -1374,12 +1315,8 @@ def streaming_refit_serve_report(
         _refit_serve_topk,
     )
 
-    w = Window.partitionBy("src_file")
-    merged = (
-        spark.read.parquet(state_dir)
-        .withColumn("max_epoch", F.max("epoch").over(w))
-        .where(F.col("epoch") == F.col("max_epoch"))
-        .select("vec_id", "embedding", "centroid_id")
+    merged = _latest_epoch(spark.read.parquet(state_dir)).select(
+        "vec_id", "embedding", "centroid_id"
     )
     assigned = merged.select(
         "vec_id",
@@ -1414,21 +1351,14 @@ def run_streaming_refit_serve(
     ``streaming_refit_serve_report`` answers queries over the drained
     index. Assignment reads only the vector + the persisted model, so
     any micro-batching yields the batch query's report byte-for-byte."""
-    reader = spark.readStream.schema(EMB_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir).withColumn(
-        "src_file", F.col("_metadata.file_path")
+    stream = _file_stream(
+        spark, EMB_SCHEMA, input_dir, max_files_per_trigger, provenance=True
     )
-    (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(
+    _drain(
+        stream.writeStream.outputMode("append").foreachBatch(
             lambda batch_df, epoch_id: refit_state_update(
                 batch_df, store_dir, state_dir, epoch_id
             )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ),
+        checkpoint_dir,
     )

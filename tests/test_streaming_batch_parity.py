@@ -816,6 +816,66 @@ def test_first_batch_store_probe_swallows_only_missing_store(spark, tmp_path):
     assert not _is_missing_store(other.value)
 
 
+def test_epoch_state_contract_without_a_stream(spark, tmp_path):
+    """The shared epoch-state contract, default tier (every store-loop
+    drain test is exhaustive-tier): tiny epoch directories written
+    through ``_write_epoch`` and read back through the public readers,
+    which apply ``_latest_epoch``. A key present in a later epoch reads
+    only that epoch's rows, other keys are kept, and a same-epoch
+    rewrite overwrites in place instead of appending."""
+    from mapreduce_rs_spark.streaming.pipeline import (
+        _write_epoch,
+        read_admitted_edges,
+        streaming_semdedup_ingest_report,
+    )
+
+    # edge table, keyed on q_id: q_id 1 is in epochs 0 and 1
+    edges = str(tmp_path / "edges")
+    e_schema = "q_id long, cand long, cs double"
+    epoch1 = [(1, 12, 0.95), (3, 30, 0.6)]
+    _write_epoch(
+        spark.createDataFrame([(1, 10, 0.9), (1, 11, 0.8), (2, 20, 0.7)], e_schema),
+        edges,
+        0,
+    )
+    _write_epoch(spark.createDataFrame(epoch1, e_schema), edges, 1)
+    want_edges = [(1, 12, 0.95), (2, 20, 0.7), (3, 30, 0.6)]
+    assert sorted(map(tuple, read_admitted_edges(spark, edges).collect())) == want_edges
+
+    # semdedup decisions, keyed on src_file: file "a" re-delivered in
+    # epoch 1 counts once
+    state = str(tmp_path / "state")
+    d_schema = "vec_id long, cid int, is_dropped int, src_file string"
+    redelivered = [(1, 0, 0, "a"), (2, 0, 1, "a")]
+    _write_epoch(
+        spark.createDataFrame(redelivered + [(3, 1, 0, "b")], d_schema), state, 0
+    )
+    _write_epoch(spark.createDataFrame(redelivered, d_schema), state, 1)
+
+    def audit():
+        return sorted(
+            map(
+                tuple,
+                streaming_semdedup_ingest_report(spark, state)
+                .select("centroid_id", "n_ingested", "n_dropped")
+                .collect(),
+            )
+        )
+
+    want_audit = [(0, 2, 1), (1, 1, 0)]
+    assert audit() == want_audit
+
+    # same-epoch rewrite (a replay): raw and merged row counts unchanged
+    raw_edges = spark.read.parquet(edges).count()
+    raw_state = spark.read.parquet(state).count()
+    _write_epoch(spark.createDataFrame(epoch1, e_schema), edges, 1)
+    _write_epoch(spark.createDataFrame(redelivered, d_schema), state, 1)
+    assert spark.read.parquet(edges).count() == raw_edges == 5
+    assert spark.read.parquet(state).count() == raw_state == 5
+    assert sorted(map(tuple, read_admitted_edges(spark, edges).collect())) == want_edges
+    assert audit() == want_audit
+
+
 def test_streaming_decon_gate_matches_batch_operator(spark, sf_dir, tmp_path):
     """r10 verdict #5: semantic_decontaminate_fixed's streaming twin.
     The corpus arrives as forced micro-batches; every train vector

@@ -916,3 +916,40 @@ def test_payload_synthesis_rejects_non_ascii_loudly(spark):
     with pytest.raises(Exception) as exc:
         attach_png_payload(df).collect()
     assert "pure-ASCII" in str(exc.value)
+
+
+def test_row_run_expands_skips_and_keeps_schema_on_empty_batches():
+    """``_row_run`` is the one Arrow-batch loop behind every multimodal
+    stage; pin its contract without Spark: 1:N expansion in row order,
+    skipped rows, only ``in_cols`` reach the row function, and a batch
+    whose rows all skip still yields a zero-row frame with every schema
+    column (what a fused downstream run must see)."""
+    import pandas as pd
+
+    from mapreduce_rs_spark.operators.multimodal import _row_run
+
+    seen = []
+
+    def row(doc_id, payload):
+        seen.append((doc_id, payload))
+        return [(doc_id, payload * i, {"i": i}) for i in range(doc_id % 3)]
+
+    run = _row_run(
+        row,
+        "doc_id long, payload binary, meta struct<i:int,j:string>",
+        in_cols=("doc_id", "payload"),
+    )
+    batches = [
+        pd.DataFrame({"doc_id": [2, 3, 1], "payload": [b"a", b"b", b"c"], "text": ["x"] * 3}),
+        pd.DataFrame({"doc_id": [6, 9], "payload": [b"d", b"e"], "text": ["y", "z"]}),
+    ]
+    out = list(run(iter(batches)))
+
+    assert seen == [(2, b"a"), (3, b"b"), (1, b"c"), (6, b"d"), (9, b"e")]
+    assert [list(f.columns) for f in out] == [["doc_id", "payload", "meta"]] * 2
+    assert list(out[0].itertuples(index=False, name=None)) == [
+        (2, b"", {"i": 0}),
+        (2, b"a", {"i": 1}),
+        (1, b"", {"i": 0}),
+    ]
+    assert len(out[1]) == 0  # every row of the second batch skipped

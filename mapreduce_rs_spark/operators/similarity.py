@@ -21,6 +21,8 @@ agree to float tolerance.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -156,6 +158,18 @@ def _q_embd_expr() -> F.Column:
     return F.col("q_emb").cast(_DBL)
 
 
+def _top_k(scored: DataFrame, k: int, score: str = "cos_sim") -> DataFrame:
+    """(q_id, vec_id, score, rnk): the ``k`` best rows of a scored pair
+    frame per query by (score desc, vec_id) — the ranking every kNN tier
+    ends in, with the same tie-break as the oracles' ``_topk_cte``."""
+    w = Window.partitionBy("q_id").orderBy(F.col(score).desc(), F.col("vec_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= k)
+        .select("q_id", "vec_id", score, "rnk")
+    )
+
+
 def knn_bruteforce(
     df: DataFrame, k: int = 10, queries: DataFrame | None = None
 ) -> DataFrame:
@@ -189,12 +203,7 @@ def knn_bruteforce(
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("q_id", "vec_id", "cos_sim", "rnk")
-    )
+    return _top_k(scored, k)
 
 
 def _bucket_expr(embd_sql: str, planes: list[list[float]]) -> F.Column:
@@ -256,12 +265,7 @@ def knn_lsh(df: DataFrame, k: int = 10, planes: list[list[float]] | None = None)
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("q_id", "vec_id", "cos_sim", "rnk")
-    )
+    return _top_k(scored, k)
 
 
 # IVF/SemDeDup cluster count SCALES WITH THE CORPUS so E[vectors per
@@ -488,12 +492,7 @@ def knn_ivf(df: DataFrame, k: int = 10) -> DataFrame:
             F.col("q_embd"), F.col("embd"), F.col("q_norm"), F.col("c_norm")
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("q_id", "vec_id", "cos_sim", "rnk")
-    )
+    return _top_k(scored, k)
 
 
 def _ivf_assigned_scored(df: DataFrame, cents: list[list[float]]) -> DataFrame:
@@ -548,12 +547,7 @@ def knn_ivf_multiprobe(
             F.col("q_embd"), F.col("embd"), F.col("q_norm"), F.col("c_norm")
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("q_id", "vec_id", "cos_sim", "rnk")
-    )
+    return _top_k(scored, k)
 
 
 def array_functions_showcase(df: DataFrame) -> DataFrame:
@@ -744,6 +738,20 @@ def semdedup(
     )
 
 
+def _approx_and_grid(
+    exact: DataFrame, tiers: list[tuple[str, DataFrame]], *cols: str
+) -> tuple[DataFrame, DataFrame]:
+    """``approx``: each (method, knn frame)'s ``cols`` labelled with its
+    method, as one left-deep unionByName chain; ``grid``: every (method,
+    exact query) pair, so an evaluator's zero-hit queries survive the
+    join. Oracle twin: registry ``_approx_grid_ctes``."""
+    approx = functools.reduce(DataFrame.unionByName, [
+        knn.select(*cols).withColumn("method", F.lit(m)) for m, knn in tiers
+    ])
+    methods = exact.sparkSession.createDataFrame([(m,) for m, _ in tiers], ["method"])
+    return approx, exact.select("q_id").distinct().crossJoin(F.broadcast(methods))
+
+
 def ann_recall(df: DataFrame, k: int = 10) -> DataFrame:
     """Recall@k of every approximate index against the exact brute-force
     ranking — the evaluation harness an ANN deployment runs before
@@ -760,45 +768,23 @@ def ann_recall(df: DataFrame, k: int = 10) -> DataFrame:
     the intersection join is |methods|·n_queries·k rows — trivially
     small — and the (method × query) grid that restores recall-0 rows
     for queries an index returned nothing for is a broadcast
-    nested-loop over a 3-row literal frame, not a shuffle. Evaluated on
+    nested-loop over a 6-row literal frame, not a shuffle. Evaluated on
     a bounded query sample at 100 TB, exactly as here (_query_set).
     """
-    spark = df.sparkSession
     exact = knn_bruteforce(df, k).select("q_id", "vec_id")
-    approx = (
-        knn_lsh(df, k).select("q_id", "vec_id").withColumn("method", F.lit("lsh"))
-        .unionByName(
-            knn_ivf(df, k).select("q_id", "vec_id").withColumn("method", F.lit("ivf"))
-        )
-        .unionByName(
-            knn_ivf_multiprobe(df, k, 2)
-            .select("q_id", "vec_id")
-            .withColumn("method", F.lit("ivf_mp2"))
-        )
-        .unionByName(
-            knn_pq(df, k).select("q_id", "vec_id").withColumn("method", F.lit("pq"))
-        )
-        .unionByName(
-            knn_ivfpq(df, k)
-            .select("q_id", "vec_id")
-            .withColumn("method", F.lit("ivfpq"))
-        )
-        .unionByName(
-            knn_pca(df, k)
-            .select("q_id", "vec_id")
-            .withColumn("method", F.lit("pca"))
-        )
-    )
+    approx, grid = _approx_and_grid(exact, [
+        ("lsh", knn_lsh(df, k)),
+        ("ivf", knn_ivf(df, k)),
+        ("ivf_mp2", knn_ivf_multiprobe(df, k, 2)),
+        ("pq", knn_pq(df, k)),
+        ("ivfpq", knn_ivfpq(df, k)),
+        ("pca", knn_pca(df, k)),
+    ], "q_id", "vec_id")
     per_q = (
         approx.join(exact, ["q_id", "vec_id"])
         .groupBy("method", "q_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
-    methods = spark.createDataFrame(
-        [("lsh",), ("ivf",), ("ivf_mp2",), ("pq",), ("ivfpq",), ("pca",)],
-        ["method"],
-    )
-    grid = exact.select("q_id").distinct().crossJoin(F.broadcast(methods))
     filled = grid.join(per_q, ["method", "q_id"], "left").select(
         "method", "q_id", F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits")
     )
@@ -1089,12 +1075,7 @@ def knn_pq(df: DataFrame, k: int = 10) -> DataFrame:
     scored = assigned.join(F.broadcast(q), F.col("q_id") != F.col("vec_id")).select(
         "q_id", "vec_id", adc.alias("adc_sim")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("adc_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("q_id", "vec_id", "adc_sim", "rnk")
-    )
+    return _top_k(scored, k, "adc_sim")
 
 
 def knn_ivfpq(df: DataFrame, k: int = 10) -> DataFrame:
@@ -1163,12 +1144,7 @@ def knn_ivfpq(df: DataFrame, k: int = 10) -> DataFrame:
         (F.col("q_centroid") == F.col("centroid_id"))
         & (F.col("q_id") != F.col("vec_id")),
     ).select("q_id", "vec_id", adc.alias("adc_sim"))
-    w = Window.partitionBy("q_id").orderBy(F.col("adc_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("q_id", "vec_id", "adc_sim", "rnk")
-    )
+    return _top_k(scored, k, "adc_sim")
 
 
 # ---------------------------------------------------------------------------
@@ -1307,12 +1283,7 @@ def knn_pca(df: DataFrame, k: int = 10) -> DataFrame:
             F.col("q_z"), F.col("z"), F.col("q_z_norm"), F.col("z_norm")
         ).alias("pca_sim"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("pca_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("q_id", "vec_id", "pca_sim", "rnk")
-    )
+    return _top_k(scored, k, "pca_sim")
 
 
 # ---------------------------------------------------------------------------
@@ -1328,12 +1299,17 @@ def knn_pca(df: DataFrame, k: int = 10) -> DataFrame:
 NDCG_SCALE = 1_000_000
 
 
-def _dcg_weights(k: int) -> list[int]:
-    """floor(SCALE / log2(r+1)) for ranks 1..k — computed driver-side,
-    shipped as literals (so the log2 never runs in either engine)."""
+def _ranking_tables(k: int) -> tuple[list[int], list[int], list[int]]:
+    """The integer micro-unit tables for ranks 1..k, computed driver-side
+    and shipped as literals to both engines (so the log2 never runs in
+    either): w[r-1] = floor(SCALE / log2(r+1)), prefix[m-1] = Σ w[1..m],
+    mrr_w[r-1] = SCALE // r."""
     import math
 
-    return [int(NDCG_SCALE / math.log2(r + 1)) for r in range(1, k + 1)]
+    w = [int(NDCG_SCALE / math.log2(r + 1)) for r in range(1, k + 1)]
+    prefix = [sum(w[:m]) for m in range(1, k + 1)]
+    mrr_w = [NDCG_SCALE // r for r in range(1, k + 1)]
+    return w, prefix, mrr_w
 
 
 def ann_ranking_metrics(df: DataFrame, k: int = 10) -> DataFrame:
@@ -1355,24 +1331,16 @@ def ann_ranking_metrics(df: DataFrame, k: int = 10) -> DataFrame:
     amortized expensive leg; everything downstream is methods x
     n_queries x k rows).
     """
-    spark = df.sparkSession
-    w = _dcg_weights(k)
-    prefix = [sum(w[:m]) for m in range(k + 1)]  # prefix[m] = Σ w[1..m]
-    mrr_w = [NDCG_SCALE // r for r in range(1, k + 1)]
-    w_arr = F.array(*[F.lit(x) for x in w])
-    mrr_arr = F.array(*[F.lit(x) for x in mrr_w])
-    prefix_arr = F.array(*[F.lit(x) for x in prefix[1:]])  # 1-indexed by m
+    w_arr, prefix_arr, mrr_arr = (
+        F.array(*[F.lit(x) for x in t]) for t in _ranking_tables(k)
+    )
 
     exact = knn_bruteforce(df, k).select("q_id", "vec_id")
-    approx = (
-        knn_lsh(df, k).select("q_id", "vec_id", "rnk").withColumn("method", F.lit("lsh"))
-        .unionByName(
-            knn_ivf(df, k).select("q_id", "vec_id", "rnk").withColumn("method", F.lit("ivf"))
-        )
-        .unionByName(
-            knn_pca(df, k).select("q_id", "vec_id", "rnk").withColumn("method", F.lit("pca"))
-        )
-    )
+    approx, grid = _approx_and_grid(exact, [
+        ("lsh", knn_lsh(df, k)),
+        ("ivf", knn_ivf(df, k)),
+        ("pca", knn_pca(df, k)),
+    ], "q_id", "vec_id", "rnk")
     per_q = (
         approx.join(exact, ["q_id", "vec_id"])
         .groupBy("method", "q_id")
@@ -1391,8 +1359,6 @@ def ann_ranking_metrics(df: DataFrame, k: int = 10) -> DataFrame:
             .alias("idcg_u"),
         )
     )
-    methods = spark.createDataFrame([("lsh",), ("ivf",), ("pca",)], ["method"])
-    grid = exact.select("q_id").distinct().crossJoin(F.broadcast(methods))
     filled = (
         grid.join(per_q, ["method", "q_id"], "left")
         .join(idcg, "q_id")
@@ -2746,12 +2712,7 @@ def _refit_serve_topk(
             F.col("q_embd"), F.col("embd"), F.col("q_norm"), F.col("c_norm")
         ).alias("cos_sim"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("q_id", "vec_id", "cos_sim", "rnk")
-    )
+    return _top_k(scored, k)
 
 
 OUTLIER_TOP_K = 50

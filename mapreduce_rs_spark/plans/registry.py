@@ -1022,7 +1022,7 @@ def _ivf_refit_sql(rounds: int = similarity.KMEANS_DIST_ROUNDS) -> str:
     (`_dkm_ctes`, shared with the fit/eval oracles — the builder-reuse
     rule), corpus + KMV-query assignment under the FINAL refit state
     (the family's exact integer argmax, ties -> higher cid), then
-    knn_ivf's probe/re-rank shape verbatim."""
+    knn_ivf's probe/re-rank shape, ranked by the tiers' `_topk_cte`."""
     chain, last = _dkm_ctes(rounds)
     return (
         chain
@@ -1041,15 +1041,11 @@ def _ivf_refit_sql(rounds: int = similarity.KMEANS_DIST_ROUNDS) -> str:
         ), {_qids_cte(src="ve")}, q AS (
             SELECT vec_id AS q_id, emb AS q_emb, cid AS q_centroid
             FROM at WHERE {_QFILTER}
-        ), scored AS (
+        ), refit_scored AS (
             SELECT q_id, t.vec_id, {_cosine_sql('q_emb', 't.emb')} AS cos_sim
             FROM q JOIN at t ON q_centroid = t.cid AND q_id <> t.vec_id
-        ), ranked AS (
-            SELECT q_id, vec_id, cos_sim,
-                   CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, vec_id) AS INTEGER) AS rnk
-            FROM scored
-        )
-        SELECT q_id, vec_id, cos_sim, rnk FROM ranked WHERE rnk <= 10 ORDER BY q_id, rnk
+        ), {_topk_cte("refit", "cos_sim", 10)}
+        SELECT * FROM refit_topk ORDER BY q_id, rnk
         """
     )
 
@@ -1599,7 +1595,7 @@ def _pq_codes_ctes(with_v: bool = True) -> str:
     similarity._pq_code_expr (the |c|^2 literals are the same Python
     floats embedded on both sides). ``with_v=False`` emits only the
     pscores/pcode CTEs for embedding into a query that already defines
-    the standard ``v`` (vec_id, emb) CTE (ann_recall)."""
+    the standard ``v`` (vec_id, emb) CTE (the kNN tiers' ``_PQ_CODES_CTE``)."""
     from mapreduce_rs_spark.operators.pq_model import FITTED_PQ
 
     parts = (
@@ -1659,31 +1655,6 @@ def _pq_adc_terms(q_emb: str, codes_alias: str) -> str:
         + " END)"
         for sub, book in enumerate(FITTED_PQ)
     )
-
-
-def _knn_pq_sql(k: int = 10) -> str:
-    """Oracle twin of similarity.knn_pq."""
-    terms = _pq_adc_terms("q.emb", "q_codes")
-    joins = " ".join(
-        f"JOIN pcode{sub} USING (vec_id)" for sub in range(similarity.PQ_M)
-    )
-    return f"""
-        {_pq_codes_ctes()}, codes AS (
-            SELECT vec_id, code_0, code_1, code_2, code_3
-            FROM v {joins}
-        ), {_qids_cte()}, q AS (
-            SELECT vec_id AS q_id, emb FROM v WHERE {_QFILTER}
-        ), scored AS (
-            SELECT q_id, q_codes.vec_id, {terms} AS adc_sim
-            FROM q JOIN codes q_codes ON q_id <> q_codes.vec_id
-        )
-        SELECT q_id, vec_id, adc_sim, rnk FROM (
-            SELECT q_id, vec_id, adc_sim,
-                   CAST(row_number() OVER (PARTITION BY q_id
-                                           ORDER BY adc_sim DESC, vec_id) AS INTEGER) AS rnk
-            FROM scored
-        ) r WHERE rnk <= {k}
-        """
 
 
 def _pq_recon_sql() -> str:
@@ -1756,156 +1727,128 @@ def _pca_z_sql_duck(emb: str) -> str:
     return f"[{terms}]"
 
 
-def _knn_pca_sql(k: int = 10) -> str:
-    """Oracle twin of similarity.knn_pca."""
-    return f"""
-        WITH v AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-        ), pz AS (
-            SELECT vec_id, {_pca_z_sql_duck('emb')} AS z FROM v
-        ), {_qids_cte()}, q AS (
-            SELECT vec_id AS q_id, z AS q_z FROM pz WHERE {_QFILTER}
-        ), scored AS (
-            SELECT q_id, pz.vec_id, {_cosine_sql('q_z', 'z')} AS pca_sim
-            FROM q JOIN pz ON q_id <> pz.vec_id
-        )
-        SELECT q_id, vec_id, pca_sim, rnk FROM (
-            SELECT q_id, vec_id, pca_sim,
-                   CAST(row_number() OVER (PARTITION BY q_id
-                                           ORDER BY pca_sim DESC, vec_id) AS INTEGER) AS rnk
-            FROM scored
-        ) r WHERE rnk <= {k}
-        """
+def _topk_cte(tier: str, score: str, k: int) -> str:
+    """``<tier>_topk(q_id, vec_id, <score>, rnk)``: the ``k`` best rows
+    of ``<tier>_scored`` per query by (score DESC, vec_id) — the one
+    ranking every kNN-tier oracle and ANN evaluator reads."""
+    return f"""{tier}_topk AS (
+            SELECT q_id, vec_id, {score}, rnk FROM (
+                SELECT q_id, vec_id, {score},
+                       CAST(row_number() OVER (PARTITION BY q_id
+                                               ORDER BY {score} DESC, vec_id) AS INTEGER) AS rnk
+                FROM {tier}_scored
+            ) r WHERE rnk <= {k}
+        )"""
 
 
-def _knn_ivfpq_sql(k: int = 10) -> str:
-    """Oracle twin of similarity.knn_ivfpq — composed from the SAME CTE
-    builders as the knn_ivf and knn_pq oracles (shared-builder rule):
-    candidates restricted to the query's inverted list, scored by ADC."""
-    joins = " ".join(
-        f"JOIN pcode{s} USING (vec_id)" for s in range(similarity.PQ_M)
-    )
-    return f"""{_ivf_assigned_cte()}, {_pq_codes_ctes(with_v=False)}, codes AS (
-            SELECT a.vec_id, a.centroid_id, code_0, code_1, code_2, code_3
-            FROM assigned a {joins}
-        ), {_qids_cte()}, q AS (
+# CTEs shared by more than one tier (the composer emits each once).
+_Q_CTE = f"q AS (SELECT vec_id AS q_id, emb AS q_emb FROM v WHERE {_QFILTER})"
+_IQ_CTE = f"""iq AS (
             SELECT vec_id AS q_id, emb AS q_emb, centroid_id AS q_centroid
             FROM assigned WHERE {_QFILTER}
-        ), scored AS (
-            SELECT q.q_id, pc.vec_id, {_pq_adc_terms("q.q_emb", "pc")} AS adc_sim
-            FROM q JOIN codes pc
-              ON q.q_centroid = pc.centroid_id AND q.q_id <> pc.vec_id
-        )
-        SELECT q_id, vec_id, adc_sim, rnk FROM (
-            SELECT q_id, vec_id, adc_sim,
-                   CAST(row_number() OVER (PARTITION BY q_id
-                                           ORDER BY adc_sim DESC, vec_id) AS INTEGER) AS rnk
-            FROM scored
-        ) r WHERE rnk <= {k}
-        """
+        )"""
+_PQ_CODES_CTE = f"""{_pq_codes_ctes(with_v=False)}, pq_codes AS (
+            SELECT vec_id, code_0, code_1, code_2, code_3
+            FROM v {" ".join(f"JOIN pcode{s} USING (vec_id)" for s in range(similarity.PQ_M))}
+        )"""
 
-
-def _ann_recall_sql(k: int = 10) -> str:
-    """Oracle twin of similarity.ann_recall: every approximate index's
-    top-k reproduced exactly as its own registry oracle does it, then
-    intersected with the exact brute-force top-k. Reuses the same CTE
-    builders as the knn_* oracles so an index change can't silently
-    desynchronize the evaluation from the thing it evaluates."""
-    rank = "row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, vec_id)"
-    return f"""{_ivf_assigned_cte()}, b AS (
-            SELECT vec_id, emb, {_bucket_sql('emb', _PLANES)} AS bucket FROM v
-        ), {_qids_cte()}, q AS (
-            SELECT vec_id AS q_id, emb AS q_emb FROM v WHERE {_QFILTER}
-        ), exact_scored AS (
+# tier -> (score column, CTE chain ending in <tier>_scored). Every chain
+# reads the base of _tiers_ctes: v / cscores / assigned and qids. Tier
+# names are the ann_* method labels; "exact" is brute force.
+_TIERS = {
+    "exact": ("cos_sim", (_Q_CTE, f"""exact_scored AS (
             SELECT q_id, vec_id, {_cosine_sql('q_emb', 'emb')} AS cos_sim
             FROM q JOIN v ON q_id <> vec_id
-        ), exact_topk AS (
-            SELECT q_id, vec_id FROM (
-                SELECT q_id, vec_id, {rank} AS rnk FROM exact_scored
-            ) e WHERE rnk <= {k}
+        )""")),
+    "lsh": ("cos_sim", (f"""b AS (
+            SELECT vec_id, emb, {_bucket_sql('emb', _PLANES)} AS bucket FROM v
         ), lq AS (
             SELECT vec_id AS q_id, emb AS q_emb, bucket AS q_bucket
             FROM b WHERE {_QFILTER}
         ), lsh_scored AS (
             SELECT q_id, b.vec_id, {_cosine_sql('q_emb', 'emb')} AS cos_sim
             FROM lq JOIN b ON q_bucket = bucket AND q_id <> b.vec_id
-        ), lsh_topk AS (
-            SELECT q_id, vec_id FROM (
-                SELECT q_id, vec_id, {rank} AS rnk FROM lsh_scored
-            ) s WHERE rnk <= {k}
-        ), iq AS (
-            SELECT vec_id AS q_id, emb AS q_emb, centroid_id AS q_centroid
-            FROM assigned WHERE {_QFILTER}
-        ), ivf_scored AS (
+        )""",)),
+    "ivf": ("cos_sim", (_IQ_CTE, f"""ivf_scored AS (
             SELECT q_id, a.vec_id, {_cosine_sql('q_emb', 'a.emb')} AS cos_sim
             FROM iq JOIN assigned a ON q_centroid = a.centroid_id AND q_id <> a.vec_id
-        ), ivf_topk AS (
-            SELECT q_id, vec_id FROM (
-                SELECT q_id, vec_id, {rank} AS rnk FROM ivf_scored
-            ) s WHERE rnk <= {k}
-        ), qprobe AS (
+        )""")),
+    "ivf_mp2": ("cos_sim", (f"""qprobe AS (
             SELECT vec_id AS q_id, emb AS q_emb, cid AS q_centroid FROM (
                 SELECT vec_id, emb, cid,
                        row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, cid DESC) AS rn
                 FROM cscores WHERE {_QFILTER}
             ) r WHERE rn <= 2
-        ), mp_scored AS (
+        ), ivf_mp2_scored AS (
             SELECT q_id, a.vec_id, {_cosine_sql('q_emb', 'a.emb')} AS cos_sim
-            FROM qprobe q2 JOIN assigned a ON q2.q_centroid = a.centroid_id AND q_id <> a.vec_id
-        ), mp_topk AS (
-            SELECT q_id, vec_id FROM (
-                SELECT q_id, vec_id, {rank} AS rnk FROM mp_scored
-            ) s WHERE rnk <= {k}
-        ), {_pq_codes_ctes(with_v=False)}, pq_codes AS (
-            SELECT vec_id, code_0, code_1, code_2, code_3
-            FROM v {" ".join(f"JOIN pcode{s} USING (vec_id)" for s in range(similarity.PQ_M))}
-        ), pq_scored AS (
+            FROM qprobe JOIN assigned a ON q_centroid = a.centroid_id AND q_id <> a.vec_id
+        )""",)),
+    "pq": ("adc_sim", (_Q_CTE, _PQ_CODES_CTE, f"""pq_scored AS (
             SELECT q.q_id, pc.vec_id, {_pq_adc_terms("q.q_emb", "pc")} AS adc_sim
             FROM q JOIN pq_codes pc ON q.q_id <> pc.vec_id
-        ), pq_topk AS (
-            SELECT q_id, vec_id FROM (
-                SELECT q_id, vec_id,
-                       row_number() OVER (PARTITION BY q_id ORDER BY adc_sim DESC, vec_id) AS rnk
-                FROM pq_scored
-            ) s WHERE rnk <= {k}
-        ), ivfpq_scored AS (
+        )""")),
+    "ivfpq": ("adc_sim", (_IQ_CTE, _PQ_CODES_CTE, f"""ivfpq_scored AS (
             SELECT iq.q_id, pc.vec_id, {_pq_adc_terms("iq.q_emb", "pc")} AS adc_sim
-            FROM iq JOIN (
-                SELECT pq_codes.*, a.centroid_id
-                FROM pq_codes JOIN assigned a USING (vec_id)
-            ) pc ON iq.q_centroid = pc.centroid_id AND iq.q_id <> pc.vec_id
-        ), ivfpq_topk AS (
-            SELECT q_id, vec_id FROM (
-                SELECT q_id, vec_id,
-                       row_number() OVER (PARTITION BY q_id ORDER BY adc_sim DESC, vec_id) AS rnk
-                FROM ivfpq_scored
-            ) s WHERE rnk <= {k}
-        ), pz AS (
+            FROM iq JOIN assigned a ON iq.q_centroid = a.centroid_id AND iq.q_id <> a.vec_id
+            JOIN pq_codes pc ON pc.vec_id = a.vec_id
+        )""")),
+    "pca": ("pca_sim", (f"""pz AS (
             SELECT vec_id, {_pca_z_sql_duck('emb')} AS z FROM v
         ), pca_q AS (
             SELECT vec_id AS q_id, z AS q_z FROM pz WHERE {_QFILTER}
         ), pca_scored AS (
-            SELECT q_id, pz.vec_id, {_cosine_sql('q_z', 'z')} AS cos_sim
+            SELECT q_id, pz.vec_id, {_cosine_sql('q_z', 'z')} AS pca_sim
             FROM pca_q JOIN pz ON q_id <> pz.vec_id
-        ), pca_topk AS (
-            SELECT q_id, vec_id FROM (
-                SELECT q_id, vec_id, {rank} AS rnk FROM pca_scored
-            ) s WHERE rnk <= {k}
-        ), approx AS (
-            SELECT 'lsh' AS method, q_id, vec_id FROM lsh_topk
-            UNION ALL SELECT 'ivf' AS method, q_id, vec_id FROM ivf_topk
-            UNION ALL SELECT 'ivf_mp2' AS method, q_id, vec_id FROM mp_topk
-            UNION ALL SELECT 'pq' AS method, q_id, vec_id FROM pq_topk
-            UNION ALL SELECT 'ivfpq' AS method, q_id, vec_id FROM ivfpq_topk
-            UNION ALL SELECT 'pca' AS method, q_id, vec_id FROM pca_topk
-        ), hits AS (
-            SELECT method, a.q_id, count(*) AS n_hits
-            FROM approx a JOIN exact_topk e ON a.q_id = e.q_id AND a.vec_id = e.vec_id
-            GROUP BY 1, 2
+        )""",)),
+}
+
+
+def _tiers_ctes(*tiers: str, k: int) -> str:
+    """WITH clause defining ``<tier>_topk`` for each named tier over one
+    shared base. A CTE two tiers share (``q``, ``iq``, ivfpq's PQ codes)
+    is emitted once — DuckDB rejects a repeated CTE name."""
+    ctes = [_qids_cte()]
+    for tier in tiers:
+        score, chain = _TIERS[tier]
+        ctes += [*chain, _topk_cte(tier, score, k)]
+    return f"{_ivf_assigned_cte()}, " + ", ".join(dict.fromkeys(ctes))
+
+
+def _knn_sql(tier: str, k: int = 10) -> str:
+    """Oracle twin of one knn_* tier: its top-k rows, as ranked."""
+    return f"""{_tiers_ctes(tier, k=k)}
+        SELECT * FROM {tier}_topk ORDER BY q_id, rnk
+        """
+
+
+def _approx_grid_ctes(methods: tuple[str, ...], cols: str) -> str:
+    """``approx``: each method's top-k ``cols`` labelled by method;
+    ``grid``: every (method, exact query) pair, so an evaluator's
+    zero-hit queries survive the join."""
+    approx = "\n            UNION ALL ".join(
+        f"SELECT '{m}' AS method, {cols} FROM {m}_topk" for m in methods
+    )
+    return f"""approx AS (
+            {approx}
         ), grid AS (
             SELECT method, q_id
             FROM (SELECT DISTINCT q_id FROM exact_topk) qs
-            CROSS JOIN (SELECT unnest(['lsh', 'ivf', 'ivf_mp2', 'pq', 'ivfpq', 'pca']) AS method) m
+            CROSS JOIN (SELECT unnest({list(methods)!r}) AS method) m
+        )"""
+
+
+def _ann_recall_sql(k: int = 10) -> str:
+    """Oracle twin of similarity.ann_recall: each approximate tier's
+    top-k is the ``<tier>_topk`` CTE its own knn_* oracle reads
+    (`_tiers_ctes`), intersected with the exact tier's, so an index
+    change can't silently desynchronize the evaluation from the thing
+    it evaluates."""
+    methods = ("lsh", "ivf", "ivf_mp2", "pq", "ivfpq", "pca")
+    return f"""{_tiers_ctes("exact", *methods, k=k)},
+        {_approx_grid_ctes(methods, "q_id, vec_id")}, hits AS (
+            SELECT method, a.q_id, count(*) AS n_hits
+            FROM approx a JOIN exact_topk e ON a.q_id = e.q_id AND a.vec_id = e.vec_id
+            GROUP BY 1, 2
         ), filled AS (
             SELECT g.method, g.q_id, COALESCE(h.n_hits, 0) AS n_hits
             FROM grid g LEFT JOIN hits h ON g.method = h.method AND g.q_id = h.q_id
@@ -1919,39 +1862,17 @@ def _ann_recall_sql(k: int = 10) -> str:
 
 def _ann_rrf_sql(k: int = 10) -> str:
     """Oracle twin of similarity.ann_rank_fusion: the lsh/ivf ranked
-    top-k legs reuse the SAME CTE builders as their knn_* oracles (the
-    ann_recall no-hand-copy rule), then fuse with integer micro-unit
-    reciprocal ranks — 1e6 // (60+rnk), never a float 1/x."""
-    rank = "row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, vec_id)"
-    return f"""{_ivf_assigned_cte()}, b AS (
-            SELECT vec_id, emb, {_bucket_sql('emb', _PLANES)} AS bucket FROM v
-        ), {_qids_cte()}, lq AS (
-            SELECT vec_id AS q_id, emb AS q_emb, bucket AS q_bucket
-            FROM b WHERE {_QFILTER}
-        ), lsh_scored AS (
-            SELECT q_id, b.vec_id, {_cosine_sql('q_emb', 'emb')} AS cos_sim
-            FROM lq JOIN b ON q_bucket = bucket AND q_id <> b.vec_id
-        ), lsh_ranked AS (
-            SELECT q_id, vec_id, rnk FROM (
-                SELECT q_id, vec_id, {rank} AS rnk FROM lsh_scored
-            ) s WHERE rnk <= {k}
-        ), iq AS (
-            SELECT vec_id AS q_id, emb AS q_emb, centroid_id AS q_centroid
-            FROM assigned WHERE {_QFILTER}
-        ), ivf_scored AS (
-            SELECT q_id, a.vec_id, {_cosine_sql('q_emb', 'a.emb')} AS cos_sim
-            FROM iq JOIN assigned a ON q_centroid = a.centroid_id AND q_id <> a.vec_id
-        ), ivf_ranked AS (
-            SELECT q_id, vec_id, rnk FROM (
-                SELECT q_id, vec_id, {rank} AS rnk FROM ivf_scored
-            ) s WHERE rnk <= {k}
-        ), fused AS (
+    top-k legs are the ``<tier>_topk`` CTEs of the knn_lsh/knn_ivf
+    oracles (`_tiers_ctes`), fused with integer micro-unit reciprocal
+    ranks — 1e6 // (60+rnk), never a float 1/x."""
+    return f"""{_tiers_ctes("lsh", "ivf", k=k)}, fused AS (
             SELECT q_id, vec_id,
                    CAST(count(*) AS INTEGER) AS n_tiers,
                    CAST(sum({similarity.RRF_SCALE} // ({similarity.RRF_K} + rnk))
                         AS BIGINT) AS rrf_micro
             FROM (
-                SELECT * FROM lsh_ranked UNION ALL SELECT * FROM ivf_ranked
+                SELECT q_id, vec_id, rnk FROM lsh_topk
+                UNION ALL SELECT q_id, vec_id, rnk FROM ivf_topk
             ) u GROUP BY 1, 2
         )
         SELECT q_id, vec_id, n_tiers, rrf_micro, fused_rank FROM (
@@ -1966,63 +1887,16 @@ def _ann_rrf_sql(k: int = 10) -> str:
 
 def _ann_ranking_sql(k: int = 10) -> str:
     """Oracle twin of similarity.ann_ranking_metrics — the lsh/ivf/pca
-    top-k legs reuse the SAME CTE builders as their knn_* oracles; the
-    integer discount tables are the operator's own Python-computed
-    literals, so no log2 ever evaluates in either engine."""
-    w = similarity._dcg_weights(k)
-    prefix = [sum(w[:m]) for m in range(k + 1)]
-    mrr_w = [similarity.NDCG_SCALE // r for r in range(1, k + 1)]
-    w_lit = "[" + ", ".join(str(x) for x in w) + "]"
-    mrr_lit = "[" + ", ".join(str(x) for x in mrr_w) + "]"
-    prefix_lit = "[" + ", ".join(str(x) for x in prefix[1:]) + "]"
-    rank = "row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, vec_id)"
-    return f"""{_ivf_assigned_cte()}, b AS (
-            SELECT vec_id, emb, {_bucket_sql('emb', _PLANES)} AS bucket FROM v
-        ), {_qids_cte()}, q AS (
-            SELECT vec_id AS q_id, emb AS q_emb FROM v WHERE {_QFILTER}
-        ), exact_scored AS (
-            SELECT q_id, vec_id, {_cosine_sql('q_emb', 'emb')} AS cos_sim
-            FROM q JOIN v ON q_id <> vec_id
-        ), exact_topk AS (
-            SELECT q_id, vec_id FROM (
-                SELECT q_id, vec_id, {rank} AS rnk FROM exact_scored
-            ) e WHERE rnk <= {k}
-        ), lq AS (
-            SELECT vec_id AS q_id, emb AS q_emb, bucket AS q_bucket
-            FROM b WHERE {_QFILTER}
-        ), lsh_scored AS (
-            SELECT q_id, b.vec_id, {_cosine_sql('q_emb', 'emb')} AS cos_sim
-            FROM lq JOIN b ON q_bucket = bucket AND q_id <> b.vec_id
-        ), lsh_topk AS (
-            SELECT q_id, vec_id, rnk FROM (
-                SELECT q_id, vec_id, {rank} AS rnk FROM lsh_scored
-            ) s WHERE rnk <= {k}
-        ), iq AS (
-            SELECT vec_id AS q_id, emb AS q_emb, centroid_id AS q_centroid
-            FROM assigned WHERE {_QFILTER}
-        ), ivf_scored AS (
-            SELECT q_id, a.vec_id, {_cosine_sql('q_emb', 'a.emb')} AS cos_sim
-            FROM iq JOIN assigned a ON q_centroid = a.centroid_id AND q_id <> a.vec_id
-        ), ivf_topk AS (
-            SELECT q_id, vec_id, rnk FROM (
-                SELECT q_id, vec_id, {rank} AS rnk FROM ivf_scored
-            ) s WHERE rnk <= {k}
-        ), pz AS (
-            SELECT vec_id, {_pca_z_sql_duck('emb')} AS z FROM v
-        ), pca_q AS (
-            SELECT vec_id AS q_id, z AS q_z FROM pz WHERE {_QFILTER}
-        ), pca_scored AS (
-            SELECT q_id, pz.vec_id, {_cosine_sql('q_z', 'z')} AS cos_sim
-            FROM pca_q JOIN pz ON q_id <> pz.vec_id
-        ), pca_topk AS (
-            SELECT q_id, vec_id, rnk FROM (
-                SELECT q_id, vec_id, {rank} AS rnk FROM pca_scored
-            ) s WHERE rnk <= {k}
-        ), approx AS (
-            SELECT 'lsh' AS method, q_id, vec_id, rnk FROM lsh_topk
-            UNION ALL SELECT 'ivf' AS method, q_id, vec_id, rnk FROM ivf_topk
-            UNION ALL SELECT 'pca' AS method, q_id, vec_id, rnk FROM pca_topk
-        ), hits AS (
+    top-k legs are the ``<tier>_topk`` CTEs of their knn_* oracles
+    (`_tiers_ctes`); the integer discount tables are the operator's own
+    (similarity._ranking_tables), so no log2 ever evaluates in either
+    engine."""
+    w_lit, prefix_lit, mrr_lit = (
+        "[" + ", ".join(map(str, t)) + "]" for t in similarity._ranking_tables(k)
+    )
+    methods = ("lsh", "ivf", "pca")
+    return f"""{_tiers_ctes("exact", *methods, k=k)},
+        {_approx_grid_ctes(methods, "q_id, vec_id, rnk")}, hits AS (
             SELECT method, a.q_id, a.rnk
             FROM approx a JOIN exact_topk e ON a.q_id = e.q_id AND a.vec_id = e.vec_id
         ), per_q AS (
@@ -2034,10 +1908,6 @@ def _ann_ranking_sql(k: int = 10) -> str:
             SELECT q_id,
                    CAST({prefix_lit}[least(count(*), {k})] AS BIGINT) AS idcg_u
             FROM exact_topk GROUP BY q_id
-        ), grid AS (
-            SELECT method, q_id
-            FROM (SELECT DISTINCT q_id FROM exact_topk) qs
-            CROSS JOIN (SELECT unnest(['lsh', 'ivf', 'pca']) AS method) m
         ), filled AS (
             SELECT g.method, g.q_id,
                    COALESCE(p.dcg_u, 0) AS dcg_u,
@@ -3394,21 +3264,21 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "knn_ivfpq": QuerySpec(
         _emb(lambda df: similarity.knn_ivfpq(df, 10)),
-        _knn_ivfpq_sql(),
+        _knn_sql("ivfpq"),
         "IVF-PQ composed tier: inverted lists of 8-byte PQ codes — list "
         "pruning AND compressed ADC scoring, the production ANN layout; "
-        "oracle composes the knn_ivf + knn_pq CTE builders",
+        "oracle chain is knn_ivf's iq probe over knn_pq's code CTEs",
     ),
     "knn_pq": QuerySpec(
         _emb(lambda df: similarity.knn_pq(df, 10)),
-        _knn_pq_sql(),
+        _knn_sql("pq"),
         "PQ ADC top-k: per-candidate cost is 4 lookups + 3 adds, not a "
         "64-dim dot — the memory-compressed ANN tier; fixed-order sum "
         "keeps scores bit-identical cross-engine",
     ),
     "knn_pca": QuerySpec(
         _emb(lambda df: similarity.knn_pca(df, 10)),
-        _knn_pca_sql(),
+        _knn_sql("pca"),
         "PCA-reduced cosine top-k: both sides project through the fitted "
         "literal components (pca_model.py) to 16 of 64 dims — the "
         "dimensionality-compression ANN tier (4x cheaper pair scoring, "
@@ -3416,21 +3286,7 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "knn_bruteforce": QuerySpec(
         _emb(lambda df: similarity.knn_bruteforce(df, 10)),
-        f"""
-        WITH v AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-        ), {_qids_cte()}, q AS (
-            SELECT vec_id AS q_id, emb AS q_emb FROM v WHERE {_QFILTER}
-        ), scored AS (
-            SELECT q_id, vec_id, {_cosine_sql('q_emb', 'emb')} AS cos_sim
-            FROM q, v WHERE q_id <> vec_id
-        ), ranked AS (
-            SELECT q_id, vec_id, cos_sim,
-                   CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, vec_id) AS INTEGER) AS rnk
-            FROM scored
-        )
-        SELECT q_id, vec_id, cos_sim, rnk FROM ranked WHERE rnk <= 10 ORDER BY q_id, rnk
-        """,
+        _knn_sql("exact"),
     ),
     "lsh_buckets": QuerySpec(
         _emb(similarity.lsh_buckets),
@@ -3442,23 +3298,7 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "knn_lsh": QuerySpec(
         _emb(lambda df: similarity.knn_lsh(df, 10)),
-        f"""
-        WITH b AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-                   {_bucket_sql('CAST(embedding AS DOUBLE[])', _PLANES)} AS bucket
-            FROM embeddings
-        ), {_qids_cte(src="b")}, q AS (
-            SELECT vec_id AS q_id, emb AS q_emb, bucket AS q_bucket FROM b WHERE {_QFILTER}
-        ), scored AS (
-            SELECT q_id, b.vec_id, {_cosine_sql('q_emb', 'emb')} AS cos_sim
-            FROM q JOIN b ON q_bucket = bucket AND q_id <> b.vec_id
-        ), ranked AS (
-            SELECT q_id, vec_id, cos_sim,
-                   CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, vec_id) AS INTEGER) AS rnk
-            FROM scored
-        )
-        SELECT q_id, vec_id, cos_sim, rnk FROM ranked WHERE rnk <= 10 ORDER BY q_id, rnk
-        """,
+        _knn_sql("lsh"),
     ),
     "ivf_histogram": QuerySpec(
         _emb(similarity.ivf_histogram),
@@ -3469,19 +3309,7 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "knn_ivf": QuerySpec(
         _emb(lambda df: similarity.knn_ivf(df, 10)),
-        f"""{_ivf_assigned_cte()}, {_qids_cte()}, q AS (
-            SELECT vec_id AS q_id, emb AS q_emb, centroid_id AS q_centroid
-            FROM assigned WHERE {_QFILTER}
-        ), scored AS (
-            SELECT q_id, a.vec_id, {_cosine_sql('q_emb', 'a.emb')} AS cos_sim
-            FROM q JOIN assigned a ON q_centroid = a.centroid_id AND q_id <> a.vec_id
-        ), ranked AS (
-            SELECT q_id, vec_id, cos_sim,
-                   CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, vec_id) AS INTEGER) AS rnk
-            FROM scored
-        )
-        SELECT q_id, vec_id, cos_sim, rnk FROM ranked WHERE rnk <= 10 ORDER BY q_id, rnk
-        """,
+        _knn_sql("ivf"),
     ),
     "ivf_index_maintenance": QuerySpec(
         _emb(similarity.ivf_index_maintenance),
@@ -3600,23 +3428,7 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "knn_ivf_multiprobe": QuerySpec(
         _emb(lambda df: similarity.knn_ivf_multiprobe(df, 10, 2)),
-        f"""{_ivf_assigned_cte()}, {_qids_cte()}, qprobe AS (
-            SELECT vec_id AS q_id, emb AS q_emb, cid AS q_centroid
-            FROM (
-                SELECT vec_id, emb, cid,
-                       row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, cid DESC) AS rn
-                FROM cscores WHERE {_QFILTER}
-            ) r WHERE rn <= 2
-        ), scored AS (
-            SELECT q_id, a.vec_id, {_cosine_sql('q_emb', 'a.emb')} AS cos_sim
-            FROM qprobe q JOIN assigned a ON q.q_centroid = a.centroid_id AND q_id <> a.vec_id
-        ), ranked AS (
-            SELECT q_id, vec_id, cos_sim,
-                   CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, vec_id) AS INTEGER) AS rnk
-            FROM scored
-        )
-        SELECT q_id, vec_id, cos_sim, rnk FROM ranked WHERE rnk <= 10 ORDER BY q_id, rnk
-        """,
+        _knn_sql("ivf_mp2"),
         "IVF nprobe=2: disjoint inverted lists, no candidate dedup needed",
     ),
     "nn_descent_knn_graph": QuerySpec(

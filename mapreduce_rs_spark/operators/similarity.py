@@ -719,9 +719,19 @@ def semdedup(
         .distinct()
         .withColumn("is_dropped", F.lit(1))
     )
+    return _drop_report(assigned, dropped, "centroid_id")
+
+
+def _drop_report(
+    assigned: DataFrame, dropped: DataFrame, key: "str | F.Column"
+) -> DataFrame:
+    """The per-cluster semdedup audit (centroid_id, n_vectors,
+    n_dropped, n_kept, drop_ratio): ``assigned`` vectors grouped by
+    ``key`` (named centroid_id), ``dropped`` the (vec_id, is_dropped)
+    rows of the vectors the pair pass dropped."""
     return (
         assigned.join(dropped, "vec_id", "left")
-        .groupBy("centroid_id")
+        .groupBy(key)
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
             F.sum(F.coalesce("is_dropped", F.lit(0))).cast("long").alias("n_dropped"),
@@ -993,10 +1003,7 @@ def pq_reconstruction_error(df: DataFrame) -> DataFrame:
             )
             + ")"
         )
-        qx = F.transform(
-            F.expr(_subvec_sql("_embd", sub)),
-            lambda x: F.round(x * DRIFT_SCALE, 0).cast("long"),
-        )
+        qx = F.expr(_qv_sql(_subvec_sql("_embd", sub)))
         qc = F.element_at(F.expr(book_sql), F.col(f"code_{sub}") + 1)
         return F.aggregate(
             F.zip_with(qx, qc, lambda a, b: (a - b) * (a - b)),
@@ -1426,7 +1433,103 @@ def ann_rank_fusion(df: DataFrame, k: int = 10) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# Integer micro-unit vector arithmetic: the fixed-point format of every
+# exact vector operator (label drift, IVF maintenance, outliers, PQ
+# error, the distributed k-means family, derived-k semdedup and the
+# derived near-dup pass). A coordinate is round(x · DRIFT_SCALE) as
+# BIGINT, a dot is an exact BIGINT fold, a squared norm accumulates as
+# DECIMAL(38,0), and cos >= tau is an integer cross-multiply. Each piece
+# is one builder below, mirrored once in plans/registry.py (`_q_sql`,
+# `_qdot_sql`, `_QNORM2_SQL`, `_renorm_sql`, `_within_tau_sql`).
+# ---------------------------------------------------------------------------
+
 DRIFT_SCALE = 1_000_000  # per-dimension quantization for exact sums
+
+
+def _q(x: str) -> str:
+    """SQL: the double ``x`` as integer micro-units (round half away
+    from zero, then BIGINT)."""
+    return f"CAST(round({x} * {float(DRIFT_SCALE)!r}, 0) AS BIGINT)"
+
+
+def _qv_sql(arr: str) -> str:
+    """SQL: the double array ``arr`` quantized element-wise."""
+    return f"transform({arr}, x -> {_q('x')})"
+
+
+def _qv_frame(df: DataFrame) -> DataFrame:
+    """The quantized corpus frame (vec_id, qv)."""
+    return ensure_parallelism(df, "vec_id").select(
+        "vec_id", F.expr(_qv_sql(f"CAST(embedding AS {_DBL})")).alias("qv")
+    )
+
+
+def _qdot_sql(a: str, b: str) -> str:
+    """SQL: the exact BIGINT dot of two quantized arrays."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, (acc, x) -> acc + x)"
+
+
+def _norm2_sql(arr: str = "qv") -> str:
+    """SQL: Σx² of a quantized array as an exact DECIMAL(38,0)."""
+    return (
+        f"aggregate({arr}, CAST(0 AS DECIMAL(38,0)), "
+        "(acc, x) -> acc + CAST(x AS DECIMAL(38,0)) * x)"
+    )
+
+
+def _renorm_sql(arr: str) -> str:
+    """SQL: the integer vector ``arr`` with squared norm column ``ss``
+    rescaled to a unit micro-unit vector — one sqrt, one division and
+    one quantization per coordinate, each correctly rounded."""
+    return f"transform({arr}, s -> {_q('CAST(s AS DOUBLE) / sqrt(CAST(ss AS DOUBLE))')})"
+
+
+def _with_nrm2(assigned: DataFrame) -> DataFrame:
+    """(vec_id, qv, cid, nrm2): an assigned quantized frame with the
+    squared norm the tau threshold reads."""
+    return assigned.select("vec_id", "qv", "cid", F.expr(_norm2_sql()).alias("nrm2"))
+
+
+def _qpair(a: str, b: str) -> list[F.Column]:
+    """The (dt, na, nb) columns of a join of frames aliased ``a`` and
+    ``b``, each carrying (qv, nrm2)."""
+    return [
+        F.expr(_qdot_sql(f"{a}.qv", f"{b}.qv")).alias("dt"),
+        F.col(f"{a}.nrm2").alias("na"),
+        F.col(f"{b}.nrm2").alias("nb"),
+    ]
+
+
+def _within_tau(tau_frac: tuple[int, int]) -> F.Column:
+    """cos >= num/den over (dt, na, nb) as the integer cross-multiply
+    ``dt >= 0 AND dt²·den² >= na·nb·num²``. A zero-norm side never
+    passes (its cosine is NULL, so the pair is kept, as in ``semdedup``);
+    without the guard 0 >= 0 would drop it."""
+    num, den = tau_frac
+    return (
+        (F.col("na") > 0)
+        & (F.col("nb") > 0)
+        & (F.col("dt") >= 0)
+        & (
+            F.col("dt").cast("decimal(38,0)") * F.col("dt") * (den * den)
+            >= F.col("na") * F.col("nb") * (num * num)
+        )
+    )
+
+
+def _qcos() -> F.Column:
+    """cos_sim over (dt, na, nb): one double division of exact integers."""
+    return (
+        F.col("dt").cast("double") / F.sqrt((F.col("na") * F.col("nb")).cast("double"))
+    ).alias("cos_sim")
+
+
+def _vec_of() -> F.Column:
+    """Aggregate: the (pos, s) rows of a group as the ordered vector of s."""
+    return F.transform(
+        F.array_sort(F.collect_list(F.struct("pos", "s"))), lambda st: st["s"]
+    )
 
 
 def label_centroid_drift(df: DataFrame) -> DataFrame:
@@ -1459,13 +1562,11 @@ def label_centroid_drift(df: DataFrame) -> DataFrame:
         .select(
             "label",
             "pos",
-            F.round(F.col("x") * DRIFT_SCALE, 0).cast("long").alias("q"),
+            F.expr(_q("x")).alias("q"),
         )
     )
     sums = q.groupBy("label", "pos").agg(F.sum("q").alias("s"))
-    vec_of = F.transform(
-        F.array_sort(F.collect_list(F.struct("pos", "s"))), lambda st: st["s"]
-    )
+    vec_of = _vec_of()
     label_vecs = sums.groupBy("label").agg(vec_of.alias("vec"))
     global_vec = (
         sums.groupBy("pos")
@@ -1562,7 +1663,7 @@ def ivf_maintenance_partials(
             "centroid_id",
             "is_new",
             "pos",
-            F.round(F.col("x") * DRIFT_SCALE, 0).cast("long").alias("q"),
+            F.expr(_q("x")).alias("q"),
         )
         .groupBy(*extra_keys, "centroid_id", "pos")
         .agg(
@@ -1580,11 +1681,8 @@ def ivf_maintenance_rollup(per: DataFrame) -> DataFrame:
     streaming state report so the two cannot drift."""
     cents = centroids()
     num, den = IVF_REFIT_GROWTH
-    vec_of = F.transform(
-        F.array_sort(F.collect_list(F.struct("pos", "s"))), lambda st: st["s"]
-    )
     final = per.groupBy("centroid_id").agg(
-        vec_of.alias("vec"),
+        _vec_of().alias("vec"),
         # every vector contributes one row per pos, so the membership
         # tallies are identical across pos — read them off pos 0
         F.max(F.when(F.col("pos") == 0, F.col("nb"))).alias("n_before"),
@@ -1727,33 +1825,22 @@ def _rolled_state(cent: DataFrame) -> DataFrame:
     )
 
 
-def _dkm_quantize(df: DataFrame, persist_dir: str | None, tag: str) -> DataFrame:
-    """The integer-quantized corpus frame (vec_id, qv) every distributed
-    k-means consumer reads — ONE definition (round(x · DRIFT_SCALE) as
-    BIGINT) so fit, eval and the derived-k assignment cannot drift."""
-    return materialize(
-        ensure_parallelism(df, "vec_id").select(
-            "vec_id",
-            F.expr(
-                f"transform(CAST(embedding AS {_DBL}), "
-                f"x -> CAST(round(x * {float(DRIFT_SCALE)!r}, 0) AS BIGINT))"
-            ).alias("qv"),
-        ),
-        persist_dir,
-        tag,
+def _dkm_winner_sql(carr_sql: str, with_cq: bool = False) -> str:
+    """SQL: the argmax-dot winner struct (score, cid[, cq]) of ``qv``
+    over the centroid structs ``carr_sql`` (exact BIGINT folds; the
+    struct compare breaks score ties -> higher cid, the
+    ``_nearest_centroid_expr`` convention)."""
+    cq = ", 'cq', c.cq" if with_cq else ""
+    return (
+        f"array_max(transform({carr_sql}, c -> named_struct("
+        f"'score', {_qdot_sql('qv', 'c.cq')}, 'cid', c.cid{cq})))"
     )
 
 
 def _dkm_argmax_cid() -> F.Column:
-    """argmax-dot assignment over the rolled broadcast state ``carr``
-    (exact BIGINT folds; struct compare breaks score ties -> higher
-    cid, the ``_nearest_centroid_expr`` convention). ONE builder for
-    the round engine and every assignment consumer."""
-    return F.expr(
-        "array_max(transform(carr, c -> named_struct("
-        "'score', aggregate(zip_with(qv, c.cq, (x, y) -> x * y), 0L, (a, x) -> a + x), "
-        "'cid', c.cid))).cid"
-    )
+    """argmax-dot assignment over the rolled broadcast state ``carr`` —
+    the round engine's and every assignment consumer's."""
+    return F.expr(_dkm_winner_sql("carr") + ".cid")
 
 
 def _lloyd_rounds(
@@ -1776,9 +1863,6 @@ def _lloyd_rounds(
     is the refit family's exact broadcast argmax (k x 64 dots per
     vector — the right shape when k is bounded)."""
     argmax_cid = _dkm_argmax_cid()
-    vec_of = F.transform(
-        F.array_sort(F.collect_list(F.struct("pos", "s"))), lambda st: st["s"]
-    )
     for r in range(rounds):
         if assign is not None:
             assigned = assign(q, cent)
@@ -1797,23 +1881,14 @@ def _lloyd_rounds(
             )
             .groupBy("cid")
             .agg(
-                vec_of.alias("svec"),
+                _vec_of().alias("svec"),
                 # every member contributes one row per pos — tallies
                 # ride the pos-0 rows (ivf_index_maintenance shape)
                 F.max(F.when(F.col("pos") == 0, F.col("n"))).alias("nm"),
             )
-            .withColumn(
-                "ss",
-                F.expr(
-                    "aggregate(svec, CAST(0 AS DECIMAL(38,0)), "
-                    "(acc, x) -> acc + CAST(x AS DECIMAL(38,0)) * x)"
-                ),
-            )
+            .withColumn("ss", F.expr(_norm2_sql("svec")))
         )
-        cq_new = F.expr(
-            "transform(svec, s -> CAST(round(CAST(s AS DOUBLE) "
-            f"/ sqrt(CAST(ss AS DOUBLE)) * {float(DRIFT_SCALE)!r}, 0) AS BIGINT))"
-        )
+        cq_new = F.expr(_renorm_sql("svec"))
         cent = materialize(
             cent.select("cid", "cq")
             .join(upd, "cid", "left")
@@ -1852,7 +1927,7 @@ def _kmeans_rounds(
         F.col("c.cq").alias("cq"),
         F.lit(0).cast("long").alias("n_members"),
     )
-    q = _dkm_quantize(df, persist_dir, "dkm_corpus")
+    q = materialize(_qv_frame(df), persist_dir, "dkm_corpus")
     return q, _lloyd_rounds(q, cent, rounds, persist_dir)
 
 
@@ -1893,19 +1968,14 @@ def kmeans_refit_eval(
     rolled = _rolled_state(cent)
     init_carr = _init_struct_arr(init)
 
-    def winner(carr_sql: str) -> str:
-        return (
-            f"array_max(transform({carr_sql}, c -> named_struct("
-            "'score', aggregate(zip_with(qv, c.cq, (x, y) -> x * y), "
-            "0L, (a, x) -> a + x), 'cid', c.cid, 'cq', c.cq)))"
-        )
-
     def cos_bp(w_col: str) -> F.Column:
+        # a zero vector's cosine is NULL (0/0), so its bp drops out of
+        # the sums — DuckDB's double division by zero, not an ANSI error
         return F.round(
-            F.expr(f"CAST({w_col}.score AS DOUBLE)")
-            / (
+            F.try_divide(
+                F.expr(f"CAST({w_col}.score AS DOUBLE)"),
                 _l2_raw(F.col("qv").cast(_DBL))
-                * _l2_raw(F.expr(f"CAST({w_col}.cq AS {_DBL})"))
+                * _l2_raw(F.expr(f"CAST({w_col}.cq AS {_DBL})")),
             )
             * 10000
         ).cast("long")
@@ -1913,8 +1983,8 @@ def kmeans_refit_eval(
     scored = (
         q.crossJoin(F.broadcast(rolled))
         .select(
-            F.expr(winner("carr")).alias("wr"),
-            F.expr(winner(init_carr)).alias("wi"),
+            F.expr(_dkm_winner_sql("carr", with_cq=True)).alias("wr"),
+            F.expr(_dkm_winner_sql(init_carr, with_cq=True)).alias("wi"),
             "qv",
         )
         .select(
@@ -1935,13 +2005,6 @@ def kmeans_refit_eval(
 # calibrated 0.40) so the pair threshold is an integer cross-multiply —
 # no float compare can flip a boundary pair between engines.
 SEMDEDUP_TAU_FRAC = (2, 5)
-
-# Σ qx² as an exact DECIMAL(38,0) — the per-vector squared norm every
-# derived-k consumer shares (seed renormalization + pair threshold).
-_QV_NORM2 = (
-    "aggregate(qv, CAST(0 AS DECIMAL(38,0)), "
-    "(acc, x) -> acc + CAST(x AS DECIMAL(38,0)) * x)"
-)
 
 
 SDK_BUCKET_TARGET = 4  # E[centroids per LSH bucket] the plane count aims at
@@ -2002,9 +2065,7 @@ def _sdk_blocked_assign(
         "cq",
         F.explode(F.array(*[F.expr(f"cb ^ {m}") for m in masks])).alias("bucket"),
     )
-    score = F.expr(
-        "aggregate(zip_with(qv, cq, (x, y) -> x * y), 0L, (a, x) -> a + x)"
-    )
+    score = F.expr(_qdot_sql("qv", "cq"))
     winners = (
         q.join(F.broadcast(cb), "bucket")
         .select(
@@ -2035,13 +2096,7 @@ def _sdk_quantize(
     materialized: one narrow pass, one checkpoint read by every
     consumer (seed select, rounds, assignments)."""
     return materialize(
-        ensure_parallelism(df, "vec_id").select(
-            "vec_id",
-            F.expr(
-                f"transform(CAST(embedding AS {_DBL}), "
-                f"x -> CAST(round(x * {float(DRIFT_SCALE)!r}, 0) AS BIGINT))"
-            ).alias("qv"),
-        ).select(
+        _qv_frame(df).select(
             "vec_id",
             "qv",
             _bucket_expr(f"CAST(qv AS {_DBL})", planes).alias("bucket"),
@@ -2071,7 +2126,7 @@ def _sdk_fit(
     k = ivf_k_for(n, target)
     planes = hyperplanes(sdk_planes_for(k))
     q = _sdk_quantize(df, planes, persist_dir, f"{tag}_corpus")
-    ss = F.expr(_QV_NORM2)
+    ss = F.expr(_norm2_sql())
     # seed state: ONE projection over q -> TakeOrdered(k) -> k-row
     # window for cid + renormalize (bounded by construction: k <= 2^17)
     heads = (
@@ -2083,15 +2138,11 @@ def _sdk_fit(
         .orderBy("h", "vec_id")
         .limit(k)
     )
-    cq_seed = F.expr(
-        "transform(qv, s -> CAST(round(CAST(s AS DOUBLE) "
-        f"/ sqrt(CAST(ss AS DOUBLE)) * {float(DRIFT_SCALE)!r}, 0) AS BIGINT))"
-    )
     w_seed = Window.orderBy("h", "vec_id")
     cent0 = materialize(
         heads.select(
             (F.row_number().over(w_seed) - 1).cast("int").alias("cid"),
-            cq_seed.alias("cq"),
+            F.expr(_renorm_sql("qv")).alias("cq"),
             F.lit(0).cast("long").alias("n_members"),
         ),
         persist_dir,
@@ -2117,26 +2168,11 @@ def _sdk_admit(
     (vec_id, cid, is_dropped). Shared by the registry's
     ``semdedup_ingest_audit`` and the streaming twin's
     ``semdedup_admit_batch`` — the decision rule has one definition."""
-    num, den = tau_frac
-    dot = F.expr(
-        "aggregate(zip_with(a.qv, b.qv, (x, y) -> x * y), 0L, (acc, x) -> acc + x)"
-    )
     a, b = assigned_new.alias("a"), standing.alias("b")
     dropped = (
         a.join(b, F.col("a.cid") == F.col("b.cid"))
-        .select(
-            F.col("a.vec_id").alias("vec_id"), dot.alias("dt"),
-            F.col("a.nrm2").alias("na"), F.col("b.nrm2").alias("nb"),
-        )
-        .where(
-            (F.col("na") > 0)
-            & (F.col("nb") > 0)
-            & (F.col("dt") >= 0)
-            & (
-                F.col("dt").cast("decimal(38,0)") * F.col("dt") * (den * den)
-                >= F.col("na") * F.col("nb") * (num * num)
-            )
-        )
+        .select(F.col("a.vec_id").alias("vec_id"), *_qpair("a", "b"))
+        .where(_within_tau(tau_frac))
         .select("vec_id")
         .distinct()
         .withColumn("is_dropped", F.lit(1))
@@ -2202,64 +2238,28 @@ def semdedup_derived_k(
     (k x dim integers), the cid-blocked pair join (E[cluster] ~
     target), and the (cid, flag) audit aggregate."""
     q, cent, planes = _sdk_fit(df, rounds, target, persist_dir, tag="sdk")
-    ss = F.expr(_QV_NORM2)
     # final-model assignment of the FULL corpus (the same blocked
     # assignment the rounds use), carrying the exact squared norm the
     # pair threshold needs; materialized once — the self-join must not
     # recompute the candidate argmax
     assigned = materialize(
-        _sdk_blocked_assign(q, cent, planes).select(
-            "vec_id", "qv", "cid", ss.alias("nrm2")
-        ),
-        persist_dir,
-        "sdk_assign",
+        _with_nrm2(_sdk_blocked_assign(q, cent, planes)), persist_dir, "sdk_assign"
     )
-    num, den = tau_frac
     a, b = assigned.alias("a"), assigned.alias("b")
-    dot = F.expr(
-        "aggregate(zip_with(a.qv, b.qv, (x, y) -> x * y), 0L, (acc, x) -> acc + x)"
-    )
     dropped = (
         a.join(
             b,
             (F.col("a.cid") == F.col("b.cid"))
             & (F.col("b.vec_id") < F.col("a.vec_id")),
         )
-        .select(F.col("a.vec_id").alias("vec_id"), dot.alias("dt"),
-                F.col("a.nrm2").alias("na"), F.col("b.nrm2").alias("nb"))
-        .where(
-            # na/nb > 0 matches base semdedup's zero-norm semantics:
-            # _cos_pair yields NULL for a zero vector and KEEPS the
-            # pair; without the guard the cross-multiply's 0 >= 0
-            # would silently drop it (r10 ADVICE)
-            (F.col("na") > 0)
-            & (F.col("nb") > 0)
-            & (F.col("dt") >= 0)
-            & (
-                F.col("dt").cast("decimal(38,0)") * F.col("dt") * (den * den)
-                >= F.col("na") * F.col("nb") * (num * num)
-            )
-        )
+        .select(F.col("a.vec_id").alias("vec_id"), *_qpair("a", "b"))
+        .where(_within_tau(tau_frac))
         .select("vec_id")
         .distinct()
         .withColumn("is_dropped", F.lit(1))
     )
-    return (
-        assigned.join(dropped, "vec_id", "left")
-        .groupBy(F.col("cid").cast("int").alias("centroid_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vectors"),
-            F.sum(F.coalesce("is_dropped", F.lit(0))).cast("long").alias("n_dropped"),
-        )
-        .select(
-            "centroid_id",
-            "n_vectors",
-            "n_dropped",
-            (F.col("n_vectors") - F.col("n_dropped")).alias("n_kept"),
-            F.try_divide(F.col("n_dropped").cast("double"), F.col("n_vectors")).alias(
-                "drop_ratio"
-            ),
-        )
+    return _drop_report(
+        assigned, dropped, F.col("cid").cast("int").alias("centroid_id")
     )
 
 
@@ -2296,20 +2296,20 @@ def semdedup_ingest_audit(
     q, cent, planes = _sdk_fit(
         standing_src, rounds, target, persist_dir, tag="sdi"
     )
-    ss = F.expr(_QV_NORM2)
-    standing = _sdk_blocked_assign(q, cent, planes).select(
-        "vec_id", "qv", "cid", ss.alias("nrm2")
-    )
+    standing = _with_nrm2(_sdk_blocked_assign(q, cent, planes))
     qi = _sdk_quantize(ingest_src, planes, persist_dir, "sdi_ingest")
     # materialized: read by the admission join AND the final audit
     assigned_new = materialize(
-        _sdk_blocked_assign(qi, cent, planes).select(
-            "vec_id", "qv", "cid", ss.alias("nrm2")
-        ),
-        persist_dir,
-        "sdi_assign",
+        _with_nrm2(_sdk_blocked_assign(qi, cent, planes)), persist_dir, "sdi_assign"
     )
-    decisions = _sdk_admit(assigned_new, standing, tau_frac)
+    return _ingest_report(_sdk_admit(assigned_new, standing, tau_frac))
+
+
+def _ingest_report(decisions: DataFrame) -> DataFrame:
+    """The per-cluster admission audit (centroid_id, n_ingested,
+    n_dropped, n_admitted, drop_ratio) over (cid, is_dropped) decision
+    rows — shared by ``semdedup_ingest_audit`` and the streaming twin's
+    ``streaming_semdedup_ingest_report``."""
     return (
         decisions.groupBy(F.col("cid").cast("int").alias("centroid_id"))
         .agg(
@@ -2403,19 +2403,11 @@ def embedding_near_dup_derived(
     n = df.count()
     planes = hyperplanes(sdk_planes_for(n, target))
     bucketed = materialize(
-        ensure_parallelism(df, "vec_id")
-        .select(
-            "vec_id",
-            F.expr(
-                f"transform(CAST(embedding AS {_DBL}), "
-                f"x -> CAST(round(x * {float(DRIFT_SCALE)!r}, 0) AS BIGINT))"
-            ).alias("qv"),
-        )
-        .select(
+        _qv_frame(df).select(
             "vec_id",
             "qv",
             _bucket_expr(f"CAST(qv AS {_DBL})", planes).alias("bucket"),
-            F.expr(_QV_NORM2).alias("nrm2"),
+            F.expr(_norm2_sql()).alias("nrm2"),
         ),
         persist_dir,
         "ndd_buckets",
@@ -2428,11 +2420,7 @@ def embedding_near_dup_derived(
         .where(F.col("rep_rn") <= rep_cap)
         .select("vec_id", "qv", "bucket", "nrm2")
     )
-    num, den = tau_frac
     a, b = bucketed.alias("a"), reps.alias("b")
-    dot = F.expr(
-        "aggregate(zip_with(a.qv, b.qv, (x, y) -> x * y), 0L, (acc, x) -> acc + x)"
-    )
     hits = (
         a.join(
             b,
@@ -2442,27 +2430,10 @@ def embedding_near_dup_derived(
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            dot.alias("dt"),
-            F.col("a.nrm2").alias("na"),
-            F.col("b.nrm2").alias("nb"),
+            *_qpair("a", "b"),
         )
-        .where(
-            (F.col("na") > 0)
-            & (F.col("nb") > 0)
-            & (F.col("dt") >= 0)
-            & (
-                F.col("dt").cast("decimal(38,0)") * F.col("dt") * (den * den)
-                >= F.col("na") * F.col("nb") * (num * num)
-            )
-        )
-        .select(
-            "vec_a",
-            "vec_b",
-            (
-                F.col("dt").cast("double")
-                / F.sqrt((F.col("na") * F.col("nb")).cast("double"))
-            ).alias("cos_sim"),
-        )
+        .where(_within_tau(tau_frac))
+        .select("vec_a", "vec_b", _qcos())
     )
     w = Window.partitionBy("vec_a").orderBy(
         F.round(F.col("cos_sim"), 9).desc(), F.col("vec_b")
@@ -2514,15 +2485,7 @@ def embedding_near_dup_eval(
         df, tau_frac, cap, target, rep_cap, persist_dir
     ).select("vec_a", "vec_b")
     corpus = materialize(
-        ensure_parallelism(df, "vec_id")
-        .select(
-            "vec_id",
-            F.expr(
-                f"transform(CAST(embedding AS {_DBL}), "
-                f"x -> CAST(round(x * {float(DRIFT_SCALE)!r}, 0) AS BIGINT))"
-            ).alias("qv"),
-        )
-        .select("vec_id", "qv", F.expr(_QV_NORM2).alias("nrm2")),
+        _qv_frame(df).select("vec_id", "qv", F.expr(_norm2_sql()).alias("nrm2")),
         persist_dir,
         "nde_corpus",
     )
@@ -2540,38 +2503,17 @@ def embedding_near_dup_eval(
         persist_dir,
         "nde_sample",
     )
-    num, den = tau_frac
     s, c = sample.alias("s"), corpus.alias("c")
-    dot = F.expr(
-        "aggregate(zip_with(s.qv, c.qv, (x, y) -> x * y), 0L, (acc, x) -> acc + x)"
-    )
     ex = (
         F.broadcast(s)
         .join(c, F.col("s.vec_id") != F.col("c.vec_id"))
         .select(
             F.col("s.vec_id").alias("q_id"),
             F.col("c.vec_id").alias("p_id"),
-            dot.alias("dt"),
-            F.col("s.nrm2").alias("na"),
-            F.col("c.nrm2").alias("nb"),
+            *_qpair("s", "c"),
         )
-        .where(
-            (F.col("na") > 0)
-            & (F.col("nb") > 0)
-            & (F.col("dt") >= 0)
-            & (
-                F.col("dt").cast("decimal(38,0)") * F.col("dt") * (den * den)
-                >= F.col("na") * F.col("nb") * (num * num)
-            )
-        )
-        .select(
-            "q_id",
-            "p_id",
-            (
-                F.col("dt").cast("double")
-                / F.sqrt((F.col("na") * F.col("nb")).cast("double"))
-            ).alias("cos_sim"),
-        )
+        .where(_within_tau(tau_frac))
+        .select("q_id", "p_id", _qcos())
     )
     wx = Window.partitionBy("q_id").orderBy(
         F.round(F.col("cos_sim"), 9).desc(), F.col("p_id")
@@ -2654,19 +2596,16 @@ def _refit_assign(df: DataFrame, rolled: DataFrame) -> DataFrame:
     """Corpus-side refit assignment: (vec_id, embd, c_norm,
     centroid_id) — double embd + norm + the family's exact BIGINT
     argmax against the broadcast rolled state, each computed once per
-    row (the _ivf_assigned_scored discipline); qv derived inline so
-    the argmax sees the fit's own quantization. ONE definition shared
+    row (the _ivf_assigned_scored discipline); qv through ``_qv_sql``,
+    the fit's own quantization. ONE definition shared
     by ``knn_ivf_refit`` (self-contained query) and the streaming
     serve twin's per-batch step (streaming/pipeline.py), so the
     continuous loop's assignments can never drift from the query's."""
-    qv_expr = F.expr(
-        f"transform(embd, x -> CAST(round(x * {float(DRIFT_SCALE)!r}, 0) AS BIGINT))"
-    )
     return (
         ensure_parallelism(df, "vec_id")
         .select("vec_id", F.col("embedding").cast(_DBL).alias("embd"))
         .select("vec_id", "embd", _l2_raw(F.col("embd")).alias("c_norm"),
-                qv_expr.alias("qv"))
+                F.expr(_qv_sql("embd")).alias("qv"))
         .crossJoin(F.broadcast(rolled))
         .select("vec_id", "embd", "c_norm", _dkm_argmax_cid().alias("centroid_id"))
     )
@@ -2688,10 +2627,7 @@ def _refit_serve_topk(
         .select(
             "q_id",
             F.col("q_emb").cast(_DBL).alias("q_embd"),
-            F.expr(
-                f"transform(CAST(q_emb AS {_DBL}), "
-                f"x -> CAST(round(x * {float(DRIFT_SCALE)!r}, 0) AS BIGINT))"
-            ).alias("qv"),
+            F.expr(_qv_sql(f"CAST(q_emb AS {_DBL})")).alias("qv"),
             "carr",
         )
         .select(
@@ -2760,7 +2696,7 @@ def embedding_outliers(df: DataFrame, top_k: int = OUTLIER_TOP_K) -> DataFrame:
             "vec_id",
             "label",
             "pos",
-            F.round(F.col("x") * DRIFT_SCALE, 0).cast("long").alias("qx"),
+            F.expr(_q("x")).alias("qx"),
         ),
         None,
         "outlier_q",

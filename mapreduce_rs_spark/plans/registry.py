@@ -868,59 +868,115 @@ def _gi_sql(
     return ",\n        ".join(parts)
 
 
-def _dkm_ctes(
-    rounds: int = similarity.KMEANS_DIST_ROUNDS,
-    init_body: str | None = None,
-    extra_after_v: str = "",
-) -> tuple[str, str]:
+# Oracle twins of similarity.py's integer micro-unit builders (`_q`,
+# `_qdot_sql`, `_norm2_sql`, `_renorm_sql`, `_qpair`, `_within_tau`,
+# `_qcos`, `_drop_report`): a coordinate is round(x · DRIFT_SCALE) as
+# BIGINT, dots are list_dot_product over the integer lists cast to
+# double (exact below 2^53: |term| <= ~5.5e12, 64 terms), squared norms
+# accumulate as HUGEINT and cos >= tau is an integer cross-multiply.
+
+
+def _q_sql(x: str) -> str:
+    """The double ``x`` as integer micro-units."""
+    return f"CAST(round({x} * {float(similarity.DRIFT_SCALE)!r}, 0) AS BIGINT)"
+
+
+def _qv_sql(arr: str = "CAST(embedding AS DOUBLE[])") -> str:
+    """The double list ``arr`` quantized element-wise."""
+    return f"list_transform({arr}, x -> {_q_sql('x')})"
+
+
+def _qdot_sql(a: str, b: str) -> str:
+    """The exact dot of two quantized lists."""
+    return f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
+
+
+# Σ qv² as an exact HUGEINT
+_QNORM2_SQL = "list_sum(list_transform(qv, x -> CAST(x AS HUGEINT) * x))"
+
+
+def _renorm_sql(arr: str, ss: str) -> str:
+    """The integer list ``arr`` with squared norm ``ss`` rescaled to a
+    unit micro-unit vector."""
+    return f"list_transform({arr}, s -> {_q_sql(f'CAST(s AS DOUBLE) / sqrt(CAST({ss} AS DOUBLE))')})"
+
+
+def _argmax_sql(src: str, join: str, cols: str = "vec_id, qv, cid", v: str = "v") -> str:
+    """Assignment of the quantized vectors ``src`` (alias ``v``) to the
+    centroids ``c`` of ``join``: each vector's exact-dot argmax, ties ->
+    higher cid, as ``cols`` over (vec_id, qv, cid, cq, score)."""
+    dot = _qdot_sql(f"{v}.qv", "c.cq")
+    return f"""SELECT {cols} FROM (
+                SELECT {v}.vec_id, {v}.qv, c.cid, c.cq, {dot} AS score,
+                       row_number() OVER (PARTITION BY {v}.vec_id
+                           ORDER BY {dot} DESC, c.cid DESC) AS rn
+                FROM {src} {join}
+            ) r WHERE rn = 1"""
+
+
+def _qpair_sql(a: str, b: str) -> str:
+    """(dt, na, nb) of a join of ``a`` and ``b``, each carrying (qv, nrm2)."""
+    return (
+        f"CAST({_qdot_sql(f'{a}.qv', f'{b}.qv')} AS HUGEINT) AS dt, "
+        f"{a}.nrm2 AS na, {b}.nrm2 AS nb"
+    )
+
+
+def _within_tau_sql(tau_frac: tuple[int, int]) -> str:
+    """cos >= num/den over (dt, na, nb), zero-norm sides never pass."""
+    num, den = tau_frac
+    return f"na > 0 AND nb > 0 AND dt >= 0 AND dt * dt * {den * den} >= na * nb * {num * num}"
+
+
+_QCOS_SQL = "CAST(dt AS DOUBLE) / sqrt(CAST(na * nb AS DOUBLE)) AS cos_sim"
+
+
+def _drop_report_sql(
+    src: str, cid: str, n: str = "n_vectors", rest: str = "n_kept"
+) -> str:
+    """The per-cluster audit of CTE ``src`` (cluster column ``cid``)
+    against the ``dropped`` CTE: semdedup's (n_vectors, n_kept) or, with
+    ``n``/``rest`` = n_ingested/n_admitted, the ingest audit's."""
+    hit = "CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END"
+    return f"""SELECT s.{cid} AS centroid_id,
+               CAST(count(*) AS BIGINT) AS {n},
+               CAST(sum({hit}) AS BIGINT) AS n_dropped,
+               CAST(count(*) - sum({hit}) AS BIGINT) AS {rest},
+               CAST(sum({hit}) AS DOUBLE) / NULLIF(count(*), 0) AS drop_ratio
+        FROM {src} s LEFT JOIN dropped d ON s.vec_id = d.vec_id
+        GROUP BY s.{cid}"""
+
+
+def _dkm_ctes(rounds: int = similarity.KMEANS_DIST_ROUNDS) -> tuple[str, str]:
     """The Lloyd-round CTE chain shared by the refit-report oracle
     (`_dkm_sql`), the quality-eval oracle (`_dkm_eval_sql`) and the
-    derived-k semdedup oracle (`_sdk_sql`) — the _nnd_ctes convention:
+    refit-serve oracle (`_ivf_refit_sql`) — the _nnd_ctes convention:
     returns (with_clause, final_centroid_cte). Rounds unrolled as
     MATERIALIZED CTEs (assignment cross-join re-reads v and the
-    centroid state per round — the clone rule). Every knob
-    f-string-derived from the similarity.py constants: init centroids
-    default to kmeans_init_q() (the shipped literals quantized to
-    micro-units) — ``init_body`` overrides the c_init SELECT for the
-    data-seeded derived-k path, with ``extra_after_v`` injecting its
-    helper CTEs between v and c_init; both defaults reproduce the r09
-    string byte-identically (md5-checked in tests). Quantization scale
-    DRIFT_SCALE, round count KMEANS_DIST_ROUNDS. Assignment scores are
-    list_dot_product over integer lists cast to double — exact below
-    2^53 (|term| <= ~5.5e12, 64 terms), so the argmax matches Spark's
-    BIGINT fold bit-for-bit."""
-    scale = float(similarity.DRIFT_SCALE)
-    if init_body is None:
-        init = similarity.kmeans_init_q()
-        init_body = "\n            UNION ALL ".join(
-            f"SELECT {i} AS cid, [{', '.join(str(x) for x in c)}]::BIGINT[] AS cq"
-            for i, c in enumerate(init)
-        )
+    centroid state per round — the clone rule). Init centroids are
+    kmeans_init_q() (the shipped literals quantized to micro-units),
+    round count KMEANS_DIST_ROUNDS; assignment is `_argmax_sql`."""
+    init = "\n            UNION ALL ".join(
+        f"SELECT {i} AS cid, [{', '.join(str(x) for x in c)}]::BIGINT[] AS cq"
+        for i, c in enumerate(similarity.kmeans_init_q())
+    )
     parts = [
         f"""v AS MATERIALIZED (
-            SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]),
-                   x -> CAST(round(x * {scale!r}, 0) AS BIGINT)) AS qv
-            FROM embeddings
-        ){extra_after_v}, c_init AS MATERIALIZED (
-            {init_body}
+            SELECT vec_id, {_qv_sql()} AS qv FROM embeddings
+        ), c_init AS MATERIALIZED (
+            {init}
         )"""
     ]
     prev = "c_init"
     for r in range(rounds):
         parts.append(f"""a{r} AS MATERIALIZED (
-            SELECT vec_id, qv, cid FROM (
-                SELECT v.vec_id, v.qv, c.cid,
-                       row_number() OVER (PARTITION BY v.vec_id
-                           ORDER BY list_dot_product(CAST(v.qv AS DOUBLE[]),
-                                    CAST(c.cq AS DOUBLE[])) DESC, c.cid DESC) AS rn
-                FROM v CROSS JOIN {prev} c
-            ) r WHERE rn = 1
-        ), """ + _dkm_round_tail(r, prev, scale))
+            {_argmax_sql("v", f"CROSS JOIN {prev} c")}
+        ), """ + _dkm_round_tail(r, prev))
         prev = f"c{r}"
     return "WITH " + ",\n        ".join(parts), prev
 
 
-def _dkm_round_tail(r: int, prev: str, scale: float) -> str:
+def _dkm_round_tail(r: int, prev: str) -> str:
     """The Lloyd UPDATE half of one unrolled oracle round — per-(cid,
     pos) exact sums, the per-cid rollup, and the renormalized next
     centroid state — given an already-defined assignment CTE a{r}.
@@ -947,10 +1003,7 @@ def _dkm_round_tail(r: int, prev: str, scale: float) -> str:
         ), c{r} AS MATERIALIZED (
             SELECT p.cid,
                    CASE WHEN u.cid IS NULL OR u.ss = 0 THEN p.cq
-                        ELSE list_transform(u.svec,
-                             s -> CAST(round(CAST(s AS DOUBLE)
-                                  / sqrt(CAST(u.ss AS DOUBLE)) * {scale!r}, 0)
-                                  AS BIGINT)) END AS cq,
+                        ELSE {_renorm_sql('u.svec', 'u.ss')} END AS cq,
                    CAST(coalesce(u.nm, 0) AS BIGINT) AS n_members
             FROM {prev} p LEFT JOIN upd{r} u USING (cid)
         )"""
@@ -983,24 +1036,13 @@ def _dkm_eval_sql(rounds: int = similarity.KMEANS_DIST_ROUNDS) -> str:
     rounding), and rolling up per refit cluster."""
     with_clause, last = _dkm_ctes(rounds)
 
+    bp = (
+        f"vec_id, CAST(round(score / (sqrt({_qdot_sql('qv', 'qv')}) "
+        f"* sqrt({_qdot_sql('cq', 'cq')})) * 10000, 0) AS BIGINT) AS bp, cid"
+    )
+
     def assign(cents: str) -> str:
-        return f"""(
-            SELECT vec_id, CAST(round(score
-                       / (sqrt(list_dot_product(CAST(qv AS DOUBLE[]),
-                               CAST(qv AS DOUBLE[])))
-                          * sqrt(list_dot_product(CAST(cq AS DOUBLE[]),
-                                 CAST(cq AS DOUBLE[]))))
-                       * 10000, 0) AS BIGINT) AS bp, cid
-            FROM (
-                SELECT v.vec_id, v.qv, c.cid, c.cq,
-                       list_dot_product(CAST(v.qv AS DOUBLE[]),
-                                        CAST(c.cq AS DOUBLE[])) AS score,
-                       row_number() OVER (PARTITION BY v.vec_id
-                           ORDER BY list_dot_product(CAST(v.qv AS DOUBLE[]),
-                                    CAST(c.cq AS DOUBLE[])) DESC, c.cid DESC) AS rn
-                FROM v CROSS JOIN {cents} c
-            ) x WHERE rn = 1
-        )"""
+        return f"({_argmax_sql('v', f'CROSS JOIN {cents} c', bp)})"
 
     return (
         with_clause
@@ -1030,13 +1072,7 @@ def _ivf_refit_sql(rounds: int = similarity.KMEANS_DIST_ROUNDS) -> str:
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
         ), at AS MATERIALIZED (
             SELECT r.vec_id, r.cid, ve.emb FROM (
-                SELECT vec_id, cid FROM (
-                    SELECT v.vec_id, c.cid,
-                           row_number() OVER (PARTITION BY v.vec_id
-                               ORDER BY list_dot_product(CAST(v.qv AS DOUBLE[]),
-                                        CAST(c.cq AS DOUBLE[])) DESC, c.cid DESC) AS rn
-                    FROM v CROSS JOIN {last} c
-                ) x WHERE rn = 1
+                {_argmax_sql("v", f"CROSS JOIN {last} c", "vec_id, cid")}
             ) r JOIN ve ON ve.vec_id = r.vec_id
         ), {_qids_cte(src="ve")}, q AS (
             SELECT vec_id AS q_id, emb AS q_emb, cid AS q_centroid
@@ -1075,9 +1111,12 @@ def _sdk_assign_ctes(r_tag: str, prev: str, src: str = "v") -> str:
     cid), fb{r_tag} is the exact full-argmax fallback for vectors
     whose bucket met no centroid, a{r_tag} the union — the exact twin
     of similarity._sdk_blocked_assign. ``src`` names the quantized
-    corpus CTE being assigned (default "v", the fit corpus — the
-    default reproduces the r10 string byte-for-byte; the ingest-audit
-    oracle passes its own ingest CTE)."""
+    corpus CTE being assigned (default "v", the fit corpus; the
+    ingest-audit oracle passes its own ingest CTE)."""
+    orphans = f"""(
+                    SELECT vec_id, qv FROM {src}
+                    WHERE NOT EXISTS (SELECT 1 FROM w{r_tag} w WHERE w.vec_id = {src}.vec_id)
+                ) u"""
     return f"""cb{r_tag} AS MATERIALIZED (
             SELECT cid, cq, xor(cbkt, m) AS bucket
             FROM (
@@ -1087,24 +1126,9 @@ def _sdk_assign_ctes(r_tag: str, prev: str, src: str = "v") -> str:
                 SELECT unnest(list_filter({_SDK_MASKS}, m -> m < pw)) AS m FROM kk
             ) msk
         ), w{r_tag} AS MATERIALIZED (
-            SELECT vec_id, qv, cid FROM (
-                SELECT {src}.vec_id, {src}.qv, c.cid,
-                       row_number() OVER (PARTITION BY {src}.vec_id
-                           ORDER BY list_dot_product(CAST({src}.qv AS DOUBLE[]),
-                                    CAST(c.cq AS DOUBLE[])) DESC, c.cid DESC) AS rn
-                FROM {src} JOIN cb{r_tag} c ON {src}.bucket = c.bucket
-            ) r WHERE rn = 1
+            {_argmax_sql(src, f"JOIN cb{r_tag} c ON {src}.bucket = c.bucket", v=src)}
         ), fb{r_tag} AS (
-            SELECT vec_id, qv, cid FROM (
-                SELECT u.vec_id, u.qv, c.cid,
-                       row_number() OVER (PARTITION BY u.vec_id
-                           ORDER BY list_dot_product(CAST(u.qv AS DOUBLE[]),
-                                    CAST(c.cq AS DOUBLE[])) DESC, c.cid DESC) AS rn
-                FROM (
-                    SELECT vec_id, qv FROM {src}
-                    WHERE NOT EXISTS (SELECT 1 FROM w{r_tag} w WHERE w.vec_id = {src}.vec_id)
-                ) u CROSS JOIN {prev} c
-            ) r WHERE rn = 1
+            {_argmax_sql(orphans, f"CROSS JOIN {prev} c", v="u")}
         ), a{r_tag} AS MATERIALIZED (
             SELECT vec_id, qv, cid FROM w{r_tag}
             UNION ALL SELECT vec_id, qv, cid FROM fb{r_tag}
@@ -1114,9 +1138,6 @@ def _sdk_assign_ctes(r_tag: str, prev: str, src: str = "v") -> str:
 _SDK_MASKS = (
     "[" + ", ".join(str(m) for m in [0] + [1 << i for i in range(similarity.SDK_PLANE_MAX)]) + "]"
 )
-
-
-_SDK_NORM2 = "list_sum(list_transform(qv, x -> CAST(x AS HUGEINT) * x))"
 
 
 def _sdk_kk_select() -> str:
@@ -1161,33 +1182,27 @@ def _sdk_fit_parts(
 ) -> tuple[list[str], str]:
     """The derived-k FIT as oracle CTE parts (v0 -> kk -> v -> c_init
     -> bucket-blocked Lloyd rounds), returning (parts, final_centroid
-    _cte_name). Shared by `_sdk_sql` (fit over the full corpus — the
-    default empty ``corpus_where`` keeps that externally-verified
-    oracle string byte-stable, pinned by test) and `_sdk_ingest_sql`
-    (fit over the standing split). k derives from count(v0) by the
+    _cte_name). Shared by `_sdk_sql` (fit over the full corpus, the
+    default empty ``corpus_where``) and `_sdk_ingest_sql` (fit over the
+    standing split). k derives from count(v0) by the
     ivf_k_for rule, plane count from k by the sdk_planes_for rule
     (both integer CASE chains — no float log2 whose rounding could
     diverge); the init is data-seeded (k h32-smallest vec_ids,
     renormalized with the round-update arithmetic)."""
-    scale = float(similarity.DRIFT_SCALE)
     parts = [
         f"""v0 AS MATERIALIZED (
-            SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]),
-                   x -> CAST(round(x * {scale!r}, 0) AS BIGINT)) AS qv
-            FROM embeddings{corpus_where}
+            SELECT vec_id, {_qv_sql()} AS qv FROM embeddings{corpus_where}
         ), kk AS MATERIALIZED (
             {_sdk_kk_select()}
         ), v AS MATERIALIZED (
             SELECT vec_id, qv, {_sdk_bucket_sql('CAST(qv AS DOUBLE[])')} AS bucket
             FROM v0 CROSS JOIN kk
         ), c_init AS MATERIALIZED (
-            SELECT CAST(rn - 1 AS INTEGER) AS cid,
-                   list_transform(qv, s -> CAST(round(CAST(s AS DOUBLE)
-                        / sqrt(CAST(ss AS DOUBLE)) * {scale!r}, 0) AS BIGINT)) AS cq
+            SELECT CAST(rn - 1 AS INTEGER) AS cid, {_renorm_sql('qv', 'ss')} AS cq
             FROM (
                 SELECT qv, ss,
                        row_number() OVER (ORDER BY {h32_sql('CAST(vec_id AS VARCHAR)')}, vec_id) AS rn
-                FROM (SELECT vec_id, qv, {_SDK_NORM2} AS ss FROM v0) s0
+                FROM (SELECT vec_id, qv, {_QNORM2_SQL} AS ss FROM v0) s0
                 WHERE ss > 0
             ) s WHERE rn <= (SELECT k FROM kk)
         )"""
@@ -1195,9 +1210,7 @@ def _sdk_fit_parts(
     prev = "c_init"
     for r in range(rounds):
         parts.append(
-            _sdk_assign_ctes(str(r), prev)
-            + ", "
-            + _dkm_round_tail(r, prev, scale)
+            _sdk_assign_ctes(str(r), prev) + ", " + _dkm_round_tail(r, prev)
         )
         prev = f"c{r}"
     return parts, prev
@@ -1209,32 +1222,19 @@ def _sdk_sql(rounds: int = similarity.KMEANS_DIST_ROUNDS) -> str:
     semdedup pair audit with the tau threshold as an integer
     cross-multiply (SEMDEDUP_TAU_FRAC — exact on both engines). Every
     knob f-string-derived from the similarity.py constants."""
-    num, den = similarity.SEMDEDUP_TAU_FRAC
-    norm2 = _SDK_NORM2
     parts, prev = _sdk_fit_parts(rounds)
     parts.append(
         _sdk_assign_ctes("fin", prev)
         + f""", af AS MATERIALIZED (
-            SELECT vec_id, qv, cid, {norm2} AS nrm2 FROM afin
+            SELECT vec_id, qv, cid, {_QNORM2_SQL} AS nrm2 FROM afin
         ), pr AS (
-            SELECT a.vec_id,
-                   CAST(list_dot_product(CAST(a.qv AS DOUBLE[]),
-                        CAST(b.qv AS DOUBLE[])) AS HUGEINT) AS dt,
-                   a.nrm2 AS na, b.nrm2 AS nb
+            SELECT a.vec_id, {_qpair_sql('a', 'b')}
             FROM af a JOIN af b ON a.cid = b.cid AND b.vec_id < a.vec_id
         ), dropped AS (
             SELECT DISTINCT vec_id FROM pr
-            WHERE na > 0 AND nb > 0
-              AND dt >= 0 AND dt * dt * {den * den} >= na * nb * {num * num}
+            WHERE {_within_tau_sql(similarity.SEMDEDUP_TAU_FRAC)}
         )
-        SELECT a2.cid AS centroid_id,
-               CAST(count(*) AS BIGINT) AS n_vectors,
-               CAST(sum(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-               CAST(count(*) - sum(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-               CAST(sum(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-                   / NULLIF(count(*), 0) AS drop_ratio
-        FROM af a2 LEFT JOIN dropped d ON a2.vec_id = d.vec_id
-        GROUP BY a2.cid
+        {_drop_report_sql("af", "cid")}
         """
     )
     return "WITH " + ",\n        ".join(parts)
@@ -1250,20 +1250,17 @@ def _sdk_ingest_sql(rounds: int = similarity.KMEANS_DIST_ROUNDS) -> str:
     with src='vi'), then the admission rule: an ingested vector drops
     iff ANY standing member of its cluster is within tau (integer
     cross-multiply, zero-norm guard). Per-cluster ingest audit."""
-    scale = float(similarity.DRIFT_SCALE)
-    num, den = similarity.SEMDEDUP_TAU_FRAC
     parts, prev = _sdk_fit_parts(
         rounds, corpus_where=" WHERE vec_id % 10 < 8"
     )
     parts.append(
         _sdk_assign_ctes("fin", prev)
         + f""", standing AS MATERIALIZED (
-            SELECT vec_id, qv, cid, {_SDK_NORM2} AS nrm2 FROM afin
+            SELECT vec_id, qv, cid, {_QNORM2_SQL} AS nrm2 FROM afin
         ), vi AS MATERIALIZED (
             SELECT vec_id, qv, {_sdk_bucket_sql('CAST(qv AS DOUBLE[])')} AS bucket
             FROM (
-                SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]),
-                       x -> CAST(round(x * {scale!r}, 0) AS BIGINT)) AS qv
+                SELECT vec_id, {_qv_sql()} AS qv
                 FROM embeddings WHERE vec_id % 10 >= 8
             ) i0 CROSS JOIN kk
         )"""
@@ -1271,26 +1268,15 @@ def _sdk_ingest_sql(rounds: int = similarity.KMEANS_DIST_ROUNDS) -> str:
     parts.append(
         _sdk_assign_ctes("ing", prev, src="vi")
         + f""", ing AS MATERIALIZED (
-            SELECT vec_id, qv, cid, {_SDK_NORM2} AS nrm2 FROM aing
+            SELECT vec_id, qv, cid, {_QNORM2_SQL} AS nrm2 FROM aing
         ), pri AS (
-            SELECT a.vec_id,
-                   CAST(list_dot_product(CAST(a.qv AS DOUBLE[]),
-                        CAST(b.qv AS DOUBLE[])) AS HUGEINT) AS dt,
-                   a.nrm2 AS na, b.nrm2 AS nb
+            SELECT a.vec_id, {_qpair_sql('a', 'b')}
             FROM ing a JOIN standing b ON a.cid = b.cid
         ), dropped AS (
             SELECT DISTINCT vec_id FROM pri
-            WHERE na > 0 AND nb > 0
-              AND dt >= 0 AND dt * dt * {den * den} >= na * nb * {num * num}
+            WHERE {_within_tau_sql(similarity.SEMDEDUP_TAU_FRAC)}
         )
-        SELECT i.cid AS centroid_id,
-               CAST(count(*) AS BIGINT) AS n_ingested,
-               CAST(sum(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-               CAST(count(*) - sum(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_admitted,
-               CAST(sum(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-                   / NULLIF(count(*), 0) AS drop_ratio
-        FROM ing i LEFT JOIN dropped d ON i.vec_id = d.vec_id
-        GROUP BY i.cid
+        {_drop_report_sql("ing", "cid", n="n_ingested", rest="n_admitted")}
         """
     )
     return "WITH " + ",\n        ".join(parts)
@@ -1303,20 +1289,15 @@ def _ndd_ctes() -> str:
     (thresholded scored pairs). Shared by `_ndd_sql` (the query) and
     `_ndd_eval_sql` (its recall harness) — the eval-reuse rule: an
     evaluator never hand-copies the index formula it evaluates."""
-    scale = float(similarity.DRIFT_SCALE)
-    num, den = similarity.NEARDUP_TAU_FRAC
     rep_cap = similarity.NEARDUP_REP_CAP
-    norm2 = "list_sum(list_transform(qv, x -> CAST(x AS HUGEINT) * x))"
     return f"""v0 AS MATERIALIZED (
-            SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]),
-                   x -> CAST(round(x * {scale!r}, 0) AS BIGINT)) AS qv
-            FROM embeddings
+            SELECT vec_id, {_qv_sql()} AS qv FROM embeddings
         ), kk AS MATERIALIZED (
             {_ndd_kk_select()}
         ), v AS MATERIALIZED (
             SELECT vec_id, qv,
                    {_sdk_bucket_sql('CAST(qv AS DOUBLE[])')} AS bucket,
-                   {norm2} AS nrm2
+                   {_QNORM2_SQL} AS nrm2
             FROM v0 CROSS JOIN kk
         ), reps AS MATERIALIZED (
             SELECT vec_id, qv, bucket, nrm2 FROM (
@@ -1325,17 +1306,12 @@ def _ndd_ctes() -> str:
                            ORDER BY {h32_sql('CAST(vec_id AS VARCHAR)')}, vec_id) AS rep_rn
                 FROM v) r WHERE rep_rn <= {rep_cap}
         ), hits AS (
-            SELECT vec_a, vec_b,
-                   CAST(dt AS DOUBLE) / sqrt(CAST(na * nb AS DOUBLE)) AS cos_sim
+            SELECT vec_a, vec_b, {_QCOS_SQL}
             FROM (
-                SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                       CAST(list_dot_product(CAST(a.qv AS DOUBLE[]),
-                            CAST(b.qv AS DOUBLE[])) AS HUGEINT) AS dt,
-                       a.nrm2 AS na, b.nrm2 AS nb
+                SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {_qpair_sql('a', 'b')}
                 FROM v a JOIN reps b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
             ) p
-            WHERE na > 0 AND nb > 0
-              AND dt >= 0 AND dt * dt * {den * den} >= na * nb * {num * num}
+            WHERE {_within_tau_sql(similarity.NEARDUP_TAU_FRAC)}
         )"""
 
 
@@ -1372,7 +1348,6 @@ def _ndd_eval_sql() -> str:
     keeps the exact top-cap partners per query, and each query's hit
     count is |found ∩ exact|. The sample is `_qids_cte` over v0 — the
     knn family's sample definition, so it cannot drift."""
-    num, den = similarity.NEARDUP_TAU_FRAC
     cap = similarity.NEARDUP_PAIR_CAP
     return f"""
         WITH {_ndd_ctes()}, found AS MATERIALIZED (
@@ -1390,18 +1365,11 @@ def _ndd_eval_sql() -> str:
             SELECT vec_id, qv, nrm2 FROM v
             WHERE vec_id IN (SELECT q_id FROM qids)
         ), ex AS (
-            SELECT q_id, p_id, cos_sim FROM (
-                SELECT s.vec_id AS q_id, c.vec_id AS p_id,
-                       CAST(list_dot_product(CAST(s.qv AS DOUBLE[]),
-                            CAST(c.qv AS DOUBLE[])) AS HUGEINT) AS dt,
-                       s.nrm2 AS na, c.nrm2 AS nb,
-                       CAST(CAST(list_dot_product(CAST(s.qv AS DOUBLE[]),
-                            CAST(c.qv AS DOUBLE[])) AS HUGEINT) AS DOUBLE)
-                           / sqrt(CAST(s.nrm2 * c.nrm2 AS DOUBLE)) AS cos_sim
+            SELECT q_id, p_id, {_QCOS_SQL} FROM (
+                SELECT s.vec_id AS q_id, c.vec_id AS p_id, {_qpair_sql('s', 'c')}
                 FROM sq s JOIN v c ON s.vec_id <> c.vec_id
             ) p
-            WHERE na > 0 AND nb > 0
-              AND dt >= 0 AND dt * dt * {den * den} >= na * nb * {num * num}
+            WHERE {_within_tau_sql(similarity.NEARDUP_TAU_FRAC)}
         ), ex_top AS (
             SELECT q_id, p_id FROM (
                 SELECT q_id, p_id,
@@ -1693,8 +1661,7 @@ def _pq_recon_sql() -> str:
             SELECT vec_id,
                    CAST((i - 1) // {subdim} AS INTEGER) AS subspace,
                    CAST(((i - 1) % {subdim}) + 1 AS INTEGER) AS d,
-                   CAST(round(emb[CAST(i AS INTEGER)] * {float(scale)!r}, 0)
-                        AS BIGINT) AS q
+                   {_q_sql('emb[CAST(i AS INTEGER)]')} AS q
             FROM v CROSS JOIN range(1, {similarity.EMBED_DIM + 1}) t(i)
         ), errs AS (
             SELECT x.vec_id, x.subspace, vc.code,
@@ -3322,9 +3289,7 @@ QUERIES: dict[str, QuerySpec] = {
                 SELECT centroid_id, is_new,
                        unnest(list_transform(range(1, len(emb) + 1),
                               i -> struct_pack(pos := i,
-                                   q := CAST(round(emb[CAST(i AS INTEGER)]
-                                        * {float(similarity.DRIFT_SCALE)!r}, 0)
-                                        AS BIGINT)))) AS u
+                                   q := {_q_sql('emb[CAST(i AS INTEGER)]')}))) AS u
                 FROM marked
             )
         ), per AS (
@@ -5172,14 +5137,7 @@ QUERIES: dict[str, QuerySpec] = {
               ON a.centroid_id = b.centroid_id AND b.vec_id < a.vec_id
              AND {_cosine_sql('a.emb', 'b.emb')} >= {similarity.SEMDEDUP_TAU}
         )
-        SELECT centroid_id,
-               CAST(count(*) AS BIGINT) AS n_vectors,
-               CAST(sum(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-               CAST(count(*) - sum(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-               CAST(sum(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-                   / NULLIF(count(*), 0) AS drop_ratio
-        FROM assigned a2 LEFT JOIN dropped d ON a2.vec_id = d.vec_id
-        GROUP BY centroid_id
+        {_drop_report_sql("assigned", "centroid_id")}
         """,
         "SemDeDup: IVF-cluster-scoped semantic near-dup pruning, keep-min-id, per-cluster audit",
     ),
@@ -6155,9 +6113,7 @@ QUERIES: dict[str, QuerySpec] = {
                 SELECT label,
                        unnest(list_transform(range(1, len(e) + 1),
                               i -> struct_pack(pos := i,
-                                   q := CAST(round(e[CAST(i AS INTEGER)]
-                                        * {float(similarity.DRIFT_SCALE)!r}, 0)
-                                        AS BIGINT)))) AS u
+                                   q := {_q_sql('e[CAST(i AS INTEGER)]')}))) AS u
                 FROM (SELECT label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
             )
         ), sums AS (
@@ -6809,8 +6765,7 @@ QUERIES["embedding_outliers"] = QuerySpec(
     f"""
     WITH q AS (
         SELECT vec_id, label, CAST(i - 1 AS INTEGER) AS pos,
-               CAST(round(emb[CAST(i AS INTEGER)] *
-                    {float(similarity.DRIFT_SCALE)!r}, 0) AS BIGINT) AS qx
+               {_q_sql('emb[CAST(i AS INTEGER)]')} AS qx
         FROM (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
               FROM embeddings)
         CROSS JOIN range(1, {similarity.EMBED_DIM + 1}) t(i)

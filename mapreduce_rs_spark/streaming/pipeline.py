@@ -1072,18 +1072,18 @@ def build_semdedup_store(
     Lloyd rounds) — the model the batch query would fit over the same
     corpus, so admission decisions are the batch gate's bit-for-bit."""
     from mapreduce_rs_spark.operators.similarity import (
-        _QV_NORM2,
         _sdk_blocked_assign,
         _sdk_fit,
+        _with_nrm2,
     )
 
     q, cent, planes = _sdk_fit(corpus, tag="sds")
     cent.select("cid", "cq").write.mode("overwrite").parquet(
         os.path.join(store_dir, "centroids")
     )
-    _sdk_blocked_assign(q, cent, planes).select(
-        "vec_id", "qv", "cid", F.expr(_QV_NORM2).alias("nrm2")
-    ).write.mode("overwrite").parquet(os.path.join(store_dir, "standing"))
+    _with_nrm2(_sdk_blocked_assign(q, cent, planes)).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(store_dir, "standing"))
 
 
 def semdedup_admit_batch(batch_df: DataFrame, store_dir: str) -> DataFrame:
@@ -1110,10 +1110,10 @@ def semdedup_admit_batch(batch_df: DataFrame, store_dir: str) -> DataFrame:
     match the model's (r11 ADVICE #1; pinned by the degenerate-corpus
     parity test)."""
     from mapreduce_rs_spark.operators.similarity import (
-        _QV_NORM2,
         _sdk_admit,
         _sdk_blocked_assign,
         _sdk_quantize,
+        _with_nrm2,
         hyperplanes,
         ivf_k_for,
         sdk_planes_for,
@@ -1125,9 +1125,9 @@ def semdedup_admit_batch(batch_df: DataFrame, store_dir: str) -> DataFrame:
     k = ivf_k_for(standing.count())
     planes = hyperplanes(sdk_planes_for(k))
     q = _sdk_quantize(batch_df, planes, None, "sds_batch")
-    assigned = _sdk_blocked_assign(q, cent, planes).select(
-        "vec_id", "qv", "cid", F.expr(_QV_NORM2).alias("nrm2")
-    ).localCheckpoint(eager=True)
+    assigned = _with_nrm2(_sdk_blocked_assign(q, cent, planes)).localCheckpoint(
+        eager=True
+    )
     return _sdk_admit(assigned, standing)
 
 
@@ -1157,24 +1157,11 @@ def streaming_semdedup_ingest_report(
     and roll up (centroid_id, n_ingested, n_dropped, n_admitted,
     drop_ratio) — the ``semdedup`` audit shape at the ingest grain.
     Decision rows are batching-independent, so the drained report
-    equals the one-shot gate's audit bit-for-bit (the parity test)."""
-    merged = _latest_epoch(spark.read.parquet(state_dir))
-    return (
-        merged.groupBy(F.col("cid").cast("int").alias("centroid_id"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_ingested"),
-            F.sum("is_dropped").cast("long").alias("n_dropped"),
-        )
-        .select(
-            "centroid_id",
-            "n_ingested",
-            "n_dropped",
-            (F.col("n_ingested") - F.col("n_dropped")).alias("n_admitted"),
-            F.try_divide(
-                F.col("n_dropped").cast("double"), F.col("n_ingested")
-            ).alias("drop_ratio"),
-        )
-    )
+    equals the one-shot gate's audit bit-for-bit (the parity test). The
+    rollup is ``semdedup_ingest_audit``'s own ``_ingest_report``."""
+    from mapreduce_rs_spark.operators.similarity import _ingest_report
+
+    return _ingest_report(_latest_epoch(spark.read.parquet(state_dir)))
 
 
 def run_streaming_semdedup_ingest(

@@ -233,3 +233,24 @@ def test_zero_norm_vectors_are_kept_not_dropped(spark, zero_norm_dir, name):
         # directions of the directed partner contract
         pairs = set(zip(spdf["vec_a"], spdf["vec_b"]))
         assert (11, 21) in pairs and (21, 11) in pairs
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "kmeans_refit_eval",
+        "kmeans_refit_distributed",
+        "knn_ivf_refit",
+        "semdedup_ingest_audit",
+    ],
+)
+def test_zero_norm_corpus_matches_oracle(spark, zero_norm_dir, name):
+    """The rest of the integer micro-unit family over the zero-vector
+    corpus: a zero vector's cosine to its centroid is 0/0, which must be
+    NULL on both engines (kmeans_refit_eval drops that vector's bp from
+    its sums, as DuckDB's double division does) rather than an ANSI
+    divide-by-zero error, and the refit, serve and ingest-audit rows
+    must equal the oracle's."""
+    spdf = queries()[name](spark, zero_norm_dir).toPandas()
+    oracle_pdf = run_oracle(QUERIES[name].oracle, zero_norm_dir)
+    assert_frames_match(spdf, oracle_pdf, f"{name}[zero-norm]")

@@ -694,3 +694,74 @@ def test_oracle_knob_chains_match_python_rules_at_every_boundary():
             n,
             npw_sql,
         )
+
+
+def test_within_tau_twins_match_exact_fraction_at_the_boundary(spark):
+    """The integer tau threshold of the derived-k semdedup and near-dup
+    families, ``_within_tau`` (Spark) and ``_within_tau_sql`` (DuckDB),
+    against an exact ``Fraction`` reference of cos = dt / sqrt(na·nb) >=
+    tau on hand-made (dt, na, nb) rows: exact ties (a tie drops), one
+    unit either side, negative dots, zero norms (cosine undefined: never
+    within tau) and magnitudes near 1e15, which squared norms of
+    quantized 64-dim vectors reach. Column types are the ones the
+    operators feed the twins: BIGINT dt and DECIMAL(38,0) norms in
+    Spark, HUGEINT in DuckDB."""
+    from decimal import Decimal
+    from fractions import Fraction
+
+    import duckdb
+
+    from mapreduce_rs_spark.operators.similarity import (
+        NEARDUP_TAU_FRAC,
+        SEMDEDUP_TAU_FRAC,
+        _within_tau,
+    )
+    from mapreduce_rs_spark.plans.registry import _within_tau_sql
+
+    big = 10**15
+    rows = [
+        (2, 1, 25),  # cos = 2/5 exactly: a tie at 2/5 drops
+        (2, 1, 26),  # one unit past the tie: kept
+        (-2, 1, 25),  # negative dot with |cos| = 2/5
+        (0, 0, 25),
+        (0, 25, 0),
+        (3, 0, 9),
+        (0, 0, 0),
+        (4 * 10**14, big, big),  # the 2/5 tie near 1e15
+        (4 * 10**14 - 1, big, big),
+        (4 * 10**14 + 1, big, big),
+        (3 * 10**14, big, big),  # the 3/10 tie near 1e15
+        (3 * 10**14 - 1, big, big),
+        (-(3 * 10**14), big, big),
+        (big, big, big),
+        (-big, big, big),
+    ]
+
+    def within(dt, na, nb, tau):
+        if na <= 0 or nb <= 0 or dt < 0:
+            return False
+        return Fraction(dt * dt, na * nb) >= Fraction(*tau) ** 2
+
+    con = duckdb.connect()
+    values = ", ".join(f"({i}, {dt}, {na}, {nb})" for i, (dt, na, nb) in enumerate(rows))
+    sdf = spark.createDataFrame(
+        [(i, dt, Decimal(na), Decimal(nb)) for i, (dt, na, nb) in enumerate(rows)],
+        "id int, dt long, na decimal(38,0), nb decimal(38,0)",
+    )
+    for tau in (SEMDEDUP_TAU_FRAC, NEARDUP_TAU_FRAC):
+        want = [within(*r, tau) for r in rows]
+        got_spark = [
+            r.w for r in sdf.select("id", _within_tau(tau).alias("w")).orderBy("id").collect()
+        ]
+        got_duck = [
+            w
+            for _, w in con.execute(
+                f"""SELECT id, {_within_tau_sql(tau)} AS w FROM (
+                    SELECT id, CAST(dt AS HUGEINT) AS dt, CAST(na AS HUGEINT) AS na,
+                           CAST(nb AS HUGEINT) AS nb
+                    FROM (VALUES {values}) v(id, dt, na, nb)
+                ) ORDER BY id"""
+            ).fetchall()
+        ]
+        assert got_spark == want, (tau, list(zip(rows, got_spark, want)))
+        assert got_duck == want, (tau, list(zip(rows, got_duck, want)))

@@ -211,7 +211,7 @@ def main() -> None:
         batch = load_table(sp, sfd, "embeddings").where(
             F.col("vec_id") % 10 >= 8
         ).select("vec_id", "embedding")
-        return admitted_edges_from_store(batch, store_dir, tag="bench_admit")
+        return admitted_edges_from_store(batch, store_dir)
 
     # semdedup admission's standing derived-k model: same discipline —
     # built ONCE outside every timer (the recluster cadence), the
@@ -252,7 +252,7 @@ def main() -> None:
     def run_full_plan(name: str) -> float:
         # noop datasource: full execution (sorts, projections, Python
         # stages) with zero write cost — the honest end-to-end timer.
-        # gc.collect() first: localCheckpoint blocks from PREVIOUS
+        # gc.collect() first: checkpoint blocks from PREVIOUS
         # queries are pinned until their Python DataFrame refs are
         # collected (ContextCleaner is weak-ref driven), and the debris
         # inflates later checkpoint-heavy members by ~1.5-2x (measured:

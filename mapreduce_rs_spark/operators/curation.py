@@ -293,13 +293,14 @@ def curation_yield_neardup(df: DataFrame) -> DataFrame:
     NOTE: unlike the registry's other (lazy) queries, calling this
     EXECUTES the pipeline — the connected-components iteration must run
     jobs to detect convergence, and the survivor set is materialized
-    (localCheckpoint). The returned DataFrame is the final yield report
+    (operators/materialize.py). The returned DataFrame is the final yield report
     over that frozen result, which is the semantics an iterative
     algorithm has to have."""
     from mapreduce_rs_spark.operators.dedup import minhash_lsh_pairs
     from mapreduce_rs_spark.operators.graph import connected_components
+    from mapreduce_rs_spark.operators.materialize import materialize
 
-    kept = curated_documents(df, keep_text=True).localCheckpoint()
+    kept = materialize(curated_documents(df, keep_text=True))
     comp = connected_components(minhash_lsh_pairs(kept))
     final = (
         kept.join(comp, "doc_id", "left")

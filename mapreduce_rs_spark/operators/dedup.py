@@ -111,7 +111,6 @@ def minhash_lsh_pairs(
     df: DataFrame,
     k: int = MINHASH_SEEDS,
     band_size: int = MINHASH_BAND_SIZE,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding.
 
@@ -124,14 +123,12 @@ def minhash_lsh_pairs(
     without it Catalyst expands both join sides into the full
     scan→shingle→k·md5-min pipeline, doubling the most expensive narrow
     stage (round-1 PLANS.md showed two complete signature subtrees).
-    ``persist_dir=None`` uses localCheckpoint (in-session, unreplicated
-    executor blocks — local mode / tests); a cluster run passes
-    ``persist_dir=`` to write the signatures to parquet instead —
-    executor-loss-safe and reusable across dedup runs
-    (operators/materialize.py; byte-equality of the two paths proven in
+    ``materialize`` stores it in-session, or as executor-loss-safe
+    parquet when the session has a checkpoint directory
+    (operators/materialize.py; byte-equality of the two modes proven in
     tests/test_materialize.py).
     """
-    sigs = materialize(minhash_signatures(df, k), persist_dir, "minhash_sigs")
+    sigs = materialize(minhash_signatures(df, k))
     banded = _banded(sigs, k, band_size)
     left = banded.alias("l")
     right = banded.alias("r")
@@ -247,7 +244,7 @@ def simhash_near_pairs(
             f"max_hamming={max_hamming} needs < {n_bands} (= {SIMHASH_BITS}/{band_bits} bands) "
             "for exhaustive candidate generation; use smaller band_bits for larger distances"
         )
-    sigs = simhash_signatures(df).localCheckpoint()  # materialize once
+    sigs = materialize(simhash_signatures(df))
     mask = (1 << band_bits) - 1
     bands = [
         F.struct(
@@ -332,14 +329,16 @@ def jaccard_pairs(
     # Materialize the exploded distinct-token stream ONCE: it feeds the
     # df aggregate, the semi-join, both pair-join sides and the sizes
     # aggregate — without this Catalyst re-tokenizes the corpus per use
-    # (the round-1 minhash double-compute disease, ~12 scans). A real
-    # pipeline persists this token table to parquet; localCheckpoint is
-    # the in-session equivalent (UNREPLICATED executor blocks — see the
-    # minhash_lsh_pairs cluster caveat; parquet/reliable checkpoint on
-    # a real cluster).
-    toks_all = ensure_parallelism(df.select("doc_id", "lang", "text"), "doc_id").select(
-        "doc_id", "lang", F.explode(F.array_distinct(F.filter(tokens("text"), lambda t: t != ""))).alias("word")
-    ).localCheckpoint()
+    # (the round-1 minhash double-compute disease, ~12 scans).
+    toks_all = materialize(
+        ensure_parallelism(df.select("doc_id", "lang", "text"), "doc_id").select(
+            "doc_id",
+            "lang",
+            F.explode(
+                F.array_distinct(F.filter(tokens("text"), lambda t: t != ""))
+            ).alias("word"),
+        )
+    )
     lang_totals = df.groupBy("lang").agg(F.count("*").alias("n_docs_lang"))
     word_df = toks_all.groupBy("lang", "word").agg(F.count("*").alias("df"))
     rare = (
@@ -350,7 +349,7 @@ def jaccard_pairs(
         )
         .select("lang", "word")
     )
-    toks = toks_all.join(rare, ["lang", "word"], "left_semi").localCheckpoint()
+    toks = materialize(toks_all.join(rare, ["lang", "word"], "left_semi"))
     sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n_tokens"))
     pairs = (
         toks.alias("a")
@@ -597,7 +596,7 @@ INGEST_PLANT_OFFSET = 1_000_000
 INGEST_PLANT_SUFFIX = " ingestnd"
 
 
-def incremental_ingest_neardup(df: DataFrame, persist_dir: str | None = None) -> DataFrame:
+def incremental_ingest_neardup(df: DataFrame) -> DataFrame:
     """Continuous ingestion with a NEAR-duplicate admission tier — the
     missing half of ``incremental_ingest_dedup`` (r07 verdict #3): a
     production curation loop admits a crawl batch only where it is
@@ -630,9 +629,8 @@ def incremental_ingest_neardup(df: DataFrame, persist_dir: str | None = None) ->
        deterministic).
 
     Scale shape: the corpus appears ONLY as (a) a distinct fingerprint
-    column and (b) its signature table — ``persist_dir`` persists the
-    signatures as the standing index artifact a nightly loop reuses
-    (the ``minhash_lsh_pairs`` materialization discipline); corpus text
+    column and (b) its signature table, materialized once (the
+    ``minhash_lsh_pairs`` materialization discipline); corpus text
     never shuffles. The admission probes are (band, band_key)
     equi-joins — batch-sized left side, never all-pairs. The
     within-batch self-join is batch² bounded by band collisions, the
@@ -667,17 +665,11 @@ def incremental_ingest_neardup(df: DataFrame, persist_dir: str | None = None) ->
     corpus_fps = corpus.select(text_fingerprint("text").alias("fingerprint")).distinct()
     all_bands = materialize(
         _banded(minhash_signatures(corpus.unionByName(batch).select("doc_id", "text"))),
-        persist_dir,
-        "ingest_all_bands",
     )
     is_corpus = (F.col("doc_id") < INGEST_PLANT_OFFSET) & (F.col("doc_id") % 10 < 8)
     corpus_bands = all_bands.where(is_corpus).select("band", "band_key").distinct()
     flagged = admit_batch(
-        batch,
-        corpus_fps,
-        corpus_bands,
-        persist_dir=persist_dir,
-        batch_bands=all_bands.where(~is_corpus),
+        batch, corpus_fps, corpus_bands, batch_bands=all_bands.where(~is_corpus)
     )
     fresh = ~F.col("exact_corpus") & ~F.col("exact_batch")
     return flagged.groupBy("lang").agg(
@@ -694,7 +686,6 @@ def admit_batch(
     batch: DataFrame,
     corpus_fps: DataFrame,
     corpus_bands: DataFrame,
-    persist_dir: str | None = None,
     batch_bands: DataFrame | None = None,
 ) -> DataFrame:
     """The near-dup admission core, shared by the batch operator above
@@ -718,9 +709,7 @@ def admit_batch(
     if batch_bands is None:
         # batch bands feed two probes (corpus + self) — materialize once
         # so Catalyst doesn't clone the shingle→md5 pipeline per consumer
-        batch_bands = materialize(
-            _banded(minhash_signatures(batch)), persist_dir, "ingest_batch_bands"
-        )
+        batch_bands = materialize(_banded(minhash_signatures(batch)))
 
     winners = batch_fp.groupBy("fingerprint").agg(F.min("doc_id").alias("keep_doc_id"))
     near_corpus_ids = (
@@ -753,8 +742,6 @@ def admit_batch(
             (F.col("doc_id") != F.col("keep_doc_id")).alias("exact_batch"),
             F.col("near_c").isNotNull().alias("near_corpus"),
         ),
-        persist_dir,
-        "ingest_staged",
     )
     # survivors of stages 1-3 anchor the within-batch probe's left side
     survivors = staged.where(
@@ -830,8 +817,6 @@ def lsh_scurve_calibration(df: DataFrame, cap: int = SCURVE_SAMPLE_CAP) -> DataF
         .orderBy("h", "doc_id")
         .limit(cap)
         .select("doc_id", F.filter(tokens("text"), lambda t: t != "").alias("tk")),
-        None,
-        "scurve_sample",
     )
     grades = F.explode(
         F.array(*[F.lit(p) for p in SCURVE_GRADES])
@@ -868,8 +853,6 @@ def lsh_scurve_calibration(df: DataFrame, cap: int = SCURVE_SAMPLE_CAP) -> DataF
         sample.select("doc_id", F.array_join("tk", " ").alias("text")).unionByName(
             variants.select(F.col("vid").alias("doc_id"), "text")
         ),
-        None,
-        "scurve_docs",
     )
     ssh = all_docs.select(
         "doc_id", F.explode(F.array_distinct(_shingles("text"))).alias("shingle")
@@ -1028,10 +1011,9 @@ def ngram_containment_pairs(
 
     Returns (doc_a, doc_b, n_common, n_a, n_b, containment).
     """
-    sh = (
+    sh = materialize(
         ensure_parallelism(df.select("doc_id", "text"), "doc_id")
         .select("doc_id", F.explode(F.array_distinct(_shingles(n=n))).alias("shingle"))
-        .localCheckpoint()
     )
     rare = (
         sh.groupBy("shingle")
@@ -1039,7 +1021,7 @@ def ngram_containment_pairs(
         .where(F.col("df") <= max_df)
         .select("shingle")
     )
-    toks = sh.join(rare, "shingle", "left_semi").localCheckpoint()
+    toks = materialize(sh.join(rare, "shingle", "left_semi"))
     sizes = toks.groupBy("doc_id").agg(F.count("*").cast("long").alias("n_sh"))
     pairs = (
         toks.alias("a")
@@ -1108,15 +1090,13 @@ def prefix_filter_jaccard_pairs(
     Returns (doc_a, doc_b, n_common, n_a, n_b, jaccard) for pairs
     with J ≥ t over distinct-shingle sets.
     """
-    sh = (
+    sh = materialize(
         ensure_parallelism(df.select("doc_id", "text"), "doc_id")
         .select("doc_id", F.explode(F.array_distinct(_shingles(n=n))).alias("shingle"))
-        .localCheckpoint()
     )
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    ranked = (
-        sh.join(dfreq, "shingle")
-        .select(
+    ranked = materialize(
+        sh.join(dfreq, "shingle").select(
             "doc_id",
             "shingle",
             F.row_number()
@@ -1128,7 +1108,6 @@ def prefix_filter_jaccard_pairs(
             .alias("rn"),
             F.count(F.lit(1)).over(Window.partitionBy("doc_id")).alias("n_sh"),
         )
-        .localCheckpoint()
     )
     prefix = ranked.where(
         F.col("rn") <= F.expr(f"n_sh - ((n_sh * {t_bp} + 9999) div 10000) + 1")

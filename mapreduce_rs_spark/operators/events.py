@@ -1157,7 +1157,6 @@ THETA_RANGE = 1 << 32  # h32 values are uniform in [0, 2^32)
 def theta_daily_overlap(
     t: dict[str, DataFrame],
     k: int = THETA_K,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Theta/KMV sketch SET-EXPRESSION estimates between consecutive
     daily active-user cohorts — day-over-day audience retention as a
@@ -1187,8 +1186,7 @@ def theta_daily_overlap(
     (day, user) aggregate (partial-agg shuffle) and the per-day
     top-k window (WindowGroupLimit caps per-partition state at k before
     the exchange); both live inside materialized intermediates
-    (``materialize``: localCheckpoint, or parquet under ``persist_dir=``
-    for the executor-loss-safe path) because >= 4 downstream consumers
+    (operators/materialize.py) because >= 4 downstream consumers
     read each — without that, Catalyst re-expands the event-scale
     subtree per consumer (16 scans / 36 exchanges observed; 0 / 14
     after). Every downstream table is sketch-sized — days x k rows —
@@ -1206,8 +1204,6 @@ def theta_daily_overlap(
             "user_id",
         )
         .distinct(),
-        persist_dir,
-        "theta_daily_users",
     )
     hashed = daily.select(
         "day", h32(F.col("user_id").cast("string")).alias("h")
@@ -1217,8 +1213,6 @@ def theta_daily_overlap(
         hashed.withColumn("rn", F.row_number().over(day_win))
         .where(F.col("rn") <= k)
         .select("day", "h"),
-        persist_dir,
-        "theta_daily_sketches",
     )
     stats = sk.groupBy("day").agg(
         F.count(F.lit(1)).alias("n_sk"), F.max("h").alias("kth_h")
@@ -2676,8 +2670,6 @@ def rollup_incremental_refresh(t: dict[str, DataFrame]) -> DataFrame:
             "cents",
             (F.col("ts") < F.col("cutoff_ts")).alias("is_base"),
         ),
-        None,
-        "ivm_tagged",
     )
 
     def rollup(df: DataFrame) -> DataFrame:

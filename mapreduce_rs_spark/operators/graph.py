@@ -85,9 +85,7 @@ def _copurchase_edges(li: DataFrame, min_orders: int) -> DataFrame:
 CC_MAX_ITER = 20
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = CC_MAX_ITER, persist_dir: str | None = None
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = CC_MAX_ITER) -> DataFrame:
     """Connected components by min-label propagation.
 
     ``edges`` has columns (doc_a, doc_b). Each node starts labeled with
@@ -105,11 +103,9 @@ def connected_components(
     what makes iterative DataFrame loops viable at all. (GraphX /
     GraphFrames uses the same alternating large-star/small-star trick
     for worst-case graphs; min-propagation is the right tool for
-    bounded-diameter dedup clusters.) ``persist_dir=None`` truncates
-    with localCheckpoint (in-session); a cluster run passes
-    ``persist_dir=`` to write each round's labels to parquet instead —
-    executor-loss-safe, and a killed run restarts from the last
-    completed round's artifact (operators/materialize.py).
+    bounded-diameter dedup clusters.) Each round's labels go through
+    ``materialize`` (operators/materialize.py), so a cluster run with a
+    checkpoint directory keeps them executor-loss-safe.
 
     Returns (doc_id, component) for every node that appears in an edge.
     """
@@ -135,15 +131,9 @@ def connected_components(
     nbrs = materialize(
         edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))),
-        persist_dir,
-        "cc_edges",
     )
-    labels = materialize(
-        nodes.select("doc_id", F.col("doc_id").alias("component")),
-        persist_dir,
-        "cc_labels_0",
-    )
-    for i in range(max_iter):
+    labels = materialize(nodes.select("doc_id", F.col("doc_id").alias("component")))
+    for _ in range(max_iter):
         nbr_min = (
             nbrs.join(labels, nbrs.dst == labels.doc_id)
             .groupBy("src")
@@ -158,8 +148,6 @@ def connected_components(
                     F.coalesce(F.col("nbr_component"), F.col("component")),
                 ).alias("component"),
             ),
-            persist_dir,
-            f"cc_labels_{i + 1}",
         )
         changed = (
             new_labels.alias("n")
@@ -230,9 +218,9 @@ def pagerank(
     """
     if not 0 < damping_pct < 100:
         raise ValueError(f"damping_pct must be in (0,100), got {damping_pct}")
-    edges = edges.select(
-        F.col("src"), F.col("dst"), F.col("weight").cast("long")
-    ).localCheckpoint()
+    edges = materialize(
+        edges.select(F.col("src"), F.col("dst"), F.col("weight").cast("long"))
+    )
 
     out_w = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
     nodes = (
@@ -250,7 +238,7 @@ def pagerank(
 
     # Edge table annotated with its source's total out-weight, reused
     # every iteration (checkpoint: computed once, lineage truncated).
-    graph = edges.join(out_w, "src").localCheckpoint()
+    graph = materialize(edges.join(out_w, "src"))
 
     base_fp = ((100 - damping_pct) * PAGERANK_SCALE) // (100 * n_nodes)
     init_fp = PAGERANK_SCALE // n_nodes
@@ -272,9 +260,8 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("contrib").alias("inflow_fp"))
         )
-        ranks = (
-            nodes.join(inflow, nodes.node == inflow.dst, "left")
-            .select(
+        ranks = materialize(
+            nodes.join(inflow, nodes.node == inflow.dst, "left").select(
                 "node",
                 (
                     F.lit(base_fp)
@@ -284,7 +271,6 @@ def pagerank(
                 ).cast("long")
                 .alias("rank_fp"),
             )
-            .localCheckpoint()
         )
     return ranks.select(
         "node",
@@ -334,7 +320,6 @@ def pagerank_trade_flows(tables: dict[str, DataFrame]) -> DataFrame:
 def triangle_counts(
     tables: dict[str, DataFrame],
     min_orders: int = 2,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Per-node triangle counts over the co-purchase graph, by
     degree-ordered wedge join — the scale-correct triangle algorithm.
@@ -355,8 +340,7 @@ def triangle_counts(
     the best possible bound, hub-proof — and each triangle is found
     exactly once, at its minimum-rank apex. Three bounded equi-joins,
     no driver-side state; the edge table is materialized once and
-    reused (``persist_dir=`` switches localCheckpoint to durable
-    parquet, operators/materialize.py).
+    reused (operators/materialize.py).
 
     The oracle recomputes the same triangle set from the simpler
     id-ordered 3-way self-join (fine at oracle scale) — agreement
@@ -366,8 +350,6 @@ def triangle_counts(
     """
     edges = materialize(
         _copurchase_edges(tables["lineitem"], min_orders).select("u", "v"),
-        persist_dir,
-        "tri_edges",
     )
     deg = (
         edges.select(F.col("u").alias("node"))
@@ -393,8 +375,6 @@ def triangle_counts(
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
             F.when(u_first, F.col("deg_v")).otherwise(F.col("deg_u")).alias("dst_deg"),
         ),
-        persist_dir,
-        "tri_oriented",
     )
     o1, o2, o3 = oriented.alias("o1"), oriented.alias("o2"), oriented.alias("o3")
     wedges = o1.join(
@@ -423,18 +403,16 @@ def triangle_counts(
     return roles.groupBy("partkey").agg(F.count("*").alias("n_triangles"))
 
 
-def dedup_components(df: DataFrame, persist_dir: str | None = None) -> DataFrame:
+def dedup_components(df: DataFrame) -> DataFrame:
     """Near-duplicate CLUSTERS from MinHash-LSH candidate pairs:
     transitive closure over the pair graph, then per-doc component
     assignment (component id = min doc_id in the cluster — the doc an
     exact-dedup pass would keep). Only documents that have at least one
     near-duplicate appear; singletons are implicitly their own
     component. The end-to-end shape of a production near-dup pass:
-    sign → band → pair → cluster → keep-min. ``persist_dir`` selects
-    the durable parquet materialization path for the signature table
-    and each CC round (operators/materialize.py)."""
-    edges = minhash_lsh_pairs(df, persist_dir=persist_dir).select("doc_a", "doc_b")
-    return connected_components(edges, persist_dir=persist_dir)
+    sign → band → pair → cluster → keep-min."""
+    edges = minhash_lsh_pairs(df).select("doc_a", "doc_b")
+    return connected_components(edges)
 
 
 def kcore_decomposition(
@@ -442,7 +420,6 @@ def kcore_decomposition(
     k: int = 3,
     rounds: int = 14,
     min_orders: int = 2,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """k-core of the co-purchase graph: the maximal subgraph where every
     node keeps degree >= k — the standard dense-community extractor
@@ -456,9 +433,8 @@ def kcore_decomposition(
     LOUD assert verifies convergence (one extra degree pass: every
     remaining node >= k), so an under-unrolled run fails rather than
     returning a superset. Per round: one dictionary-sized degree
-    aggregate + two semi-joins — edges are localCheckpointed
-    (``persist_dir=`` for the durable parquet path) so lineage stays
-    flat (the pagerank/BPE iterative discipline).
+    aggregate + two semi-joins — edges are materialized each round so
+    lineage stays flat (the pagerank/BPE iterative discipline).
 
     The oracle unrolls the same ``rounds`` as chained CTEs; extra
     rounds after the fixed point are no-ops on BOTH sides, so the fixed
@@ -468,8 +444,6 @@ def kcore_decomposition(
     """
     edges = materialize(
         _copurchase_edges(tables["lineitem"], min_orders).select("u", "v"),
-        persist_dir,
-        "kcore_edges",
     )
 
     def degrees(e: DataFrame) -> DataFrame:
@@ -481,7 +455,7 @@ def kcore_decomposition(
         )
 
     n_edges = edges.count()
-    for r in range(rounds):
+    for _ in range(rounds):
         keep = degrees(edges).where(F.col("deg") >= k).select("node")
         # No broadcast hint: the survivor set is node-scale (could be
         # billions at 100 TB) — plain semi-joins let AQE broadcast only
@@ -492,8 +466,6 @@ def kcore_decomposition(
             ).join(
                 keep.select(F.col("node").alias("v")), "v", "left_semi"
             ).select("u", "v"),
-            persist_dir,
-            f"kcore_round_{r}",
         )
         n_after = edges.count()
         if n_after == n_edges:
@@ -518,7 +490,6 @@ def bfs_hops(
     n_seeds: int = 4,
     max_hops: int = 4,
     min_orders: int = 2,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Multi-source BFS over the co-purchase graph (same node/edge grain
     as kcore_decomposition / triangle_counts): shortest hop distance
@@ -535,8 +506,7 @@ def bfs_hops(
     round-(r-1) FRONTIER (nodes first reached at r-1, i.e. min-hop =
     r-1 — each node expands exactly once) against the bidirectional
     edge list and min-merges into the label table, which is
-    materialized per round (localCheckpoint; ``persist_dir=`` for the
-    durable parquet path) so lineage stays flat. Early exit on an empty
+    materialized per round so lineage stays flat. Early exit on an empty
     frontier cannot diverge from the oracle: its remaining unrolled
     rounds are no-ops. Per round: one edge-sized equi-join + one
     label-sized min aggregate — the Pregel shape, never all-pairs.
@@ -545,8 +515,6 @@ def bfs_hops(
     """
     edges = materialize(
         _copurchase_edges(tables["lineitem"], min_orders).select("u", "v"),
-        persist_dir,
-        "bfs_edges",
     )
     bi = edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).union(
         edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
@@ -567,8 +535,6 @@ def bfs_hops(
         )
         labels = materialize(
             labels.union(nxt).groupBy("node").agg(F.min("hop").alias("hop")),
-            persist_dir,
-            f"bfs_round_{r}",
         )
     return labels.select(
         F.col("node").alias("partkey"), F.col("hop").cast("int").alias("hop")
@@ -584,7 +550,6 @@ def link_prediction_scores(
     min_orders: int = 2,
     hub_cap: int = LINK_HUB_CAP,
     min_common: int = 2,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Link prediction over the co-purchase graph: score NON-adjacent
     part pairs by common-neighbor evidence — the candidate generator
@@ -608,24 +573,17 @@ def link_prediction_scores(
 
     The edge list is the ``triangle_counts`` grain (co-purchased in >=
     ``min_orders`` distinct orders), materialized once and reused by
-    adjacency, degrees, and the anti-join (``persist_dir=`` switches
-    localCheckpoint to durable parquet).
+    adjacency, degrees, and the anti-join.
 
     Returns (part_a, part_b, cn, deg_a, deg_b, jaccard, aa_micro).
     """
     edges = materialize(
         _copurchase_edges(tables["lineitem"], min_orders).select("u", "v"),
-        persist_dir,
-        "lp_edges",
     )
     adj = edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).union(
         edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
     )
-    deg = materialize(
-        adj.groupBy("node").agg(F.count("*").cast("long").alias("deg")),
-        persist_dir,
-        "lp_deg",
-    )
+    deg = materialize(adj.groupBy("node").agg(F.count("*").cast("long").alias("deg")))
     # Wedges through capped-degree shared neighbors. A common neighbor
     # is adjacent to both endpoints, so deg_z >= 2 and ln(deg_z) > 0.
     adj_z = adj.join(deg, "node").where(F.col("deg") <= hub_cap)
@@ -685,7 +643,6 @@ def label_propagation_communities(
     tables: dict[str, DataFrame],
     rounds: int = LPA_ROUNDS,
     min_orders: int = 2,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Community detection by synchronous label propagation over the
     co-purchase graph (same node/edge grain as ``triangle_counts`` /
@@ -705,27 +662,22 @@ def label_propagation_communities(
 
     Per round: one neighbor-label count aggregate (linear in edges,
     the only data-scale shuffle) + a per-node argmax window; labels are
-    materialized each round so lineage stays flat (``persist_dir=``
-    for the durable parquet path).
+    materialized each round so lineage stays flat.
 
     Returns (partkey, community).
     """
     edges = materialize(
         _copurchase_edges(tables["lineitem"], min_orders).select("u", "v"),
-        persist_dir,
-        "lpa_edges",
     )
     adj = edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).union(
         edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
     )
     labels = materialize(
         adj.select("node").distinct().select("node", F.col("node").alias("lbl")),
-        persist_dir,
-        "lpa_round_0",
     )
     from pyspark.sql import Window
 
-    for r in range(1, rounds + 1):
+    for _ in range(rounds):
         counts = (
             adj.join(
                 labels.select(F.col("node").alias("nbr"), "lbl"), "nbr"
@@ -740,8 +692,6 @@ def label_propagation_communities(
             counts.withColumn("rk", F.row_number().over(rk))
             .where(F.col("rk") == 1)
             .select("node", "lbl"),
-            persist_dir,
-            f"lpa_round_{r}",
         )
     return labels.select(
         F.col("node").alias("partkey"), F.col("lbl").alias("community")
@@ -753,7 +703,6 @@ def weighted_shortest_paths(
     n_seeds: int = 4,
     max_rounds: int = 4,
     min_orders: int = 2,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Bounded-round Bellman-Ford over the co-purchase graph — the
     weighted companion of bfs_hops (hop counts → path COSTS): cheapest
@@ -772,8 +721,7 @@ def weighted_shortest_paths(
     exact min-cost path using <= r edges (the delta and full
     relaxations agree round by round), so the bounded-round semantics
     are well-defined whether or not the graph has converged. Labels
-    are materialized per round (localCheckpoint; ``persist_dir=`` for
-    the durable path) to keep lineage flat.
+    are materialized per round to keep lineage flat.
 
     Returns (partkey, dist) for every node reachable from a seed
     within max_rounds edges.
@@ -782,8 +730,6 @@ def weighted_shortest_paths(
         _copurchase_edges(tables["lineitem"], min_orders).select(
             "u", "v", F.expr("100 div n_orders + 1").cast("long").alias("cost")
         ),
-        persist_dir,
-        "wsp_edges",
     )
     bi = edges.select(
         F.col("u").alias("src"), F.col("v").alias("dst"), "cost"
@@ -796,7 +742,7 @@ def weighted_shortest_paths(
     )
     # Frontier emptiness rides each round's OWN materialization job via
     # observe() (r12 verdict #4, guide §2.4 "remove jobs outright"):
-    # localCheckpoint/write is an action, so the metric is collected by
+    # materialize() runs an action, so the metric is collected by
     # the same tasks that materialize the round state — where the old
     # per-round `frontier.isEmpty()` paid one extra checkpoint-scan job
     # per round (+1 for the seed probe). Rows are untouched
@@ -807,12 +753,10 @@ def weighted_shortest_paths(
         seeds.select("node", F.lit(0).cast("long").alias("dist")).observe(
             obs0, F.count(F.lit(1)).alias("n_improved")
         ),
-        persist_dir,
-        "wsp_round_0",
     )
     frontier = labels
     frontier_n = obs0.get["n_improved"] or 0
-    for r in range(1, max_rounds + 1):
+    for _ in range(max_rounds):
         if frontier_n == 0:
             break
         relaxed = frontier.join(bi, frontier.node == bi.src).select(
@@ -843,8 +787,6 @@ def weighted_shortest_paths(
                 ).alias("improved"),
             )
             .observe(obs, F.sum(F.col("improved").cast("long")).alias("n_improved")),
-            persist_dir,
-            f"wsp_round_{r}",
         )
         frontier = state.where("improved").select("node", "dist")
         labels = state.select("node", "dist")

@@ -1361,15 +1361,16 @@ def copurchase_pairs(tables: dict[str, DataFrame], min_orders: int = 2) -> DataF
     bit-identical on both engines.
 
     The basket table feeds three consumers (pairs, per-part
-    frequencies, the order total), so it is materialized once
-    (localCheckpoint — the read>=2x rule) and read three times.
+    frequencies, the order total), so it is materialized once (the
+    read>=2x rule) and read three times.
 
     Returns (part_a, part_b, n_ab, n_a, n_b, lift) for pairs
     co-purchased in >= min_orders orders.
     """
     from mapreduce_rs_spark.operators.graph import order_baskets
+    from mapreduce_rs_spark.operators.materialize import materialize
 
-    baskets = order_baskets(tables["lineitem"]).localCheckpoint(eager=True)
+    baskets = materialize(order_baskets(tables["lineitem"]))
     pair_expr = F.expr(
         "flatten(transform(ps, (x, i) -> transform(slice(ps, i + 2, size(ps)), "
         "y -> struct(x AS part_a, y AS part_b))))"
@@ -1555,8 +1556,6 @@ def rfm_segments(t: dict[str, DataFrame]) -> DataFrame:
             "frequency",
             "monetary",
         ),
-        None,
-        "rfm_metrics",
     )
     cuts = metrics.agg(
         *[
@@ -1996,7 +1995,6 @@ _H32_RANGE = 1 << 32
 def join_size_estimate(
     t: dict[str, "DataFrame"],
     k: int = JOIN_SKETCH_K,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Sketch-based JOIN CARDINALITY estimation — the optimizer
     statistic that decides broadcast-vs-shuffle and partition counts
@@ -2036,18 +2034,14 @@ def join_size_estimate(
         t["lineitem"]
         .groupBy(F.col("l_orderkey").alias("key"))
         .agg(F.count(F.lit(1)).cast("long").alias("f_a")),
-        persist_dir,
-        "joinsize_freq_a",
     )
     fb = materialize(
         t["orders"]
         .groupBy(F.col("o_orderkey").alias("key"))
         .agg(F.count(F.lit(1)).cast("long").alias("f_b")),
-        persist_dir,
-        "joinsize_freq_b",
     )
 
-    def sketch(freq: DataFrame, fcol: str, name: str) -> DataFrame:
+    def sketch(freq: DataFrame, fcol: str) -> DataFrame:
         from mapreduce_rs_spark.functions.hashing import h32
 
         return materialize(
@@ -2056,12 +2050,10 @@ def join_size_estimate(
             )
             .orderBy("h", "key")
             .limit(k),
-            persist_dir,
-            name,
         )
 
-    sk_a = sketch(fa, "f_a", "joinsize_sketch_a")
-    sk_b = sketch(fb, "f_b", "joinsize_sketch_b")
+    sk_a = sketch(fa, "f_a")
+    sk_b = sketch(fb, "f_b")
 
     def theta_of(sk: DataFrame, name: str) -> DataFrame:
         return sk.agg(
@@ -2254,9 +2246,7 @@ def target_encoding_nations(
 SKEW_HOT_FACTOR = 2  # a key is "hot" when freq · n_keys > factor · n_rows
 
 
-def key_skew_profile(
-    t: dict[str, DataFrame], persist_dir: str | None = None
-) -> DataFrame:
+def key_skew_profile(t: dict[str, DataFrame]) -> DataFrame:
     """Join-key skew diagnostics for the three workhorse fact keys —
     the statistic that decides SALTING vs AQE skew-join vs plain
     shuffle before paying for a 100 TB join. Per key: row/key counts,
@@ -2272,8 +2262,7 @@ def key_skew_profile(
 
     Scale: ONE frequency aggregate per key (the only key-scale
     shuffle, map-side partials), materialized once and consumed by the
-    1-row totals and the hot-key filter (``persist_dir=`` switches
-    localCheckpoint to durable parquet); everything downstream is
+    1-row totals and the hot-key filter; everything downstream is
     broadcast-sized.
     """
     from mapreduce_rs_spark.operators.materialize import materialize
@@ -2283,8 +2272,6 @@ def key_skew_profile(
             df.groupBy(F.col(col).alias("k")).agg(
                 F.count(F.lit(1)).cast("long").alias("f")
             ),
-            persist_dir,
-            f"skew_freq_{label}",
         )
         totals = freq.agg(
             F.sum("f").cast("long").alias("n_rows"),

@@ -570,7 +570,6 @@ def embedding_near_dup(
     df: DataFrame,
     threshold: float = 0.97,
     planes: list[list[float]] | None = None,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, blocked by the hyperplane
     LSH bucket: the pair join is an equi-join on ``bucket``, never an
@@ -590,8 +589,7 @@ def embedding_near_dup(
     so the correctness gate exercises real selections — that
     calibration lives at the call site, not in the API default."""
     planes = planes or hyperplanes()
-    # Materialize once; the self-join would recompute 2x. persist_dir
-    # selects the durable parquet path (operators/materialize.py). The
+    # Materialize once; the self-join would recompute 2x. The
     # materialized row carries the pre-cast double embedding AND its
     # norm, so per-PAIR work in the self-join is one dot + one divide.
     bucketed = materialize(
@@ -603,8 +601,6 @@ def embedding_near_dup(
             _bucket_expr("embd", planes).alias("bucket"),
             _l2_raw(F.col("embd")).alias("nrm"),
         ),
-        persist_dir,
-        "near_dup_buckets",
     )
     a, b = bucketed.alias("a"), bucketed.alias("b")
     return (
@@ -644,7 +640,6 @@ def embedding_near_dup_capped(
     threshold: float = 0.97,
     cap: int = NEARDUP_LEGACY_CAP,
     planes: list[list[float]] | None = None,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """``embedding_near_dup`` demoted to a bounded contract: the
     fixed-plane pair stream capped to the global top-``cap`` pairs by
@@ -656,7 +651,7 @@ def embedding_near_dup_capped(
     plane count, per-bucket rep cap, per-vector partner cap — is
     ``embedding_near_dup_derived``; this entry exists for the fixed-
     plane model's continuity evidence."""
-    pairs = embedding_near_dup(df, threshold, planes, persist_dir)
+    pairs = embedding_near_dup(df, threshold, planes)
     return pairs.orderBy(
         F.col("cos_sim").desc(), "vec_a", "vec_b"
     ).limit(cap)
@@ -665,9 +660,7 @@ def embedding_near_dup_capped(
 SEMDEDUP_TAU = 0.40
 
 
-def semdedup(
-    df: DataFrame, tau: float = SEMDEDUP_TAU, persist_dir: str | None = None
-) -> DataFrame:
+def semdedup(df: DataFrame, tau: float = SEMDEDUP_TAU) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023): cluster the
     embedding space with the fitted IVF centroids, then inside each
     cluster drop every vector that has a SMALLER-id neighbor at cosine
@@ -679,12 +672,10 @@ def semdedup(
     an all-pairs product — and per-cluster work is bounded because k
     scales with the corpus (SemDeDup runs ~100k clusters at
     billion-vector scale, keeping E[cluster] ~ N/k constant). The
-    assignment table is materialized once (``persist_dir=None`` →
-    localCheckpoint; a cluster run passes ``persist_dir=`` for the
-    durable parquet path, operators/materialize.py) so the self-join
-    doesn't recompute the k-way centroid scoring, and the final
-    aggregate shuffles only
-    (centroid_id, flag) pairs. The drop decision needs just EXISTS over
+    assignment table is materialized once (operators/materialize.py)
+    so the self-join doesn't recompute the k-way centroid scoring, and
+    the final aggregate shuffles only (centroid_id, flag) pairs. The
+    drop decision needs just EXISTS over
     the pair stream: dropped ids are distinct-projected before the
     summary join, so duplicate pair matches never double-count.
 
@@ -699,8 +690,6 @@ def semdedup(
         _ivf_assigned_scored(df, centroids()).select(
             "vec_id", "centroid_id", "embd", F.col("c_norm").alias("nrm")
         ),
-        persist_dir,
-        "ivf_assign",
     )
     a, b = assigned.alias("a"), assigned.alias("b")
     dropped = (
@@ -1547,7 +1536,9 @@ def label_centroid_drift(df: DataFrame) -> DataFrame:
     computed directly on the integer-sum vectors cast to double — the
     knn dot/norm chains on identical inputs, deterministic in both
     engines. ``norm_ratio`` rescales by the exact counts
-    (||s_l||·N) / (n_l·||g||).
+    (||s_l||·N) / (n_l·||g||). A zero sum vector (a label, or the whole
+    corpus, of zero vectors) makes a denominator 0: both columns are
+    then NULL, as DuckDB's division returns, not an ANSI error.
 
     Scale: posexplode is a narrow ×dim expansion; the only shuffle is
     the (label × dim)-key aggregate with map-side partials — state is
@@ -1584,10 +1575,12 @@ def label_centroid_drift(df: DataFrame) -> DataFrame:
         .select(
             F.col("label").cast("int").alias("label"),
             "n_vecs",
-            (_dot_raw(lv, gv) / (_l2_raw(lv) * _l2_raw(gv))).alias("cos_to_global"),
-            (
-                (_l2_raw(lv) * F.col("n_total").cast("double"))
-                / (F.col("n_vecs").cast("double") * _l2_raw(gv))
+            F.try_divide(_dot_raw(lv, gv), _l2_raw(lv) * _l2_raw(gv)).alias(
+                "cos_to_global"
+            ),
+            F.try_divide(
+                _l2_raw(lv) * F.col("n_total").cast("double"),
+                F.col("n_vecs").cast("double") * _l2_raw(gv),
             ).alias("norm_ratio"),
         )
     )
@@ -1732,7 +1725,6 @@ def kmeans_refit_distributed(
     df: DataFrame,
     rounds: int = KMEANS_DIST_ROUNDS,
     init: list[list[int]] | None = None,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Distributed coarse-quantizer refit: ``rounds`` Lloyd iterations
     of spherical k-means executed ENTIRELY as Spark aggregates — the
@@ -1780,7 +1772,7 @@ def kmeans_refit_distributed(
     the init and refit centroid (the drift the refit corrected).
     """
     init = init or kmeans_init_q()
-    q, cent = _kmeans_rounds(df, rounds, init, persist_dir)
+    q, cent = _kmeans_rounds(df, rounds, init)
     iv = F.expr(
         "CAST(element_at("
         + "array(" + ",".join(_cq_sql(c) for c in init) + ")"
@@ -1847,8 +1839,6 @@ def _lloyd_rounds(
     q: DataFrame,
     cent: DataFrame,
     rounds: int,
-    persist_dir: str | None,
-    tag: str = "dkm",
     assign: "Callable[[DataFrame, DataFrame], DataFrame] | None" = None,
 ) -> DataFrame:
     """``rounds`` distributed Lloyd iterations from centroid state
@@ -1863,7 +1853,7 @@ def _lloyd_rounds(
     is the refit family's exact broadcast argmax (k x 64 dots per
     vector — the right shape when k is bounded)."""
     argmax_cid = _dkm_argmax_cid()
-    for r in range(rounds):
+    for _ in range(rounds):
         if assign is not None:
             assigned = assign(q, cent)
         else:
@@ -1899,8 +1889,6 @@ def _lloyd_rounds(
                 ).otherwise(cq_new).alias("cq"),
                 F.coalesce(F.col("nm"), F.lit(0).cast("long")).alias("n_members"),
             ),
-            persist_dir,
-            f"{tag}_c{r}",
         )
     return cent
 
@@ -1909,7 +1897,6 @@ def _kmeans_rounds(
     df: DataFrame,
     rounds: int,
     init: list[list[int]],
-    persist_dir: str | None,
 ) -> tuple[DataFrame, DataFrame]:
     """The Lloyd-round engine behind ``kmeans_refit_distributed`` and
     its quality eval (``kmeans_refit_eval``): returns (q, cent) — the
@@ -1927,15 +1914,14 @@ def _kmeans_rounds(
         F.col("c.cq").alias("cq"),
         F.lit(0).cast("long").alias("n_members"),
     )
-    q = materialize(_qv_frame(df), persist_dir, "dkm_corpus")
-    return q, _lloyd_rounds(q, cent, rounds, persist_dir)
+    q = materialize(_qv_frame(df))
+    return q, _lloyd_rounds(q, cent, rounds)
 
 
 def kmeans_refit_eval(
     df: DataFrame,
     rounds: int = KMEANS_DIST_ROUNDS,
     init: list[list[int]] | None = None,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """The refit's QUALITY eval — the swap decision a model-maintenance
     loop makes after ``kmeans_refit_distributed`` produces a candidate
@@ -1964,7 +1950,7 @@ def kmeans_refit_eval(
     membership is the last update round's (assignment under
     C_{rounds-1}) — the off-by-one is inherent to Lloyd's."""
     init = init or kmeans_init_q()
-    q, cent = _kmeans_rounds(df, rounds, init, persist_dir)
+    q, cent = _kmeans_rounds(df, rounds, init)
     rolled = _rolled_state(cent)
     init_carr = _init_struct_arr(init)
 
@@ -2086,12 +2072,7 @@ def _sdk_blocked_assign(
     return winners.unionByName(fallback)
 
 
-def _sdk_quantize(
-    df: DataFrame,
-    planes: list[list[float]],
-    persist_dir: str | None,
-    name: str,
-) -> DataFrame:
+def _sdk_quantize(df: DataFrame, planes: list[list[float]]) -> DataFrame:
     """Quantized corpus WITH its own-bucket key (vec_id, qv, bucket),
     materialized: one narrow pass, one checkpoint read by every
     consumer (seed select, rounds, assignments)."""
@@ -2101,8 +2082,6 @@ def _sdk_quantize(
             "qv",
             _bucket_expr(f"CAST(qv AS {_DBL})", planes).alias("bucket"),
         ),
-        persist_dir,
-        name,
     )
 
 
@@ -2110,8 +2089,6 @@ def _sdk_fit(
     df: DataFrame,
     rounds: int = KMEANS_DIST_ROUNDS,
     target: int = IVF_TARGET_CLUSTER,
-    persist_dir: str | None = None,
-    tag: str = "sdk",
 ) -> tuple[DataFrame, DataFrame, list[list[float]]]:
     """The derived-k model fit — k = ivf_k_for(N), p = sdk_planes_for(k),
     data-seeded init (k h32-smallest vec_ids renormalized to micro-unit
@@ -2125,7 +2102,7 @@ def _sdk_fit(
     n = df.count()
     k = ivf_k_for(n, target)
     planes = hyperplanes(sdk_planes_for(k))
-    q = _sdk_quantize(df, planes, persist_dir, f"{tag}_corpus")
+    q = _sdk_quantize(df, planes)
     ss = F.expr(_norm2_sql())
     # seed state: ONE projection over q -> TakeOrdered(k) -> k-row
     # window for cid + renormalize (bounded by construction: k <= 2^17)
@@ -2145,12 +2122,9 @@ def _sdk_fit(
             F.expr(_renorm_sql("qv")).alias("cq"),
             F.lit(0).cast("long").alias("n_members"),
         ),
-        persist_dir,
-        f"{tag}_seed",
     )
     cent = _lloyd_rounds(
-        q, cent0, rounds, persist_dir, tag=tag,
-        assign=lambda qq, cc: _sdk_blocked_assign(qq, cc, planes),
+        q, cent0, rounds, assign=lambda qq, cc: _sdk_blocked_assign(qq, cc, planes)
     )
     return q, cent, planes
 
@@ -2189,7 +2163,6 @@ def semdedup_derived_k(
     tau_frac: tuple[int, int] = SEMDEDUP_TAU_FRAC,
     rounds: int = KMEANS_DIST_ROUNDS,
     target: int = IVF_TARGET_CLUSTER,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """``semdedup`` with the model the SemDeDup recipe actually calls
     for (Abbas et al. 2023 run ~100k clusters at billion-vector scale):
@@ -2237,14 +2210,12 @@ def semdedup_derived_k(
     k·(p+1)-row replicated centroid frame), the (cid,pos) update
     (k x dim integers), the cid-blocked pair join (E[cluster] ~
     target), and the (cid, flag) audit aggregate."""
-    q, cent, planes = _sdk_fit(df, rounds, target, persist_dir, tag="sdk")
+    q, cent, planes = _sdk_fit(df, rounds, target)
     # final-model assignment of the FULL corpus (the same blocked
     # assignment the rounds use), carrying the exact squared norm the
     # pair threshold needs; materialized once — the self-join must not
     # recompute the candidate argmax
-    assigned = materialize(
-        _with_nrm2(_sdk_blocked_assign(q, cent, planes)), persist_dir, "sdk_assign"
-    )
+    assigned = materialize(_with_nrm2(_sdk_blocked_assign(q, cent, planes)))
     a, b = assigned.alias("a"), assigned.alias("b")
     dropped = (
         a.join(
@@ -2268,7 +2239,6 @@ def semdedup_ingest_audit(
     tau_frac: tuple[int, int] = SEMDEDUP_TAU_FRAC,
     rounds: int = KMEANS_DIST_ROUNDS,
     target: int = IVF_TARGET_CLUSTER,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """The streaming semdedup ingest twin's batch core as an ORACLED
     query: fit the derived-k model on the STANDING split
@@ -2293,15 +2263,11 @@ def semdedup_ingest_audit(
     ``target`` constant — per-ingest work is batch-proportional."""
     standing_src = df.where(F.col("vec_id") % 10 < 8)
     ingest_src = df.where(F.col("vec_id") % 10 >= 8)
-    q, cent, planes = _sdk_fit(
-        standing_src, rounds, target, persist_dir, tag="sdi"
-    )
+    q, cent, planes = _sdk_fit(standing_src, rounds, target)
     standing = _with_nrm2(_sdk_blocked_assign(q, cent, planes))
-    qi = _sdk_quantize(ingest_src, planes, persist_dir, "sdi_ingest")
+    qi = _sdk_quantize(ingest_src, planes)
     # materialized: read by the admission join AND the final audit
-    assigned_new = materialize(
-        _with_nrm2(_sdk_blocked_assign(qi, cent, planes)), persist_dir, "sdi_assign"
-    )
+    assigned_new = materialize(_with_nrm2(_sdk_blocked_assign(qi, cent, planes)))
     return _ingest_report(_sdk_admit(assigned_new, standing, tau_frac))
 
 
@@ -2347,7 +2313,6 @@ def embedding_near_dup_derived(
     cap: int = NEARDUP_PAIR_CAP,
     target: int = NEARDUP_BUCKET_TARGET,
     rep_cap: int = NEARDUP_REP_CAP,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """``embedding_near_dup`` made production-shaped — the r10 verdict's
     one weak grade retired. Three fixes, all the tree's own conventions:
@@ -2409,8 +2374,6 @@ def embedding_near_dup_derived(
             _bucket_expr(f"CAST(qv AS {_DBL})", planes).alias("bucket"),
             F.expr(_norm2_sql()).alias("nrm2"),
         ),
-        persist_dir,
-        "ndd_buckets",
     )
     wr = Window.partitionBy("bucket").orderBy(
         h32(F.col("vec_id").cast("string")), F.col("vec_id")
@@ -2451,7 +2414,6 @@ def embedding_near_dup_eval(
     cap: int = NEARDUP_PAIR_CAP,
     target: int = NEARDUP_BUCKET_TARGET,
     rep_cap: int = NEARDUP_REP_CAP,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Recall harness for ``embedding_near_dup_derived`` — the family
     convention (ann_recall / lsh_dedup_eval / nn_descent_recall): every
@@ -2482,12 +2444,10 @@ def embedding_near_dup_eval(
     amortize away, bounded by the 32-row broadcast sample exactly like
     knn_bruteforce; the intersection join is <= 32·cap rows."""
     found = embedding_near_dup_derived(
-        df, tau_frac, cap, target, rep_cap, persist_dir
+        df, tau_frac, cap, target, rep_cap
     ).select("vec_a", "vec_b")
     corpus = materialize(
         _qv_frame(df).select("vec_id", "qv", F.expr(_norm2_sql()).alias("nrm2")),
-        persist_dir,
-        "nde_corpus",
     )
     # ONE projection -> TakeOrdered (the single-projection rule), then
     # materialized: the 32-row sample feeds the exact join AND the
@@ -2500,8 +2460,6 @@ def embedding_near_dup_eval(
         )
         .orderBy("qh", "vec_id")
         .limit(N_QUERIES_CAP),
-        persist_dir,
-        "nde_sample",
     )
     s, c = sample.alias("s"), corpus.alias("c")
     ex = (
@@ -2559,7 +2517,6 @@ def knn_ivf_refit(
     k: int = 10,
     rounds: int = KMEANS_DIST_ROUNDS,
     init: list[list[int]] | None = None,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """IVF search SERVING THE REFIT MODEL — the swap, executed: after
     ``kmeans_refit_distributed`` produces a candidate model and
@@ -2587,7 +2544,7 @@ def knn_ivf_refit(
     side is the hard-capped KMV sample; the probe is an equi-join on
     centroid_id; the top-k window partitions by q_id."""
     init = init or kmeans_init_q()
-    q, cent = _kmeans_rounds(df, rounds, init, persist_dir)
+    q, cent = _kmeans_rounds(df, rounds, init)
     rolled = _rolled_state(cent)
     return _refit_serve_topk(_refit_assign(df, rolled), df, rolled, k)
 
@@ -2698,8 +2655,6 @@ def embedding_outliers(df: DataFrame, top_k: int = OUTLIER_TOP_K) -> DataFrame:
             "pos",
             F.expr(_q("x")).alias("qx"),
         ),
-        None,
-        "outlier_q",
     )
     sums = q.groupBy("label", "pos").agg(
         F.sum("qx").cast("long").alias("s"),
@@ -2778,11 +2733,7 @@ NND_ROUNDS = 3     # fixed descent rounds; the oracle replays the same count
 NND_SEED_CAP = 12  # per-bucket representatives seeding each node's list
 
 
-def _nnd_corpus(
-    df: DataFrame,
-    planes: list[list[float]],
-    persist_dir: str | None,
-) -> DataFrame:
+def _nnd_corpus(df: DataFrame, planes: list[list[float]]) -> DataFrame:
     """(vec_id, embd, c_norm, bucket), materialized: read by the seed
     join and by BOTH sides of every round's scoring join (>= 2x rule)."""
     return materialize(
@@ -2794,8 +2745,6 @@ def _nnd_corpus(
             _l2_raw(F.col("embd")).alias("c_norm"),
             _bucket_expr("embd", planes).alias("bucket"),
         ),
-        persist_dir,
-        "nnd_corpus",
     )
 
 
@@ -2894,7 +2843,6 @@ def nn_descent_knn_graph(
     rounds: int = NND_ROUNDS,
     seed_cap: int = NND_SEED_CAP,
     planes: list[list[float]] | None = None,
-    persist_dir: str | None = None,
     corpus: DataFrame | None = None,
     reps: DataFrame | None = None,
 ) -> DataFrame:
@@ -2916,8 +2864,7 @@ def nn_descent_knn_graph(
     Returns the final graph: (vec_id, nbr_id, cos_sim, rnk) — N*k rows.
     Every join is an equi-join on vec_id / bucket / center; every window
     is bounded by construction; each round materializes one N*k edge
-    frame (``persist_dir`` selects the durable parquet path in
-    production, localCheckpoint locally — materialize.py contract).
+    frame (operators/materialize.py).
     """
     planes = planes or hyperplanes()
     # ``corpus`` lets a caller that ALSO needs the (vec_id, embd, norm,
@@ -2925,7 +2872,7 @@ def nn_descent_knn_graph(
     # copy instead of checkpointing the corpus twice (knn_bruteforce's
     # shared-sample discipline). Must have been built with the same
     # ``planes``.
-    v = corpus if corpus is not None else _nnd_corpus(df, planes, persist_dir)
+    v = corpus if corpus is not None else _nnd_corpus(df, planes)
     # ``reps`` mirrors ``corpus``: knn_graph_search materializes the
     # same (bucket, rep_id) frame for its entry beam and passes it in,
     # so the full-corpus reps window isn't computed twice per serve.
@@ -2947,10 +2894,8 @@ def nn_descent_knn_graph(
         .where(F.col("src") != F.col("dst"))
         .select("src", "dst")
     )
-    edges = materialize(
-        _nnd_topk(seed_pairs, v, k), persist_dir, "nnd_edges_seed"
-    )
-    for r in range(rounds):
+    edges = materialize(_nnd_topk(seed_pairs, v, k))
+    for _ in range(rounds):
         rev_w = Window.partitionBy("center").orderBy(
             F.col("cos_sim").desc(), "member"
         )
@@ -2982,9 +2927,7 @@ def nn_descent_knn_graph(
         # (dropDuplicates == distinct on the 2-col frame), so the chain
         # needs one exchange, not distinct's + the window's
         pairs = cand.unionByName(edges.select("src", "dst"))
-        edges = materialize(
-            _nnd_topk(pairs, v, k, dedup=True), persist_dir, f"nnd_edges_{r}"
-        )
+        edges = materialize(_nnd_topk(pairs, v, k, dedup=True))
     return edges.select(
         F.col("src").alias("vec_id"),
         F.col("dst").alias("nbr_id"),
@@ -2998,7 +2941,6 @@ def nn_descent_recall(
     k: int = NND_K,
     rounds: int = NND_ROUNDS,
     seed_cap: int = NND_SEED_CAP,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Graph quality vs exact ground truth — the eval companion every
     other ANN tier already has (ann_recall): for the KMV query cap,
@@ -3013,15 +2955,13 @@ def nn_descent_recall(
     filtered to the cap (the filter prunes the last window's output,
     not the graph construction, which the queries' neighbors still
     need)."""
-    edges = nn_descent_knn_graph(
-        df, k=k, rounds=rounds, seed_cap=seed_cap, persist_dir=persist_dir
-    )
+    edges = nn_descent_knn_graph(df, k=k, rounds=rounds, seed_cap=seed_cap)
     # ONE cap-row sample, materialized, feeds all three consumers
     # (ground-truth queries, the graph-side filter, the final left
     # join) — un-materialized, each consumer cloned its own full-corpus
     # TakeOrdered scan (scan audit read 4 corpus scans; now 1 — the
     # committed tools/scan_baseline.json value).
-    q = materialize(_query_set(df), persist_dir, "nnd_qids")
+    q = materialize(_query_set(df))
     qids = q.select("q_id")
     exact = knn_bruteforce(df, k=k, queries=q).select("q_id", "vec_id")
     graph_pairs = edges.select(
@@ -3052,7 +2992,6 @@ def knn_graph_search(
     hops: int = NND_HOPS,
     rounds: int = NND_ROUNDS,
     seed_cap: int = NND_SEED_CAP,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """The SERVING path of the graph tier: answer the KMV query set by
     greedy beam search over the NN-Descent graph — build (nn_descent_
@@ -3079,18 +3018,17 @@ def knn_graph_search(
     every beam window partitions by q_id with <= beam*(k+1) rows per
     partition."""
     planes = hyperplanes()
-    v = _nnd_corpus(df, planes, persist_dir)
+    v = _nnd_corpus(df, planes)
     # The reps frame serves BOTH the build's seed and the entry beam —
     # materialized once here, threaded into the build (like corpus=v),
     # so the full-corpus reps window runs once per serve, not twice.
-    reps = materialize(_nnd_reps(v, seed_cap), persist_dir, "gs_reps")
+    reps = materialize(_nnd_reps(v, seed_cap))
     # nn_descent_knn_graph already returns a checkpointed frame under a
     # narrow rename select — re-materializing it would copy N*k rows
     # for nothing (review finding); the per-hop consumers recompute
     # only the projection.
     g = nn_descent_knn_graph(
-        df, rounds=rounds, seed_cap=seed_cap, planes=planes,
-        persist_dir=persist_dir, corpus=v, reps=reps,
+        df, rounds=rounds, seed_cap=seed_cap, planes=planes, corpus=v, reps=reps
     ).select(F.col("vec_id").alias("gsrc"), F.col("nbr_id").alias("gdst"))
     # KMV query sample derived from the CHECKPOINTED v (its cast, norm
     # and bucket are the per-row values the sample needs — recomputing
@@ -3109,8 +3047,6 @@ def knn_graph_search(
         .orderBy("qh", "q_id")
         .limit(N_QUERIES_CAP)
         .select("q_id", "q_embd", "q_norm", "q_bucket"),
-        persist_dir,
-        "gs_qids",
     )
     # the shared beam loop (_beam_frontier) with the serving-path
     # asymmetry: the query side is the hard-capped KMV sample, so its
@@ -3118,8 +3054,7 @@ def knn_graph_search(
     # graph_admit_batch); the finale self-excludes because queries ARE
     # corpus members here
     frontier = _beam_frontier(
-        qf, v, reps, g, beam, hops, persist_dir, "gs",
-        hint_broadcast_queries=True, planes=planes,
+        qf, v, reps, g, beam, hops, hint_broadcast_queries=True, planes=planes
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cs").desc(), "cand")
     return (
@@ -3153,8 +3088,6 @@ def _beam_frontier(
     ge: DataFrame,
     beam: int,
     hops: int,
-    persist_dir: str | None,
-    tag: str,
     hint_broadcast_queries: bool = False,
     planes: list[list[float]] | None = None,
 ) -> DataFrame:
@@ -3220,17 +3153,15 @@ def _beam_frontier(
         .join(reps.select("bucket", F.col("rep_id").alias("cand")), "bucket")
         .select("q_id", "cand")
     )
-    frontier = materialize(scored_top(entry, beam), persist_dir, f"{tag}_f0")
-    for h in range(hops):
+    frontier = materialize(scored_top(entry, beam))
+    for _ in range(hops):
         nxt = (
             frontier.select("q_id", "cand")
             .join(ge, frontier.cand == ge.gsrc)
             .select("q_id", F.col("gdst").alias("cand"))
         )
         pairs = nxt.unionByName(frontier.select("q_id", "cand"))
-        frontier = materialize(
-            scored_top(pairs, beam, dedup=True), persist_dir, f"{tag}_f{h + 1}"
-        )
+        frontier = materialize(scored_top(pairs, beam, dedup=True))
     return frontier
 
 
@@ -3242,8 +3173,6 @@ def graph_admit_batch(
     k: int = NND_K,
     beam: int = NND_BEAM,
     hops: int = NND_HOPS,
-    persist_dir: str | None = None,
-    tag: str = "gi",
     planes: list[list[float]] | None = None,
 ) -> DataFrame:
     """The ADMISSION core shared by ``knn_graph_ingest`` (batch) and
@@ -3258,16 +3187,12 @@ def graph_admit_batch(
     micro-batching of ``nq`` yields byte-identical edges (the property
     the streaming parity test pins). No self-exclusion: new vectors
     are not in the standing corpus by construction."""
-    frontier = _beam_frontier(
-        nq, v, reps, ge, beam, hops, persist_dir, tag, planes=planes
-    )
+    frontier = _beam_frontier(nq, v, reps, ge, beam, hops, planes=planes)
     w = Window.partitionBy("q_id").orderBy(F.col("cs").desc(), "cand")
     return materialize(
         frontier.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= k)
         .select("q_id", "cand", "cs"),
-        persist_dir,
-        f"{tag}_found",
     )
 
 
@@ -3279,7 +3204,6 @@ def knn_graph_ingest(
     rounds: int = NND_ROUNDS,
     seed_cap: int = NND_SEED_CAP,
     n_batches: int = NND_INGEST_BATCHES,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Graph-index maintenance under ingest — what ``ivf_index_
     maintenance`` is to the IVF tier: the standing NN-Descent graph is
@@ -3342,13 +3266,10 @@ def knn_graph_ingest(
             _l2_raw(F.col("embd")).alias("c_norm"),
             _bucket_expr("embd", planes).alias("bucket"),
         ),
-        persist_dir,
-        "gi_corpus",
     )
-    reps = materialize(_nnd_reps(v, seed_cap), persist_dir, "gi_reps")
+    reps = materialize(_nnd_reps(v, seed_cap))
     g = nn_descent_knn_graph(
-        old, k=k, rounds=rounds, seed_cap=seed_cap, planes=planes,
-        persist_dir=persist_dir, corpus=v, reps=reps,
+        old, k=k, rounds=rounds, seed_cap=seed_cap, planes=planes, corpus=v, reps=reps
     )
     ge = g.select(F.col("vec_id").alias("gsrc"), F.col("nbr_id").alias("gdst"))
     # standing nodes' worst edge: the insertion bar a new vector must
@@ -3367,8 +3288,6 @@ def knn_graph_ingest(
                 "batch_id"
             ),
         ),
-        persist_dir,
-        "gi_new",
     )
     cv = v.select(
         F.col("vec_id").alias("cand"),
@@ -3376,8 +3295,7 @@ def knn_graph_ingest(
         F.col("c_norm").alias("cv_norm"),
     )
     found = graph_admit_batch(
-        nq, v, reps, ge, k=k, beam=beam, hops=hops, persist_dir=persist_dir,
-        planes=planes,
+        nq, v, reps, ge, k=k, beam=beam, hops=hops, planes=planes
     )
     # exact ground truth for the KMV-capped eval subset (bounded:
     # cap x |standing|, the knn_bruteforce shape); materialized — the
@@ -3389,8 +3307,6 @@ def knn_graph_ingest(
         .orderBy("qh", "q_id")
         .limit(N_QUERIES_CAP)
         .select("q_id", "q_embd", "q_norm"),
-        persist_dir,
-        "gi_qcap",
     )
     xw = Window.partitionBy("q_id").orderBy(F.col("cs").desc(), "cand")
     exact = (
@@ -3491,7 +3407,6 @@ def semantic_decontaminate(
     tau: float = DECON_TAU,
     top_k: int = DECON_TOP_K,
     planes: list[list[float]] | None = None,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Embedding-space decontamination — the SEMANTIC twin of the
     lexical ``decontaminate`` (text_analysis): a training corpus is
@@ -3524,7 +3439,7 @@ def semantic_decontaminate(
     and train branches read the ONE checkpoint.
     """
     planes = planes or hyperplanes()
-    v = _nnd_corpus(df, planes, persist_dir)
+    v = _nnd_corpus(df, planes)
     is_eval = F.col("vec_id") % 10 >= 8
     probe_arr = F.array(
         *[F.expr(f"bucket ^ {m}") for m in _probe_masks(planes)]
@@ -3572,7 +3487,6 @@ def semantic_decontaminate_fixed(
     top_k: int = DECON_TOP_K,
     eval_cap: int = DECON_EVAL_CAP,
     planes: list[list[float]] | None = None,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """``semantic_decontaminate`` under the operator's own production
     contract (r09 verdict #4): the eval side is a FIXED bounded
@@ -3595,7 +3509,7 @@ def semantic_decontaminate_fixed(
     TakeOrdered report) is the base operator's shape.
     """
     planes = planes or hyperplanes()
-    v = _nnd_corpus(df, planes, persist_dir)
+    v = _nnd_corpus(df, planes)
     is_eval = F.col("vec_id") % 10 >= 8
     # ONE projection over the checkpointed corpus -> TakeOrdered(cap):
     # the single-projection rule — stacked selects above the limit

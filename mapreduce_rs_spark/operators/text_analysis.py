@@ -172,13 +172,15 @@ def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     mathematically-equal scores to an exact tie in both engines, then
     the word tie-break decides identically); the emitted tfidf column
     stays unrounded."""
+    from mapreduce_rs_spark.operators.materialize import materialize
+
     # Materialized once: counts feeds both the df aggregate and the
     # scored join — otherwise the corpus tokenizes twice.
-    counts = (
+    counts = materialize(
         explode_tokens(df, "text", "doc_id")
         .groupBy("doc_id", "word")
         .agg(F.count("*").alias("tf"))
-    ).localCheckpoint()
+    )
     dfs = counts.groupBy("word").agg(F.count("*").alias("df_docs"))
     total = df.groupBy().agg(F.count("*").alias("n_docs"))
     scored = (
@@ -455,7 +457,6 @@ def cms_word_counts(
     df: DataFrame,
     w: int = CMS_W,
     top: int = CMS_TOP,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Count-Min Sketch over the token stream, with its accuracy
     audit — the sketch family's frequency-query member (KMV/HLL answer
@@ -476,9 +477,8 @@ def cms_word_counts(
     wordcount plan) and everything after is vocabulary-sized. The
     d=4 hash rows come from ONE md5 digest via the 4-lane scheme
     (bloom/minhash precedent — one crypto hash, four independent rows).
-    The word-count table is materialized once (localCheckpoint;
-    ``persist_dir=`` for the durable path) because the sketch build and
-    the truth top-``top`` both consume it.
+    The word-count table is materialized once because the sketch build
+    and the truth top-``top`` both consume it.
 
     Returns the exact top-``top`` words with true count, CMS estimate
     and overcount — the audit a pipeline runs before trusting the
@@ -491,8 +491,6 @@ def cms_word_counts(
         explode_tokens(df)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt")),
-        persist_dir,
-        "cms_wordcounts",
     )
     with_cols = wc.select(
         "word", "cnt", F.md5("word").alias("dg")
@@ -923,11 +921,7 @@ def vocab_coverage(df: DataFrame, min_count: int = 1) -> DataFrame:
     # The bin table feeds BOTH the total and the ranked pass — without
     # materialization Catalyst clones the whole corpus subtree into
     # each consumer (two full scans at 100 TB). d rows: cheap to pin.
-    bins = materialize(
-        counts.groupBy("cnt").agg(F.count(F.lit(1)).alias("n_words")),
-        None,
-        "vocab_bins",
-    )
+    bins = materialize(counts.groupBy("cnt").agg(F.count(F.lit(1)).alias("n_words")))
     # Full-stream total from the bin table (d rows, not |vocab|): the
     # denominator ignores min_count by design.
     totals = F.broadcast(
@@ -1087,9 +1081,7 @@ def bpe_merge_candidates(df: DataFrame, k: int = 20) -> DataFrame:
 SURPRISAL_SCALE = 100  # centinats: the quantization grid of the contract
 
 
-def unigram_surprisal_scores(
-    df: DataFrame, persist_dir: str | None = None
-) -> DataFrame:
+def unigram_surprisal_scores(df: DataFrame) -> DataFrame:
     """CCNet-style perplexity-proxy quality scores: per-document MEAN
     TOKEN SURPRISAL under the corpus's own add-one-smoothed unigram
     model — the dictionary-sized stand-in for CCNet's KenLM perplexity
@@ -1111,9 +1103,8 @@ def unigram_surprisal_scores(
     stream); exchanges are the (doc_id, word) tf aggregate, the word
     regroup, and the final per-doc integer sum. The tf table feeds
     BOTH the vocabulary derivation and the scoring join, so it is
-    materialized once (operators/materialize.py — localCheckpoint by
-    default, ``persist_dir=`` for the durable parquet path); without
-    it Catalyst re-tokenizes the corpus per consumer.
+    materialized once (operators/materialize.py); without it Catalyst
+    re-tokenizes the corpus per consumer.
     """
     from mapreduce_rs_spark.operators.materialize import materialize
 
@@ -1121,8 +1112,6 @@ def unigram_surprisal_scores(
         explode_tokens(df, "text", "doc_id")
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf")),
-        persist_dir,
-        "unigram_tf",
     )
     vocab = tf.groupBy("word").agg(F.sum("tf").cast("long").alias("cnt"))
     totals = vocab.agg(
@@ -1156,9 +1145,7 @@ def unigram_surprisal_scores(
     )
 
 
-def bigram_surprisal_scores(
-    df: DataFrame, persist_dir: str | None = None
-) -> DataFrame:
+def bigram_surprisal_scores(df: DataFrame) -> DataFrame:
     """Interpolated BIGRAM perplexity-proxy quality scores — the
     next-order member of the unigram_surprisal_scores family: per
     document, the mean surprisal of each adjacent token pair under a
@@ -1202,16 +1189,12 @@ def bigram_surprisal_scores(
         df.select("doc_id", F.explode(token_ngrams("text", 2)).alias("pair"))
         .groupBy("doc_id", "pair")
         .agg(F.count(F.lit(1)).alias("tf")),
-        persist_dir,
-        "bigram_pair_tf",
     )
     bi = pair_tf.groupBy("pair").agg(F.sum("tf").cast("long").alias("c_pair"))
     uni = materialize(
         explode_tokens(df)
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("c_w")),
-        persist_dir,
-        "bigram_uni",
     )
     totals = uni.agg(
         F.sum("c_w").cast("long").alias("total"),
@@ -1339,9 +1322,7 @@ def pii_scrub_stats(df: DataFrame) -> DataFrame:
 DSIR_BUCKETS = 512
 
 
-def dsir_importance_weights(
-    df: DataFrame, target_lang: str = "en", persist_dir: str | None = None
-) -> DataFrame:
+def dsir_importance_weights(df: DataFrame, target_lang: str = "en") -> DataFrame:
     """DSIR-style importance weights: score every document by how much
     more likely its hashed n-gram bag is under the TARGET distribution
     (here: the ``target_lang`` slice, standing in for "wiki-quality"
@@ -1404,8 +1385,6 @@ def dsir_importance_weights(
         .withColumn("bucket", h32("gram") % DSIR_BUCKETS)
         .groupBy("doc_id", "is_target", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt")),
-        persist_dir,
-        "dsir_tf",
     )
     buckets = tf.groupBy("bucket").agg(
         F.sum("cnt").cast("long").alias("cnt_raw"),
@@ -1418,7 +1397,7 @@ def dsir_importance_weights(
     # corpus-sized tf checkpoint is aggregated TWICE (r07 scan audit:
     # tf read 3x; with it, exactly the designed 2x — model fit +
     # scoring join). 512 rows, so the checkpoint itself is free.
-    buckets = materialize(buckets, persist_dir, "dsir_buckets")
+    buckets = materialize(buckets)
     totals = buckets.agg(
         F.sum("cnt_raw").cast("long").alias("total_raw"),
         F.sum("cnt_t").cast("long").alias("total_t"),
@@ -1477,8 +1456,8 @@ def bpe_train_merges(df: DataFrame, n_merges: int = 6) -> DataFrame:
 
     Scale shape (the pagerank discipline for iterative algorithms):
     the corpus-scale stage is the ONE word-count aggregate; every round
-    after runs on the VOCABULARY (dictionary-sized), localCheckpointed
-    per round so lineage stays flat, and the only driver transfer is
+    after runs on the VOCABULARY (dictionary-sized), materialized per
+    round so lineage stays flat, and the only driver transfer is
     the 1-row argmax per round (bounded like the kmeans fit collect).
     The oracle unrolls the same rounds as chained CTEs (the pagerank
     precedent) — both engines pick identical argmaxes because counts
@@ -1564,6 +1543,8 @@ def _bpe_fit(
     sequential trainer is the ``batch_k=1`` special case; tests compare
     the two for byte-identical merge tables. Driver transfer per round
     is batch_k rows (the kmeans-fit collect discipline)."""
+    from mapreduce_rs_spark.operators.materialize import materialize
+
     merges: list[tuple[int, str, int]] = []
     rounds = 0
     while len(merges) < n_merges:
@@ -1618,7 +1599,7 @@ def _bpe_fit(
         merges.extend(
             (r0 + i + 1, p, c) for i, (p, c) in enumerate(accepted)
         )
-        vocab = vocab.withColumn("s", s_col).localCheckpoint(eager=True)
+        vocab = materialize(vocab.withColumn("s", s_col))
     if stats is not None:
         stats["rounds"] = rounds  # pair-count jobs run (<< merges when batching)
     return vocab, merges

@@ -43,6 +43,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
+from mapreduce_rs_spark.operators.materialize import materialize
 from mapreduce_rs_spark.operators.relational import money, stable_sum
 from pyspark.sql.types import (
     ArrayType,
@@ -288,7 +289,7 @@ def run_foreach_batch_upsert(
         except Exception:  # first batch: target doesn't exist yet
             merged = incoming
         # Materialize before overwriting the directory we just read.
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(target_dir)
+        materialize(merged).write.mode("overwrite").parquet(target_dir)
 
     stream = _file_stream(spark, EVENT_SCHEMA, input_dir)
     _drain(
@@ -582,7 +583,7 @@ def run_streaming_neardup_ingest(
 
     def admit(batch_df, epoch_id: int) -> None:
         sess = batch_df.sparkSession
-        batch = batch_df.select("doc_id", "lang", "text").localCheckpoint(eager=True)
+        batch = materialize(batch_df.select("doc_id", "lang", "text"))
         batch_ids = batch.select("doc_id")
         try:
             store_fps = sess.read.parquet(fps_dir)
@@ -617,7 +618,7 @@ def run_streaming_neardup_ingest(
         # and the store write below reuses the same checkpointed rows
         # (recomputing signatures for the admitted subset would run the
         # shingle->md5 pipeline a second time per micro-batch)
-        batch_bands = _banded(minhash_signatures(batch)).localCheckpoint(eager=True)
+        batch_bands = materialize(_banded(minhash_signatures(batch)))
         flagged = admit_batch(
             batch, corpus_fps, corpus_bands, batch_bands=batch_bands
         )
@@ -627,9 +628,7 @@ def run_streaming_neardup_ingest(
             & ~F.col("near_corpus")
             & ~F.col("near_batch")
         ).select("doc_id")
-        admitted = batch.join(admitted_ids, "doc_id", "left_semi").localCheckpoint(
-            eager=True
-        )
+        admitted = materialize(batch.join(admitted_ids, "doc_id", "left_semi"))
         # append admitted docs + their admission artifacts; replays
         # append duplicate doc_id rows, which every reader (including
         # the left_anti above) treats as one key — idempotent by key
@@ -762,14 +761,16 @@ def build_graph_store(spark: SparkSession, corpus: DataFrame, store_dir: str) ->
     base = ensure_parallelism(corpus, "vec_id").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embd")
     )
-    v = base.select(
-        "vec_id",
-        "embd",
-        _l2_raw(F.col("embd")).alias("c_norm"),
-        _bucket_expr("embd", planes).alias("bucket"),
-    ).localCheckpoint(eager=True)
+    v = materialize(
+        base.select(
+            "vec_id",
+            "embd",
+            _l2_raw(F.col("embd")).alias("c_norm"),
+            _bucket_expr("embd", planes).alias("bucket"),
+        )
+    )
     v.write.mode("overwrite").parquet(os.path.join(store_dir, "corpus"))
-    reps = _nnd_reps(v, NND_SEED_CAP).localCheckpoint(eager=True)
+    reps = materialize(_nnd_reps(v, NND_SEED_CAP))
     reps.write.mode("overwrite").parquet(os.path.join(store_dir, "reps"))
     nn_descent_knn_graph(corpus, planes=planes, corpus=v, reps=reps).select(
         F.col("vec_id").alias("gsrc"), F.col("nbr_id").alias("gdst")
@@ -787,14 +788,10 @@ def graph_ingest_update(
     same-epoch replay re-derives byte-identical edges; per-batch work
     stays O(|batch| · beam · k · hops), with no scan of the edge
     history."""
-    _write_epoch(
-        admitted_edges_from_store(batch_df, store_dir, tag="sgi"), edges_dir, epoch_id
-    )
+    _write_epoch(admitted_edges_from_store(batch_df, store_dir), edges_dir, epoch_id)
 
 
-def admitted_edges_from_store(
-    batch_df: DataFrame, store_dir: str, tag: str = "sgi"
-) -> DataFrame:
+def admitted_edges_from_store(batch_df: DataFrame, store_dir: str) -> DataFrame:
     """Beam-admit a vector batch against the PERSISTED standing
     artifacts (``build_graph_store``'s corpus/reps/edges) and return
     the found (q_id, cand, cs) edges — the store-backed admission step
@@ -812,19 +809,21 @@ def admitted_edges_from_store(
 
     sess = batch_df.sparkSession
     planes = hyperplanes()
-    nq = batch_df.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").cast("array<double>").alias("q_embd"),
-    ).select(
-        "q_id",
-        "q_embd",
-        _l2_raw(F.col("q_embd")).alias("q_norm"),
-        _bucket_expr("q_embd", planes).alias("q_bucket"),
-    ).localCheckpoint(eager=True)
+    nq = materialize(
+        batch_df.select(
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").cast("array<double>").alias("q_embd"),
+        ).select(
+            "q_id",
+            "q_embd",
+            _l2_raw(F.col("q_embd")).alias("q_norm"),
+            _bucket_expr("q_embd", planes).alias("q_bucket"),
+        )
+    )
     v = sess.read.parquet(os.path.join(store_dir, "corpus"))
     reps = sess.read.parquet(os.path.join(store_dir, "reps"))
     ge = sess.read.parquet(os.path.join(store_dir, "edges"))
-    return graph_admit_batch(nq, v, reps, ge, tag=tag, planes=planes)
+    return graph_admit_batch(nq, v, reps, ge, planes=planes)
 
 
 def read_admitted_edges(spark: SparkSession, edges_dir: str) -> DataFrame:
@@ -896,7 +895,7 @@ def build_decon_store(spark: SparkSession, corpus: DataFrame, store_dir: str) ->
     )
 
     planes = hyperplanes()
-    v = _nnd_corpus(corpus, planes, None)
+    v = _nnd_corpus(corpus, planes)
     (
         v.where(F.col("vec_id") % 10 >= 8)
         .select(
@@ -1077,7 +1076,7 @@ def build_semdedup_store(
         _with_nrm2,
     )
 
-    q, cent, planes = _sdk_fit(corpus, tag="sds")
+    q, cent, planes = _sdk_fit(corpus)
     cent.select("cid", "cq").write.mode("overwrite").parquet(
         os.path.join(store_dir, "centroids")
     )
@@ -1124,10 +1123,8 @@ def semdedup_admit_batch(batch_df: DataFrame, store_dir: str) -> DataFrame:
     standing = sess.read.parquet(os.path.join(store_dir, "standing"))
     k = ivf_k_for(standing.count())
     planes = hyperplanes(sdk_planes_for(k))
-    q = _sdk_quantize(batch_df, planes, None, "sds_batch")
-    assigned = _with_nrm2(_sdk_blocked_assign(q, cent, planes)).localCheckpoint(
-        eager=True
-    )
+    q = _sdk_quantize(batch_df, planes)
+    assigned = materialize(_with_nrm2(_sdk_blocked_assign(q, cent, planes)))
     return _sdk_admit(assigned, standing)
 
 
@@ -1228,7 +1225,7 @@ def build_refit_store(
 
     rounds = KMEANS_DIST_ROUNDS if rounds is None else rounds
     init = init or kmeans_init_q()
-    _q, cent = _kmeans_rounds(corpus, rounds, init, None)
+    _q, cent = _kmeans_rounds(corpus, rounds, init)
     cent.select("cid", "cq").write.mode("overwrite").parquet(
         os.path.join(store_dir, "centroids")
     )

@@ -182,12 +182,10 @@ def test_emb_query_matches_oracle_on_random_vectors(spark, random_emb_dir, name)
 # ---------------------------------------------------------------------------
 
 
-@pytest.fixture(scope="module")
-def zero_norm_dir(tmp_path_factory):
+def _zero_norm_catalog(d, labels: np.ndarray) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    d = tmp_path_factory.mktemp("zero_norm_catalog")
     src = os.path.abspath("/root/testdata/sf0.001")
     for t in (
         "region nation customer supplier part orders lineitem events documents"
@@ -202,11 +200,27 @@ def zero_norm_dir(tmp_path_factory):
         {
             "vec_id": pa.array(np.arange(1, 41, dtype=np.int64), pa.int64()),
             "embedding": pa.array([v.tolist() for v in vecs], pa.list_(pa.float32())),
-            "label": pa.array(np.zeros(40, dtype=np.int32), pa.int32()),
+            "label": pa.array(labels, pa.int32()),
         }
     )
     pq.write_table(table, d / "embeddings.parquet")
     return str(d)
+
+
+@pytest.fixture(scope="module")
+def zero_norm_dir(tmp_path_factory):
+    return _zero_norm_catalog(
+        tmp_path_factory.mktemp("zero_norm_catalog"), np.zeros(40, dtype=np.int32)
+    )
+
+
+@pytest.fixture(scope="module")
+def zero_label_dir(tmp_path_factory):
+    """The zero-norm corpus with its two zero vectors (ids 6, 7) alone
+    in label 1: a label whose centroid sum is the zero vector."""
+    labels = np.zeros(40, dtype=np.int32)
+    labels[[5, 6]] = 1
+    return _zero_norm_catalog(tmp_path_factory.mktemp("zero_label_catalog"), labels)
 
 
 @pytest.mark.parametrize(
@@ -254,3 +268,16 @@ def test_zero_norm_corpus_matches_oracle(spark, zero_norm_dir, name):
     spdf = queries()[name](spark, zero_norm_dir).toPandas()
     oracle_pdf = run_oracle(QUERIES[name].oracle, zero_norm_dir)
     assert_frames_match(spdf, oracle_pdf, f"{name}[zero-norm]")
+
+
+def test_zero_norm_label_drift_matches_oracle(spark, zero_label_dir):
+    """label_centroid_drift over a label made only of zero vectors: its
+    cosine to the global centroid is 0/0, which must be NULL on both
+    engines (DuckDB's division returns NULL) rather than an ANSI
+    divide-by-zero error; the other label's row is unaffected."""
+    name = "label_centroid_drift"
+    spdf = queries()[name](spark, zero_label_dir).toPandas()
+    oracle_pdf = run_oracle(QUERIES[name].oracle, zero_label_dir)
+    assert_frames_match(spdf, oracle_pdf, f"{name}[zero-label]")
+    zero = spdf[spdf["label"] == 1].iloc[0]
+    assert zero["n_vecs"] == 2 and pd.isna(zero["cos_to_global"])

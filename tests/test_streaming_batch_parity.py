@@ -21,6 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_rs_spark.operators.relational import money, stable_sum
+from mapreduce_rs_spark.operators.similarity import _ingest_report
 from mapreduce_rs_spark.sources.catalog import load_table
 from mapreduce_rs_spark.streaming.pipeline import (
     EVENT_SCHEMA,
@@ -975,22 +976,7 @@ def test_streaming_semdedup_ingest_matches_oneshot_gate(spark, sf_dir, tmp_path)
     # the one-shot gate over the whole ingest split, rolled to the same
     # audit shape the report emits
     oneshot = semdedup_admit_batch(ingest, store)
-    batch_audit = (
-        oneshot.groupBy(F.col("cid").cast("int").alias("centroid_id"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_ingested"),
-            F.sum("is_dropped").cast("long").alias("n_dropped"),
-        )
-        .select(
-            "centroid_id",
-            "n_ingested",
-            "n_dropped",
-            (F.col("n_ingested") - F.col("n_dropped")).alias("n_admitted"),
-            F.try_divide(
-                F.col("n_dropped").cast("double"), F.col("n_ingested")
-            ).alias("drop_ratio"),
-        )
-    )
+    batch_audit = _ingest_report(oneshot)
     # the gate must be non-vacuous on the shipped corpus: some vectors
     # dropped, some admitted
     tot = oneshot.agg(
@@ -1023,27 +1009,6 @@ def test_streaming_semdedup_ingest_matches_oneshot_gate(spark, sf_dir, tmp_path)
     semdedup_ingest_update(spark.read.parquet(*epoch0_files), store, state, 99)
     assert frame_hash(streaming_semdedup_ingest_report(spark, state)) == frame_hash(
         batch_audit
-    )
-
-
-def _audit_rollup(decisions):
-    """Roll (vec_id, cid, is_dropped) decisions to the per-cluster
-    ingest-audit shape the semdedup reports emit."""
-    return (
-        decisions.groupBy(F.col("cid").cast("int").alias("centroid_id"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_ingested"),
-            F.sum("is_dropped").cast("long").alias("n_dropped"),
-        )
-        .select(
-            "centroid_id",
-            "n_ingested",
-            "n_dropped",
-            (F.col("n_ingested") - F.col("n_dropped")).alias("n_admitted"),
-            F.try_divide(
-                F.col("n_dropped").cast("double"), F.col("n_ingested")
-            ).alias("drop_ratio"),
-        )
     )
 
 
@@ -1113,7 +1078,7 @@ def test_semdedup_admit_batch_degenerate_corpus_matches_oneshot(spark, tmp_path)
     assert 0 < tot["d"] < tot["n"], f"vacuous gate: {tot}"
 
     audit = semdedup_ingest_audit(emb)
-    assert frame_hash(_audit_rollup(decisions)) == frame_hash(audit)
+    assert frame_hash(_ingest_report(decisions)) == frame_hash(audit)
 
 
 def test_ingest_updates_dedup_vec_id_delivered_twice_in_one_epoch(
@@ -1151,7 +1116,7 @@ def test_ingest_updates_dedup_vec_id_delivered_twice_in_one_epoch(
         ingest.withColumn("src_file", F.lit("f2"))
     )
     semdedup_ingest_update(dup_batch, sd_store, sd_state, 0)
-    oneshot = _audit_rollup(semdedup_admit_batch(ingest, sd_store))
+    oneshot = _ingest_report(semdedup_admit_batch(ingest, sd_store))
     got = streaming_semdedup_ingest_report(spark, sd_state)
     assert frame_hash(got) == frame_hash(oneshot)
 

@@ -75,7 +75,7 @@ def main() -> None:
             batch = load_table(sp, sfd, "embeddings").where(
                 F.col("vec_id") % 10 >= 8
             ).select("vec_id", "embedding")
-            return admitted_edges_from_store(batch, store_dir, tag="plan_admit")
+            return admitted_edges_from_store(batch, store_dir)
 
         def _semdedup_admit_member(sp, sfd):
             batch = load_table(sp, sfd, "embeddings").where(

@@ -65,9 +65,7 @@ def main() -> None:
                 batch = load_table(sp, sfd, "embeddings").where(
                     F.col("vec_id") % 10 >= 8
                 ).select("vec_id", "embedding")
-                return admitted_edges_from_store(
-                    batch, store_dir, tag="mb_admit"
-                )
+                return admitted_edges_from_store(batch, store_dir)
 
             EXTRA["knn_graph_admit_store"] = _admit_store_member
         if "semdedup_admit_store" in names:

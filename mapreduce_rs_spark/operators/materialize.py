@@ -25,9 +25,10 @@ def materialize(df: DataFrame) -> DataFrame:
       single-session benches; blocks are unreplicated, so not
       executor-loss-safe.
     * A checkpoint directory is set: write parquet to a fresh
-      ``<checkpoint dir>/<uuid4 hex>`` and re-read it — the cluster
-      path: on a shared filesystem the intermediate survives executor
-      loss (SCALE.md round 5 measured its cost at +23% / +32%).
+      ``<checkpoint dir>/<uuid4 hex>`` and re-read it with the written
+      schema (no inference job) — the cluster path: on a shared
+      filesystem the intermediate survives executor loss (SCALE.md
+      round 5 measured its cost at +23% / +32%).
 
     Both paths cut lineage; results are byte-identical either way
     (tests/test_materialize.py proves it per operator).
@@ -37,4 +38,4 @@ def materialize(df: DataFrame) -> DataFrame:
         return df.localCheckpoint()
     path = os.path.join(root, uuid.uuid4().hex)
     df.write.parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)

@@ -54,6 +54,42 @@ EMBED_DIM = 64
 _DBL = "array<double>"
 
 
+def _embd() -> F.Column:
+    """The embedding column as double: the engine's one read of
+    ``embedding`` for arithmetic."""
+    return F.col("embedding").cast(_DBL)
+
+
+def _vectors(df: DataFrame, *keep: str, name: str = "embd") -> DataFrame:
+    """(vec_id, *keep, <name>): the corpus with the double embedding
+    cast once per row, single-split scans spread first (per-row vector
+    work is CPU-bound; a no-op on multi-split inputs)."""
+    return ensure_parallelism(df, "vec_id").select("vec_id", *keep, _embd().alias(name))
+
+
+def _lsh_rows(frame: DataFrame, planes: list[list[float]]) -> DataFrame:
+    """(vec_id, embd, c_norm, bucket): a (vec_id, embd) frame with its
+    norm and hyperplane-LSH bucket, each computed once per row."""
+    return frame.select(
+        "vec_id",
+        "embd",
+        _l2_raw(F.col("embd")).alias("c_norm"),
+        _bucket_expr("embd", planes).alias("bucket"),
+    )
+
+
+def _as_queries(rows: DataFrame, *extra: F.Column) -> DataFrame:
+    """``_lsh_rows`` output renamed to the query side (q_id, q_embd,
+    q_norm, q_bucket, *extra) that ``_beam_frontier`` reads."""
+    return rows.select(
+        F.col("vec_id").alias("q_id"),
+        F.col("embd").alias("q_embd"),
+        F.col("c_norm").alias("q_norm"),
+        F.col("bucket").alias("q_bucket"),
+        *extra,
+    )
+
+
 def _vec_sql(v: list[float]) -> str:
     """Literal double array as a SQL fragment. The 'D' suffix forces
     DOUBLE literals — bare SQL decimals parse as DECIMAL(p,s) and would
@@ -187,11 +223,7 @@ def knn_bruteforce(
     under the TakeOrdered — nn_descent_recall's scan-audit lesson);
     default keeps the self-contained KMV sample."""
     queries = _enrich_queries(queries if queries is not None else _query_set(df))
-    # Per-row cosine work is CPU-bound; spread single-split scans
-    # (no-op on real multi-split inputs).
-    corpus = ensure_parallelism(df, "vec_id").select(
-        "vec_id", F.col("embedding").cast(_DBL).alias("embd")
-    ).withColumn("c_norm", _l2_raw(F.col("embd")))
+    corpus = _vectors(df).withColumn("c_norm", _l2_raw(F.col("embd")))
     scored = (
         corpus
         .join(F.broadcast(queries), F.col("q_id") != F.col("vec_id"))
@@ -223,7 +255,7 @@ def lsh_buckets(df: DataFrame, planes: list[list[float]] | None = None) -> DataF
     ANN join would see."""
     planes = planes or hyperplanes()
     return (
-        df.select(F.col("embedding").cast(_DBL).alias("embd"))
+        df.select(_embd().alias("embd"))
         .select(_bucket_expr("embd", planes).alias("bucket"))
         .groupBy("bucket")
         .agg(F.count("*").alias("n_vectors"))
@@ -235,15 +267,11 @@ def knn_lsh(df: DataFrame, k: int = 10, planes: list[list[float]] | None = None)
     (equi-join on bucket id), exact cosine re-rank within the bucket.
     Identical algorithm in the oracle → identical (approximate) answer."""
     planes = planes or hyperplanes()
-    bucketed = (
-        ensure_parallelism(df, "vec_id")
-        .select("vec_id", F.col("embedding").cast(_DBL).alias("embd"))
-        .select(
-            "vec_id",
-            "embd",
-            _bucket_expr("embd", planes).alias("bucket"),
-            _l2_raw(F.col("embd")).alias("c_norm"),
-        )
+    bucketed = _vectors(df).select(
+        "vec_id",
+        "embd",
+        _bucket_expr("embd", planes).alias("bucket"),
+        _l2_raw(F.col("embd")).alias("c_norm"),
     )
     # The KMV query sample carries only (q_id, q_emb); its bucket and
     # norm are recomputed with the identical expressions on the cap-row
@@ -306,6 +334,23 @@ def _init_centroids(n: int = N_CENTROIDS, dim: int = EMBED_DIM) -> list[list[flo
 KMEANS_SAMPLE_CAP = 100_000  # hard bound on rows collected to the driver
 
 
+def _fit_sample(df: DataFrame, cap: int) -> np.ndarray:
+    """The driver-side fit sample shared by ``kmeans_fit``, ``pq_fit``
+    and ``pca_fit``: the ``cap`` embeddings with the smallest
+    ``h32(vec_id)`` (KMV), as an (n, dim) double matrix."""
+    sample = (
+        df.select("vec_id", "embedding")
+        .withColumn("h", h32(F.col("vec_id").cast("string")))
+        .orderBy("h", "vec_id")
+        .limit(cap)
+        .select("embedding")
+        .collect()
+    )
+    if len(sample) > cap:  # TakeOrdered guarantees this; keep it loud
+        raise AssertionError(f"sample exceeded cap: {len(sample)} > {cap}")
+    return np.array([row.embedding for row in sample], dtype=np.float64)
+
+
 def kmeans_fit(
     df: DataFrame,
     k: int | None = None,
@@ -348,24 +393,14 @@ def kmeans_fit(
     """
     if k is None:
         k = ivf_k_for(df.count())
-    sample = (
-        df.select("vec_id", "embedding")
-        .withColumn("h", h32(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(sample_cap)
-        .select("embedding")
-        .collect()
-    )
-    if len(sample) > sample_cap:  # TakeOrdered guarantees this; keep it loud
-        raise AssertionError(f"sample exceeded cap: {len(sample)} > {sample_cap}")
-    if len(sample) < 8 * k:
+    x = _fit_sample(df, sample_cap)
+    if len(x) < 8 * k:
         raise AssertionError(
-            f"sample of {len(sample)} too small for k={k} centroids "
+            f"sample of {len(x)} too small for k={k} centroids "
             "(need >= 8 points each) — raise sample_cap in step with k, "
             "or fit with kmeans_refit_distributed (full-corpus Lloyd "
             "rounds as Spark aggregates; no sample, no driver ceiling)"
         )
-    x = np.array([row.embedding for row in sample], dtype=np.float64)
     cents = np.array(_init_centroids(k, dim), dtype=np.float64)
     cents /= np.linalg.norm(cents, axis=1, keepdims=True)
     for _ in range(iters):
@@ -447,10 +482,7 @@ def ivf_assign(
     maintenance loop threads its provenance key here)."""
     cents = cents or centroids()
     return (
-        ensure_parallelism(df, "vec_id")
-        .select(
-            *extra, "vec_id", "embedding", F.col("embedding").cast(_DBL).alias("_embd")
-        )
+        _vectors(df, *extra, "embedding", name="_embd")
         .select(
             *extra,
             "vec_id",
@@ -498,15 +530,11 @@ def knn_ivf(df: DataFrame, k: int = 10) -> DataFrame:
 def _ivf_assigned_scored(df: DataFrame, cents: list[list[float]]) -> DataFrame:
     """Corpus side of an IVF probe: (vec_id, embd, c_norm, centroid_id)
     with the cast, norm, and assignment each computed ONCE per row."""
-    return (
-        ensure_parallelism(df, "vec_id")
-        .select("vec_id", F.col("embedding").cast(_DBL).alias("embd"))
-        .select(
-            "vec_id",
-            "embd",
-            _l2_raw(F.col("embd")).alias("c_norm"),
-            _nearest_centroid_expr("embd", cents).alias("centroid_id"),
-        )
+    return _vectors(df).select(
+        "vec_id",
+        "embd",
+        _l2_raw(F.col("embd")).alias("c_norm"),
+        _nearest_centroid_expr("embd", cents).alias("centroid_id"),
     )
 
 
@@ -593,9 +621,7 @@ def embedding_near_dup(
     # materialized row carries the pre-cast double embedding AND its
     # norm, so per-PAIR work in the self-join is one dot + one divide.
     bucketed = materialize(
-        ensure_parallelism(df, "vec_id")
-        .select("vec_id", F.col("embedding").cast(_DBL).alias("embd"))
-        .select(
+        _vectors(df).select(
             "vec_id",
             "embd",
             _bucket_expr("embd", planes).alias("bucket"),
@@ -829,15 +855,7 @@ def pq_fit(
     codebooks round to literals shared by the Spark plan and the DuckDB
     oracle (operators/pq_model.py)."""
     subdim = EMBED_DIM // m
-    sample = (
-        df.select("vec_id", "embedding")
-        .withColumn("h", h32(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(sample_cap)
-        .select("embedding")
-        .collect()
-    )
-    x = np.array([row.embedding for row in sample], dtype=np.float64)
+    x = _fit_sample(df, sample_cap)
     books: list[list[list[float]]] = []
     for sub in range(m):
         xs = x[:, sub * subdim : (sub + 1) * subdim]
@@ -910,8 +928,7 @@ def pq_assign(df: DataFrame) -> DataFrame:
     # slice once per row (instead of once per CODE — 16x per subspace
     # in the interpreted expression).
     return (
-        ensure_parallelism(df, "vec_id")
-        .select("vec_id", "embedding", F.col("embedding").cast(_DBL).alias("_embd"))
+        _vectors(df, "embedding", name="_embd")
         .select(
             "vec_id",
             "embedding",
@@ -977,7 +994,7 @@ def pq_reconstruction_error(df: DataFrame) -> DataFrame:
     ]
     assigned = pq_assign(df).select(
         "vec_id",
-        F.col("embedding").cast(_DBL).alias("_embd"),
+        _embd().alias("_embd"),
         *[f"code_{sub}" for sub in range(PQ_M)],
     )
 
@@ -1094,8 +1111,7 @@ def knn_ivfpq(df: DataFrame, k: int = 10) -> DataFrame:
     cents = centroids()
     books = _pq_codebooks()
     corpus = (
-        ensure_parallelism(df, "vec_id")
-        .select("vec_id", F.col("embedding").cast(_DBL).alias("_embd"))
+        _vectors(df, name="_embd")
         .select(
             "vec_id",
             _nearest_centroid_expr("_embd", cents).alias("centroid_id"),
@@ -1177,17 +1193,7 @@ def pca_fit(
     largest-magnitude coordinate is positive — power iteration's sign is
     otherwise arbitrary, and the literals must be reproducible.
     """
-    sample = (
-        df.select("vec_id", "embedding")
-        .withColumn("h", h32(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(sample_cap)
-        .select("embedding")
-        .collect()
-    )
-    if len(sample) > sample_cap:  # TakeOrdered guarantees this; keep it loud
-        raise AssertionError(f"sample exceeded cap: {len(sample)} > {sample_cap}")
-    x = np.array([row["embedding"] for row in sample], dtype=np.float64)
+    x = _fit_sample(df, sample_cap)
     mean = x.mean(axis=0)
     a = x - mean
     cov = a.T @ a
@@ -1265,8 +1271,7 @@ def knn_pca(df: DataFrame, k: int = 10) -> DataFrame:
         F.expr(_l2_sql(_pca_z_sql(_Q_EMBD_SQL))).alias("q_z_norm"),
     )
     corpus = (
-        ensure_parallelism(df, "vec_id")
-        .select("vec_id", F.col("embedding").cast(_DBL).alias("embd"))
+        _vectors(df)
         .select("vec_id", F.expr(_pca_z_sql("embd")).alias("z"))
         .withColumn("z_norm", _l2_raw(F.col("z")))
     )
@@ -1449,9 +1454,7 @@ def _qv_sql(arr: str) -> str:
 
 def _qv_frame(df: DataFrame) -> DataFrame:
     """The quantized corpus frame (vec_id, qv)."""
-    return ensure_parallelism(df, "vec_id").select(
-        "vec_id", F.expr(_qv_sql(f"CAST(embedding AS {_DBL})")).alias("qv")
-    )
+    return _vectors(df).select("vec_id", F.expr(_qv_sql("embd")).alias("qv"))
 
 
 def _qdot_sql(a: str, b: str) -> str:
@@ -1547,9 +1550,7 @@ def label_centroid_drift(df: DataFrame) -> DataFrame:
     """
     q = (
         ensure_parallelism(df, "vec_id")
-        .select(
-            "label", F.posexplode(F.col("embedding").cast(_DBL)).alias("pos", "x")
-        )
+        .select("label", F.posexplode(_embd()).alias("pos", "x"))
         .select(
             "label",
             "pos",
@@ -1649,7 +1650,7 @@ def ivf_maintenance_partials(
             *extra_keys,
             "centroid_id",
             "is_new",
-            F.posexplode(F.col("embedding").cast(_DBL)).alias("pos", "x"),
+            F.posexplode(_embd()).alias("pos", "x"),
         )
         .select(
             *extra_keys,
@@ -2559,8 +2560,7 @@ def _refit_assign(df: DataFrame, rolled: DataFrame) -> DataFrame:
     serve twin's per-batch step (streaming/pipeline.py), so the
     continuous loop's assignments can never drift from the query's."""
     return (
-        ensure_parallelism(df, "vec_id")
-        .select("vec_id", F.col("embedding").cast(_DBL).alias("embd"))
+        _vectors(df)
         .select("vec_id", "embd", _l2_raw(F.col("embd")).alias("c_norm"),
                 F.expr(_qv_sql("embd")).alias("qv"))
         .crossJoin(F.broadcast(rolled))
@@ -2583,8 +2583,8 @@ def _refit_serve_topk(
         .crossJoin(F.broadcast(rolled))
         .select(
             "q_id",
-            F.col("q_emb").cast(_DBL).alias("q_embd"),
-            F.expr(_qv_sql(f"CAST(q_emb AS {_DBL})")).alias("qv"),
+            _q_embd_expr().alias("q_embd"),
+            F.expr(_qv_sql(_Q_EMBD_SQL)).alias("qv"),
             "carr",
         )
         .select(
@@ -2647,7 +2647,7 @@ def embedding_outliers(df: DataFrame, top_k: int = OUTLIER_TOP_K) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.posexplode(F.col("embedding").cast(_DBL)).alias("pos", "x"),
+            F.posexplode(_embd()).alias("pos", "x"),
         )
         .select(
             "vec_id",
@@ -2736,16 +2736,7 @@ NND_SEED_CAP = 12  # per-bucket representatives seeding each node's list
 def _nnd_corpus(df: DataFrame, planes: list[list[float]]) -> DataFrame:
     """(vec_id, embd, c_norm, bucket), materialized: read by the seed
     join and by BOTH sides of every round's scoring join (>= 2x rule)."""
-    return materialize(
-        ensure_parallelism(df, "vec_id")
-        .select("vec_id", F.col("embedding").cast(_DBL).alias("embd"))
-        .select(
-            "vec_id",
-            "embd",
-            _l2_raw(F.col("embd")).alias("c_norm"),
-            _bucket_expr("embd", planes).alias("bucket"),
-        ),
-    )
+    return materialize(_lsh_rows(_vectors(df), planes))
 
 
 def _nnd_reps(v: DataFrame, seed_cap: int) -> DataFrame:
@@ -3037,13 +3028,7 @@ def knn_graph_search(
     # (qv AS ... FROM v). One projection + TakeOrdered, materialized
     # for the per-hop scoring broadcasts.
     qf = materialize(
-        v.select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embd").alias("q_embd"),
-            F.col("c_norm").alias("q_norm"),
-            F.col("bucket").alias("q_bucket"),
-            h32(F.col("vec_id").cast("string")).alias("qh"),
-        )
+        _as_queries(v, h32(F.col("vec_id").cast("string")).alias("qh"))
         .orderBy("qh", "q_id")
         .limit(N_QUERIES_CAP)
         .select("q_id", "q_embd", "q_norm", "q_bucket"),
@@ -3253,20 +3238,11 @@ def knn_graph_ingest(
     """
     planes = hyperplanes()
     num, den = GRAPH_REBUILD_GROWTH
-    full = ensure_parallelism(df, "vec_id").select(
-        "vec_id", F.col("embedding").cast(_DBL).alias("embd")
-    )
+    full = _vectors(df)
     old = full.where(F.col("vec_id") % 10 < 8)
     # standing corpus frame (embd + norm + bucket), shared by the build,
     # the admission scoring, and the exact-eval leg (>= 2x rule)
-    v = materialize(
-        old.select(
-            "vec_id",
-            "embd",
-            _l2_raw(F.col("embd")).alias("c_norm"),
-            _bucket_expr("embd", planes).alias("bucket"),
-        ),
-    )
+    v = materialize(_lsh_rows(old, planes))
     reps = materialize(_nnd_reps(v, seed_cap))
     g = nn_descent_knn_graph(
         old, k=k, rounds=rounds, seed_cap=seed_cap, planes=planes, corpus=v, reps=reps
@@ -3279,14 +3255,9 @@ def knn_graph_ingest(
     )
     # new batch, enriched once (norm + bucket + micro-batch id)
     nq = materialize(
-        full.where(F.col("vec_id") % 10 >= 8).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embd").alias("q_embd"),
-            _l2_raw(F.col("embd")).alias("q_norm"),
-            _bucket_expr("embd", planes).alias("q_bucket"),
-            F.expr(f"CAST((vec_id div 10) % {n_batches} AS INT)").alias(
-                "batch_id"
-            ),
+        _as_queries(
+            _lsh_rows(full.where(F.col("vec_id") % 10 >= 8), planes),
+            F.expr(f"CAST((vec_id div 10) % {n_batches} AS INT)").alias("batch_id"),
         ),
     )
     cv = v.select(

@@ -65,6 +65,10 @@ TOKENS_SQL = (
     f"'{SPLIT_SQL}'), t -> t <> '')"
 )
 
+# The embedding as a double list — the oracle's one read of the column
+# for arithmetic (twin of similarity._embd).
+_EMB_SQL = "CAST(embedding AS DOUBLE[])"
+
 # The flagship word-count SQL — one definition for the four registry
 # entries that are oracled against it (declarative, salted, RDD, UDF).
 WORDCOUNT_SQL = f"""
@@ -763,7 +767,7 @@ def _ivf_assigned_cte() -> str:
     )
     return f"""
         WITH v AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
+            SELECT vec_id, {_EMB_SQL} AS emb FROM embeddings
         ), cscores AS (
             {score_rows}
         ), assigned AS (
@@ -791,7 +795,7 @@ def _gi_sql(
     Every knob f-string-derived from the similarity.py constants."""
     chain, last = _nnd_ctes(corpus_where=" WHERE vec_id % 10 < 8")
     num, den = similarity.GRAPH_REBUILD_GROWTH
-    emb = "CAST(embedding AS DOUBLE[])"
+    emb = _EMB_SQL
     hop_parts = _beam_hop_parts("nq", beam, hops)
     parts = [
         f"""{chain}, nq AS MATERIALIZED (
@@ -881,7 +885,7 @@ def _q_sql(x: str) -> str:
     return f"CAST(round({x} * {float(similarity.DRIFT_SCALE)!r}, 0) AS BIGINT)"
 
 
-def _qv_sql(arr: str = "CAST(embedding AS DOUBLE[])") -> str:
+def _qv_sql(arr: str = _EMB_SQL) -> str:
     """The double list ``arr`` quantized element-wise."""
     return f"list_transform({arr}, x -> {_q_sql('x')})"
 
@@ -1069,7 +1073,7 @@ def _ivf_refit_sql(rounds: int = similarity.KMEANS_DIST_ROUNDS) -> str:
     return (
         chain
         + f""", ve AS MATERIALIZED (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
+            SELECT vec_id, {_EMB_SQL} AS emb FROM embeddings
         ), at AS MATERIALIZED (
             SELECT r.vec_id, r.cid, ve.emb FROM (
                 {_argmax_sql("v", f"CROSS JOIN {last} c", "vec_id, cid")}
@@ -1410,7 +1414,7 @@ def _nnd_ctes(
     ``corpus_where`` filters the corpus CTE (the graph-ingest oracle
     builds the STANDING graph over vec_id % 10 < 8); the default empty
     filter keeps the three r08 graph-tier oracle strings byte-stable."""
-    emb = "CAST(embedding AS DOUBLE[])"
+    emb = _EMB_SQL
     probe_list = ", ".join(
         ["bucket"] + [f"xor(bucket, {1 << p})" for p in range(len(_PLANES))]
     )
@@ -1568,8 +1572,8 @@ def _pq_codes_ctes(with_v: bool = True) -> str:
 
     parts = (
         [
-            """v AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
+            f"""v AS (
+            SELECT vec_id, {_EMB_SQL} AS emb FROM embeddings
         )"""
         ]
         if with_v
@@ -3258,7 +3262,7 @@ QUERIES: dict[str, QuerySpec] = {
     "lsh_buckets": QuerySpec(
         _emb(similarity.lsh_buckets),
         f"""
-        SELECT {_bucket_sql('CAST(embedding AS DOUBLE[])', _PLANES)} AS bucket,
+        SELECT {_bucket_sql(_EMB_SQL, _PLANES)} AS bucket,
                count(*) AS n_vectors
         FROM embeddings GROUP BY 1 ORDER BY bucket
         """,
@@ -3469,8 +3473,8 @@ QUERIES: dict[str, QuerySpec] = {
         _emb(similarity.semantic_decontaminate),
         (lambda tau, probes: f"""
         WITH v AS MATERIALIZED (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-                   {_bucket_sql('CAST(embedding AS DOUBLE[])', _PLANES)} AS bucket
+            SELECT vec_id, {_EMB_SQL} AS emb,
+                   {_bucket_sql(_EMB_SQL, _PLANES)} AS bucket
             FROM embeddings
         ), ep AS (
             SELECT vec_id AS e_id, emb AS e_emb,
@@ -3504,8 +3508,8 @@ QUERIES: dict[str, QuerySpec] = {
         _emb(similarity.semantic_decontaminate_fixed),
         (lambda tau, probes: f"""
         WITH v AS MATERIALIZED (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-                   {_bucket_sql('CAST(embedding AS DOUBLE[])', _PLANES)} AS bucket
+            SELECT vec_id, {_EMB_SQL} AS emb,
+                   {_bucket_sql(_EMB_SQL, _PLANES)} AS bucket
             FROM embeddings
         ), ec AS MATERIALIZED (
             SELECT e_id, e_emb, e_bucket FROM (
@@ -3542,13 +3546,13 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "array_functions_showcase": QuerySpec(
         _emb(similarity.array_functions_showcase),
-        """
+        f"""
         SELECT vec_id,
                CAST(len(embedding) AS INTEGER) AS dim,
                embedding[1] AS first_val,
                list_aggregate(embedding, 'min') AS min_val,
                list_aggregate(embedding, 'max') AS max_val,
-               sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS l2_norm,
+               sqrt(list_dot_product({_EMB_SQL}, {_EMB_SQL})) AS l2_norm,
                CAST(len(list_filter(embedding, x -> x > 0)) AS INTEGER) AS n_positive
         FROM embeddings
         """,
@@ -3557,8 +3561,8 @@ QUERIES: dict[str, QuerySpec] = {
         _emb(lambda df: similarity.embedding_near_dup_capped(df, 0.30)),
         f"""
         WITH v AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-                   {_bucket_sql('CAST(embedding AS DOUBLE[])', _PLANES)} AS bucket
+            SELECT vec_id, {_EMB_SQL} AS emb,
+                   {_bucket_sql(_EMB_SQL, _PLANES)} AS bucket
             FROM embeddings
         )
         SELECT vec_a, vec_b, cos_sim FROM (
@@ -6114,7 +6118,7 @@ QUERIES: dict[str, QuerySpec] = {
                        unnest(list_transform(range(1, len(e) + 1),
                               i -> struct_pack(pos := i,
                                    q := {_q_sql('e[CAST(i AS INTEGER)]')}))) AS u
-                FROM (SELECT label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
+                FROM (SELECT label, {_EMB_SQL} AS e FROM embeddings)
             )
         ), sums AS (
             SELECT label, pos, CAST(sum(q) AS BIGINT) AS s FROM q GROUP BY 1, 2
@@ -6766,7 +6770,7 @@ QUERIES["embedding_outliers"] = QuerySpec(
     WITH q AS (
         SELECT vec_id, label, CAST(i - 1 AS INTEGER) AS pos,
                {_q_sql('emb[CAST(i AS INTEGER)]')} AS qx
-        FROM (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
+        FROM (SELECT vec_id, label, {_EMB_SQL} AS emb
               FROM embeddings)
         CROSS JOIN range(1, {similarity.EMBED_DIM + 1}) t(i)
     ), sums AS (

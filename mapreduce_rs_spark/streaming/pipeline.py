@@ -747,10 +747,8 @@ def build_graph_store(spark: SparkSession, corpus: DataFrame, store_dir: str) ->
     reps, and the NN-Descent edge list. In production this runs on the
     rebuild cadence ``knn_graph_ingest``'s ledger decides; the
     streaming loop between rebuilds reads these artifacts only."""
-    from mapreduce_rs_spark.operators.partitioning import ensure_parallelism
     from mapreduce_rs_spark.operators.similarity import (
-        _bucket_expr,
-        _l2_raw,
+        _nnd_corpus,
         _nnd_reps,
         hyperplanes,
         nn_descent_knn_graph,
@@ -758,17 +756,7 @@ def build_graph_store(spark: SparkSession, corpus: DataFrame, store_dir: str) ->
     )
 
     planes = hyperplanes()
-    base = ensure_parallelism(corpus, "vec_id").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embd")
-    )
-    v = materialize(
-        base.select(
-            "vec_id",
-            "embd",
-            _l2_raw(F.col("embd")).alias("c_norm"),
-            _bucket_expr("embd", planes).alias("bucket"),
-        )
-    )
+    v = _nnd_corpus(corpus, planes)
     v.write.mode("overwrite").parquet(os.path.join(store_dir, "corpus"))
     reps = materialize(_nnd_reps(v, NND_SEED_CAP))
     reps.write.mode("overwrite").parquet(os.path.join(store_dir, "reps"))
@@ -802,6 +790,7 @@ def admitted_edges_from_store(batch_df: DataFrame, store_dir: str) -> DataFrame:
     batch-proportional, never corpus-proportional."""
     from mapreduce_rs_spark.operators.similarity import (
         _bucket_expr,
+        _embd,
         _l2_raw,
         graph_admit_batch,
         hyperplanes,
@@ -811,8 +800,7 @@ def admitted_edges_from_store(batch_df: DataFrame, store_dir: str) -> DataFrame:
     planes = hyperplanes()
     nq = materialize(
         batch_df.select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").cast("array<double>").alias("q_embd"),
+            F.col("vec_id").alias("q_id"), _embd().alias("q_embd")
         ).select(
             "q_id",
             "q_embd",
@@ -924,23 +912,18 @@ def decon_gate_batch(batch_df: DataFrame, store_dir: str) -> DataFrame:
     the eval side is eval_cap·(planes+1) rows, always broadcast."""
     from mapreduce_rs_spark.operators.similarity import (
         DECON_TAU,
-        _bucket_expr,
         _cos_pair,
-        _l2_raw,
+        _embd,
+        _lsh_rows,
         _probe_masks,
         hyperplanes,
     )
 
     sess = batch_df.sparkSession
     planes = hyperplanes()
-    train = batch_df.where(F.col("vec_id") % 10 < 8).select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("embd"),
-    ).select(
-        "vec_id",
-        "embd",
-        _l2_raw(F.col("embd")).alias("c_norm"),
-        _bucket_expr("embd", planes).alias("bucket"),
+    train = _lsh_rows(
+        batch_df.where(F.col("vec_id") % 10 < 8).select("vec_id", _embd().alias("embd")),
+        planes,
     )
     ev_capped = sess.read.parquet(os.path.join(store_dir, "eval"))
     probe_arr = F.array(
@@ -1294,7 +1277,7 @@ def streaming_refit_serve_report(
     bit-for-bit (the parity test). State grows with the corpus — it is
     the serving index itself, not per-stream bookkeeping."""
     from mapreduce_rs_spark.operators.similarity import (
-        _DBL,
+        _embd,
         _l2_raw,
         _refit_serve_topk,
     )
@@ -1302,11 +1285,7 @@ def streaming_refit_serve_report(
     merged = _latest_epoch(spark.read.parquet(state_dir)).select(
         "vec_id", "embedding", "centroid_id"
     )
-    assigned = merged.select(
-        "vec_id",
-        F.col("embedding").cast(_DBL).alias("embd"),
-        "centroid_id",
-    ).select(
+    assigned = merged.select("vec_id", _embd().alias("embd"), "centroid_id").select(
         "vec_id",
         "embd",
         _l2_raw(F.col("embd")).alias("c_norm"),

@@ -77,6 +77,22 @@ def _join_size_estimate(spark, sf):
     return join_size_estimate(load_tables(spark, sf))
 
 
+def _materialize_jobs(spark, sf):
+    """One row: how many Spark jobs a materialize(spark.range(10)) starts,
+    counted through a job group once the listener bus has drained."""
+    from mapreduce_rs_spark.operators.materialize import materialize
+
+    sc, group = spark.sparkContext, "materialize-jobs"
+    sc.setJobGroup(group, "materialize(spark.range(10))")
+    try:
+        materialize(spark.range(10))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    return spark.createDataFrame([(n,)], "n_jobs int")
+
+
 # case -> (builder, sort key, fewest materialize() calls the case makes)
 CASES = {
     "minhash_lsh_pairs": (_minhash_lsh_pairs, ("doc_a", "doc_b"), 1),
@@ -92,6 +108,7 @@ CASES = {
     "bigram_surprisal_scores": (_bigram_surprisal_scores, ("doc_id",), 2),
     # both frequency tables + both sketches
     "join_size_estimate": (_join_size_estimate, ("n_keys_a",), 4),
+    "materialize_jobs": (_materialize_jobs, ("n_jobs",), 1),
 }
 
 
@@ -215,3 +232,12 @@ def test_durable_path_byte_identical_at_sf01(spark, durable):
     executor-loss-safe intermediates.)"""
     _check(spark, durable, "minhash_lsh_pairs", SF01)
     _check(spark, durable, "dedup_components", SF01)
+
+
+def test_durable_materialize_starts_only_the_write_job(sf_dir, durable):
+    """The read-back declares the schema it just wrote, so a durable
+    materialize starts one job (the parquet write) and no footer
+    schema-inference job."""
+    rows, dirs = durable("materialize_jobs", sf_dir)
+    assert rows == [(1,)]
+    assert len(dirs) == 1, dirs

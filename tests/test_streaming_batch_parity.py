@@ -700,14 +700,8 @@ def test_streaming_graph_ingest_matches_batch_admission(spark, sf_dir, tmp_path)
     read only standing state, so batching cannot move an edge), and a
     re-drain on the same checkpoint plus a simulated half-committed
     replay must not duplicate edge rows."""
-    from mapreduce_rs_spark.operators.partitioning import ensure_parallelism
-    from mapreduce_rs_spark.operators.similarity import (
-        _bucket_expr,
-        _l2_raw,
-        graph_admit_batch,
-        hyperplanes,
-    )
     from mapreduce_rs_spark.streaming.pipeline import (
+        admitted_edges_from_store,
         build_graph_store,
         graph_ingest_update,
         run_streaming_graph_ingest,
@@ -730,28 +724,9 @@ def test_streaming_graph_ingest_matches_batch_admission(spark, sf_dir, tmp_path)
     # the reader contract: per-epoch directories merged latest-wins
     got = read_admitted_edges(spark, edges_dir)
 
-    # batch twin: the SAME admission core over the whole new split at
+    # batch twin: the SAME admission step over the whole new split at
     # once, against the same persisted artifacts
-    planes = hyperplanes()
-    nq = (
-        ensure_parallelism(new, "vec_id")
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").cast("array<double>").alias("q_embd"),
-        )
-        .select(
-            "q_id",
-            "q_embd",
-            _l2_raw(F.col("q_embd")).alias("q_norm"),
-            _bucket_expr("q_embd", planes).alias("q_bucket"),
-        )
-    )
-    batch = graph_admit_batch(
-        nq,
-        spark.read.parquet(store + "/corpus"),
-        spark.read.parquet(store + "/reps"),
-        spark.read.parquet(store + "/edges"),
-    )
+    batch = admitted_edges_from_store(new, store)
     assert got.count() == batch.count() > 0
     assert frame_hash(got) == frame_hash(batch)
 

@@ -29,6 +29,8 @@ codegen; no Python UDFs on this path.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -69,10 +71,12 @@ def clean_text(col: Column | str, *, unicode: bool = False) -> Column:
 
 
 def tokens(col: Column | str, *, unicode: bool = False) -> Column:
-    """Whitespace-split token array (may contain a leading '' if the text
-    starts with whitespace — callers filter empties after explode, the
-    analog of ``split_whitespace`` never yielding empties,
-    ``src/mr/function.rs:13``). ``unicode=True``: Unicode whitespace +
+    """Whitespace-split token array. It may contain empties (a leading
+    '' when the text starts with whitespace, or '' for a text that
+    cleans to nothing), so token arrays come from ``word_tokens`` and
+    token streams drop '' after the explode — the analog of
+    ``split_whitespace`` never yielding empties,
+    ``src/mr/function.rs:13``. ``unicode=True``: Unicode whitespace +
     word classes, the reference's actual behavior on non-ASCII input."""
     return F.split(
         clean_text(col, unicode=unicode),
@@ -80,43 +84,60 @@ def tokens(col: Column | str, *, unicode: bool = False) -> Column:
     )
 
 
-def ngrams_of(toks: Column, n: int) -> Column:
-    """Token n-gram array (space-joined) from an ALREADY-TOKENIZED array
-    column. Use this form whenever a plan needs more than one gram
-    family from the same text: interpreted higher-order functions get
-    no common-subexpression elimination, so every ``token_ngrams(text)``
-    call re-runs the regex tokenizer — hoist the token array into one
-    projection and slide over it (measured 2-3x on multi-family plans:
-    dsir_importance_weights, skipgram_pmi).
+def word_tokens(col: Column | str) -> Column:
+    """The non-empty tokens of a document, in order — the reference's
+    ``wc::map`` token list (``src/mr/function.rs:9-16``) and the twin of
+    ``plans/registry.py`` ``TOKENS_SQL``. A NULL text gives a NULL
+    array, which every consumer reads as a document with no tokens."""
+    return F.filter(tokens(col), lambda t: t != "")
 
-    Construction is a zip_with fold over the n SHIFTED SLICES of the
-    token array — per ELEMENT the work is one string concat. The
-    round-4 rewrite: the previous sequence→slice(i,n)→array_join slide
-    allocated a sub-array + joined it per POSITION inside an
-    interpreted (non-codegen, no-CSE) lambda, which made n-gram
-    construction ~9x the cost of tokenization itself (measured at
-    sf0.1: explode(bigrams) 5.9 s vs 0.63 s for this form — identical
-    output strings, so every oracle is unaffected)."""
-    n_grams = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    acc = F.slice(toks, 1, n_grams)
-    for i in range(2, n + 1):
+
+def slide(toks: Column, offsets: Sequence[int]) -> Column:
+    """Space-joined token tuples at the given ``offsets`` from every
+    position of an ALREADY-TOKENIZED array column: ``range(n)`` gives
+    the n-grams, ``(0, d)`` the ordered pairs ``d`` apart. The one
+    slide kernel of the engine (oracle twin: ``registry._slide_sql``).
+
+    Construction is a zip_with fold over the SHIFTED SLICES of the token
+    array, each ``m = size - max(offsets)`` long — per ELEMENT the work
+    is one string concat. The round-4 rewrite: the previous
+    sequence→slice(i,n)→array_join slide allocated a sub-array + joined
+    it per POSITION inside an interpreted (non-codegen, no-CSE) lambda,
+    which made n-gram construction ~9x the cost of tokenization itself
+    (measured at sf0.1: explode(bigrams) 5.9 s vs 0.63 s for this form —
+    identical output strings, so every oracle is unaffected)."""
+    first, *rest = offsets
+    m = F.greatest(F.size(toks) - max(offsets), F.lit(0))
+    acc = F.slice(toks, 1 + first, m)
+    for o in rest:
         acc = F.zip_with(
             acc,
-            F.slice(toks, i, n_grams),
+            F.slice(toks, 1 + o, m),
             lambda a, b: F.concat(a, F.lit(" "), b),
         )
     return acc
 
 
+def ngrams_of(toks: Column, n: int) -> Column:
+    """Token n-gram array (space-joined) from an ALREADY-TOKENIZED array
+    column: ``slide`` over offsets ``0..n-1``. Use this form whenever a
+    plan needs more than one gram family from the same text:
+    interpreted higher-order functions get no common-subexpression
+    elimination, so every ``token_ngrams(text)`` call re-runs the regex
+    tokenizer — hoist the token array into one projection and slide
+    over it (measured 2-3x on multi-family plans:
+    dsir_importance_weights, skipgram_pmi)."""
+    return slide(toks, range(n))
+
+
 def token_ngrams(col: Column | str, n: int) -> Column:
-    """Token n-gram array (space-joined) via sequence+slice over the
-    token array — a narrow per-row expression: NO shuffle, NO self-join.
-    This is the scale-correct n-gram shape; a positional self-join over
-    the exploded token stream would shuffle the whole corpus once per
-    extra gram. Empty tokens are filtered before sliding so n-grams
-    never contain the '' artifact of a leading-whitespace split.
-    Single-family plans only — see ngrams_of for the hoisted form."""
-    return ngrams_of(F.filter(tokens(col), lambda t: t != ""), n)
+    """Token n-gram array (space-joined) of ``word_tokens(col)`` — a
+    narrow per-row expression: NO shuffle, NO self-join. This is the
+    scale-correct n-gram shape; a positional self-join over the
+    exploded token stream would shuffle the whole corpus once per extra
+    gram. Single-family plans only — see ngrams_of for the hoisted
+    form."""
+    return ngrams_of(word_tokens(col), n)
 
 
 def bpe_ish_tokens(col: Column | str) -> Column:
@@ -126,28 +147,3 @@ def bpe_ish_tokens(col: Column | str) -> Column:
     return F.regexp_extract_all(
         col if isinstance(col, Column) else F.col(col), F.lit(BPE_ISH_PATTERN), 0
     )
-
-
-def pairs_at_distance_of(toks: Column, d: int) -> Column:
-    """Ordered token pairs exactly ``d`` apart from an ALREADY-TOKENIZED
-    array column (the hoisted form — see ngrams_of rationale)."""
-    n_pairs = F.greatest(F.size(toks) - d, F.lit(0))
-    return F.when(
-        n_pairs > 0,
-        F.transform(
-            F.sequence(F.lit(1), n_pairs),
-            lambda i: F.concat(
-                F.element_at(toks, i), F.lit(" "), F.element_at(toks, i + d)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def token_pairs_at_distance(col: Column | str, d: int) -> Column:
-    """Ordered token pairs exactly ``d`` positions apart, space-joined —
-    the skip-gram generator. Same narrow sequence+element_at slide as
-    token_ngrams: each row produces its pairs without leaving the row,
-    so a window-W skip-gram corpus is W narrow expressions, never a
-    positional self-join of the exploded token stream. Single-family
-    plans only — multi-distance plans hoist via pairs_at_distance_of."""
-    return pairs_at_distance_of(F.filter(tokens(col), lambda t: t != ""), d)

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreduce_rs_spark.functions.hashing import h32, text_fingerprint
-from mapreduce_rs_spark.functions.text import tokens
+from mapreduce_rs_spark.functions.text import word_tokens
 
 MIN_TOKENS = 10
 MIN_ALPHA_RATIO = 0.5
@@ -33,7 +33,7 @@ def curated_documents(df: DataFrame, *, keep_text: bool = False) -> DataFrame:
     fingerprint via a window min — no second join against the corpus.
     ``keep_text=True`` carries the text column through for downstream
     stages that re-tokenize (the near-dup cluster pass)."""
-    toks = F.filter(tokens("text"), lambda t: t != "")
+    toks = word_tokens("text")
     gated = (
         df.withColumn("n_tokens", F.size(toks))
         .withColumn(
@@ -197,7 +197,7 @@ def mixture_weights(
     the ratios are single double divisions of exact integers, so both
     engines produce bit-identical values.
     """
-    toks = F.filter(tokens("text"), lambda t: t != "")
+    toks = word_tokens("text")
     buckets = (
         df.withColumn("n_tokens", F.size(toks))
         .groupBy("lang", "source")
@@ -255,7 +255,7 @@ def temperature_mixture(df: DataFrame) -> DataFrame:
     Scale shape: one partial→final aggregate to the language grain;
     the window sums run over that languages-sized result (the
     mixture_weights precedent)."""
-    toks = F.filter(tokens("text"), lambda t: t != "")
+    toks = word_tokens("text")
     langs = (
         df.withColumn("n_tokens", F.size(toks))
         .groupBy("lang")
@@ -337,7 +337,7 @@ def mixture_sample(df: DataFrame) -> DataFrame:
     sampler emits), realized_epochs = n_copies / n_docs — the Monte
     Carlo realization of mixture_weights' expected_epochs.
     """
-    toks = F.filter(tokens("text"), lambda t: t != "")
+    toks = word_tokens("text")
     docs = df.select(
         "doc_id", "lang", "source", F.size(toks).alias("n_tokens")
     )
@@ -461,7 +461,7 @@ def token_budget_allocation(df: DataFrame, budget: int = TOKEN_BUDGET) -> DataFr
     lang_tokens, share_bp (integer basis points), base_quota, quota
     (Σ quota = budget exactly).
     """
-    toks = F.filter(tokens("text"), lambda t: t != "")
+    toks = word_tokens("text")
     lang_tok = (
         df.select("lang", F.size(toks).cast("long").alias("n"))
         .groupBy("lang")

@@ -29,7 +29,7 @@ from mapreduce_rs_spark.functions.hashing import (
     h64,
     text_fingerprint,
 )
-from mapreduce_rs_spark.functions.text import token_ngrams, tokens
+from mapreduce_rs_spark.functions.text import token_ngrams, word_tokens
 from mapreduce_rs_spark.operators.materialize import materialize
 from mapreduce_rs_spark.operators.partitioning import ensure_parallelism
 
@@ -179,7 +179,7 @@ def simhash_signatures(df: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     positive → signature = Σ bit<<b. All bit arithmetic uses shift+mask,
     which DuckDB evaluates identically. One explode + one groupBy."""
     toks = ensure_parallelism(df.select("doc_id", "text"), "doc_id").select(
-        "doc_id", F.explode(F.filter(tokens("text"), lambda t: t != "")).alias("word")
+        "doc_id", F.explode(word_tokens("text")).alias("word")
     ).withColumn("h", h64("word"))
     votes = [
         F.sum(
@@ -335,7 +335,7 @@ def jaccard_pairs(
             "doc_id",
             "lang",
             F.explode(
-                F.array_distinct(F.filter(tokens("text"), lambda t: t != ""))
+                F.array_distinct(word_tokens("text"))
             ).alias("word"),
         )
     )
@@ -809,14 +809,14 @@ def lsh_scurve_calibration(df: DataFrame, cap: int = SCURVE_SAMPLE_CAP) -> DataF
 
     Returns (sim_decile, n_pairs, n_collisions, collision_rate).
     """
-    tk = F.filter(tokens("text"), lambda t: t != "")
+    tk = word_tokens("text")
     sample = materialize(
         df.select("doc_id", "text")
         .where(F.size(tk) >= SCURVE_MIN_TOKENS)
         .withColumn("h", h32(F.col("doc_id").cast("string")))
         .orderBy("h", "doc_id")
         .limit(cap)
-        .select("doc_id", F.filter(tokens("text"), lambda t: t != "").alias("tk")),
+        .select("doc_id", tk.alias("tk")),
     )
     grades = F.explode(
         F.array(*[F.lit(p) for p in SCURVE_GRADES])
@@ -941,7 +941,7 @@ def duplicate_spans(df: DataFrame, n: int = SPAN_N, min_docs: int = 2) -> DataFr
     Never all-pairs, never a self-join on text. All arithmetic integer
     except the final dup_fraction division.
     """
-    toks = F.filter(tokens("text"), lambda t: t != "")
+    toks = word_tokens("text")
     # one-small-file rescue (r07 one-task sweep; no-op at scale)
     base = ensure_parallelism(df.select("doc_id", "text"), "doc_id").select(
         "doc_id", F.size(toks).alias("n_tokens"), F.col("text")

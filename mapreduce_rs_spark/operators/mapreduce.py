@@ -121,11 +121,14 @@ def map_reduce(
     )
 
 
-def wc_map(record: str) -> list[tuple[str, str]]:
+def wc_map(record: str | None) -> list[tuple[str, str]]:
     """The reference's ``wc::map`` (``src/mr/function.rs:9-16``): strip
-    ``[^\\w\\s]``, whitespace-split, emit (word, "1")."""
+    ``[^\\w\\s]``, whitespace-split, emit (word, "1"). A NULL record is
+    a document with no tokens, as on the JVM paths and in the oracle."""
     import re
 
+    if record is None:
+        return []
     cleaned = re.sub(r"[^\w\s]", "", record, flags=re.ASCII)
     return [(w, "1") for w in cleaned.split()]
 

@@ -51,7 +51,7 @@ def weighted_sample(df: DataFrame, k: int = WEIGHTED_SAMPLE_K) -> DataFrame:
     proportionally more likely, no duplicates" primitive.
 
     Determinism: u is an exact rational (both engines compute the same
-    double), ln follows the bigram_pmi portability precedent, and the
+    double), ln follows the skipgram_pmi portability precedent, and the
     division by an integer weight is a single IEEE op. The top-k is
     orderBy+limit — TakeOrderedAndProject, a cap-row heap per partition
     with NO global sort, O(k) driver merge at any corpus size. The
@@ -59,7 +59,7 @@ def weighted_sample(df: DataFrame, k: int = WEIGHTED_SAMPLE_K) -> DataFrame:
     float-rank discipline), so an ulp of libm disagreement cannot flip
     a rank. Floats never appear in the OUTPUT: (doc_id, lang, n_tokens,
     rnk) are all exact."""
-    from mapreduce_rs_spark.functions.text import tokens
+    from mapreduce_rs_spark.functions.text import word_tokens
 
     u = (
         h32(F.concat(F.col("doc_id").cast("string"), F.lit("|ws"))) + 1
@@ -67,7 +67,7 @@ def weighted_sample(df: DataFrame, k: int = WEIGHTED_SAMPLE_K) -> DataFrame:
     scored = df.select(
         "doc_id",
         "lang",
-        F.size(F.filter(tokens("text"), lambda t: t != "")).alias("n_tokens"),
+        F.size(word_tokens("text")).alias("n_tokens"),
         u.alias("u"),
     ).where(F.col("n_tokens") > 0)
     top = (

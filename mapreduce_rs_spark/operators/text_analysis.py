@@ -26,9 +26,10 @@ from pyspark.sql import functions as F
 from mapreduce_rs_spark.functions.text import (
     bpe_ish_tokens,
     ngrams_of,
-    pairs_at_distance_of,
+    slide,
     token_ngrams,
     tokens,
+    word_tokens,
 )
 from mapreduce_rs_spark.operators.partitioning import ensure_parallelism
 
@@ -97,7 +98,7 @@ def doc_stats(df: DataFrame) -> DataFrame:
     n_tokens / distinct tokens / avg token length via array higher-order
     functions on the split array; nothing leaves the row.
     """
-    toks = F.filter(tokens("text"), lambda t: t != "")
+    toks = word_tokens("text")
     tok_lens = F.transform(toks, lambda t: F.length(t).cast("double"))
     # try_divide: ANSI Spark errors on /0 where DuckDB yields NULL — an
     # all-punctuation document would crash the job; NULL on both instead.
@@ -208,7 +209,7 @@ def token_count(df: DataFrame) -> DataFrame:
     """Token counting per document with both the whitespace and the
     BPE-ish regex tokenizer — the 'how many tokens will I train on'
     pipeline primitive. Narrow; no shuffle."""
-    ws = F.filter(tokens("text"), lambda t: t != "")
+    ws = word_tokens("text")
     bpe = bpe_ish_tokens("text")
     return df.select(
         "doc_id",
@@ -221,7 +222,7 @@ def quality_score(df: DataFrame) -> DataFrame:
     """Heuristic document quality: length, punctuation ratio, stopword
     ratio, mean token length — the standard cheap pre-filter signals for
     training-data curation. All built-in expressions."""
-    toks = F.filter(tokens("text"), lambda t: t != "")
+    toks = word_tokens("text")
     n_tokens = F.size(toks)
     n_chars = F.length("text")
     n_word_chars = F.length(F.regexp_replace("text", r"[^\w]", ""))
@@ -293,7 +294,7 @@ def repetition_signals(df: DataFrame) -> DataFrame:
     NULL ratios (the oracle mirrors this).
     """
     spine = df.select("doc_id")
-    toks = F.filter(tokens("text"), lambda t: t != "")
+    toks = word_tokens("text")
     tagged = F.concat(
         F.transform(
             toks, lambda t: F.struct(F.lit("t").alias("kind"), t.alias("gram"))
@@ -365,7 +366,7 @@ def chunk_documents(
     The defaults are sized to the synthetic corpus (~30-token docs →
     2-3 overlapping chunks); production uses the model context length.
     """
-    toks = F.filter(tokens("text"), lambda t: t != "")
+    toks = word_tokens("text")
     n = F.size(toks)
     n_chunks = F.when(n <= 0, F.lit(0)).otherwise(
         (
@@ -386,7 +387,7 @@ def chunk_documents(
     return (
         # one-small-file rescue (r07 one-task sweep; no-op at scale)
         ensure_parallelism(df.select("doc_id", "text"), "doc_id")
-        .where(F.size(F.filter(tokens("text"), lambda t: t != "")) > 0)
+        .where(F.size(toks) > 0)
         .select("doc_id", chunk.alias("c"))
         .select(
             "doc_id",
@@ -556,7 +557,7 @@ def cdc_chunk_dedup(df: DataFrame, d: int = CDC_DIVISOR) -> DataFrame:
     count, chunks shared with >= 2 documents (storage-dedup hits), and
     the duplicate-chunk fraction (one exact-int division).
     """
-    toks = F.filter(tokens("text"), lambda t: t != "")
+    toks = word_tokens("text")
     # one-small-file rescue (r07 one-task sweep; no-op at scale)
     base = (
         ensure_parallelism(df.select("doc_id", "text"), "doc_id")
@@ -751,90 +752,40 @@ def corpus_profile(df: DataFrame) -> DataFrame:
     )
 
 
-def bigram_pmi(df: DataFrame, min_pair: int = 3) -> DataFrame:
-    """Pointwise mutual information of adjacent token pairs — the
-    collocation score a phrase-mining / tokenizer-vocabulary pipeline
-    computes over a corpus (PMI(x,y) = ln(p(xy) / (p(x)p(y)))).
-
-    Plan shape: one narrow per-row n-gram slide (token_ngrams — no
-    self-join), one groupBy for bigram counts, one for unigram counts,
-    and two 1-row corpus totals broadcast in. The pair->unigram joins
-    are plain equi-joins on the word; nothing all-pairs anywhere, so
-    the shape survives any corpus size.
-
-    Float determinism: PMI is computed in ln-difference form
-    (ln n_xy + 2 ln T_u - ln T_b - ln n_x - ln n_y) rather than as one
-    big ratio — every ln argument is an exactly-cast integer count, no
-    product can overflow at any scale, and the fixed left-associated
-    expression tree evaluates bit-identically on both engines (same
-    precedent as tfidf's ln weighting, hash-verified since round 1).
-
-    Returns (w1, w2, n_xy, n_x, n_y, pmi) for pairs seen >= min_pair
-    times.
-    """
-    # one-small-file rescue (r07 one-task sweep: the bigram and unigram
-    # legs each re-tokenize, both one-task on a single-split corpus;
-    # no-op at scale)
-    src = ensure_parallelism(df.select("text"))
-    grams = (
-        src.select(F.explode(token_ngrams("text", 2)).alias("ngram"))
-        .groupBy("ngram")
-        .agg(F.count("*").alias("n_xy"))
-    )
-    toks = explode_tokens(src)
-    uni = toks.groupBy("word").agg(F.count("*").alias("n_w"))
-    totals = toks.agg(F.count("*").alias("t_uni")).crossJoin(
-        grams.agg(F.sum("n_xy").alias("t_bi"))
-    )
-    pairs = (
-        grams.where(F.col("n_xy") >= min_pair)
-        .withColumn("w1", F.split("ngram", " ").getItem(0))
-        .withColumn("w2", F.split("ngram", " ").getItem(1))
-    )
-    fa = uni.select(F.col("word").alias("w1"), F.col("n_w").alias("n_x"))
-    fb = uni.select(F.col("word").alias("w2"), F.col("n_w").alias("n_y"))
-    return (
-        pairs.join(fa, "w1")
-        .join(fb, "w2")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "w1",
-            "w2",
-            "n_xy",
-            "n_x",
-            "n_y",
-            F.expr(
-                "ln(CAST(n_xy AS DOUBLE)) + 2 * ln(CAST(t_uni AS DOUBLE))"
-                " - ln(CAST(t_bi AS DOUBLE)) - ln(CAST(n_x AS DOUBLE))"
-                " - ln(CAST(n_y AS DOUBLE))"
-            ).alias("pmi"),
-        )
-    )
-
-
 def skipgram_pmi(df: DataFrame, window: int = 2, min_pair: int = 3) -> DataFrame:
     """Skip-gram co-occurrence PMI: ordered token pairs up to ``window``
-    positions apart, scored with the same ln-difference PMI as
-    bigram_pmi — the word2vec/GloVe-style co-occurrence statistic a
-    distributional-similarity pipeline aggregates over a corpus.
+    positions apart, PMI(x,y) = ln(p(xy) / (p(x)p(y))) — the
+    word2vec/GloVe-style co-occurrence statistic a distributional-
+    similarity pipeline aggregates over a corpus. At ``window=1`` it is
+    the adjacent-pair collocation score of phrase mining (the
+    ``bigram_pmi`` registry query).
 
     Pair generation is ``window`` narrow per-row slides
-    (token_pairs_at_distance) flattened into one explode — never a
+    (``slide(tk, (0, d))``) flattened into one explode — never a
     positional self-join of the token stream, so the shape is linear in
-    corpus size with constant factor ``window``. Marginals are unigram
-    counts; the pair-total normalizer is the skip-gram count (pairs at
-    all distances), so PMI compares pair frequency against the
-    independence baseline under the same sampling.
+    corpus size with constant factor ``window``. One groupBy counts the
+    pairs, one the unigrams, and two 1-row corpus totals broadcast in;
+    the pair->unigram joins are plain equi-joins on the word. Marginals
+    are unigram counts; the pair-total normalizer is the skip-gram
+    count (pairs at all distances), so PMI compares pair frequency
+    against the independence baseline under the same sampling.
+
+    Float determinism: PMI is computed in ln-difference form
+    (ln n_xy + 2 ln T_u - ln T_pairs - ln n_x - ln n_y) rather than as
+    one big ratio — every ln argument is an exactly-cast integer count,
+    no product can overflow at any scale, and the fixed left-associated
+    expression tree evaluates bit-identically on both engines (same
+    precedent as tfidf's ln weighting, hash-verified since round 1).
 
     Returns (w1, w2, n_xy, n_x, n_y, pmi) for ordered pairs seen >=
     ``min_pair`` times within the window.
     """
-    # Tokenize ONCE, slide at every distance over the hoisted array —
-    # `token_pairs_at_distance("text", d)` per distance would re-run
-    # the regex tokenizer `window` times (no CSE in interpreted HOFs).
-    tk = F.filter(tokens("text"), lambda t: t != "")
+    # Tokenize ONCE, slide at every distance over the hoisted array — a
+    # tokenizer call per distance would re-run the regex `window` times
+    # (no CSE in interpreted HOFs).
+    tk = word_tokens("text")
     pair_arrays = F.flatten(
-        F.array(*[pairs_at_distance_of(F.col("tk"), d) for d in range(1, window + 1)])
+        F.array(*[slide(F.col("tk"), (0, d)) for d in range(1, window + 1)])
     )
     # one-small-file rescue (r07 one-task sweep; no-op at scale)
     src = ensure_parallelism(df.select("text"))
@@ -992,7 +943,7 @@ def term_drift(df: DataFrame, k: int = 5) -> DataFrame:
 
     drift = ln(c_a+1) - ln(t_a+V) - (ln(c_b+1) - ln(t_b+V)) with add-1
     smoothing over the language's vocabulary V — every ln argument an
-    exactly-cast integer (the bigram_pmi determinism discipline), the
+    exactly-cast integer (the skipgram_pmi determinism discipline), the
     rank tie snapped on round(|drift|, 9) like tfidf's float-rank
     hazard handling. Top-k per language by absolute drift.
 
@@ -1370,7 +1321,7 @@ def dsir_importance_weights(df: DataFrame, target_lang: str = "en") -> DataFrame
     # lesson), so `concat(tokens(text), token_ngrams(text, 2))` would
     # regex-tokenize every document twice — measured 2.3x slower at
     # sf0.1 than this hoisted form.
-    tk = F.filter(tokens("text"), lambda t: t != "")
+    tk = word_tokens("text")
     tf = materialize(
         df.select(
             "doc_id",
@@ -1834,7 +1785,7 @@ def bm25_scores(df: DataFrame, query: tuple[str, ...] = BM25_QUERY) -> DataFrame
     lengths are a narrow projection; N/T and the |query| df rows
     broadcast. One doc-key aggregate carries the final sum.
     """
-    toks = F.filter(tokens("text"), lambda t: t != "")
+    toks = word_tokens("text")
     # Tokenize ONCE, derive dl from the materialized array in a second
     # projection: interpreted higher-order expressions get no CSE, so
     # two toks references in one select would run the regex tokenizer

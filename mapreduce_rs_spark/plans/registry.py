@@ -27,7 +27,7 @@ restatement that the synthesis rules make exact.
 from __future__ import annotations
 
 import dataclasses
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +68,22 @@ TOKENS_SQL = (
 # The embedding as a double list — the oracle's one read of the column
 # for arithmetic (twin of similarity._embd).
 _EMB_SQL = "CAST(embedding AS DOUBLE[])"
+
+
+def _toks_cte(source: str, *cols: str) -> str:
+    """The one ``toks`` CTE: ``cols`` plus the token array ``tk`` per row
+    of ``source`` (a table or CTE name carrying ``text``)."""
+    return f"toks AS (SELECT {', '.join(cols)}, {TOKENS_SQL} AS tk FROM {source})"
+
+
+def _slide_sql(arr: str, offsets: Sequence[int]) -> str:
+    """The one oracle slide, twin of functions.text.slide: the
+    space-joined elements of list ``arr`` at ``offsets`` from every
+    position where all of them exist (``range(n)``: n-grams;
+    ``(0, d)``: ordered pairs ``d`` apart)."""
+    tup = " || ' ' || ".join(f"{arr}[i + {o}]" if o else f"{arr}[i]" for o in offsets)
+    return f"list_transform(range(1, greatest(len({arr}) - {max(offsets)}, 0) + 1), i -> {tup})"
+
 
 # The flagship word-count SQL — one definition for the four registry
 # entries that are oracled against it (declarative, salted, RDD, UDF).
@@ -192,18 +208,49 @@ def _shingles_ctes(n: int = dedup.SHINGLE_N, source: str = "documents") -> str:
     """toks→shingles CTE chain WITHOUT the leading WITH, so callers can
     embed it anywhere in a larger chain. ``source`` is the relation
     (table or CTE name) carrying (doc_id, text)."""
-    return f"""toks AS (
-    SELECT doc_id, {TOKENS_SQL} AS tk FROM {source}
-), shingles AS (
-    SELECT doc_id,
-           unnest(list_transform(range(1, greatest(len(tk) - {n - 1}, 0) + 1),
-                  i -> array_to_string(tk[i:i + {n - 1}], ' '))) AS shingle
-    FROM toks
+    return f"""{_toks_cte(source, 'doc_id')}, shingles AS (
+    SELECT doc_id, unnest({_slide_sql('tk', range(n))}) AS shingle FROM toks
 )"""
 
 
 def _shingles_sql(n: int = dedup.SHINGLE_N, source: str = "documents") -> str:
     return f"\nWITH {_shingles_ctes(n, source)}\n"
+
+
+def _pmi_sql(window: int) -> str:
+    """Oracle of ``ta.skipgram_pmi(df, window)`` at the default
+    ``min_pair``: one pair slide per distance 1..window, unigram
+    marginals, PMI in the operator's ln-difference form."""
+    legs = "\n            UNION ALL\n            ".join(
+        f"SELECT unnest({_slide_sql('tk', (0, d))}) AS pair FROM toks" for d in range(1, window + 1)
+    )
+    return f"""
+        WITH {_toks_cte('documents', 'doc_id')}, grams AS (
+            {legs}
+        ), sg AS (
+            SELECT pair, count(*) AS n_xy FROM grams GROUP BY pair
+        ), words AS (
+            SELECT unnest(tk) AS word FROM toks
+        ), uni AS (
+            SELECT word, count(*) AS n_w FROM words GROUP BY word
+        ), totals AS (
+            SELECT (SELECT count(*) FROM words) AS t_uni,
+                   (SELECT sum(n_xy) FROM sg) AS t_pairs
+        )
+        SELECT split_part(pair, ' ', 1) AS w1,
+               split_part(pair, ' ', 2) AS w2,
+               n_xy,
+               fa.n_w AS n_x,
+               fb.n_w AS n_y,
+               ln(CAST(n_xy AS DOUBLE)) + 2 * ln(CAST(t_uni AS DOUBLE))
+               - ln(CAST(t_pairs AS DOUBLE)) - ln(CAST(fa.n_w AS DOUBLE))
+               - ln(CAST(fb.n_w AS DOUBLE)) AS pmi
+        FROM sg
+        JOIN uni fa ON split_part(pair, ' ', 1) = fa.word
+        JOIN uni fb ON split_part(pair, ' ', 2) = fb.word
+        CROSS JOIN totals
+        WHERE n_xy >= 3
+        """
 
 
 def _gif_frames_ctes() -> str:
@@ -1996,11 +2043,7 @@ QUERIES: dict[str, QuerySpec] = {
     "doc_stats": QuerySpec(
         _docs(ta.doc_stats),
         f"""
-        WITH toks AS (
-            SELECT doc_id, lang, CAST(length(text) AS INTEGER) AS n_chars_actual,
-                   {TOKENS_SQL} AS tk
-            FROM documents
-        )
+        WITH {_toks_cte('documents', 'doc_id', 'lang', 'CAST(length(text) AS INTEGER) AS n_chars_actual')}
         SELECT doc_id, lang, n_chars_actual,
                CAST(len(tk) AS INTEGER) AS n_tokens,
                CAST(len(list_distinct(tk)) AS INTEGER) AS n_distinct_tokens,
@@ -2023,49 +2066,15 @@ QUERIES: dict[str, QuerySpec] = {
     "bigrams": QuerySpec(
         _docs(lambda df: ta.ngrams(df, 2)),
         f"""
-        WITH toks AS (
-            SELECT doc_id, {TOKENS_SQL} AS tk FROM documents
-        ), grams AS (
-            SELECT unnest(list_transform(range(1, greatest(len(tk) - 1, 0) + 1),
-                          i -> array_to_string(tk[i:i + 1], ' '))) AS ngram
-            FROM toks
+        WITH {_toks_cte('documents', 'doc_id')}, grams AS (
+            SELECT unnest({_slide_sql('tk', range(2))}) AS ngram FROM toks
         )
         SELECT ngram, count(*) AS cnt FROM grams GROUP BY ngram
         """,
     ),
     "bigram_pmi": QuerySpec(
-        _docs(ta.bigram_pmi),
-        f"""
-        WITH toks AS (
-            SELECT doc_id, {TOKENS_SQL} AS tk FROM documents
-        ), grams AS (
-            SELECT unnest(list_transform(range(1, greatest(len(tk) - 1, 0) + 1),
-                          i -> array_to_string(tk[i:i + 1], ' '))) AS ngram
-            FROM toks
-        ), bi AS (
-            SELECT ngram, count(*) AS n_xy FROM grams GROUP BY ngram
-        ), words AS (
-            SELECT unnest(tk) AS word FROM toks
-        ), uni AS (
-            SELECT word, count(*) AS n_w FROM words GROUP BY word
-        ), totals AS (
-            SELECT (SELECT count(*) FROM words) AS t_uni,
-                   (SELECT sum(n_xy) FROM bi) AS t_bi
-        )
-        SELECT split_part(ngram, ' ', 1) AS w1,
-               split_part(ngram, ' ', 2) AS w2,
-               n_xy,
-               fa.n_w AS n_x,
-               fb.n_w AS n_y,
-               ln(CAST(n_xy AS DOUBLE)) + 2 * ln(CAST(t_uni AS DOUBLE))
-               - ln(CAST(t_bi AS DOUBLE)) - ln(CAST(fa.n_w AS DOUBLE))
-               - ln(CAST(fb.n_w AS DOUBLE)) AS pmi
-        FROM bi
-        JOIN uni fa ON split_part(ngram, ' ', 1) = fa.word
-        JOIN uni fb ON split_part(ngram, ' ', 2) = fb.word
-        CROSS JOIN totals
-        WHERE n_xy >= 3
-        """,
+        _docs(lambda df: ta.skipgram_pmi(df, 1)),
+        _pmi_sql(1),
         "collocation PMI in ln-difference form: exact integer counts, "
         "fixed expression tree — no product overflow, engine-portable",
     ),
@@ -2169,41 +2178,7 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "skipgram_pmi": QuerySpec(
         _docs(ta.skipgram_pmi),
-        f"""
-        WITH toks AS (
-            SELECT doc_id, {TOKENS_SQL} AS tk FROM documents
-        ), grams AS (
-            SELECT unnest(list_transform(range(1, greatest(len(tk) - 1, 0) + 1),
-                          i -> tk[i] || ' ' || tk[i + 1])) AS pair
-            FROM toks
-            UNION ALL
-            SELECT unnest(list_transform(range(1, greatest(len(tk) - 2, 0) + 1),
-                          i -> tk[i] || ' ' || tk[i + 2])) AS pair
-            FROM toks
-        ), sg AS (
-            SELECT pair, count(*) AS n_xy FROM grams GROUP BY pair
-        ), words AS (
-            SELECT unnest(tk) AS word FROM toks
-        ), uni AS (
-            SELECT word, count(*) AS n_w FROM words GROUP BY word
-        ), totals AS (
-            SELECT (SELECT count(*) FROM words) AS t_uni,
-                   (SELECT sum(n_xy) FROM sg) AS t_pairs
-        )
-        SELECT split_part(pair, ' ', 1) AS w1,
-               split_part(pair, ' ', 2) AS w2,
-               n_xy,
-               fa.n_w AS n_x,
-               fb.n_w AS n_y,
-               ln(CAST(n_xy AS DOUBLE)) + 2 * ln(CAST(t_uni AS DOUBLE))
-               - ln(CAST(t_pairs AS DOUBLE)) - ln(CAST(fa.n_w AS DOUBLE))
-               - ln(CAST(fb.n_w AS DOUBLE)) AS pmi
-        FROM sg
-        JOIN uni fa ON split_part(pair, ' ', 1) = fa.word
-        JOIN uni fb ON split_part(pair, ' ', 2) = fb.word
-        CROSS JOIN totals
-        WHERE n_xy >= 3
-        """,
+        _pmi_sql(2),
         "word2vec-style window-2 skip-gram co-occurrence PMI; pair "
         "generation is 2 narrow slides, never a positional self-join",
     ),
@@ -3155,13 +3130,8 @@ QUERIES: dict[str, QuerySpec] = {
     "bigram_surprisal_scores": QuerySpec(
         _docs(ta.bigram_surprisal_scores),
         f"""
-        WITH toks AS (
-            SELECT doc_id, {TOKENS_SQL} AS tk FROM documents
-        ), grams AS (
-            SELECT doc_id,
-                   unnest(list_transform(range(1, greatest(len(tk) - 1, 0) + 1),
-                          i -> array_to_string(tk[i:i + 1], ' '))) AS pair
-            FROM toks
+        WITH {_toks_cte('documents', 'doc_id')}, grams AS (
+            SELECT doc_id, unnest({_slide_sql('tk', range(2))}) AS pair FROM toks
         ), pair_tf AS (
             SELECT doc_id, pair, count(*) AS tf FROM grams GROUP BY 1, 2
         ), bi AS (
@@ -4835,9 +4805,7 @@ QUERIES: dict[str, QuerySpec] = {
         ), ttoks AS (
             SELECT doc_id, lang, {TOKENS_SQL} AS tk FROM train
         ), tsh AS (
-            SELECT doc_id, lang,
-                   unnest(list_transform(range(1, greatest(len(tk) - {dedup.DECONTAM_N - 1}, 0) + 1),
-                          i -> array_to_string(tk[i:i + {dedup.DECONTAM_N - 1}], ' '))) AS shingle
+            SELECT doc_id, lang, unnest({_slide_sql('tk', range(dedup.DECONTAM_N))}) AS shingle
             FROM ttoks
         ), cont AS (
             SELECT DISTINCT doc_id, lang FROM tsh
@@ -4875,8 +4843,8 @@ QUERIES: dict[str, QuerySpec] = {
     "repetition_signals": QuerySpec(
         _docs(ta.repetition_signals),
         f"""
-        WITH words AS (
-            SELECT doc_id, unnest({TOKENS_SQL}) AS word FROM documents
+        WITH {_toks_cte('documents', 'doc_id')}, words AS (
+            SELECT doc_id, unnest(tk) AS word FROM toks
         ), tok AS (
             SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_tokens,
                    CAST(count(*) AS BIGINT) AS n_distinct,
@@ -4888,9 +4856,7 @@ QUERIES: dict[str, QuerySpec] = {
                    CAST(max(cnt) AS BIGINT) AS top_cnt
             FROM (
                 SELECT doc_id, gram, count(*) AS cnt FROM (
-                    SELECT doc_id, unnest(list_transform(range(1, greatest(len(tk) - 1, 0) + 1),
-                                  i -> array_to_string(tk[i:i + 1], ' '))) AS gram
-                    FROM (SELECT doc_id, {TOKENS_SQL} AS tk FROM documents) t
+                    SELECT doc_id, unnest({_slide_sql('tk', range(2))}) AS gram FROM toks
                 ) g GROUP BY doc_id, gram
             ) c GROUP BY doc_id
         )
@@ -4907,12 +4873,8 @@ QUERIES: dict[str, QuerySpec] = {
     "boilerplate_ngrams": QuerySpec(
         _docs(ta.boilerplate_ngrams),
         f"""
-        WITH toks AS (
-            SELECT doc_id, {TOKENS_SQL} AS tk FROM documents
-        ), grams AS (
-            SELECT doc_id, unnest(list_transform(range(1, greatest(len(tk) - 2, 0) + 1),
-                          i -> array_to_string(tk[i:i + 2], ' '))) AS gram
-            FROM toks
+        WITH {_toks_cte('documents', 'doc_id')}, grams AS (
+            SELECT doc_id, unnest({_slide_sql('tk', range(3))}) AS gram FROM toks
         ), boiler AS (
             SELECT gram FROM grams GROUP BY gram
             HAVING count(DISTINCT doc_id) >= {ta.BOILERPLATE_MIN_DOCS}
@@ -4935,9 +4897,7 @@ QUERIES: dict[str, QuerySpec] = {
     "duplicate_spans": QuerySpec(
         _docs(dedup.duplicate_spans),
         f"""
-        WITH toks AS (
-            SELECT doc_id, {TOKENS_SQL} AS tk FROM documents
-        ), pos_grams AS (
+        WITH {_toks_cte('documents', 'doc_id')}, pos_grams AS (
             SELECT doc_id, CAST(i - 1 AS INTEGER) AS pos,
                    {h64_sql(f"array_to_string(tk[i:i + {dedup.SPAN_N - 1}], ' ')")} AS gh
             FROM (SELECT doc_id, tk,
@@ -5026,9 +4986,7 @@ QUERIES: dict[str, QuerySpec] = {
     "cdc_chunk_dedup": QuerySpec(
         _docs(ta.cdc_chunk_dedup),
         f"""
-        WITH toks AS (
-            SELECT doc_id, {TOKENS_SQL} AS tk FROM documents
-        ), base AS (
+        WITH {_toks_cte('documents', 'doc_id')}, base AS (
             SELECT doc_id, tk FROM toks WHERE len(tk) > 0
         ), withb AS (
             SELECT doc_id, tk,
@@ -5065,9 +5023,7 @@ QUERIES: dict[str, QuerySpec] = {
     "chunk_documents": QuerySpec(
         _docs(ta.chunk_documents),
         f"""
-        WITH toks AS (
-            SELECT doc_id, {TOKENS_SQL} AS tk FROM documents
-        ), sized AS (
+        WITH {_toks_cte('documents', 'doc_id')}, sized AS (
             SELECT doc_id, tk,
                    CAST(floor((greatest(len(tk) - {ta.CHUNK_WINDOW}, 0) + {ta.CHUNK_STRIDE - 1})
                         / {ta.CHUNK_STRIDE}) + 1 AS INTEGER) AS n_chunks
@@ -5091,8 +5047,8 @@ QUERIES: dict[str, QuerySpec] = {
     "curation_yield_signals": QuerySpec(
         _docs(curation.curation_yield_signals),
         f"""
-        WITH {_curation_kept_ctes()}, words AS (
-            SELECT doc_id, unnest({TOKENS_SQL}) AS word FROM documents
+        WITH {_curation_kept_ctes()}, {_toks_cte('documents', 'doc_id')}, words AS (
+            SELECT doc_id, unnest(tk) AS word FROM toks
         ), rep AS (
             SELECT doc_id,
                    CAST(CAST(sum(cnt) AS BIGINT) - CAST(count(*) AS BIGINT) AS DOUBLE)
@@ -5100,9 +5056,7 @@ QUERIES: dict[str, QuerySpec] = {
             FROM (SELECT doc_id, word, count(*) AS cnt FROM words GROUP BY doc_id, word) c
             GROUP BY doc_id
         ), grams AS (
-            SELECT doc_id, unnest(list_transform(range(1, greatest(len(tk) - 2, 0) + 1),
-                          i -> array_to_string(tk[i:i + 2], ' '))) AS gram
-            FROM (SELECT doc_id, {TOKENS_SQL} AS tk FROM documents) t
+            SELECT doc_id, unnest({_slide_sql('tk', range(3))}) AS gram FROM toks
         ), boilset AS (
             SELECT gram FROM grams GROUP BY gram
             HAVING count(DISTINCT doc_id) >= {ta.BOILERPLATE_MIN_DOCS}
@@ -5319,16 +5273,10 @@ QUERIES: dict[str, QuerySpec] = {
     "dsir_importance_weights": QuerySpec(
         _docs(ta.dsir_importance_weights),
         f"""
-        WITH toks AS (
-            SELECT doc_id, lang = 'en' AS is_target, {TOKENS_SQL} AS tk
-            FROM documents
-        ), grams AS (
+        WITH {_toks_cte('documents', 'doc_id', "lang = 'en' AS is_target")}, grams AS (
             SELECT doc_id, is_target, unnest(tk) AS gram FROM toks
             UNION ALL
-            SELECT doc_id, is_target,
-                   unnest(list_transform(range(1, greatest(len(tk) - 1, 0) + 1),
-                          i -> array_to_string(tk[i:i + 1], ' '))) AS gram
-            FROM toks
+            SELECT doc_id, is_target, unnest({_slide_sql('tk', range(2))}) AS gram FROM toks
         ), tf AS (
             SELECT doc_id, is_target,
                    {h32_sql('gram')} % {ta.DSIR_BUCKETS} AS bucket,
@@ -5646,9 +5594,7 @@ QUERIES: dict[str, QuerySpec] = {
     "feature_hashing_stats": QuerySpec(
         _docs(ta.feature_hashing_stats),
         f"""
-        WITH toks AS (
-            SELECT doc_id, {TOKENS_SQL} AS tk FROM documents
-        ), words AS (
+        WITH {_toks_cte('documents', 'doc_id')}, words AS (
             SELECT doc_id, unnest(tk) AS word FROM toks
         ), hashed AS (
             SELECT doc_id, word,
@@ -6311,9 +6257,7 @@ QUERIES: dict[str, QuerySpec] = {
     "oov_rate_scores": QuerySpec(
         _docs(ta.oov_rate_scores),
         f"""
-        WITH toks AS (
-            SELECT doc_id, {TOKENS_SQL} AS tk FROM documents
-        ), words AS (
+        WITH {_toks_cte('documents', 'doc_id')}, words AS (
             SELECT doc_id, unnest(tk) AS word FROM toks
         ), vocab AS (
             SELECT word FROM (
@@ -7012,8 +6956,7 @@ def _bpe_rounds_ctes(n_merges: int = 6) -> str:
         parts.append(
             f""", p{r} AS (
             SELECT pair, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-                SELECT freq, unnest(list_transform(range(1, greatest(len(syms) - 1, 0) + 1),
-                       i -> syms[i] || ' ' || syms[i + 1])) AS pair
+                SELECT freq, unnest({_slide_sql('syms', (0, 1))}) AS pair
                 FROM (SELECT freq, list_filter(string_split(s, '  '), x -> x <> '') AS syms
                       FROM v{r - 1})
             ) GROUP BY pair

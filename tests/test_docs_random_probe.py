@@ -144,6 +144,14 @@ def _random_documents() -> pd.DataFrame:
     rows.append((138, rows[3][1], rows[3][2], rows[3][3], rows[3][4]))
     rows.append((158, rows[7][1] + " echo", rows[7][2], rows[7][3], len(rows[7][1]) + 5))
     rows.append((168, rows[7][1] + " echo", rows[7][2], rows[7][3], len(rows[7][1]) + 5))
+    # The slide's edges: 1, 2 and 3 tokens (no 2-gram, one 2-gram / no
+    # 3-gram, one 3-gram), a leading-whitespace split ('' first), a
+    # punctuation-only text (cleans to '') and punctuation between words.
+    for i, t in enumerate(
+        ["alpha", "beta gamma", "delta epsilon zeta", "\t\x0b  eta theta",
+         "?!, ;.'\"", "iota, kappa.lam !mu"]
+    ):
+        rows.append((N_DOCS + 20 + i, t, langs[i % 5], sources[i % 6], len(t)))
     return pd.DataFrame(
         rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
     )

@@ -9,7 +9,7 @@ from __future__ import annotations
 import math
 
 from mapreduce_rs_spark.operators.relational import copurchase_pairs, skyline_parts
-from mapreduce_rs_spark.operators.text_analysis import bigram_pmi
+from mapreduce_rs_spark.operators.text_analysis import skipgram_pmi
 
 
 def _parts(spark, rows):
@@ -97,7 +97,7 @@ def test_bigram_pmi_exact_values(spark):
         ["doc_id", "text", "lang"],
     )
     got = {
-        (r["w1"], r["w2"]): r for r in bigram_pmi(docs, min_pair=1).collect()
+        (r["w1"], r["w2"]): r for r in skipgram_pmi(docs, window=1, min_pair=1).collect()
     }
     zz = got[("zig", "zag")]
     assert zz["n_xy"] == 4 and zz["n_x"] == 4 and zz["n_y"] == 4
@@ -119,8 +119,6 @@ def test_skipgram_pmi_window_semantics(spark):
     docs = spark.createDataFrame(
         [(i, "a b c", "en") for i in range(3)], ["doc_id", "text", "lang"]
     )
-    from mapreduce_rs_spark.operators.text_analysis import skipgram_pmi
-
     got = {
         (r["w1"], r["w2"]): r["n_xy"]
         for r in skipgram_pmi(docs, min_pair=1).collect()

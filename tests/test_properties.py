@@ -42,32 +42,39 @@ def test_word_count_matches_python_reference(spark, lines):
 
 
 def test_three_engine_tokenizer_parity_on_random_corpus(spark):
-    """Random printable-ASCII corpus (seeded) through all THREE engines
-    — Spark column expressions, the DuckDB oracle SQL, and the Python
-    UDF surface (wc_map). Fixed test corpora can hide a regex-dialect
-    divergence; 200 random docs over the full printable range cannot.
+    """Random printable-ASCII corpus (seeded) plus one NULL document
+    through all THREE engines — Spark column expressions, the DuckDB
+    oracle SQL, and the Python UDF surface (wc_map). Fixed test corpora
+    can hide a regex-dialect divergence; 200 random docs over the full
+    printable range cannot. Compares word counts and every document's
+    ordered token array (a NULL text has no tokens on every engine).
     One batch per engine (not per-example Spark jobs), so it's fast."""
     import random
     import string
 
     import duckdb
 
+    from mapreduce_rs_spark.functions.text import word_tokens
     from mapreduce_rs_spark.operators.mapreduce import wc_map
+    from mapreduce_rs_spark.plans.registry import CLEAN_SQL, SPLIT_SQL, TOKENS_SQL
 
     rng = random.Random(2024)
     alphabet = string.printable  # letters, digits, punctuation, whitespace
     docs = [
         "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 120)))
         for _ in range(200)
-    ]
+    ] + [None]
 
-    df = spark.createDataFrame([(t,) for t in docs], ["text"])
+    df = spark.createDataFrame(list(enumerate(docs)), "doc_id int, text string")
     spark_counts = {r["word"]: r["cnt"] for r in word_count(df).collect()}
+    spark_tokens = {
+        r["doc_id"]: r["tk"]
+        for r in df.select("doc_id", word_tokens("text").alias("tk")).collect()
+    }
 
     con = duckdb.connect()
-    con.execute("CREATE TABLE documents(text VARCHAR)")
-    con.executemany("INSERT INTO documents VALUES (?)", [(t,) for t in docs])
-    from mapreduce_rs_spark.plans.registry import CLEAN_SQL, SPLIT_SQL
+    con.execute("CREATE TABLE documents(doc_id INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", list(enumerate(docs)))
 
     duck = con.execute(
         f"""
@@ -79,13 +86,15 @@ def test_three_engine_tokenizer_parity_on_random_corpus(spark):
         """
     ).fetchall()
     duck_counts = {w: c for w, c in duck}
+    duck_tokens = dict(con.execute(f"SELECT doc_id, {TOKENS_SQL} FROM documents").fetchall())
 
-    py_counts: Counter[str] = Counter()
-    for t in docs:
-        py_counts.update(w for w, _ in wc_map(t))
+    py_tokens = {i: [w for w, _ in wc_map(t)] for i, t in enumerate(docs)}
+    py_counts = Counter(w for tk in py_tokens.values() for w in tk)
 
     assert spark_counts == duck_counts
     assert spark_counts == dict(py_counts)
+    assert spark_tokens == duck_tokens
+    assert {i: tk or [] for i, tk in spark_tokens.items()} == py_tokens
 
 
 def test_date_functions_parity_on_random_timestamps(spark):

@@ -279,7 +279,7 @@ def hll_registers(ev: DataFrame) -> DataFrame:
     """(event_type, bucket, reg): the HLL register table. max(rank) is
     a DISTRIBUTIVE aggregate, so this groupBy is the sketch's merge
     operation itself — it runs verbatim as a Structured Streaming
-    stateful aggregate (streaming/pipeline.streaming_hll), with state
+    stateful aggregate (streaming/pipeline.run_stream), with state
     bounded at types×64 rows forever and the maintained registers
     byte-identical whatever the micro-batch boundaries."""
     m, rmax = HLL_M, HLL_MAX_RANK
@@ -1064,8 +1064,8 @@ def trend_sums(events: DataFrame) -> DataFrame:
     so cents-as-integers is the cross-engine-safe form). Because every
     sum is exact decimal, the SAME groupBy runs under Structured
     Streaming and the maintained state is independent of micro-batch
-    boundaries — streaming/pipeline.streaming_user_trend reuses this
-    function verbatim.
+    boundaries — streaming/pipeline.run_stream drains this function
+    verbatim.
     """
     x = (F.unix_micros(F.col("ts")) - F.lit(TREND_EPOCH_US)).cast("decimal(19,0)")
     y = (money("value") * 100).cast("decimal(20,0)")

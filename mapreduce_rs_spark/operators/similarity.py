@@ -1632,9 +1632,9 @@ def ivf_maintenance_partials(
 ) -> DataFrame:
     """The per-arrival half of ``ivf_index_maintenance``: assignment +
     the one-pass (centroid_id, pos) aggregate producing (s, nb, nn).
-    Split out so the STREAMING loop (``streaming/pipeline.run_
-    streaming_ivf_maintenance``) runs the identical computation per
-    micro-batch — one implementation, two arrival modes (the
+    Split out so the STREAMING loop (``streaming/pipeline.ivf_step``)
+    runs the identical computation per micro-batch — one
+    implementation, two arrival modes (the
     ``admit_batch`` discipline). Integer sums make the partials
     MERGEABLE: summing per-batch (s, nb, nn) over any batching equals
     the single-pass aggregate bit-for-bit. ``extra_keys`` joins the
@@ -2250,7 +2250,7 @@ def semdedup_ingest_audit(
     cross-multiply, zero-norm guard). Emits the per-cluster ingest
     audit (n_ingested / n_dropped / n_admitted / drop_ratio).
 
-    This is exactly what ``run_streaming_semdedup_ingest`` computes
+    This is exactly what the ingest loop's ``semdedup_step`` computes
     per micro-batch against the persisted store (same ``_sdk_fit``,
     same ``_sdk_admit`` — one definition each), so the continuous
     loop's decisions are externally hash-verified through this query.
@@ -3161,7 +3161,7 @@ def graph_admit_batch(
     planes: list[list[float]] | None = None,
 ) -> DataFrame:
     """The ADMISSION core shared by ``knn_graph_ingest`` (batch) and
-    ``streaming/pipeline.run_streaming_graph_ingest`` (continuous) —
+    ``streaming/pipeline.graph_step`` (continuous) —
     one implementation, two arrival modes (the ``admit_batch``
     discipline): beam-search each new vector of ``nq`` (q_id, q_embd,
     q_norm, q_bucket) through the standing graph ``ge`` (gsrc, gdst)

@@ -634,7 +634,7 @@ def cms_counters(df: DataFrame, w: int = CMS_W_AUDIT) -> DataFrame:
     4 lane projections), the only stateful op is the (lane, col) count
     — a distributive sum, so cross-batch state maintenance IS the
     sketch merge and state is bounded at d x w rows forever (the
-    hll_registers discipline; streaming/pipeline.streaming_cms runs
+    hll_registers discipline; streaming/pipeline.run_stream drains
     this VERBATIM under readStream)."""
     from mapreduce_rs_spark.functions.hashing import h32_lane_from_digest
 

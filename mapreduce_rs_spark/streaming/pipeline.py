@@ -13,11 +13,19 @@ all existing input then stops), which exercises the real streaming
 engine — state store, watermark bookkeeping, checkpoint — without an
 unbounded run.
 
+The sink twins (windowed counts, sessions, OHLC bars, trend sums, HLL
+registers, CMS counters) all drain through ``run_stream``: an op over
+a file stream, into a parquet path (append) or a memory table
+(complete).
+
 Epoch-state contract. The continuous-ingest loops (IVF maintenance,
 graph admission, decontamination, semdedup admission, refit serving)
 keep state that must OUTLIVE the stream, so they land it as tables via
-foreachBatch rather than in the state store. One discipline covers all
-of them and is stated once, on the private helpers below:
+foreachBatch rather than in the state store. They are ONE loop,
+``run_ingest_loop``, whose per-micro-batch body ``ingest_epoch`` is the
+only place the discipline below is applied; a loop differs only in its
+``step``, which maps the batch to state rows and never writes them. The
+discipline is stated once, on the private helpers below:
 
 * drain-and-stop (``_drain``): every query runs checkpointed with the
   ``availableNow`` trigger, so a restart resumes from the committed
@@ -29,6 +37,9 @@ of them and is stated once, on the private helpers below:
   ``_with_src_file``): each row carries the input file it came from,
   selected on the source scan; a direct caller whose frame is not
   file-backed gets an epoch-qualified sentinel instead;
+* one row per vec_id per micro-batch (``_one_row_per_vec``): a vector
+  delivered in two files of one batch reaches the step once, as the
+  batch operators see it;
 * latest-epoch-wins read (``_latest_epoch``): readers keep, per key
   (``src_file``, or ``q_id`` for the admitted-edge table), only the
   newest epoch's rows, so a re-delivered file reads as one logical
@@ -38,6 +49,7 @@ of them and is stated once, on the private helpers below:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -286,7 +298,12 @@ def run_foreach_batch_upsert(
                 current.join(incoming, ["window_start", "event_type"], "left_anti")
                 .unionByName(incoming)
             )
-        except Exception:  # first batch: target doesn't exist yet
+        # ONLY the first-batch missing target; any other read error (a
+        # corrupt part file) fails the batch so the replay retries,
+        # instead of overwriting the target with this batch alone
+        except AnalysisException as e:
+            if not _is_missing_store(e):
+                raise
             merged = incoming
         # Materialize before overwriting the directory we just read.
         materialize(merged).write.mode("overwrite").parquet(target_dir)
@@ -296,22 +313,6 @@ def run_foreach_batch_upsert(
         streaming_tumbling_counts(stream)
         .writeStream.outputMode("update")
         .foreachBatch(upsert),
-        checkpoint_dir,
-    )
-
-
-def run_windowed_stream(
-    spark: SparkSession, input_dir: str, output_dir: str, checkpoint_dir: str
-) -> None:
-    """Run the windowed aggregation as a real stream over a file source,
-    drain-and-stop (``_drain``: exactly-once via the checkpoint),
-    parquet sink."""
-    stream = _file_stream(spark, EVENT_SCHEMA, input_dir)
-    _drain(
-        streaming_tumbling_counts(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir),
         checkpoint_dir,
     )
 
@@ -344,22 +345,6 @@ def streaming_sessions(
             "n_events",
             "sum_value",
         )
-    )
-
-
-def run_session_stream(
-    spark: SparkSession, input_dir: str, output_dir: str, checkpoint_dir: str
-) -> None:
-    """Drain-and-stop session stream over a file source (availableNow),
-    append mode: only watermark-finalized sessions are emitted, each
-    exactly once via the checkpoint."""
-    stream = _file_stream(spark, EVENT_SCHEMA, input_dir)
-    _drain(
-        streaming_sessions(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir),
-        checkpoint_dir,
     )
 
 
@@ -397,99 +382,6 @@ def streaming_ohlc(stream: DataFrame) -> DataFrame:
     )
 
 
-def run_ohlc_stream(
-    spark: SparkSession, input_dir: str, output_dir: str, checkpoint_dir: str
-) -> None:
-    """Drain-and-stop OHLC stream over a file source (availableNow),
-    append mode: only watermark-closed windows are emitted, each
-    exactly once via the checkpoint."""
-    stream = _file_stream(spark, EVENT_SCHEMA, input_dir)
-    _drain(
-        streaming_ohlc(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir),
-        checkpoint_dir,
-    )
-
-
-def streaming_user_trend(stream: DataFrame) -> DataFrame:
-    """Streaming per-user OLS trend state: the five exact-decimal sums
-    of ``operators/events.trend_sums`` maintained incrementally — the
-    online-model-refresh pattern (a dashboard reads current
-    slope/intercept without ever re-scanning history).
-
-    The groupBy is trend_sums VERBATIM (shared code, not a copy): every
-    sum is a distributive exact-decimal aggregate, so the maintained
-    state is byte-identical whatever the micro-batch boundaries — the
-    property that makes the closed-form fit streamable where an
-    iterative fit would not be. No watermark: this is an all-time
-    running aggregate (state is O(|users|), bounded by the key space,
-    not by time), so it runs in update/complete mode; the finished fit
-    is derived from the latest sums with the SAME trend_from_sums the
-    batch query uses."""
-    from mapreduce_rs_spark.operators.events import trend_sums
-
-    return trend_sums(stream)
-
-
-def streaming_hll(stream: DataFrame) -> DataFrame:
-    """Streaming HyperLogLog registers: operators/events.hll_registers
-    VERBATIM (shared code, not a copy) under readStream — the
-    incremental distinct-count sketch every metrics pipeline maintains.
-    max(rank) is distributive, so cross-batch state maintenance IS the
-    sketch merge; state is bounded at types×64 rows FOREVER (no
-    watermark needed — the sketch, not time, bounds it), and the
-    maintained registers are byte-identical to the batch sketch
-    whatever the micro-batch boundaries. A dashboard derives the
-    estimate from current registers without rescanning history."""
-    from mapreduce_rs_spark.operators.events import hll_registers
-
-    return hll_registers(stream)
-
-
-def run_hll_stream(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    query_name: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Drain-and-stop HLL register stream over a file source
-    (availableNow), complete mode into an in-memory table — the harness
-    for the stream-equals-batch register test."""
-    stream = _file_stream(spark, EVENT_SCHEMA, input_dir, max_files_per_trigger)
-    _drain(
-        streaming_hll(stream)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name),
-        checkpoint_dir,
-    )
-
-
-def run_trend_stream(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    query_name: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Drain-and-stop trend-state stream over a file source
-    (availableNow), complete mode into an in-memory table named
-    ``query_name`` — the harness the stream-equals-batch test drives.
-    ``max_files_per_trigger`` forces multiple micro-batches so the test
-    exercises real cross-batch state maintenance."""
-    stream = _file_stream(spark, EVENT_SCHEMA, input_dir, max_files_per_trigger)
-    _drain(
-        streaming_user_trend(stream)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name),
-        checkpoint_dir,
-    )
-
-
 DOC_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -501,40 +393,41 @@ DOC_SCHEMA = StructType(
 )
 
 
-def streaming_cms(stream: DataFrame) -> DataFrame:
-    """Streaming Count-Min Sketch counters:
-    operators/text_analysis.cms_counters VERBATIM (shared code, not a
-    copy) under readStream — the incremental frequency sketch. The
-    (lane, col) count is a distributive sum, so cross-batch state
-    maintenance IS the sketch merge; state is bounded at d x w rows
-    FOREVER (no watermark needed — the sketch, not time, bounds it),
-    and the maintained counters are byte-identical to the batch sketch
-    whatever the micro-batch boundaries. Point estimates (min over the
-    d counters a word hashes to) derive from current counters without
-    rescanning history."""
-    from mapreduce_rs_spark.operators.text_analysis import cms_counters
-
-    return cms_counters(stream)
-
-
-def run_cms_stream(
+def run_stream(
     spark: SparkSession,
+    op,
     input_dir: str,
     checkpoint_dir: str,
-    query_name: str,
+    *,
+    path: str | None = None,
+    query_name: str | None = None,
+    schema: StructType = EVENT_SCHEMA,
     max_files_per_trigger: int | None = None,
 ) -> None:
-    """Drain-and-stop CMS counter stream over a documents file source
-    (availableNow), complete mode into an in-memory table — the harness
-    for the stream-equals-batch counter test."""
-    stream = _file_stream(spark, DOC_SCHEMA, input_dir, max_files_per_trigger)
-    _drain(
-        streaming_cms(stream)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name),
-        checkpoint_dir,
-    )
+    """The one runner of the sink twins: drain-and-stop (``_drain``)
+    ``op`` over a file stream of ``schema``.
+
+    * a parquet ``path`` sink runs in APPEND mode: the watermarked ops
+      (``streaming_tumbling_counts``, ``streaming_sessions``,
+      ``streaming_ohlc``) emit only finalized windows, each exactly
+      once via the checkpoint;
+    * a memory ``query_name`` sink runs in COMPLETE mode: the all-time
+      running aggregates (``events.trend_sums``,
+      ``events.hll_registers``, ``text_analysis.cms_counters``, run
+      verbatim under readStream) keep state bounded by their key space
+      or sketch, not by a watermark, and the table is what a
+      stream-equals-batch test reads.
+
+    ``max_files_per_trigger`` forces several micro-batches so a test
+    exercises real cross-batch state."""
+    if (path is None) == (query_name is None):
+        raise ValueError("run_stream takes exactly one of path and query_name")
+    writer = op(_file_stream(spark, schema, input_dir, max_files_per_trigger)).writeStream
+    if path is not None:
+        writer = writer.outputMode("append").format("parquet").option("path", path)
+    else:
+        writer = writer.outputMode("complete").format("memory").queryName(query_name)
+    _drain(writer, checkpoint_dir)
 
 
 def run_streaming_neardup_ingest(
@@ -654,24 +547,93 @@ EMB_SCHEMA = StructType(
 )
 
 
-def ivf_state_update(batch_df: DataFrame, state_dir: str, epoch_id: int) -> None:
-    """One micro-batch of the streaming IVF maintenance loop: compute
-    the batch's per-source-file (src_file, centroid_id, pos, s, nb, nn)
-    partials — the IDENTICAL ``ivf_maintenance_partials`` the batch
-    operator runs, with the ``src_file`` provenance key
-    (``_with_src_file``) threaded through — and land them with
-    ``_write_epoch`` (exposed module-level so the replay path is
-    directly testable). The report reads them through
-    ``_latest_epoch`` per ``src_file``."""
-    from mapreduce_rs_spark.operators.similarity import ivf_maintenance_partials
+def _one_row_per_vec(batch_df: DataFrame) -> DataFrame:
+    """One decision row per vec_id per micro-batch (r11 ADVICE #2): if
+    upstream delivers the SAME vec_id in more than one file within a
+    single micro-batch, a step would otherwise see the vector once PER
+    COPY — ``decon_gate_batch``'s per-vec_id aggregate double-counts
+    its hits, the src_file join-back duplicates a decision row, the
+    IVF partials count the vector twice and the graph admission emits
+    its edges twice — so the drained report diverges from the batch
+    operator, which sees each vec_id once. Keep the deterministic
+    first copy: min (src_file, embedding) per vec_id (arrays order
+    lexicographically, so even a same-file duplicate with differing
+    payloads picks one copy reproducibly). Cross-EPOCH re-delivery is
+    the reader's latest-wins-per-src_file job, not this one."""
+    w = Window.partitionBy("vec_id").orderBy("src_file", "embedding")
+    return (
+        batch_df.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
+
+def ingest_epoch(
+    batch_df: DataFrame,
+    state_dir: str,
+    epoch_id: int,
+    step: Callable[[DataFrame], DataFrame],
+) -> None:
+    """One micro-batch of every store-backed ingest loop, and the only
+    place the epoch-state contract is applied: ``src_file`` provenance
+    (``_with_src_file``), one row per vec_id (``_one_row_per_vec``),
+    ``step`` mapping the (vec_id, embedding, src_file) batch to its
+    state rows, and the per-epoch overwrite (``_write_epoch``). A step
+    only returns rows; it never writes. Module-level so a test can
+    replay one epoch directly with the file the checkpoint assigned it."""
     _write_epoch(
-        ivf_maintenance_partials(
-            _with_src_file(batch_df, epoch_id), extra_keys=("src_file",)
-        ),
+        step(_one_row_per_vec(_with_src_file(batch_df, epoch_id))),
         state_dir,
         epoch_id,
     )
+
+
+def run_ingest_loop(
+    spark: SparkSession,
+    input_dir: str,
+    state_dir: str,
+    checkpoint_dir: str,
+    step: Callable[[DataFrame], DataFrame],
+    max_files_per_trigger: int | None = None,
+) -> None:
+    """The continuous-ingest loop: vector micro-batches from
+    ``input_dir`` (``EMB_SCHEMA``, ``src_file`` selected on the source
+    scan) run through ``ingest_epoch`` into per-epoch state under
+    ``state_dir``, drain-and-stop (``_drain``). The five loops are this
+    one with a different ``step`` — ``ivf_step``, ``graph_step``,
+    ``decon_step``, ``semdedup_step``, ``refit_step`` — and each has a
+    report reading the state latest-epoch-wins.
+
+    foreachBatch is the honest shape for the same reason as the
+    near-dup loop: the state must OUTLIVE the stream (the nightly
+    refit or rebuild decision, an ad-hoc audit and the loop itself all
+    read the same table), which is a table concern, not a state-store
+    concern. Every step reads only the batch and persisted standing
+    state, so any micro-batching yields the batch operator's report
+    byte-for-byte (pinned by the parity tests), and per-batch work is
+    batch-proportional, never corpus-proportional."""
+    stream = _file_stream(
+        spark, EMB_SCHEMA, input_dir, max_files_per_trigger, provenance=True
+    )
+    _drain(
+        stream.writeStream.outputMode("append").foreachBatch(
+            lambda batch_df, epoch_id: ingest_epoch(
+                batch_df, state_dir, epoch_id, step
+            )
+        ),
+        checkpoint_dir,
+    )
+
+
+def ivf_step(batch_df: DataFrame) -> DataFrame:
+    """The IVF maintenance step: the batch's per-source-file
+    (src_file, centroid_id, pos, s, nb, nn) partials — the IDENTICAL
+    ``ivf_maintenance_partials`` the batch operator runs, with the
+    ``src_file`` provenance key threaded through. The report reads
+    them through ``_latest_epoch`` per ``src_file``."""
+    from mapreduce_rs_spark.operators.similarity import ivf_maintenance_partials
+
+    return ivf_maintenance_partials(batch_df, extra_keys=("src_file",))
 
 
 def streaming_ivf_state_report(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -714,32 +676,6 @@ def streaming_ivf_state_report(spark: SparkSession, state_dir: str) -> DataFrame
     return ivf_maintenance_rollup(merged)
 
 
-def run_streaming_ivf_maintenance(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """The IVF index-maintenance aggregate in its CONTINUOUS form (r08
-    verdict #7): vector micro-batches fold into per-epoch
-    (centroid, pos) integer partials via foreachBatch; the report reads
-    the merged state. foreachBatch is the honest shape for the same
-    reason as the near-dup loop: the maintenance state must OUTLIVE the
-    stream (the nightly refit decision, an ad-hoc drift audit and the
-    streaming loop all read the same partials), which is a table
-    concern, not a state-store concern."""
-    stream = _file_stream(
-        spark, EMB_SCHEMA, input_dir, max_files_per_trigger, provenance=True
-    )
-    _drain(
-        stream.writeStream.outputMode("append").foreachBatch(
-            lambda batch_df, epoch_id: ivf_state_update(batch_df, state_dir, epoch_id)
-        ),
-        checkpoint_dir,
-    )
-
-
 def build_graph_store(spark: SparkSession, corpus: DataFrame, store_dir: str) -> None:
     """Materialize the standing graph-ANN serving artifacts to parquet —
     the state the continuous admission loop reads: the enriched corpus
@@ -765,18 +701,15 @@ def build_graph_store(spark: SparkSession, corpus: DataFrame, store_dir: str) ->
     ).write.mode("overwrite").parquet(os.path.join(store_dir, "edges"))
 
 
-def graph_ingest_update(
-    batch_df: DataFrame, store_dir: str, edges_dir: str, epoch_id: int
-) -> None:
-    """One micro-batch of the continuous graph-admission loop: enrich
-    the batch (norm + probe bucket), beam-search it through the
-    persisted standing artifacts via the SAME ``graph_admit_batch``
-    core the batch operator runs, and land the found edges with
-    ``_write_epoch``. Admission reads ONLY standing state, so a
-    same-epoch replay re-derives byte-identical edges; per-batch work
-    stays O(|batch| · beam · k · hops), with no scan of the edge
-    history."""
-    _write_epoch(admitted_edges_from_store(batch_df, store_dir), edges_dir, epoch_id)
+def graph_step(store_dir: str) -> Callable[[DataFrame], DataFrame]:
+    """The graph-admission step: beam-search the batch through the
+    PERSISTED standing artifacts (``build_graph_store``, refreshed on
+    the rebuild cadence the batch ledger decides) via
+    ``admitted_edges_from_store`` and return the found edges.
+    Admission reads ONLY standing state, so a same-epoch replay
+    re-derives byte-identical edges; consumers read through
+    ``read_admitted_edges`` (``_latest_epoch`` per q_id)."""
+    return lambda batch_df: admitted_edges_from_store(batch_df, store_dir)
 
 
 def admitted_edges_from_store(batch_df: DataFrame, store_dir: str) -> DataFrame:
@@ -824,37 +757,6 @@ def read_admitted_edges(spark: SparkSession, edges_dir: str) -> DataFrame:
     O(edges) at read, zero per-batch history scans in the hot loop."""
     return _latest_epoch(spark.read.parquet(edges_dir), "q_id").select(
         "q_id", "cand", "cs"
-    )
-
-
-def run_streaming_graph_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    edges_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """The graph tier's admission loop in its CONTINUOUS form: vector
-    micro-batches beam-search the PERSISTED standing artifacts (built
-    once by ``build_graph_store``, refreshed on the rebuild cadence the
-    batch ledger decides) and land their forward edges under per-epoch
-    directories via ``graph_ingest_update`` (``_write_epoch``);
-    consumers read through ``read_admitted_edges``
-    (``_latest_epoch`` per q_id).
-    Admissions are independent across vectors — they read only
-    standing state — so any micro-batching yields the batch operator's
-    edges byte-for-byte (pinned by the parity test), and per-batch
-    work is O(|batch| · beam · k · hops): the continuous form inherits
-    the batch form's batch-proportional cost by construction."""
-    stream = _file_stream(spark, EMB_SCHEMA, input_dir, max_files_per_trigger)
-    _drain(
-        stream.writeStream.outputMode("append").foreachBatch(
-            lambda batch_df, epoch_id: graph_ingest_update(
-                batch_df, store_dir, edges_dir, epoch_id
-            )
-        ),
-        checkpoint_dir,
     )
 
 
@@ -951,40 +853,21 @@ def decon_gate_batch(batch_df: DataFrame, store_dir: str) -> DataFrame:
     )
 
 
-def _one_row_per_vec(batch_df: DataFrame) -> DataFrame:
-    """One decision row per vec_id per micro-batch (r11 ADVICE #2): if
-    upstream delivers the SAME vec_id in more than one file within a
-    single micro-batch, the per-vector gates would otherwise score the
-    vector once PER COPY — ``decon_gate_batch``'s per-vec_id aggregate
-    double-counts its hits, and the src_file join-back duplicates the
-    decision row — so the drained report diverges from the batch
-    operator, which sees each vec_id once. Keep the deterministic
-    first copy: min (src_file, embedding) per vec_id (arrays order
-    lexicographically, so even a same-file duplicate with differing
-    payloads picks one copy reproducibly). Cross-EPOCH re-delivery is
-    the reader's latest-wins-per-src_file job, not this one."""
-    w = Window.partitionBy("vec_id").orderBy("src_file", "embedding")
-    return (
-        batch_df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+def decon_step(store_dir: str) -> Callable[[DataFrame], DataFrame]:
+    """The decontamination step: flag the batch's train vectors
+    against the persisted eval artifact (``build_decon_store``,
+    refreshed only when the benchmark split changes) and return
+    (vec_id, n_eval_hits, max_cos, src_file). Per-vector scores read
+    only the batch row + the fixed artifact, so a vector's flag row is
+    complete within one epoch; ``streaming_decon_report`` reads the
+    merged state."""
 
+    def step(batch_df: DataFrame) -> DataFrame:
+        return decon_gate_batch(
+            batch_df.select("vec_id", "embedding"), store_dir
+        ).join(batch_df.select("vec_id", "src_file"), "vec_id")
 
-def decon_state_update(
-    batch_df: DataFrame, store_dir: str, state_dir: str, epoch_id: int
-) -> None:
-    """One micro-batch of the streaming decontamination gate: flag the
-    batch's train vectors against the persisted eval artifact and land
-    (vec_id, n_eval_hits, max_cos, src_file) with ``_write_epoch``,
-    provenance from ``_with_src_file``. Per-vector scores read only the
-    batch row + the fixed artifact, so a vector's flag row is complete
-    within one epoch."""
-    batch_df = _one_row_per_vec(_with_src_file(batch_df, epoch_id))
-    flagged = decon_gate_batch(
-        batch_df.select("vec_id", "embedding"), store_dir
-    ).join(batch_df.select("vec_id", "src_file"), "vec_id")
-    _write_epoch(flagged, state_dir, epoch_id)
+    return step
 
 
 def streaming_decon_report(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1002,34 +885,6 @@ def streaming_decon_report(spark: SparkSession, state_dir: str) -> DataFrame:
         "vec_id", "n_eval_hits", "max_cos"
     )
     return merged.orderBy(F.col("max_cos").desc(), "vec_id").limit(DECON_TOP_K)
-
-
-def run_streaming_decon_gate(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """The fixed-eval decontamination gate in its CONTINUOUS form:
-    train-vector micro-batches score against the PERSISTED eval
-    artifact (built once by ``build_decon_store``, refreshed only when
-    the benchmark split itself changes) and land per-epoch flag rows;
-    ``streaming_decon_report`` reads the merged state. Per-vector
-    scores read only the vector + the fixed artifact, so any
-    micro-batching yields the batch operator's report byte-for-byte."""
-    stream = _file_stream(
-        spark, EMB_SCHEMA, input_dir, max_files_per_trigger, provenance=True
-    )
-    _drain(
-        stream.writeStream.outputMode("append").foreachBatch(
-            lambda batch_df, epoch_id: decon_state_update(
-                batch_df, store_dir, state_dir, epoch_id
-            )
-        ),
-        checkpoint_dir,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1111,22 +966,20 @@ def semdedup_admit_batch(batch_df: DataFrame, store_dir: str) -> DataFrame:
     return _sdk_admit(assigned, standing)
 
 
-def semdedup_ingest_update(
-    batch_df: DataFrame, store_dir: str, state_dir: str, epoch_id: int
-) -> None:
-    """One micro-batch of the continuous semantic-dedup admission loop:
-    gate the batch through ``semdedup_admit_batch`` and land
-    (vec_id, cid, is_dropped, src_file) with ``_write_epoch``,
-    provenance from ``_with_src_file``. Decisions read only persisted
-    state, so a same-epoch replay lands byte-identical rows."""
-    batch_df = _one_row_per_vec(_with_src_file(batch_df, epoch_id))
-    _write_epoch(
-        semdedup_admit_batch(batch_df.select("vec_id", "embedding"), store_dir).join(
-            batch_df.select("vec_id", "src_file"), "vec_id"
-        ),
-        state_dir,
-        epoch_id,
-    )
+def semdedup_step(store_dir: str) -> Callable[[DataFrame], DataFrame]:
+    """The semantic-dedup admission step: gate the batch through
+    ``semdedup_admit_batch`` against the persisted derived-k model
+    (``build_semdedup_store``, refreshed on the recluster cadence) and
+    return (vec_id, cid, is_dropped, src_file). Decisions read only
+    persisted state, so a same-epoch replay lands byte-identical rows;
+    ``streaming_semdedup_ingest_report`` reads the merged state."""
+
+    def step(batch_df: DataFrame) -> DataFrame:
+        return semdedup_admit_batch(
+            batch_df.select("vec_id", "embedding"), store_dir
+        ).join(batch_df.select("vec_id", "src_file"), "vec_id")
+
+    return step
 
 
 def streaming_semdedup_ingest_report(
@@ -1142,34 +995,6 @@ def streaming_semdedup_ingest_report(
     from mapreduce_rs_spark.operators.similarity import _ingest_report
 
     return _ingest_report(_latest_epoch(spark.read.parquet(state_dir)))
-
-
-def run_streaming_semdedup_ingest(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """The semantic-dedup admission gate in its CONTINUOUS form:
-    ingested-vector micro-batches assign through the PERSISTED
-    derived-k model (built on the standing corpus by
-    ``build_semdedup_store``, refreshed on the recluster cadence) and
-    land per-epoch admission decisions; the report reads the merged
-    state. Decisions read only the vector + persisted state, so any
-    micro-batching yields the one-shot gate's audit byte-for-byte."""
-    stream = _file_stream(
-        spark, EMB_SCHEMA, input_dir, max_files_per_trigger, provenance=True
-    )
-    _drain(
-        stream.writeStream.outputMode("append").foreachBatch(
-            lambda batch_df, epoch_id: semdedup_ingest_update(
-                batch_df, store_dir, state_dir, epoch_id
-            )
-        ),
-        checkpoint_dir,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1241,26 +1066,25 @@ def refit_assign_batch(batch_df: DataFrame, store_dir: str) -> DataFrame:
     )
 
 
-def refit_state_update(
-    batch_df: DataFrame, store_dir: str, state_dir: str, epoch_id: int
-) -> None:
-    """One micro-batch of the continuous refit-serving loop: assign the
-    batch under the persisted model and land
-    (vec_id, embedding, centroid_id, src_file) with ``_write_epoch``,
-    provenance from ``_with_src_file``, one deterministic row per
-    vec_id per batch (r11 ADVICE #2). Assignments read only persisted
-    state, so a same-epoch replay lands byte-identical rows. The state
-    row carries the embedding because it IS the serving table — the
-    re-rank reads raw vectors, so the assignment store is the
-    (vector, list) inverted index a production IVF server maintains."""
-    batch_df = _one_row_per_vec(_with_src_file(batch_df, epoch_id))
-    _write_epoch(
-        refit_assign_batch(batch_df, store_dir)
-        .join(batch_df.select("vec_id", "embedding", "src_file"), "vec_id")
-        .select("vec_id", "embedding", "centroid_id", "src_file"),
-        state_dir,
-        epoch_id,
-    )
+def refit_step(store_dir: str) -> Callable[[DataFrame], DataFrame]:
+    """The refit-serving step: assign the batch under the persisted
+    model (``build_refit_store`` — the swap; refreshed on the refit
+    cadence) and return (vec_id, embedding, centroid_id, src_file).
+    Assignments read only persisted state, so a same-epoch replay
+    lands byte-identical rows. The state row carries the embedding
+    because it IS the serving table — the re-rank reads raw vectors,
+    so the assignment store is the (vector, list) inverted index a
+    production IVF server maintains; ``streaming_refit_serve_report``
+    answers queries over it."""
+
+    def step(batch_df: DataFrame) -> DataFrame:
+        return (
+            refit_assign_batch(batch_df, store_dir)
+            .join(batch_df.select("vec_id", "embedding", "src_file"), "vec_id")
+            .select("vec_id", "embedding", "centroid_id", "src_file")
+        )
+
+    return step
 
 
 def streaming_refit_serve_report(
@@ -1296,32 +1120,4 @@ def streaming_refit_serve_report(
         merged.select("vec_id", "embedding"),
         _refit_rolled(spark, store_dir),
         k,
-    )
-
-
-def run_streaming_refit_serve(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """The refit-serving swap in its CONTINUOUS form: corpus
-    micro-batches are assigned under the PERSISTED refit model (built
-    once by ``build_refit_store`` — the swap; refreshed on the refit
-    cadence) into the per-epoch serving state;
-    ``streaming_refit_serve_report`` answers queries over the drained
-    index. Assignment reads only the vector + the persisted model, so
-    any micro-batching yields the batch query's report byte-for-byte."""
-    stream = _file_stream(
-        spark, EMB_SCHEMA, input_dir, max_files_per_trigger, provenance=True
-    )
-    _drain(
-        stream.writeStream.outputMode("append").foreachBatch(
-            lambda batch_df, epoch_id: refit_state_update(
-                batch_df, store_dir, state_dir, epoch_id
-            )
-        ),
-        checkpoint_dir,
     )

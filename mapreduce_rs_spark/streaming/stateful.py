@@ -224,7 +224,7 @@ def stateful_latest_state(stream: DataFrame) -> DataFrame:
 # the sketch is mergeable (union + re-take the k smallest), so
 # cross-batch state maintenance IS the merge. State is bounded at k
 # rows per type FOREVER; no watermark needed (the sketch, not time,
-# bounds it — the streaming_cms/streaming_hll discipline).
+# bounds it — the cms_counters/hll_registers discipline).
 from mapreduce_rs_spark.operators.events import (  # noqa: E402
     QSKETCH_K as QSK_K,
     QSKETCH_QUANTILES_BP as QSK_QUANTILES_BP,

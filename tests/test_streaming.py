@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_rs_spark.sources.catalog import load_table
-from mapreduce_rs_spark.streaming import run_windowed_stream
+from mapreduce_rs_spark.streaming import run_stream, streaming_tumbling_counts
 
 
 @pytest.fixture(scope="module")
@@ -16,7 +16,7 @@ def stream_dirs(spark, sf_dir, tmp_path_factory):
     base = tmp_path_factory.mktemp("stream")
     inp, outp, ckpt = str(base / "in"), str(base / "out"), str(base / "ckpt")
     load_table(spark, sf_dir, "events").write.parquet(inp)
-    run_windowed_stream(spark, inp, outp, ckpt)
+    run_stream(spark, streaming_tumbling_counts, inp, ckpt, path=outp)
     return inp, outp, ckpt
 
 
@@ -51,7 +51,8 @@ def test_stream_matches_batch_for_closed_windows(spark, sf_dir, stream_dirs):
 def test_stream_restart_is_exactly_once(spark, stream_dirs):
     inp, outp, ckpt = stream_dirs
     before = spark.read.parquet(outp).count()
-    run_windowed_stream(spark, inp, outp, ckpt)  # same checkpoint: no-op
+    # same checkpoint: no-op
+    run_stream(spark, streaming_tumbling_counts, inp, ckpt, path=outp)
     assert spark.read.parquet(outp).count() == before
 
 
@@ -88,29 +89,19 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
     in one availableNow pass (no cross-batch watermark races)."""
     from pyspark.sql import functions as F  # noqa: F811
 
-    from mapreduce_rs_spark.streaming.pipeline import (
-        EVENT_SCHEMA,
-        streaming_click_purchase_join,
-    )
+    from mapreduce_rs_spark.streaming.pipeline import streaming_click_purchase_join
 
     inp, outp, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
     events = load_table(spark, sf_dir, "events")
     events.write.parquet(inp)
 
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(inp)
-    joined = streaming_click_purchase_join(
-        stream.where(F.col("event_type") == "click"),
-        stream.where(F.col("event_type") == "purchase"),
-    )
-    (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", outp)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    def joined(stream):
+        return streaming_click_purchase_join(
+            stream.where(F.col("event_type") == "click"),
+            stream.where(F.col("event_type") == "purchase"),
+        )
+
+    run_stream(spark, joined, inp, ckpt, path=outp)
     got = {
         (r["purchase_id"], r["click_id"])
         for r in spark.read.parquet(outp).collect()
@@ -137,7 +128,7 @@ def test_streaming_dedup_drops_replayed_events(spark, sf_dir, tmp_path):
     """dropDuplicatesWithinWatermark: a replayed batch (at-least-once
     source behavior) must not produce duplicate rows downstream, while
     state stays bounded by the watermark."""
-    from mapreduce_rs_spark.streaming.pipeline import EVENT_SCHEMA, streaming_dedup
+    from mapreduce_rs_spark.streaming.pipeline import streaming_dedup
 
     inp, outp, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
     events = load_table(spark, sf_dir, "events").limit(200)
@@ -145,17 +136,7 @@ def test_streaming_dedup_drops_replayed_events(spark, sf_dir, tmp_path):
     events.write.parquet(inp)
     events.write.mode("append").parquet(inp)
 
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(inp)
-    (
-        streaming_dedup(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", outp)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_stream(spark, streaming_dedup, inp, ckpt, path=outp)
     got = spark.read.parquet(outp)
     assert got.count() == 200
     assert got.select("event_id").distinct().count() == 200
@@ -170,7 +151,7 @@ def test_late_data_beyond_watermark_is_dropped(spark, sf_dir, tmp_path):
     inp, outp, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
     events = load_table(spark, sf_dir, "events")
     events.write.parquet(inp)
-    run_windowed_stream(spark, inp, outp, ckpt)
+    run_stream(spark, streaming_tumbling_counts, inp, ckpt, path=outp)
     before = {
         (r["window_start"], r["event_type"]): r["n_events"]
         for r in spark.read.parquet(outp).collect()
@@ -184,7 +165,7 @@ def test_late_data_beyond_watermark_is_dropped(spark, sf_dir, tmp_path):
         schema=events.schema,
     )
     straggler.write.mode("append").parquet(inp)
-    run_windowed_stream(spark, inp, outp, ckpt)
+    run_stream(spark, streaming_tumbling_counts, inp, ckpt, path=outp)
     after = {
         (r["window_start"], r["event_type"]): r["n_events"]
         for r in spark.read.parquet(outp).collect()
@@ -195,12 +176,12 @@ def test_late_data_beyond_watermark_is_dropped(spark, sf_dir, tmp_path):
 
 
 def test_streaming_ohlc_matches_batch(spark, sf_dir, tmp_path):
-    from mapreduce_rs_spark.streaming.pipeline import run_ohlc_stream
+    from mapreduce_rs_spark.streaming.pipeline import streaming_ohlc
 
     inp, outp, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
     events = load_table(spark, sf_dir, "events")
     events.write.parquet(inp)
-    run_ohlc_stream(spark, inp, outp, ckpt)
+    run_stream(spark, streaming_ohlc, inp, ckpt, path=outp)
     streamed = spark.read.parquet(outp)
     order_key = F.struct("ts", "event_id")
     batch = (
@@ -242,12 +223,12 @@ def test_streaming_sessions_match_batch(spark, sf_dir, tmp_path):
     import datetime
 
     from mapreduce_rs_spark.operators.events import session_window_stats
-    from mapreduce_rs_spark.streaming.pipeline import run_session_stream
+    from mapreduce_rs_spark.streaming.pipeline import streaming_sessions
 
     inp, outp, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
     events = load_table(spark, sf_dir, "events")
     events.write.parquet(inp)
-    run_session_stream(spark, inp, outp, ckpt)
+    run_stream(spark, streaming_sessions, inp, ckpt, path=outp)
     key = lambda r: (r["user_id"], r["session_start"])  # noqa: E731
     s = {
         key(r): (r["session_end"], r["n_events"], r["sum_value"])
@@ -275,13 +256,18 @@ def test_streaming_trend_state_matches_batch_bitwise(spark, sf_dir, tmp_path):
     closed-form fit incrementally maintainable online."""
     import struct as _struct
 
-    from mapreduce_rs_spark.operators.events import trend_from_sums, user_value_trend
-    from mapreduce_rs_spark.streaming.pipeline import run_trend_stream
+    from mapreduce_rs_spark.operators.events import (
+        trend_from_sums,
+        trend_sums,
+        user_value_trend,
+    )
 
     inp, ckpt = str(tmp_path / "in"), str(tmp_path / "ck")
     events = load_table(spark, sf_dir, "events")
     events.repartition(4).write.parquet(inp)  # several input files
-    run_trend_stream(spark, inp, ckpt, "trend_state", max_files_per_trigger=1)
+    run_stream(
+        spark, trend_sums, inp, ckpt, query_name="trend_state", max_files_per_trigger=1
+    )
     streamed_fit = trend_from_sums(spark.table("trend_state"))
     batch_fit = user_value_trend({"events": events})
 
@@ -309,12 +295,13 @@ def test_streaming_hll_registers_match_batch(spark, sf_dir, tmp_path):
     bit-for-bit — the oracle-checked hll_distinct_users covers that
     arithmetic."""
     from mapreduce_rs_spark.operators.events import hll_registers
-    from mapreduce_rs_spark.streaming.pipeline import run_hll_stream
 
     inp, ckpt = str(tmp_path / "in"), str(tmp_path / "ck")
     events = load_table(spark, sf_dir, "events")
     events.repartition(4).write.parquet(inp)
-    run_hll_stream(spark, inp, ckpt, "hll_regs", max_files_per_trigger=1)
+    run_stream(
+        spark, hll_registers, inp, ckpt, query_name="hll_regs", max_files_per_trigger=1
+    )
     streamed = sorted(map(tuple, spark.table("hll_regs").collect()))
     batch = sorted(map(tuple, hll_registers(events).collect()))
     assert streamed, "stream produced no registers"
@@ -337,12 +324,20 @@ def test_streaming_cms_counters_match_batch(spark, sf_dir, tmp_path):
         cms_counters,
         explode_tokens,
     )
-    from mapreduce_rs_spark.streaming.pipeline import run_cms_stream
+    from mapreduce_rs_spark.streaming.pipeline import DOC_SCHEMA
 
     inp, ckpt = str(tmp_path / "in"), str(tmp_path / "ck")
     docs = load_table(spark, sf_dir, "documents")
     docs.repartition(4).write.parquet(inp)
-    run_cms_stream(spark, inp, ckpt, "cms_counters", max_files_per_trigger=1)
+    run_stream(
+        spark,
+        cms_counters,
+        inp,
+        ckpt,
+        query_name="cms_counters",
+        schema=DOC_SCHEMA,
+        max_files_per_trigger=1,
+    )
     streamed = sorted(map(tuple, spark.table("cms_counters").collect()))
     batch = sorted(map(tuple, cms_counters(docs).collect()))
     assert streamed, "stream produced no counters"

@@ -26,6 +26,7 @@ from mapreduce_rs_spark.sources.catalog import load_table
 from mapreduce_rs_spark.streaming.pipeline import (
     EVENT_SCHEMA,
     run_foreach_batch_upsert,
+    run_stream,
     streaming_click_purchase_join,
     streaming_dedup,
     streaming_ohlc,
@@ -51,18 +52,6 @@ def frame_hash(df) -> str:
     return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
-def _drain(df_stream, outp: str, ckpt: str, mode: str = "append") -> None:
-    (
-        df_stream.writeStream.outputMode(mode)
-        .format("parquet")
-        .option("path", outp)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
 def _finalized_windows(events, hours: int = 1, wm_hours: int = 2):
     """Append mode emits exactly the windows finalized at the terminal
     watermark (max event time - watermark): window_start + size <= wm.
@@ -72,10 +61,16 @@ def _finalized_windows(events, hours: int = 1, wm_hours: int = 2):
     return final_wm - datetime.timedelta(hours=hours)
 
 
+def _click_purchase_join(stream):
+    return streaming_click_purchase_join(
+        stream.where(F.col("event_type") == "click"),
+        stream.where(F.col("event_type") == "purchase"),
+    )
+
+
 def _tumbling_case(spark, events, inp, tmp):
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(inp)
     outp, ckpt = str(tmp / "out"), str(tmp / "ckpt")
-    _drain(streaming_tumbling_counts(stream), outp, ckpt)
+    run_stream(spark, streaming_tumbling_counts, inp, ckpt, path=outp)
     got = spark.read.parquet(outp)
     cutoff = _finalized_windows(events)
     batch = (
@@ -94,25 +89,16 @@ def _tumbling_case(spark, events, inp, tmp):
 def _dedup_case(spark, events, inp, tmp):
     # the input was written TWICE (source replay); the batch twin is
     # plain exact dedup over the doubled input
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(inp)
     outp, ckpt = str(tmp / "out"), str(tmp / "ckpt")
-    _drain(streaming_dedup(stream), outp, ckpt)
+    run_stream(spark, streaming_dedup, inp, ckpt, path=outp)
     got = spark.read.parquet(outp)
     batch = spark.read.parquet(inp).dropDuplicates(["event_id"])
     return got, batch
 
 
 def _join_case(spark, events, inp, tmp):
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(inp)
     outp, ckpt = str(tmp / "out"), str(tmp / "ckpt")
-    _drain(
-        streaming_click_purchase_join(
-            stream.where(F.col("event_type") == "click"),
-            stream.where(F.col("event_type") == "purchase"),
-        ),
-        outp,
-        ckpt,
-    )
+    run_stream(spark, _click_purchase_join, inp, ckpt, path=outp)
     got = spark.read.parquet(outp)
     clicks = events.where(F.col("event_type") == "click").select(
         F.col("user_id").alias("cu"),
@@ -155,9 +141,8 @@ def _upsert_case(spark, events, inp, tmp):
 
 
 def _sessions_case(spark, events, inp, tmp):
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(inp)
     outp, ckpt = str(tmp / "out"), str(tmp / "ckpt")
-    _drain(streaming_sessions(stream), outp, ckpt)
+    run_stream(spark, streaming_sessions, inp, ckpt, path=outp)
     got = spark.read.parquet(outp)
     cutoff = _finalized_windows(events, hours=0)
     batch = (
@@ -181,9 +166,8 @@ def _sessions_case(spark, events, inp, tmp):
 
 
 def _ohlc_case(spark, events, inp, tmp):
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(inp)
     outp, ckpt = str(tmp / "out"), str(tmp / "ckpt")
-    _drain(streaming_ohlc(stream), outp, ckpt)
+    run_stream(spark, streaming_ohlc, inp, ckpt, path=outp)
     got = spark.read.parquet(outp)
     cutoff = _finalized_windows(events)
     order_key = F.struct("ts", "event_id")
@@ -288,8 +272,7 @@ def _drain_arrivals(spark, tmp_path, arrivals, op) -> "DataFrame":
     os.makedirs(inp, exist_ok=True)
     for i, frame in enumerate(arrivals):
         frame.coalesce(1).write.mode("append").parquet(inp)
-        stream = spark.readStream.schema(EVENT_SCHEMA).parquet(inp)
-        _drain(op(stream), outp, ckpt)
+        run_stream(spark, op, inp, ckpt, path=outp)
     return spark.read.parquet(outp)
 
 
@@ -443,14 +426,11 @@ def _late_join(spark, tmp_path):
         (22, _h(60.0), 97, "purchase", 0.25), # flush advancer
     ]
 
-    def op(stream):
-        return streaming_click_purchase_join(
-            stream.where(F.col("event_type") == "click"),
-            stream.where(F.col("event_type") == "purchase"),
-        )
-
     got = _drain_arrivals(
-        spark, tmp_path, [_ev_frame(spark, b) for b in (b0, b1, b2)], op
+        spark,
+        tmp_path,
+        [_ev_frame(spark, b) for b in (b0, b1, b2)],
+        _click_purchase_join,
     )
     kept = _ev_frame(spark, b0 + b1 + b2).where(
         ~F.col("event_id").isin([10, 12])  # the two watermark drops
@@ -554,82 +534,213 @@ def test_streaming_late_data_hash_matches_nonlate_batch_twin(
     assert frame_hash(got) == frame_hash(batch), f"{case}: hash mismatch"
 
 
-def test_streaming_ivf_maintenance_matches_batch_after_multibatch_drain(
-    spark, sf_dir, tmp_path
-):
-    """r08 verdict #7: the IVF maintenance aggregate's streaming twin.
-    The embeddings corpus arrives as FORCED multiple micro-batches
-    (one file per trigger); the merged per-epoch integer partials must
-    roll up to the batch ivf_index_maintenance output bit-for-bit
-    (integer sums are batching-independent — the mergeability the
-    sketch families already prove). A replayed epoch (sink wrote,
-    offset commit lost) must overwrite its own partials, not
-    double-count them."""
+# ---------------------------------------------------------------------------
+# Store-backed ingest loops (IVF maintenance, graph admission,
+# decontamination, semdedup admission, refit serving): ONE loop,
+# ``run_ingest_loop``, differing only in its step. Every case runs the
+# same skeleton — a forced multi-epoch drain (one file per trigger),
+# a re-drain of the same checkpoint, a true same-epoch replay of epoch 0
+# with the file its checkpoint source log assigned it, a later-epoch
+# re-delivery of that file — and after each, the drained report must
+# hash-equal the batch twin.
+# ---------------------------------------------------------------------------
+
+
+def _ivf_loop(spark, emb, store):
+    """r08 verdict #7: the merged per-epoch integer partials roll up to
+    the batch ivf_index_maintenance output bit-for-bit (integer sums
+    are batching-independent); a replay or re-delivery double-count
+    would shift every n_before/n_new."""
     from mapreduce_rs_spark.operators.similarity import ivf_index_maintenance
     from mapreduce_rs_spark.streaming.pipeline import (
-        ivf_state_update,
-        run_streaming_ivf_maintenance,
+        ivf_step,
         streaming_ivf_state_report,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    inp = str(tmp_path / "in")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ck")
-    # land the corpus as 4 files -> 4 micro-batches under
-    # maxFilesPerTrigger=1 (multi-batch is the point of the test)
-    emb.select("vec_id", "embedding").repartition(4).write.parquet(inp)
-    run_streaming_ivf_maintenance(
-        spark, inp, state, ckpt, max_files_per_trigger=1
+    return dict(
+        ingest=emb.select("vec_id", "embedding"),
+        files=4,
+        min_epochs=3,
+        step=ivf_step,
+        report=lambda state: streaming_ivf_state_report(spark, state),
+        batch=ivf_index_maintenance(emb),
     )
-    import glob as _glob
-    import os as _os
 
-    epochs = _glob.glob(_os.path.join(state, "epoch=*"))
-    assert len(epochs) >= 3, f"expected a multi-batch drain, got {epochs}"
 
-    got = streaming_ivf_state_report(spark, state)
-    batch = ivf_index_maintenance(emb)
+def _graph_loop(spark, emb, store):
+    """Micro-batched vectors beam-searched against the PERSISTED
+    standing artifacts produce the batch admission core's edges
+    byte-for-byte (admissions read only standing state)."""
+    from mapreduce_rs_spark.streaming.pipeline import (
+        admitted_edges_from_store,
+        build_graph_store,
+        graph_step,
+        read_admitted_edges,
+    )
+
+    build_graph_store(spark, emb.where(F.col("vec_id") % 10 < 8), store)
+    new = emb.where(F.col("vec_id") % 10 >= 8).select("vec_id", "embedding")
+    batch = admitted_edges_from_store(new, store)
+
+    def redelivered(state):
+        # the raw table holds two epochs of the re-delivered q_ids; the
+        # reader merges them latest-wins
+        raw = spark.read.parquet(state).select("q_id", "cand", "cs")
+        assert raw.count() > batch.count()
+
+    return dict(
+        ingest=new,
+        files=3,
+        min_epochs=2,
+        step=graph_step(store),
+        report=lambda state: read_admitted_edges(spark, state),
+        batch=batch,
+        redelivered=redelivered,
+    )
+
+
+def _decon_loop(spark, emb, store):
+    """r10 verdict #5: semantic_decontaminate_fixed's streaming twin —
+    every train vector scores against the PERSISTED fixed eval
+    artifact, so the merged flag state replays the batch top-k report
+    bit-for-bit."""
+    from mapreduce_rs_spark.operators.similarity import (
+        semantic_decontaminate_fixed,
+    )
+    from mapreduce_rs_spark.streaming.pipeline import (
+        build_decon_store,
+        decon_step,
+        streaming_decon_report,
+    )
+
+    build_decon_store(spark, emb, store)
+    return dict(
+        ingest=emb.select("vec_id", "embedding"),
+        files=4,
+        min_epochs=3,
+        step=decon_step(store),
+        report=lambda state: streaming_decon_report(spark, state),
+        batch=semantic_decontaminate_fixed(emb),
+    )
+
+
+def _semdedup_loop(spark, emb, store):
+    """r10 verdict #5: semdedup_derived_k's ingest twin — the derived-k
+    model is fit once on the STANDING corpus and persisted; the drained
+    audit equals the one-shot gate over the whole ingest split."""
+    from mapreduce_rs_spark.streaming.pipeline import (
+        build_semdedup_store,
+        semdedup_admit_batch,
+        semdedup_step,
+        streaming_semdedup_ingest_report,
+    )
+
+    emb = emb.select("vec_id", "embedding")
+    build_semdedup_store(spark, emb.where(F.col("vec_id") % 10 < 8), store)
+    ingest = emb.where(F.col("vec_id") % 10 >= 8)
+    oneshot = semdedup_admit_batch(ingest, store)
+    # the gate must be non-vacuous on the shipped corpus: some vectors
+    # dropped, some admitted
+    tot = oneshot.agg(
+        F.sum("is_dropped").alias("d"), F.count(F.lit(1)).alias("n")
+    ).collect()[0]
+    assert 0 < tot["d"] < tot["n"], f"vacuous gate: {tot}"
+    return dict(
+        ingest=ingest,
+        files=3,
+        min_epochs=2,
+        step=semdedup_step(store),
+        report=lambda state: streaming_semdedup_ingest_report(spark, state),
+        batch=_ingest_report(oneshot),
+    )
+
+
+def _refit_loop(spark, emb, store):
+    """r11 verdict #3: knn_ivf_refit's streaming twin — corpus
+    micro-batches assigned under the PERSISTED refit model; the drained
+    serve report answers the capped query set exactly as the
+    self-contained batch query does."""
+    from mapreduce_rs_spark.operators.similarity import knn_ivf_refit
+    from mapreduce_rs_spark.streaming.pipeline import (
+        build_refit_store,
+        refit_step,
+        streaming_refit_serve_report,
+    )
+
+    emb = emb.select("vec_id", "embedding")
+    build_refit_store(spark, emb, store)
+    return dict(
+        ingest=emb,
+        files=4,
+        min_epochs=3,
+        step=refit_step(store),
+        report=lambda state: streaming_refit_serve_report(spark, state, store),
+        batch=knn_ivf_refit(emb),
+    )
+
+
+STORE_LOOPS = {
+    "ivf": _ivf_loop,
+    "graph": _graph_loop,
+    "decon": _decon_loop,
+    "semdedup": _semdedup_loop,
+    "refit": _refit_loop,
+}
+
+
+@pytest.mark.parametrize("loop", sorted(STORE_LOOPS))
+def test_store_loop_drain_matches_batch_twin(spark, sf_dir, tmp_path, loop):
+    import glob
+    import json
+
+    from mapreduce_rs_spark.streaming.pipeline import ingest_epoch, run_ingest_loop
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    inp, store = str(tmp_path / "in"), str(tmp_path / "store")
+    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ck")
+    case = STORE_LOOPS[loop](spark, emb, store)
+    batch, step = case["batch"], case["step"]
+    case["ingest"].repartition(case["files"]).write.parquet(inp)
+
+    def drain():
+        run_ingest_loop(spark, inp, state, ckpt, step, max_files_per_trigger=1)
+
+    def assert_report_matches():
+        assert frame_hash(case["report"](state)) == frame_hash(batch)
+
+    drain()
+    epochs = glob.glob(os.path.join(state, "epoch=*"))
+    assert len(epochs) >= case["min_epochs"], f"not a multi-batch drain: {epochs}"
+    got = case["report"](state)
     assert sorted(got.columns) == sorted(batch.columns)
+    assert got.count() == batch.count() > 0
     assert frame_hash(got) == frame_hash(batch)
 
-    # restart idempotency 1: re-drain the same checkpoint with no new
+    # restart idempotency: re-drain the same checkpoint with no new
     # files — no new epochs, report unchanged
-    run_streaming_ivf_maintenance(
-        spark, inp, state, ckpt, max_files_per_trigger=1
-    )
-    assert frame_hash(streaming_ivf_state_report(spark, state)) == frame_hash(batch)
+    drain()
+    assert_report_matches()
 
-    # restart idempotency 2: simulate the replay window (sink write
-    # landed, offset commit lost) by re-running one epoch's update
-    # directly with the exact file the checkpoint's file-source log
-    # assigned it — the per-epoch OVERWRITE must land byte-identical
-    # partials, leaving the merged report unmoved (the double-count
-    # this guards against would shift every n_before/n_new)
-    import json as _json
-
-    src_log = _os.path.join(ckpt, "sources", "0", "0")
-    with open(src_log) as fh:
-        entries = [
-            _json.loads(line)
-            for line in fh
-            if line.strip().startswith("{")
-        ]
+    # true same-epoch replay (sink write landed, offset commit lost):
+    # re-run epoch 0 with the exact file the checkpoint's file-source
+    # log assigned it — the per-epoch overwrite lands byte-identical rows
+    with open(os.path.join(ckpt, "sources", "0", "0")) as fh:
+        entries = [json.loads(line) for line in fh if line.strip().startswith("{")]
     epoch0_files = [e["path"] for e in entries]
     assert len(epoch0_files) == 1  # maxFilesPerTrigger=1
-    ivf_state_update(spark.read.parquet(*epoch0_files), state, 0)
-    assert frame_hash(streaming_ivf_state_report(spark, state)) == frame_hash(batch)
+    ingest_epoch(spark.read.parquet(*epoch0_files), state, 0, step)
+    assert_report_matches()
 
-    # re-delivery idempotency (ADVICE r09): the SAME file path arrives
-    # again in a LATER epoch (forced reprocess / re-picked-up input) —
-    # the reader's latest-epoch-wins-per-src_file merge must read it as
-    # ONE logical contribution; a blind sum would double-count every
-    # n_before/n_new for that file's vectors
-    ivf_state_update(spark.read.parquet(*epoch0_files), state, 99)
-    assert frame_hash(streaming_ivf_state_report(spark, state)) == frame_hash(batch)
+    # upstream re-delivery: the SAME file in a LATER epoch reads as ONE
+    # logical contribution (latest-epoch-wins per src_file, or per q_id
+    # for the edge table)
+    ingest_epoch(spark.read.parquet(*epoch0_files), state, 99, step)
+    if "redelivered" in case:
+        case["redelivered"](state)
+    assert_report_matches()
 
 
-def test_ivf_state_update_accepts_non_file_backed_batch(spark, sf_dir, tmp_path):
+def test_ingest_epoch_accepts_non_file_backed_batch(spark, sf_dir, tmp_path):
     """r10 ADVICE #2a: a direct caller whose micro-batch is NOT
     file-backed (createDataFrame — no resolvable ``_metadata``) must get
     an epoch-qualified sentinel src_file, not an AnalysisException; two
@@ -637,7 +748,8 @@ def test_ivf_state_update_accepts_non_file_backed_batch(spark, sf_dir, tmp_path)
     sentinels are epoch-unique) and roll up to the batch aggregate."""
     from mapreduce_rs_spark.operators.similarity import ivf_index_maintenance
     from mapreduce_rs_spark.streaming.pipeline import (
-        ivf_state_update,
+        ingest_epoch,
+        ivf_step,
         streaming_ivf_state_report,
     )
 
@@ -649,8 +761,8 @@ def test_ivf_state_update_accepts_non_file_backed_batch(spark, sf_dir, tmp_path)
         emb.where(F.col("vec_id") % 2 == 1).toPandas(), schema=emb.schema
     )
     state = str(tmp_path / "state")
-    ivf_state_update(half_a, state, 0)
-    ivf_state_update(half_b, state, 1)
+    ingest_epoch(half_a, state, 0, ivf_step)
+    ingest_epoch(half_b, state, 1, ivf_step)
     got = streaming_ivf_state_report(spark, state)
     batch = ivf_index_maintenance(load_table(spark, sf_dir, "embeddings"))
     assert frame_hash(got) == frame_hash(batch)
@@ -672,7 +784,8 @@ def test_ivf_state_report_reads_legacy_pre_provenance_state(
         ivf_maintenance_partials,
     )
     from mapreduce_rs_spark.streaming.pipeline import (
-        ivf_state_update,
+        ingest_epoch,
+        ivf_step,
         streaming_ivf_state_report,
     )
 
@@ -687,90 +800,22 @@ def test_ivf_state_report_reads_legacy_pre_provenance_state(
     # one NEW epoch through the current writer (file-backed: provenance)
     new_in = str(tmp_path / "new_in")
     emb.where(F.col("vec_id") % 3 == 2).write.parquet(new_in)
-    ivf_state_update(spark.read.parquet(new_in), state, 2)
+    ingest_epoch(spark.read.parquet(new_in), state, 2, ivf_step)
     got = streaming_ivf_state_report(spark, state)
     batch = ivf_index_maintenance(load_table(spark, sf_dir, "embeddings"))
     assert frame_hash(got) == frame_hash(batch)
 
 
-def test_streaming_graph_ingest_matches_batch_admission(spark, sf_dir, tmp_path):
-    """The graph tier's continuous admission loop: micro-batched
-    vectors beam-searched against the PERSISTED standing artifacts must
-    produce the batch admission core's edges byte-for-byte (admissions
-    read only standing state, so batching cannot move an edge), and a
-    re-drain on the same checkpoint plus a simulated half-committed
-    replay must not duplicate edge rows."""
-    from mapreduce_rs_spark.streaming.pipeline import (
-        admitted_edges_from_store,
-        build_graph_store,
-        graph_ingest_update,
-        run_streaming_graph_ingest,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    standing = emb.where(F.col("vec_id") % 10 < 8)
-    new = emb.where(F.col("vec_id") % 10 >= 8).select("vec_id", "embedding")
-    inp = str(tmp_path / "in")
-    store = str(tmp_path / "store")
-    edges_dir = str(tmp_path / "edges")
-    ckpt = str(tmp_path / "ck")
-    build_graph_store(spark, standing, store)
-    new.repartition(3).write.parquet(inp)
-    run_streaming_graph_ingest(
-        spark, inp, store, edges_dir, ckpt, max_files_per_trigger=1
-    )
-    from mapreduce_rs_spark.streaming.pipeline import read_admitted_edges
-
-    # the reader contract: per-epoch directories merged latest-wins
-    got = read_admitted_edges(spark, edges_dir)
-
-    # batch twin: the SAME admission step over the whole new split at
-    # once, against the same persisted artifacts
-    batch = admitted_edges_from_store(new, store)
-    assert got.count() == batch.count() > 0
-    assert frame_hash(got) == frame_hash(batch)
-
-    # re-drain, no new files: no new epochs, table unchanged
-    run_streaming_graph_ingest(
-        spark, inp, store, edges_dir, ckpt, max_files_per_trigger=1
-    )
-    assert frame_hash(read_admitted_edges(spark, edges_dir)) == frame_hash(batch)
-
-    # simulated replay (sink write landed, offset commit lost): re-run
-    # epoch 0's update with the exact file the checkpoint's source log
-    # assigned it — the overwrite lands byte-identical edges and the
-    # table must not move
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(ckpt, "sources", "0", "0")) as fh:
-        entries = [
-            _json.loads(line) for line in fh if line.strip().startswith("{")
-        ]
-    assert len(entries) == 1  # maxFilesPerTrigger=1
-    graph_ingest_update(
-        spark.read.parquet(entries[0]["path"]), store, edges_dir, 0
-    )
-    assert frame_hash(read_admitted_edges(spark, edges_dir)) == frame_hash(batch)
-
-    # upstream RE-DELIVERY (same vec_ids in a NEW file -> a new epoch):
-    # the raw table now holds two epochs of those q_ids, but the reader
-    # merges latest-wins, so the logical table is unchanged
-    graph_ingest_update(spark.read.parquet(entries[0]["path"]), store, edges_dir, 99)
-    raw = spark.read.parquet(edges_dir).select("q_id", "cand", "cs")
-    assert raw.count() > batch.count()  # duplicates exist in the raw layout
-    assert frame_hash(read_admitted_edges(spark, edges_dir)) == frame_hash(batch)
-
-
 def test_first_batch_store_probe_swallows_only_missing_store(spark, tmp_path):
-    """ADVICE r09: the near-dup loop's first-batch store probe must
-    swallow ONLY the genuine empty-store conditions (PATH_NOT_FOUND,
-    UNABLE_TO_INFER_SCHEMA on a created-but-empty dir) — any other
-    AnalysisException (e.g. analysis failure over a corrupted or
-    partially-written store) re-raises so the batch fails and the
-    replay retries instead of silently admitting against an empty
-    corpus view."""
-    from pyspark.errors import AnalysisException
+    """ADVICE r09: the first-batch store probes of the near-dup loop
+    and the upsert sink must swallow ONLY the genuine empty-store
+    conditions (PATH_NOT_FOUND, UNABLE_TO_INFER_SCHEMA on a
+    created-but-empty dir) — any other read error (e.g. analysis
+    failure over a corrupted or partially-written store) re-raises so
+    the batch fails and the replay retries instead of silently
+    admitting against an empty corpus view or overwriting the target
+    with one batch."""
+    from pyspark.errors import AnalysisException, StreamingQueryException
 
     from mapreduce_rs_spark.streaming.pipeline import _is_missing_store
 
@@ -790,6 +835,19 @@ def test_first_batch_store_probe_swallows_only_missing_store(spark, tmp_path):
     with pytest.raises(AnalysisException) as other:
         spark.read.parquet(good).select("no_such_column").collect()
     assert not _is_missing_store(other.value)
+
+    # the upsert sink's target probe: a corrupt part file must fail the
+    # drain and stay in place, not be replaced by this drain's rows
+    inp = str(tmp_path / "events")
+    _ev_frame(spark, _B0).write.parquet(inp)
+    tgt = tmp_path / "tgt"
+    tgt.mkdir()
+    corrupt = tgt / "part-00000-corrupt.snappy.parquet"
+    corrupt.write_bytes(b"not a parquet file")
+    with pytest.raises(StreamingQueryException):
+        run_foreach_batch_upsert(spark, inp, str(tgt), str(tmp_path / "ck"))
+    assert [p.name for p in tgt.iterdir()] == [corrupt.name]
+    assert corrupt.read_bytes() == b"not a parquet file"
 
 
 def test_epoch_state_contract_without_a_stream(spark, tmp_path):
@@ -850,141 +908,6 @@ def test_epoch_state_contract_without_a_stream(spark, tmp_path):
     assert spark.read.parquet(state).count() == raw_state == 5
     assert sorted(map(tuple, read_admitted_edges(spark, edges).collect())) == want_edges
     assert audit() == want_audit
-
-
-def test_streaming_decon_gate_matches_batch_operator(spark, sf_dir, tmp_path):
-    """r10 verdict #5: semantic_decontaminate_fixed's streaming twin.
-    The corpus arrives as forced micro-batches; every train vector
-    scores against the PERSISTED fixed eval artifact per batch; the
-    merged flag state must replay the batch operator's top-k report
-    bit-for-bit (per-vector scores read only the vector + the fixed
-    artifact, so batching cannot move a row). Re-drain, true same-epoch
-    replay, and later-epoch re-delivery must all leave it unmoved."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    from mapreduce_rs_spark.operators.similarity import (
-        semantic_decontaminate_fixed,
-    )
-    from mapreduce_rs_spark.streaming.pipeline import (
-        build_decon_store,
-        decon_state_update,
-        run_streaming_decon_gate,
-        streaming_decon_report,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    store = str(tmp_path / "store")
-    inp = str(tmp_path / "in")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ck")
-    build_decon_store(spark, emb, store)
-    emb.select("vec_id", "embedding").repartition(4).write.parquet(inp)
-    run_streaming_decon_gate(spark, inp, store, state, ckpt, max_files_per_trigger=1)
-    epochs = _glob.glob(_os.path.join(state, "epoch=*"))
-    assert len(epochs) >= 3, f"expected a multi-batch drain, got {epochs}"
-
-    batch = semantic_decontaminate_fixed(emb)
-    got = streaming_decon_report(spark, state)
-    assert sorted(got.columns) == sorted(batch.columns)
-    assert frame_hash(got) == frame_hash(batch)
-
-    # restart idempotency: re-drain the same checkpoint, nothing moves
-    run_streaming_decon_gate(spark, inp, store, state, ckpt, max_files_per_trigger=1)
-    assert frame_hash(streaming_decon_report(spark, state)) == frame_hash(batch)
-
-    # true same-epoch replay: re-run epoch 0 with the exact file its
-    # checkpoint source log assigned it — byte-identical overwrite
-    src_log = _os.path.join(ckpt, "sources", "0", "0")
-    with open(src_log) as fh:
-        entries = [
-            _json.loads(line) for line in fh if line.strip().startswith("{")
-        ]
-    epoch0_files = [e["path"] for e in entries]
-    assert len(epoch0_files) == 1
-    decon_state_update(spark.read.parquet(*epoch0_files), store, state, 0)
-    assert frame_hash(streaming_decon_report(spark, state)) == frame_hash(batch)
-
-    # re-delivery: the SAME file in a LATER epoch reads as ONE logical
-    # contribution (latest-wins per src_file)
-    decon_state_update(spark.read.parquet(*epoch0_files), store, state, 99)
-    assert frame_hash(streaming_decon_report(spark, state)) == frame_hash(batch)
-
-
-def test_streaming_semdedup_ingest_matches_oneshot_gate(spark, sf_dir, tmp_path):
-    """r10 verdict #5: semdedup_derived_k's ingest twin. The derived-k
-    model is fit once on the STANDING corpus (the recluster cadence)
-    and persisted; ingested vectors arrive as forced micro-batches and
-    are admitted iff no standing member of their assigned cluster is
-    within tau. Decisions read only persisted state, so the drained
-    audit must equal the one-shot gate over the whole ingest split
-    bit-for-bit; re-drain, true replay, and re-delivery leave it
-    unmoved."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    from mapreduce_rs_spark.streaming.pipeline import (
-        build_semdedup_store,
-        run_streaming_semdedup_ingest,
-        semdedup_admit_batch,
-        semdedup_ingest_update,
-        streaming_semdedup_ingest_report,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    standing = emb.where(F.col("vec_id") % 10 < 8)
-    ingest = emb.where(F.col("vec_id") % 10 >= 8)
-    store = str(tmp_path / "store")
-    inp = str(tmp_path / "in")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ck")
-    build_semdedup_store(spark, standing, store)
-    ingest.repartition(3).write.parquet(inp)
-    run_streaming_semdedup_ingest(
-        spark, inp, store, state, ckpt, max_files_per_trigger=1
-    )
-    epochs = _glob.glob(_os.path.join(state, "epoch=*"))
-    assert len(epochs) >= 2, f"expected a multi-batch drain, got {epochs}"
-
-    # the one-shot gate over the whole ingest split, rolled to the same
-    # audit shape the report emits
-    oneshot = semdedup_admit_batch(ingest, store)
-    batch_audit = _ingest_report(oneshot)
-    # the gate must be non-vacuous on the shipped corpus: some vectors
-    # dropped, some admitted
-    tot = oneshot.agg(
-        F.sum("is_dropped").alias("d"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    assert 0 < tot["d"] < tot["n"], f"vacuous gate: {tot}"
-
-    got = streaming_semdedup_ingest_report(spark, state)
-    assert sorted(got.columns) == sorted(batch_audit.columns)
-    assert frame_hash(got) == frame_hash(batch_audit)
-
-    run_streaming_semdedup_ingest(
-        spark, inp, store, state, ckpt, max_files_per_trigger=1
-    )
-    assert frame_hash(streaming_semdedup_ingest_report(spark, state)) == frame_hash(
-        batch_audit
-    )
-
-    src_log = _os.path.join(ckpt, "sources", "0", "0")
-    with open(src_log) as fh:
-        entries = [
-            _json.loads(line) for line in fh if line.strip().startswith("{")
-        ]
-    epoch0_files = [e["path"] for e in entries]
-    assert len(epoch0_files) == 1
-    semdedup_ingest_update(spark.read.parquet(*epoch0_files), store, state, 0)
-    assert frame_hash(streaming_semdedup_ingest_report(spark, state)) == frame_hash(
-        batch_audit
-    )
-    semdedup_ingest_update(spark.read.parquet(*epoch0_files), store, state, 99)
-    assert frame_hash(streaming_semdedup_ingest_report(spark, state)) == frame_hash(
-        batch_audit
-    )
 
 
 def test_semdedup_admit_batch_degenerate_corpus_matches_oneshot(spark, tmp_path):
@@ -1062,24 +985,39 @@ def test_ingest_updates_dedup_vec_id_delivered_twice_in_one_epoch(
     """r11 ADVICE #2: a vec_id delivered in TWO files within a single
     micro-batch must yield ONE decision row (deterministic min-src_file
     copy), not one per copy — otherwise the decon gate's per-vec_id
-    aggregate double-counts its eval hits and the semdedup audit
-    double-counts the vector, diverging from the batch operators that
-    see each vec_id once. Both twins are driven with a direct batch
-    that carries the same vectors under two src_file values."""
+    aggregate double-counts its eval hits, the semdedup audit
+    double-counts the vector, the IVF partials double every
+    n_before/n_new and the graph admission emits every edge twice,
+    diverging from the batch operators that see each vec_id once. Each
+    loop is driven through ``ingest_epoch`` with a direct batch that
+    carries the same vectors under two src_file values."""
     from mapreduce_rs_spark.operators.similarity import (
+        ivf_index_maintenance,
         semantic_decontaminate_fixed,
     )
     from mapreduce_rs_spark.streaming.pipeline import (
+        admitted_edges_from_store,
         build_decon_store,
+        build_graph_store,
         build_semdedup_store,
-        decon_state_update,
+        decon_step,
+        graph_step,
+        ingest_epoch,
+        ivf_step,
+        read_admitted_edges,
         semdedup_admit_batch,
-        semdedup_ingest_update,
+        semdedup_step,
         streaming_decon_report,
+        streaming_ivf_state_report,
         streaming_semdedup_ingest_report,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+
+    def twice(df):
+        return df.withColumn("src_file", F.lit("f1")).union(
+            df.withColumn("src_file", F.lit("f2"))
+        )
 
     # --- semdedup ingest twin ---
     standing = emb.where(F.col("vec_id") % 10 < 8)
@@ -1087,10 +1025,7 @@ def test_ingest_updates_dedup_vec_id_delivered_twice_in_one_epoch(
     sd_store = str(tmp_path / "sd_store")
     sd_state = str(tmp_path / "sd_state")
     build_semdedup_store(spark, standing, sd_store)
-    dup_batch = ingest.withColumn("src_file", F.lit("f1")).union(
-        ingest.withColumn("src_file", F.lit("f2"))
-    )
-    semdedup_ingest_update(dup_batch, sd_store, sd_state, 0)
+    ingest_epoch(twice(ingest), sd_state, 0, semdedup_step(sd_store))
     oneshot = _ingest_report(semdedup_admit_batch(ingest, sd_store))
     got = streaming_semdedup_ingest_report(spark, sd_state)
     assert frame_hash(got) == frame_hash(oneshot)
@@ -1099,74 +1034,23 @@ def test_ingest_updates_dedup_vec_id_delivered_twice_in_one_epoch(
     dc_store = str(tmp_path / "dc_store")
     dc_state = str(tmp_path / "dc_state")
     build_decon_store(spark, emb, dc_store)
-    dup_all = emb.withColumn("src_file", F.lit("f1")).union(
-        emb.withColumn("src_file", F.lit("f2"))
-    )
-    decon_state_update(dup_all, dc_store, dc_state, 0)
+    ingest_epoch(twice(emb), dc_state, 0, decon_step(dc_store))
     batch = semantic_decontaminate_fixed(load_table(spark, sf_dir, "embeddings"))
     assert frame_hash(streaming_decon_report(spark, dc_state)) == frame_hash(batch)
 
+    # --- graph admission twin: the edge set AND its row count equal
+    # single delivery (a per-copy admission repeats every edge) ---
+    g_store = str(tmp_path / "g_store")
+    g_state = str(tmp_path / "g_state")
+    build_graph_store(spark, standing, g_store)
+    ingest_epoch(twice(ingest), g_state, 0, graph_step(g_store))
+    single = admitted_edges_from_store(ingest, g_store).collect()
+    doubled = read_admitted_edges(spark, g_state).collect()
+    assert set(map(tuple, doubled)) == set(map(tuple, single))
+    assert len(doubled) == len(single) > 0
 
-def test_streaming_refit_serve_matches_batch_knn(spark, sf_dir, tmp_path):
-    """r11 verdict #3: knn_ivf_refit's streaming twin — the model
-    lifecycle's serve step under streaming ingest. The swap persists
-    the refit centroid state once; corpus micro-batches are assigned
-    under the PERSISTED model into the serving index; the drained
-    report must answer the capped query set exactly as the
-    self-contained batch query does (same fit engine, same argmax,
-    same re-rank — one definition each), bit-for-bit. Re-drain, true
-    same-epoch replay, and later-epoch re-delivery leave it unmoved."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    from mapreduce_rs_spark.operators.similarity import knn_ivf_refit
-    from mapreduce_rs_spark.streaming.pipeline import (
-        build_refit_store,
-        refit_state_update,
-        run_streaming_refit_serve,
-        streaming_refit_serve_report,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    store = str(tmp_path / "store")
-    inp = str(tmp_path / "in")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ck")
-    build_refit_store(spark, emb, store)
-    emb.repartition(4).write.parquet(inp)
-    run_streaming_refit_serve(spark, inp, store, state, ckpt, max_files_per_trigger=1)
-    epochs = _glob.glob(_os.path.join(state, "epoch=*"))
-    assert len(epochs) >= 3, f"expected a multi-batch drain, got {epochs}"
-
-    batch = knn_ivf_refit(emb)
-    got = streaming_refit_serve_report(spark, state, store)
-    assert sorted(got.columns) == sorted(batch.columns)
-    assert frame_hash(got) == frame_hash(batch)
-
-    # restart idempotency: re-drain the same checkpoint, nothing moves
-    run_streaming_refit_serve(spark, inp, store, state, ckpt, max_files_per_trigger=1)
-    assert frame_hash(streaming_refit_serve_report(spark, state, store)) == frame_hash(
-        batch
-    )
-
-    # true same-epoch replay: re-run epoch 0 with the exact file its
-    # checkpoint source log assigned it — byte-identical overwrite
-    src_log = _os.path.join(ckpt, "sources", "0", "0")
-    with open(src_log) as fh:
-        entries = [
-            _json.loads(line) for line in fh if line.strip().startswith("{")
-        ]
-    epoch0_files = [e["path"] for e in entries]
-    assert len(epoch0_files) == 1
-    refit_state_update(spark.read.parquet(*epoch0_files), store, state, 0)
-    assert frame_hash(streaming_refit_serve_report(spark, state, store)) == frame_hash(
-        batch
-    )
-
-    # re-delivery: the SAME file in a LATER epoch reads as ONE logical
-    # contribution (latest-wins per src_file)
-    refit_state_update(spark.read.parquet(*epoch0_files), store, state, 99)
-    assert frame_hash(streaming_refit_serve_report(spark, state, store)) == frame_hash(
-        batch
-    )
+    # --- IVF maintenance twin ---
+    ivf_state = str(tmp_path / "ivf_state")
+    ingest_epoch(twice(emb), ivf_state, 0, ivf_step)
+    batch = ivf_index_maintenance(load_table(spark, sf_dir, "embeddings"))
+    assert frame_hash(streaming_ivf_state_report(spark, ivf_state)) == frame_hash(batch)

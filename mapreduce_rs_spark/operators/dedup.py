@@ -1162,57 +1162,3 @@ def prefix_filter_jaccard_pairs(
             ).alias("jaccard"),
         )
     )
-
-
-def minhash_lsh_pairs_ml(
-    df: DataFrame,
-    jaccard_max_dist: float = 0.8,
-    num_hash_tables: int = 8,
-    n_features: int = 1 << 18,
-) -> DataFrame:
-    """The MLlib fast path SURVEY §7 reserved: candidate near-dup pairs
-    via ``pyspark.ml.feature.MinHashLSH`` over hashing-trick shingle
-    vectors — Spark's built-in JVM implementation of the same
-    shingle→minhash→band→bucket-join pipeline the deterministic
-    operator (minhash_lsh_pairs) expresses in portable SQL expressions.
-
-    Deliberately NOT oracled: MLlib's permutations use JVM-internal
-    hashes DuckDB cannot replicate, which is exactly why the portable
-    md5 operator is the correctness contract and this is the
-    convenience/perf twin (kept API-compatible: same (doc_a, doc_b)
-    pair grain; ``jaccard_dist`` is MLlib's estimated distance over the
-    hashed feature space). Cross-checked in tests instead: every
-    exact-duplicate pair must surface at distance 0, and the fit is
-    seeded so results are run-deterministic.
-
-    Scale shape: HashingTF is stateless (no vocabulary fit — the
-    hashing trick caps the feature space at n_features regardless of
-    corpus); MinHashLSH's approxSimilarityJoin is the same banded
-    equi-join under the hood, never all-pairs.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    shingled = (
-        ensure_parallelism(df.select("doc_id", "text"), "doc_id")
-        .select("doc_id", F.array_distinct(_shingles()).alias("sh"))
-        .where(F.size("sh") > 0)
-    )
-    tf = HashingTF(
-        inputCol="sh", outputCol="features", numFeatures=n_features, binary=True
-    )
-    feats = tf.transform(shingled)
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
-    )
-    model = lsh.fit(feats)
-    joined = model.approxSimilarityJoin(
-        feats, feats, jaccard_max_dist, distCol="jaccard_dist"
-    )
-    return (
-        joined.where(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-            "jaccard_dist",
-        )
-    )

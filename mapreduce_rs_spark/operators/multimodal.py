@@ -275,15 +275,17 @@ FEATURE_SCHEMA = (
 )
 
 
-def _oracle_ascii_bytes(text: str) -> bytes:
+def _oracle_ascii_bytes(text: str | None) -> bytes:
     """utf-8 bytes of ``text``, asserted pure-ASCII — the synthesis
-    contract guard (ADVICE r08). Every attach_* synthesis derives
-    pixels/samples from utf-8 BYTES, while the DuckDB oracles replay
-    them with per-CHARACTER ``ascii()``/``length()`` — identical only
-    for pure-ASCII text. The shipped corpora and the random-doc probes
+    contract guard (ADVICE r08). A NULL document synthesizes from ''
+    (no bytes), the way the tokenizers read it as no tokens. Every
+    attach_* synthesis derives pixels/samples from utf-8 BYTES, while
+    the DuckDB oracles replay them with per-CHARACTER
+    ``ascii()``/``length()`` — identical only for pure-ASCII text. The shipped corpora and the random-doc probes
     are ASCII by construction; this guard makes a future non-ASCII
     corpus fail LOUDLY at the synthesis site instead of silently
     hash-mismatching the byte-vs-character replay downstream."""
+    text = text or ""
     data = text.encode("utf-8")
     if len(data) != len(text):
         raise ValueError(
@@ -297,14 +299,16 @@ def _oracle_ascii_bytes(text: str) -> bytes:
 def attach_fake_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Synthesize an opaque binary column + metadata struct from text
     (deterministic stand-in for real image bytes). Mirrors how a real
-    pipeline lands multimodal rows: payload + modality + declared dims."""
+    pipeline lands multimodal rows: payload + modality + declared dims.
+    A NULL document synthesizes from ''."""
+    text = F.coalesce(F.col(text_col), F.lit(""))
     return df.select(
         "doc_id",
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
+        F.encode(text, "utf-8").alias("payload"),
         F.struct(
             F.lit("image/fake").alias("content_type"),
-            (F.length(text_col) % 64 + 1).alias("width"),
-            (F.length(text_col) % 48 + 1).alias("height"),
+            (F.length(text) % 64 + 1).alias("width"),
+            (F.length(text) % 48 + 1).alias("height"),
             F.lit(3).alias("n_channels"),
         ).alias("meta"),
     )

@@ -253,6 +253,11 @@ def _pmi_sql(window: int) -> str:
         """
 
 
+# The multimodal oracles' documents: a NULL document synthesizes from
+# '' (no bytes), the way the tokenizers read it as no tokens.
+_SYNTH_DOCS = "(SELECT * REPLACE (coalesce(text, '') AS text) FROM documents) AS documents"
+
+
 def _gif_frames_ctes() -> str:
     """Per-(doc, frame) reconstruction of attach_gif_payload's synthesis
     from raw text, WITHOUT the leading WITH — ends in ``gif_sums``
@@ -262,12 +267,12 @@ def _gif_frames_ctes() -> str:
     plus a prefix-sum difference. Shared by gif_frame_stats AND
     video_frame_sample (the shared-builder rule: an evaluator never
     hand-copies the formula it verifies)."""
-    return """gif_base AS (
+    return f"""gif_base AS (
     SELECT doc_id, text, length(text) AS len,
            CAST(length(text) % 10 + 1 AS INTEGER) AS width,
            CAST(length(text) % 6 + 1 AS INTEGER) AS height,
            CAST(length(text) % 4 + 1 AS INTEGER) AS n_frames
-    FROM documents
+    FROM {_SYNTH_DOCS}
 ), gif_per_frame AS (
     SELECT b.doc_id, b.text, b.len, b.width, b.height,
            CAST(fr.f AS INTEGER) AS frame_idx,
@@ -4306,12 +4311,12 @@ QUERIES: dict[str, QuerySpec] = {
     # (its stub branch is deliberately not SQL-expressible).
     "png_decode_stats": QuerySpec(
         _docs(multimodal.png_decode_stats),
-        """
+        f"""
         WITH base AS (
             SELECT doc_id, text, length(text) AS len,
                    CAST(length(text) % 16 + 1 AS INTEGER) AS width,
                    CAST(length(text) % 12 + 1 AS INTEGER) AS height
-            FROM documents WHERE doc_id % 2 = 0
+            FROM {_SYNTH_DOCS} WHERE doc_id % 2 = 0
         ), sums AS (
             -- empty-text guards: len=0 synthesizes a zero-padded 1x1
             -- image, so every sum term must collapse to 0, not NULL.
@@ -4343,7 +4348,7 @@ QUERIES: dict[str, QuerySpec] = {
             SELECT doc_id, text, length(text) AS len,
                    CAST(length(text) % 16 + 1 AS INTEGER) AS w,
                    CAST(length(text) % 12 + 1 AS INTEGER) AS h
-            FROM documents WHERE doc_id % 2 = 0
+            FROM {_SYNTH_DOCS} WHERE doc_id % 2 = 0
         ), sums AS (
             SELECT doc_id,
                    COALESCE(CAST(list_aggregate(list_transform(range(0, {W * H}),
@@ -4366,12 +4371,12 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "bmp_decode_stats": QuerySpec(
         _docs(multimodal.bmp_decode_stats),
-        """
+        f"""
         WITH base AS (
             SELECT doc_id, text, length(text) AS len,
                    CAST(length(text) % 12 + 1 AS INTEGER) AS width,
                    CAST(length(text) % 8 + 1 AS INTEGER) AS height
-            FROM documents WHERE doc_id % 2 = 1
+            FROM {_SYNTH_DOCS} WHERE doc_id % 2 = 1
         ), sums AS (
             -- empty-text guards as in png_decode_stats.
             SELECT doc_id, width, height,
@@ -4394,13 +4399,13 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "jpeg_decode_stats": QuerySpec(
         _docs(multimodal.jpeg_decode_stats),
-        """
+        f"""
         WITH base AS (
             SELECT doc_id, text, length(text) AS len,
                    CAST((length(text) % 4 + 1) * 8 AS INTEGER) AS width,
                    CAST((length(text) % 3 + 1) * 8 AS INTEGER) AS height,
                    CAST((length(text) % 4 + 1) * (length(text) % 3 + 1) AS INTEGER) AS n_blocks
-            FROM documents
+            FROM {_SYNTH_DOCS}
         ), sums AS (
             -- each constant 8x8 block contributes 64 * its byte value;
             -- block values are the text bytes tiled over n_blocks.
@@ -4425,13 +4430,13 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "wav_decode_stats": QuerySpec(
         _docs(multimodal.wav_decode_stats),
-        """
+        f"""
         WITH base AS (
             SELECT doc_id, text, length(text) AS len,
                    CAST(length(text) % 2 + 1 AS INTEGER) AS n_channels,
                    CAST(length(text) % 48 + 1 AS INTEGER) AS n_frames,
                    CAST(8000 * (length(text) % 3 + 1) AS INTEGER) AS sample_rate
-            FROM documents
+            FROM {_SYNTH_DOCS}
         ), sums AS (
             -- |sample i| = (128 - ascii(byte[i % len])) * 256 for ASCII
             -- text (every sample is negative by construction); tiled
@@ -4510,19 +4515,19 @@ QUERIES: dict[str, QuerySpec] = {
     ),
     "multimodal_features": QuerySpec(
         _docs(multimodal.multimodal_features),
-        """
+        f"""
         WITH png AS (
             SELECT doc_id, text, length(text) AS len,
                    CAST(length(text) % 16 + 1 AS INTEGER) AS width,
                    CAST(length(text) % 12 + 1 AS INTEGER) AS height,
                    1 AS n_channels, 'image/png' AS modality
-            FROM documents WHERE doc_id % 2 = 0
+            FROM {_SYNTH_DOCS} WHERE doc_id % 2 = 0
             UNION ALL
             SELECT doc_id, text, length(text) AS len,
                    CAST(length(text) % 12 + 1 AS INTEGER) AS width,
                    CAST(length(text) % 8 + 1 AS INTEGER) AS height,
                    3 AS n_channels, 'image/bmp' AS modality
-            FROM documents WHERE doc_id % 2 = 1
+            FROM {_SYNTH_DOCS} WHERE doc_id % 2 = 1
         ), sums AS (
             -- per-doc decoded byte total over width*height*n_channels
             -- sample points: the text bytes tiled (prefix-sum form),
@@ -7050,7 +7055,7 @@ def _wav_windows_sql() -> str:
         WITH base AS (
             SELECT doc_id, text, length(text) AS len,
                    (length(text) % 2 + 1) * (length(text) % 48 + 1) AS n_samples
-            FROM documents
+            FROM {_SYNTH_DOCS}
         ), ranges AS (
             SELECT doc_id, text, len, n_samples,
                    w.w AS win_idx,

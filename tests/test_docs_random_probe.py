@@ -2,9 +2,9 @@
 and DuckDB run the same registry query + oracle SQL over a RANDOM
 documents table — word-soup texts with injected punctuation, every
 ASCII whitespace variant (incl. \\x0B, the dialect divergence the fixed
-corpus can't re-catch), empty documents, exact duplicates, and
-near-duplicates one token apart (so the dedup/LSH paths generate real
-candidates). Companion to tests/test_event_random_probe.py.
+corpus can't re-catch), empty and NULL documents, exact duplicates,
+and near-duplicates one token apart (so the dedup/LSH paths generate
+real candidates). Companion to tests/test_event_random_probe.py.
 """
 
 from __future__ import annotations
@@ -136,6 +136,8 @@ def _random_documents() -> pd.DataFrame:
     # Empty and whitespace-only documents.
     rows.append((N_DOCS + 10, "", "en", sources[0], 0))
     rows.append((N_DOCS + 11, " \t\n\x0b ", "de", sources[1], 6))
+    # A NULL document: every query reads it as '' (no tokens, no bytes).
+    rows.append((N_DOCS + 13, None, "fr", sources[2], 0))
     # Incremental-ingest shapes (incremental_ingest_dedup splits on
     # doc_id % 10: >= 8 is "the incoming batch"): a batch-resident copy
     # of a corpus doc (id 138 dups id 3 -> n_dup_vs_corpus), and two

@@ -166,41 +166,6 @@ def test_float_emitting_session5_ops_partition_invariant(spark, sf_dir):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def test_mllib_lsh_fast_path_finds_exact_dups(spark, sf_dir):
-    """The non-oracled MLlib MinHashLSH twin (SURVEY §7's reserved fast
-    path) must surface every planted exact-duplicate pair at distance
-    0, agree with the portable-md5 LSH operator on those pairs, and be
-    run-deterministic (seeded fit)."""
-    from mapreduce_rs_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        minhash_lsh_pairs_ml,
-    )
-
-    base = load_table(spark, sf_dir, "documents").orderBy("doc_id").limit(50)
-    clones = base.orderBy("doc_id").limit(10).withColumn(
-        "doc_id", F.col("doc_id") + 100000
-    )
-    docs = base.unionByName(clones)
-    orig_ids = [r.doc_id for r in base.orderBy("doc_id").limit(10).collect()]
-    expected = {(i, i + 100000) for i in orig_ids}
-    got = {
-        (r.doc_a, r.doc_b): r.jaccard_dist
-        for r in minhash_lsh_pairs_ml(docs).collect()
-    }
-    missing = expected - set(got)
-    assert not missing, f"exact dups missed by MLlib path: {sorted(missing)[:5]}"
-    assert all(got[p] == 0.0 for p in expected)
-    # the portable operator finds the same planted pairs
-    det = {(r.doc_a, r.doc_b) for r in minhash_lsh_pairs(docs).collect()}
-    assert expected <= det
-    # seeded fit => deterministic pair set across runs
-    again = {
-        (r.doc_a, r.doc_b): r.jaccard_dist
-        for r in minhash_lsh_pairs_ml(docs).collect()
-    }
-    assert got == again
-
-
 def test_value_drift_chi2_matches_textbook(spark, sf_dir):
     """The micro-unit integer chi2 must agree with the straightforward
     float (O-E)^2/E textbook computation to within the quantization

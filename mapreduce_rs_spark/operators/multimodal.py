@@ -281,8 +281,9 @@ def _oracle_ascii_bytes(text: str | None) -> bytes:
     (no bytes), the way the tokenizers read it as no tokens. Every
     attach_* synthesis derives pixels/samples from utf-8 BYTES, while
     the DuckDB oracles replay them with per-CHARACTER
-    ``ascii()``/``length()`` — identical only for pure-ASCII text. The shipped corpora and the random-doc probes
-    are ASCII by construction; this guard makes a future non-ASCII
+    ``ascii()``/``length()`` — identical only for pure-ASCII text. The
+    shipped corpora and the random-doc probes are ASCII by
+    construction; this guard makes a future non-ASCII
     corpus fail LOUDLY at the synthesis site instead of silently
     hash-mismatching the byte-vs-character replay downstream."""
     text = text or ""

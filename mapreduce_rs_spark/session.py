@@ -13,9 +13,10 @@ Cold start. A fresh driver JVM spends most of its start-up loading and
 verifying classes, so ``get_spark`` launches it against a dynamic
 class-data-sharing archive (JEP 350), one per install, under
 ``$XDG_CACHE_HOME/spark-graft/`` (else ``~/.cache/spark-graft/``):
-- The archive is keyed on the JDK (``java.home`` and its ``release``
-  file), the ``$SPARK_HOME/jars`` listing (names, sizes, mtimes) and the
-  driver heap.
+- The archive is keyed on the JDK (``java.home``, its ``release`` file
+  and its ``lib/server`` listing, which holds the base archive the JVM
+  checks), the ``$SPARK_HOME/jars`` listing (names, sizes, mtimes) and
+  the driver heap.
 - The first launch for a key dumps the classes its JVM loaded, at exit,
   to ``<key>.<pid>.tmp``; this process waits for that dump before it
   exits. The next launch publishes the finished temp as ``<key>.jsa``
@@ -94,10 +95,12 @@ def _archive_key(spark_home: str, heap: str) -> str:
     h = hashlib.sha256(f"{java_home}\0{heap}\0".encode())
     with open(os.path.join(java_home, "release"), "rb") as f:
         h.update(f.read())
-    jars = os.path.join(spark_home, "jars")
-    for name in sorted(os.listdir(jars)):
-        st = os.stat(os.path.join(jars, name))
-        h.update(f"{name}\0{st.st_size}\0{st.st_mtime_ns}\0".encode())
+    # lib/server holds the JVM's own base archive: a dynamic archive
+    # dumped on top of another base archive is refused at every launch.
+    for listed in (os.path.join(java_home, "lib", "server"), os.path.join(spark_home, "jars")):
+        for name in sorted(os.listdir(listed)):
+            st = os.stat(os.path.join(listed, name))
+            h.update(f"{name}\0{st.st_size}\0{st.st_mtime_ns}\0".encode())
     return h.hexdigest()[:16]
 
 

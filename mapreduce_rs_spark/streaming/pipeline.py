@@ -719,8 +719,9 @@ def admitted_edges_from_store(batch_df: DataFrame, store_dir: str) -> DataFrame:
     itself, shared by the streaming loop (``run_ingest_loop`` with
     ``graph_step`` writes it per epoch) and the bench's admission
     member (which must price admission SEPARATELY from the standing
-    rebuild it avoids — r09 verdict #5). Per-batch work is O(|batch| · beam · k · hops):
-    batch-proportional, never corpus-proportional."""
+    rebuild it avoids — r09 verdict #5). Per-batch work is
+    O(|batch| · beam · k · hops): batch-proportional, never
+    corpus-proportional."""
     from mapreduce_rs_spark.operators.similarity import (
         _bucket_expr,
         _embd,

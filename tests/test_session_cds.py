@@ -122,3 +122,21 @@ def test_real_conf_dir_is_honoured_without_archive(cache, tmp_path):
     assert archive_args(result) == []
     assert not [m for m in result["mapped"] if m.startswith(str(cache))]
     assert (sorted(p.name for p in cds.iterdir()) if cds.exists() else []) == before
+
+
+def test_key_follows_the_jvm_base_archive(tmp_path, monkeypatch):
+    """A regenerated base archive (``lib/server/classes.jsa``) makes the
+    JVM refuse every dynamic archive dumped on the old one, so the key
+    must change with it. Mutant: a key that lists only the Spark jars
+    keeps pointing at the refused archive."""
+    jdk = tmp_path / "jdk"
+    (jdk / "bin").mkdir(parents=True)
+    (jdk / "bin" / "java").touch()
+    (jdk / "release").write_text('JAVA_VERSION="17"\n')
+    (jdk / "lib" / "server").mkdir(parents=True)
+    base = jdk / "lib" / "server" / "classes.jsa"
+    base.write_bytes(b"base")
+    monkeypatch.setenv("JAVA_HOME", str(jdk))
+    before = session._archive_key(_find_spark_home(), "16g")
+    os.utime(base, ns=(0, base.stat().st_mtime_ns + 1))
+    assert session._archive_key(_find_spark_home(), "16g") != before
